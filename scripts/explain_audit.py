@@ -3,6 +3,8 @@ paths and greps for the properties that matter at 100 TB:
 
 - blocks scan partition-pruned / filtered to query-term buckets
 - broadcast join of query terms into the index scan (no index shuffle)
+- a search that fits one scorer task returns a LocalTableScan (scored
+  in-process, no Exchange)
 - PushedFilters / ReadSchema pruning on parquet scans
 - WholeStageCodegen coverage of the relational stages
 
@@ -48,10 +50,15 @@ def main():
     idx = E._get_index(spark, sf_dir)
     engine = BM25QueryEngine(idx)
 
-    # 1) query path: blocks join + cogroup scoring
-    hits = engine.search(["dup key scan"], topn=10)
+    # 1) distributed query path: blocks join + grouped scoring. A
+    # three-term query fits one scorer task, so search() would score it
+    # in-process; the engine's gate is patched to plan the distributed
+    # tail that batches above fan_out_threshold() run
+    spark_engine = BM25QueryEngine(idx)
+    spark_engine._score_in_process = lambda candidates: False
+    hits = spark_engine.search(["dup key scan"], topn=10)
     p = grab_plan(hits)
-    sections.append(("BM25 query path (search -> hits)", p))
+    sections.append(("BM25 distributed query path (search -> hits)", p))
 
     # 2) raw blocks scan with term filter (row-group pruning surface)
     blk = idx.blocks().filter(F.col("term") == "dup").select("term", "payload")
@@ -131,6 +138,13 @@ def main():
         ("term-centric query path (search_term_centric_df)", grab_plan(tc_hits))
     )
 
+    # 8) in-process query path: the same search on an unpatched engine
+    drv_hits = engine.search(["dup key scan"], topn=10)
+    drv_path = engine.last_search["path"]
+    sections.append(
+        ("BM25 in-process query path (search -> hits)", grab_plan(drv_hits))
+    )
+
     checks = []
     qp = sections[0][1]
     checks.append(("query path broadcasts query terms (no index shuffle)",
@@ -202,6 +216,13 @@ def main():
     checks.append(
         ("term-centric path scans term_stats distributed (no driver staging)",
          "term_stats" in tp and "Join" in tp)
+    )
+
+    dp = sections[8][1]
+    checks.append(
+        ("in-process search plan is a LocalTableScan with no Exchange",
+         drv_path == "driver" and "LocalTableScan" in dp
+         and "Exchange" not in dp)
     )
 
     os.makedirs("BENCH", exist_ok=True)

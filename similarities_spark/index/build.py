@@ -1105,12 +1105,14 @@ class BM25IndexBuilder:
         # the epsilon floor bakes in a float average whose summation order
         # matters in the last ulp. Both paths therefore use the identical
         # deterministic ascending-term Python sum whenever the vocab fits
-        # the driver cap, and the identical distributed plan otherwise.
+        # the driver cap, and the identical distributed plan otherwise. The
+        # collect is bounded before it runs: at most cap+1 rows come back,
+        # and one past the cap means old ∪ new crossed it this merge.
         driver_rows = None
         if int(idx.meta.get("vocab_size") or 0) <= _DRIVER_STATS_MAX_VOCAB:
             driver_rows = sorted(
                 (r["term"], int(r["df"]), int(r["tok_new"]))
-                for r in combined.collect()
+                for r in combined.limit(_DRIVER_STATS_MAX_VOCAB + 1).collect()
             )
             if len(driver_rows) > _DRIVER_STATS_MAX_VOCAB:
                 driver_rows = None  # crossed the cap this merge: go distributed

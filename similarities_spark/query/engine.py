@@ -1,31 +1,40 @@
 """Distributed BM25 query engine over the term-partitioned block index.
 
-Physical plan (per query batch):
+Physical plan (``search`` / ``search_df``, per query batch):
 
-  queries -> tokenize UDF (query mode: NO stopword filter, duplicates kept,
-             reference literal_similarity.py:434)
-    -> posexplode tokens                              (order-preserving)
-    -> DISTINCT (query_id, term) COLLECTED driver-side [O(queries x qlen),
-       tiny by contract] -> terms, buckets = pmod(xxhash64(term), B), and
-       per-term df/idf looked up from term_stats
-    blocks scan: filter bucket IN (query-term buckets)  -> parquet PARTITION
-                 pruning (bucket is the partition column), AND term IN
-                 (query terms) -> row-group min/max stats pruning (blocks
-                 are written sorted by term within each bucket)
-    -> cogroup(query tokens, matched blocks) BY query_id [, range_id]
-       -> applyInPandas: block-max MaxScore kernel (scorer.py)
-    -> per-query top-k already ranked; zero-score padding stage only for
-       queries the scorer flagged (degenerate small-corpus semantics,
-       reference literal_similarity.py:437-440)
-    -> optional join docs for corpus text
+  queries -> tokenized in driver Python (query mode: NO stopword filter,
+             duplicates kept, reference literal_similarity.py:434)
+    -> per-term df/idf from term_stats (driver snapshot for vocabs up to
+       the 20k stats cap, else one term-IN-pruned stats scan); terms absent
+       from the index carry no blocks and drop out here
+    -> candidate volume: sum of df over each query's in-index terms, summed
+       over the batch — known before any block is read
+    -> GATE: no explicit ``fan_out`` and batch volume <= fan_out_threshold()
+       (the postings one scorer task may hold)?
 
-Only index partitions/row-groups holding query terms are ever READ, and only
-matching blocks are shuffled; the big index never moves otherwise. The
-scorer task for one query holds that query's candidate blocks; for fat
-(head-term) queries, scoring auto-shards by doc-id range when the estimated
-candidate volume (sum of df over query terms) exceeds
-``cfg.fan_out_threshold`` — bit-identical results, R-way parallel per query
-(``fan_out=`` forces a specific R).
+  driver tail (gate passed) — scoring in-process, ONE Spark job (plus the
+  stats scan past the cap):
+    blocks scan: bucket IN (term buckets) -> parquet PARTITION pruning,
+                 term IN (terms) -> row-group min/max pruning
+    -> collected as Arrow (bounded: at most the threshold's postings)
+    -> scorer.score_query per query, in driver Python (same kernel, same
+       arguments as the distributed tail)
+    -> numpy pad + rank -> hits as a LocalRelation (no Exchange)
+
+  distributed tail (gate failed, or ``fan_out=`` given):
+    same pruned blocks scan, broadcast-joined with the query-term stats
+    -> groupBy(query_id [, range_id]).applyInPandas: the MaxScore kernel,
+       tokens shipped in the closure; fat queries shard by doc-id range
+       (``fan_out``) once one query's volume exceeds the threshold
+    -> padding summary + one ranking window (_pad_and_rank)
+
+Both tails -> optional join docs for corpus text. ``search_join_df`` always
+runs the distributed plan, with query terms joined rather than staged on
+the driver. Either way only index partitions/row-groups holding query terms
+are ever READ; the big index never moves. Zero-score padding (reference
+literal_similarity.py:437-440) ranks unmatched low doc ids after the
+matches; results are bit-identical across tails and fan-outs. Each search
+records which tail ran in ``engine.last_search``.
 """
 
 from __future__ import annotations
@@ -43,6 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from similarities_spark.index import build as _build
 from similarities_spark.index.build import BM25Index
 from similarities_spark.localdf import literal_df as _literal_df
 from similarities_spark.query import scorer as _scorer
@@ -116,6 +126,10 @@ class BM25QueryEngine:
         self.spark = index.spark
         self.cfg = cfg if cfg is not None else index.config()
         self.last_fan_out: Optional[int] = None
+        # per-search record (every search surface, see _record_search):
+        # path ("driver" | "spark"), candidate_postings (the batch volume
+        # the gate compared), blocks_read (driver path only) and fan_out
+        self.last_search: Optional[dict] = None
         # populated on first use when fan_out_target_task_s is set
         self.last_calibration: Optional[dict] = None
         self._resolved_fan_out_threshold: Optional[int] = None
@@ -129,7 +143,7 @@ class BM25QueryEngine:
         # vocab-capped driver snapshot of term_stats, loaded lazily at the
         # first search: the per-batch df/idf lookup then costs a dict probe
         # instead of a Spark job. Gated on the EXACT vocab size from meta
-        # (same 20k cap as the builder's driver stats tail) — a web-scale
+        # (the builder's driver stats-tail cap) — a web-scale
         # vocab never loads; values come from the same parquet bytes, so
         # scores are unchanged.
         self._stats_snapshot: Optional[dict] = None
@@ -176,7 +190,7 @@ class BM25QueryEngine:
         """df/idf for the given terms: from the vocab-capped driver
         snapshot when the whole stats table is tiny (one load per engine,
         then zero Spark jobs per batch), else a term-IN-pruned scan."""
-        cap = 20_000
+        cap = _build._DRIVER_STATS_MAX_VOCAB
         vocab = int(self.index.meta.get("vocab_size") or (cap + 1))
         if vocab <= cap:
             if self._stats_snapshot is None:
@@ -233,11 +247,15 @@ class BM25QueryEngine:
         extreme scale — one query's work spreads over R tasks instead of
         one. When ``fan_out`` is None it auto-enables once the estimated
         candidate volume of the fattest query exceeds
-        ``cfg.fan_out_threshold`` postings. All variants decompose over doc
-        ranges: Okapi/BM25L because their unmatched-doc contribution is
-        exactly 0; BM25Plus because its per-token idf*delta baseline is a
-        query constant every range task reproduces from the token-side df
-        column (scorer token_dfs), independent of which blocks it sees.
+        ``cfg.fan_out_threshold`` postings — and while the whole batch's
+        volume stays within that threshold, the batch is scored in-process
+        on the driver instead (see the module docstring). An explicit
+        ``fan_out`` always runs the distributed tail. All variants
+        decompose over doc ranges: Okapi/BM25L because their unmatched-doc
+        contribution is exactly 0; BM25Plus because its per-token idf*delta
+        baseline is a query constant every range task reproduces from the
+        token-side df column (scorer token_dfs), independent of which blocks
+        it sees.
 
         The raw (query_id, text) rows are collected ONCE (the only
         DataFrame action on queries; they are driver-adjacent by contract)
@@ -263,65 +281,28 @@ class BM25QueryEngine:
         fan_out: Optional[int],
     ) -> DataFrame:
         """Driver-adjacent scoring over pre-tokenized (query_id, tokens)
-        pairs. Everything query-sized becomes a JVM LocalRelation
-        (_literal_df): the token side of the cogroup, the broadcast df/idf
-        stats side, and the padding id set — so the only Python stage in
-        the whole physical plan is the MaxScore scorer kernel itself.
-        Yields the partition/row-group pruning predicates for the blocks
-        scan and the candidate-volume estimate for auto fan-out."""
+        pairs. Looks up the batch's df/idf, sums its candidate volume and
+        picks the tail: in-process scoring when no ``fan_out`` is forced
+        and the whole batch fits one scorer task, else the distributed
+        tail. On the distributed tail everything query-sized becomes a JVM
+        LocalRelation (_literal_df): the broadcast df/idf stats side and
+        the padding id set — so the only Python stage in the whole physical
+        plan is the MaxScore scorer kernel itself."""
         cfg = self.cfg
         variant = cfg.variant
         topn = int(topn)
         qt_pairs = sorted({(q, t) for q, toks in tok_lists for t in toks})
         terms = sorted({t for _, t in qt_pairs})
-        if terms:
-            # bucket of each term via pure-Python xxHash64 — bit-identical
-            # to the JVM xxhash64 the index writer used (fuzz-gated parity,
-            # tests/test_r3_fixes.py) and one fewer Spark job per batch
-            # than hashing through a createDataFrame round-trip
-            buckets = sorted(
-                {term_bucket(t, cfg.num_term_buckets) for t in terms}
-            )
-            stat_map = self._lookup_stats(terms)
-        else:
-            buckets, stat_map = [], {}
-
-        # partition pruning (bucket IN ...) + row-group stats pruning
-        # (term IN ...): only index files/row-groups holding query terms
-        # are read — the rest of the 100 TB index is never touched
-        blocks = self._blocks_df
-        if buckets:
-            blocks = blocks.filter(F.col("bucket").isin(buckets)).filter(
-                F.col("term").isin(terms)
-            )
-        else:
-            blocks = blocks.filter(F.lit(False))
-        blocks = blocks.select(
-            "term",
-            "salt",
-            "block_id",
-            "min_doc",
-            "max_doc",
-            "n_postings",
-            "tf_max",
-            "tf_min",
-            "dl_max",
-            "dl_min",
-            "payload",
-        )
-        # blocks are stats-free (immutable segments); per-term df/idf ride
-        # in on the tiny broadcast query side, built driver-side from the
-        # stats lookup above (terms absent from the index carry no blocks,
-        # so they are skipped here — the inner join would drop them anyway)
+        stat_map = self._lookup_stats(terms) if terms else {}
+        # blocks are stats-free (immutable segments); per-term df/idf come
+        # from the stats lookup above (terms absent from the index carry no
+        # blocks, so they are skipped here — the inner join would drop them
+        # anyway)
         known = [
             (q, t, stat_map[t][0], stat_map[t][1])
             for q, t in qt_pairs
             if t in stat_map
         ]
-        qstats = _literal_df(
-            self.spark, known, "query_id long, term string, df long, idf double"
-        )
-        qblocks = F.broadcast(qstats).join(blocks, "term", "inner")
         # Query tokens (ordered, duplicates kept) and BM25Plus token dfs
         # ship in the scorer-function CLOSURE instead of riding a token-side
         # DataFrame through a cogroup: the queries are driver-adjacent by
@@ -344,19 +325,31 @@ class BM25QueryEngine:
         else:
             token_dfs_by_q = {}
 
+        # candidate volume per query: sum(df) over its in-index terms (exact
+        # upper bound on the postings one scorer task would decode)
+        per_q: Dict[int, int] = {}
+        for q, t, df_, _ in known:
+            per_q[q] = per_q.get(q, 0) + df_
+        candidates = sum(per_q.values())
+        if fan_out is None and self._score_in_process(candidates):
+            return self._search_in_process(
+                tokens_by_q, token_dfs_by_q, stat_map, topn, include_text,
+                candidates,
+            )
+
         fan_thr = self.fan_out_threshold()
         if fan_out is None and fan_thr:
-            # auto fan-out: candidate volume of the fattest query, estimated
-            # as sum(df) over its in-index terms (exact upper bound on the
-            # postings one scorer task would decode)
-            per_q: Dict[int, int] = {}
-            for q, t, df_, _ in known:
-                per_q[q] = per_q.get(q, 0) + df_
+            # auto fan-out: shard once the fattest query outgrows one task
             max_cand = max(per_q.values(), default=0)
             if max_cand > fan_thr:
                 fan_out = min(cfg.fan_out_max, -(-max_cand // fan_thr))
-        # observability (and test hook): the fan-out actually used
-        self.last_fan_out = fan_out
+        self._record_search("spark", candidates, fan_out)
+        qstats = _literal_df(
+            self.spark, known, "query_id long, term string, df long, idf double"
+        )
+        qblocks = F.broadcast(qstats).join(
+            self._pruned_blocks(terms), "term", "inner"
+        )
         # the padding stage only needs the DISTINCT query ids — a literal
         # int table, not the queries DataFrame
         qids_df = _literal_df(
@@ -372,6 +365,126 @@ class BM25QueryEngine:
             topn,
             fan_out,
             include_text,
+        )
+
+    def _record_search(
+        self, path: str, candidates, fan_out, blocks_read=None
+    ) -> None:
+        """Observability (and test hook): the tail that ran, the candidate
+        volume, the block rows read in-process and the fan-out used."""
+        self.last_fan_out = fan_out
+        self.last_search = {
+            "path": path, "candidate_postings": candidates,
+            "blocks_read": blocks_read, "fan_out": fan_out,
+        }
+
+    def _score_in_process(self, candidates: int) -> bool:
+        """Gate of the driver tail: the batch's whole candidate volume fits
+        what one scorer task may hold (``fan_out_threshold()``), which also
+        bounds the one blocks collect the driver tail makes."""
+        thr = self.fan_out_threshold()
+        return bool(thr) and candidates <= thr
+
+    def _pruned_blocks(self, terms) -> DataFrame:
+        """The blocks scan for ``terms``: partition pruning (bucket IN ...)
+        + row-group stats pruning (term IN ...) — only index files and row
+        groups holding query terms are read, the rest of the 100 TB index
+        is never touched. Buckets come from pure-Python xxHash64,
+        bit-identical to the JVM xxhash64 the index writer used
+        (fuzz-gated parity, tests/test_r3_fixes.py), with no Spark job."""
+        blocks = self._blocks_df
+        if terms:
+            buckets = sorted(
+                {term_bucket(t, self.cfg.num_term_buckets) for t in terms}
+            )
+            blocks = blocks.filter(F.col("bucket").isin(buckets)).filter(
+                F.col("term").isin(terms)
+            )
+        else:
+            blocks = blocks.filter(F.lit(False))
+        # the columns the scorer reads (all but tf_sum and the bucket key)
+        return blocks.select(
+            "term", "salt", "block_id", "min_doc", "max_doc", "n_postings",
+            "tf_max", "tf_min", "dl_max", "dl_min", "payload",
+        )
+
+    def _search_in_process(
+        self,
+        tokens_by_q: Dict[int, list],
+        token_dfs_by_q: Dict[int, dict],
+        stat_map: Dict[str, tuple],
+        topn: int,
+        include_text: bool,
+        candidates: int,
+    ) -> DataFrame:
+        """Driver tail: ONE pruned blocks read collected as Arrow (bounded
+        by the gate: at most ``fan_out_threshold()`` postings), the scorer
+        kernel per query in driver Python with the arguments the
+        distributed tail passes, then a numpy pad/rank reproducing
+        _pad_and_rank. Hits come back as a LocalRelation: collecting them
+        runs no Spark job."""
+        import numpy as np
+
+        cfg = self.cfg
+        n_docs, k = self.index.n_docs, topn
+        self.close()  # same cache contract as the distributed tail
+        terms = sorted(
+            {t for toks in tokens_by_q.values() for t in toks} & stat_map.keys()
+        )
+        if terms:
+            pdf = self._pruned_blocks(terms).toArrow().to_pandas()
+        else:  # nothing in the index to read: every query pads from 0.0
+            pdf = pd.DataFrame({"term": pd.Series([], dtype=object)})
+        pdf["df"] = np.array([stat_map[t][0] for t in pdf["term"]], np.int64)
+        pdf["idf"] = np.array([stat_map[t][1] for t in pdf["term"]], np.float64)
+        rows_of = pdf.groupby("term", sort=False).indices
+
+        hits = []
+        for q in sorted(tokens_by_q):
+            tokens = tokens_by_q[q]
+            rows = [rows_of[t] for t in sorted(set(tokens)) if t in rows_of]
+            if rows:
+                scored = _scorer.score_query(
+                    tokens, pdf.iloc[np.concatenate(rows)], k,
+                    self.index.avgdl, cfg.k1, cfg.b,
+                    prune=cfg.score_mode == "wand", variant=cfg.variant,
+                    delta=cfg.resolved_delta(), n_docs=n_docs,
+                    token_dfs=token_dfs_by_q.get(q) or None,
+                )
+                ids, scores, n_matched, needs_pad, pad_score = scored
+            else:  # no block matched any token: zero-match, pad from 0.0
+                ids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
+                n_matched, needs_pad, pad_score = 0, True, 0.0
+            if needs_pad:
+                # the lowest doc ids not already matched, at the pad score
+                pool = np.arange(min(k + n_matched, n_docs), dtype=np.int64)
+                pool = pool[~np.isin(pool, ids)]
+                ids = np.concatenate([ids, pool])
+                scores = np.concatenate([scores, np.full(pool.size, pad_score)])
+            # score desc, then doc_id asc (lexsort's last key is primary)
+            top = np.lexsort((ids, -scores))[:k]
+            hits.extend(
+                (q, r + 1, int(ids[i]), float(scores[i]))
+                for r, i in enumerate(top)
+            )
+        self._record_search("driver", candidates, None, blocks_read=len(pdf))
+        return self._with_text(
+            _literal_df(
+                self.spark, hits,
+                "query_id long, rank int, doc_id long, score double",
+            ),
+            include_text,
+        )
+
+    def _with_text(self, hits: DataFrame, include_text: bool) -> DataFrame:
+        """Optionally join each hit's corpus text as ``corpus_doc``."""
+        if not include_text:
+            return hits
+        docs = self.index.docs().select(
+            "doc_id", F.col("text").alias("corpus_doc")
+        )
+        return hits.join(docs, "doc_id", "left").select(
+            "query_id", "rank", "doc_id", "score", "corpus_doc"
         )
 
     def _finish_search_local(
@@ -444,14 +557,7 @@ class BM25QueryEngine:
         hits = self._pad_and_rank(
             qids_df, scored, k, single_range=not fan_out
         )
-        if include_text:
-            docs = self.index.docs().select(
-                "doc_id", F.col("text").alias("corpus_doc")
-            )
-            hits = hits.join(docs, "doc_id", "left").select(
-                "query_id", "rank", "doc_id", "score", "corpus_doc"
-            )
-        return hits
+        return self._with_text(hits, include_text)
 
     def search_join_df(
         self,
@@ -497,19 +603,19 @@ class BM25QueryEngine:
         qblocks = qstats.join(self._blocks_df, ["bucket", "term"], "inner")
         qtok = self._attach_token_dfs(qtok, qstats, broadcast_stats=False)
 
-        fan_out = None
+        fan_out = candidates = None
         fan_thr = self.fan_out_threshold()
         if fan_thr:
             row = (
                 qstats.groupBy("query_id")
                 .agg(F.sum("df").alias("c"))
-                .agg(F.max("c").alias("m"))
+                .agg(F.max("c").alias("m"), F.sum("c").alias("s"))
                 .collect()[0]
             )
-            max_cand = int(row["m"] or 0)
+            max_cand, candidates = int(row["m"] or 0), int(row["s"] or 0)
             if max_cand > fan_thr:
                 fan_out = min(cfg.fan_out_max, -(-max_cand // fan_thr))
-        self.last_fan_out = fan_out
+        self._record_search("spark", candidates, fan_out)
         return self._finish_search(
             qtok, qblocks, queries_df, topn, fan_out, include_text
         )
@@ -684,16 +790,9 @@ class BM25QueryEngine:
             (F.count(F.lit(1)).over(wq) < F.lit(topn)).alias("needs_pad"),
             "pad_score",
         )
-        self.last_fan_out = None
+        self._record_search("spark", None, None)
         hits = self._pad_and_rank(queries_df, scored, topn, single_range=True)
-        if include_text:
-            docs = self.index.docs().select(
-                "doc_id", F.col("text").alias("corpus_doc")
-            )
-            hits = hits.join(docs, "doc_id", "left").select(
-                "query_id", "rank", "doc_id", "score", "corpus_doc"
-            )
-        return hits
+        return self._with_text(hits, include_text)
 
     def _attach_token_dfs(
         self, qtok: DataFrame, qstats: DataFrame, broadcast_stats: bool = True
@@ -795,14 +894,7 @@ class BM25QueryEngine:
         hits = self._pad_and_rank(
             queries_df, scored, k, single_range=not fan_out
         )
-        if include_text:
-            docs = self.index.docs().select(
-                "doc_id", F.col("text").alias("corpus_doc")
-            )
-            hits = hits.join(docs, "doc_id", "left").select(
-                "query_id", "rank", "doc_id", "score", "corpus_doc"
-            )
-        return hits
+        return self._with_text(hits, include_text)
 
     def _pad_and_rank(
         self,

@@ -173,3 +173,61 @@ def test_resume_detects_changed_input_at_same_path(spark, tmp_path):
         spark.createDataFrame(pdf_b), str(tmp_path / "fresh"), input_desc="fresh"
     )
     assert _hits(idx) == _hits(ref)
+
+
+def test_merge_stats_collect_bounded_past_cap(spark, tmp_path, monkeypatch):
+    """A small index whose merge pushes old ∪ new past the driver stats cap:
+    the driver-tail collect must be bounded by the cap before it runs (at
+    most cap+1 rows), and the merged term_stats must still be bit-identical
+    to a full rebuild's."""
+    from similarities_spark.index import build as _build
+
+    cap = 12
+    monkeypatch.setattr(_build, "_DRIVER_STATS_MAX_VOCAB", cap)
+    stats_rows = []
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    real_collect = DataFrame.collect
+
+    def collect(self):
+        rows = real_collect(self)
+        if self.columns == ["term", "df", "tok_new"]:
+            stats_rows.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+
+    base = [f"common w{i % 8} w{(i + 3) % 8}" for i in range(20)]
+    new = [f"common fresh{i}a fresh{i}b" for i in range(30)]
+
+    def batch(texts, ts0):
+        ts = [ts0 + i for i in range(len(texts))]
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "url": [f"u{t}" for t in ts],
+                    "warc_ts": pd.to_datetime(ts, unit="s"),
+                    "text": texts,
+                }
+            )
+        )
+
+    def stats(i):
+        return sorted(
+            (r["term"], r["df"], r["idf"]) for r in i.term_stats().collect()
+        )
+
+    builder = BM25IndexBuilder(spark, CFG)
+    inc_dir = str(tmp_path / "inc")
+    idx = builder.build(batch(base, 0), inc_dir, input_desc="base")
+    assert idx.meta["vocab_size"] <= cap
+    merged = builder.merge_new_docs(batch(new, 100), inc_dir)
+    assert merged.meta["vocab_size"] > cap + 1
+    assert stats_rows and max(stats_rows) <= cap + 1
+
+    ref = builder.build(
+        batch(base, 0).unionByName(batch(new, 100)),
+        str(tmp_path / "full"),
+        input_desc="full",
+    )
+    assert stats(merged) == stats(ref)
+    assert merged.meta["average_idf"] == ref.meta["average_idf"]
