@@ -45,8 +45,10 @@ class EngineConfig:
     # executor memory); at 10^12 docs a head-term query auto-shards
     # ~500k-way rather than OOMing one task. The same value bounds
     # in-process scoring: a search()/search_df() batch whose TOTAL candidate
-    # volume is at most this many postings is scored in the driver process
-    # (one pruned blocks collect, no scoring job); None disables that too.
+    # volume is at most this many postings may be scored in the driver
+    # process (one pruned blocks collect, no scoring job) — on clusters with
+    # many cores the engine's measured cost model lowers that bound to
+    # about 1.2M postings, see query/engine.py. None disables it too.
     fan_out_threshold: Optional[int] = 2_000_000
     fan_out_max: int = 1024        # cap on auto-chosen range shards per batch
     # When set, the engine DERIVES fan_out_threshold from a one-time

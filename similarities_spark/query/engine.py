@@ -9,8 +9,10 @@ Physical plan (``search`` / ``search_df``, per query batch):
        from the index carry no blocks and drop out here
     -> candidate volume: sum of df over each query's in-index terms, summed
        over the batch — known before any block is read
-    -> GATE: no explicit ``fan_out`` and batch volume <= fan_out_threshold()
-       (the postings one scorer task may hold)?
+    -> GATE: no explicit ``fan_out``, batch volume <= fan_out_threshold()
+       (the postings one scorer task may hold), and serial scoring in the
+       driver is predicted to finish before the distributed tail would
+       with the cluster's parallelism (_score_in_process)?
 
   driver tail (gate passed) — scoring in-process, ONE Spark job (plus the
   stats scan past the cap):
@@ -70,6 +72,19 @@ _SCORE_SCHEMA = StructType(
         StructField("pad_score", DoubleType()),
     ]
 )
+
+# Sizing of the driver tail's gate, measured on a 5k-doc index (Zipf
+# s = 1.0, mean 100 tokens, 12k-word vocabulary) in 4- and 2-core local
+# mode, batches of 1 to 1000 queries holding 4k to 5.7M candidate postings:
+# the driver tail scores about 1.0M candidate postings/s serially, one
+# executor scoring task about 0.4M/s (Arrow transfer and task overheads
+# included), and the distributed tail costs about 1.2 s more than the
+# driver tail before any posting is scored (its jobs, shuffle and pad/rank
+# collect). Measured crossovers: about 3.5M postings on 4 cores (the model
+# below predicts 3.2M), none up to 5.7M on 2 cores (the model predicts none).
+_DRIVER_POSTINGS_PER_S = 1.0e6
+_TASK_POSTINGS_PER_S = 0.4e6
+_SPARK_TAIL_EXTRA_S = 1.2
 
 
 def _measure_scorer_rate(cfg, avgdl: float) -> float:
@@ -248,8 +263,9 @@ class BM25QueryEngine:
         one. When ``fan_out`` is None it auto-enables once the estimated
         candidate volume of the fattest query exceeds
         ``cfg.fan_out_threshold`` postings — and while the whole batch's
-        volume stays within that threshold, the batch is scored in-process
-        on the driver instead (see the module docstring). An explicit
+        volume stays within that threshold and serial scoring is predicted
+        to win (``_score_in_process``), the batch is scored in-process on
+        the driver instead (see the module docstring). An explicit
         ``fan_out`` always runs the distributed tail. All variants
         decompose over doc ranges: Okapi/BM25L because their unmatched-doc
         contribution is exactly 0; BM25Plus because its per-token idf*delta
@@ -332,10 +348,12 @@ class BM25QueryEngine:
             per_q[q] = per_q.get(q, 0) + df_
         candidates = sum(per_q.values())
         if fan_out is None and self._score_in_process(candidates):
-            return self._search_in_process(
-                tokens_by_q, token_dfs_by_q, stat_map, topn, include_text,
-                candidates,
+            hits, blocks_read = self._search_in_process(
+                tokens_by_q, token_dfs_by_q, stat_map,
+                [t for t in terms if t in stat_map], topn,
             )
+            self._record_search("driver", candidates, None, blocks_read)
+            return self._with_text(hits, include_text)
 
         fan_thr = self.fan_out_threshold()
         if fan_out is None and fan_thr:
@@ -380,10 +398,19 @@ class BM25QueryEngine:
 
     def _score_in_process(self, candidates: int) -> bool:
         """Gate of the driver tail: the batch's whole candidate volume fits
-        what one scorer task may hold (``fan_out_threshold()``), which also
-        bounds the one blocks collect the driver tail makes."""
+        what one scorer task may hold (``fan_out_threshold()``, which also
+        bounds the one blocks collect the driver tail makes), and scoring
+        it serially is predicted to beat the distributed tail spread over
+        the cluster's ``defaultParallelism`` cores (sizing constants above).
+        With enough cores the distributed tail overtakes the driver from
+        about 1.2M postings on; with 2 it never does."""
         thr = self.fan_out_threshold()
-        return bool(thr) and candidates <= thr
+        if not thr or candidates > thr:
+            return False
+        cores = self.spark.sparkContext.defaultParallelism
+        # seconds per posting the serial driver tail loses to `cores` tasks
+        lost = 1 / _DRIVER_POSTINGS_PER_S - 1 / (_TASK_POSTINGS_PER_S * cores)
+        return lost <= 0 or candidates * lost <= _SPARK_TAIL_EXTRA_S
 
     def _pruned_blocks(self, terms) -> DataFrame:
         """The blocks scan for ``terms``: partition pruning (bucket IN ...)
@@ -413,24 +440,21 @@ class BM25QueryEngine:
         tokens_by_q: Dict[int, list],
         token_dfs_by_q: Dict[int, dict],
         stat_map: Dict[str, tuple],
+        terms: list,
         topn: int,
-        include_text: bool,
-        candidates: int,
-    ) -> DataFrame:
-        """Driver tail: ONE pruned blocks read collected as Arrow (bounded
-        by the gate: at most ``fan_out_threshold()`` postings), the scorer
-        kernel per query in driver Python with the arguments the
-        distributed tail passes, then a numpy pad/rank reproducing
-        _pad_and_rank. Hits come back as a LocalRelation: collecting them
-        runs no Spark job."""
+    ):
+        """Driver tail over the batch's in-index ``terms``: ONE pruned
+        blocks read collected as Arrow (bounded by the gate: at most
+        ``fan_out_threshold()`` postings), the scorer kernel per query in
+        driver Python with the arguments the distributed tail passes, and
+        _pad_and_rank's padding for the queries the scorer flags. Returns
+        (hits as a LocalRelation — collecting them runs no Spark job,
+        block rows read)."""
         import numpy as np
 
         cfg = self.cfg
         n_docs, k = self.index.n_docs, topn
         self.close()  # same cache contract as the distributed tail
-        terms = sorted(
-            {t for toks in tokens_by_q.values() for t in toks} & stat_map.keys()
-        )
         if terms:
             pdf = self._pruned_blocks(terms).toArrow().to_pandas()
         else:  # nothing in the index to read: every query pads from 0.0
@@ -456,25 +480,24 @@ class BM25QueryEngine:
                 ids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
                 n_matched, needs_pad, pad_score = 0, True, 0.0
             if needs_pad:
-                # the lowest doc ids not already matched, at the pad score
+                # unflagged queries come back as the ranked top-k; flagged
+                # ones add the lowest doc ids not already matched, at the
+                # pad score, then rank by score desc, doc_id asc (lexsort's
+                # last key is primary)
                 pool = np.arange(min(k + n_matched, n_docs), dtype=np.int64)
                 pool = pool[~np.isin(pool, ids)]
                 ids = np.concatenate([ids, pool])
                 scores = np.concatenate([scores, np.full(pool.size, pad_score)])
-            # score desc, then doc_id asc (lexsort's last key is primary)
-            top = np.lexsort((ids, -scores))[:k]
+                top = np.lexsort((ids, -scores))[:k]
+                ids, scores = ids[top], scores[top]
             hits.extend(
-                (q, r + 1, int(ids[i]), float(scores[i]))
-                for r, i in enumerate(top)
+                (q, r + 1, int(d), float(s))
+                for r, (d, s) in enumerate(zip(ids, scores))
             )
-        self._record_search("driver", candidates, None, blocks_read=len(pdf))
-        return self._with_text(
-            _literal_df(
-                self.spark, hits,
-                "query_id long, rank int, doc_id long, score double",
-            ),
-            include_text,
+        hits_df = _literal_df(
+            self.spark, hits, "query_id long, rank int, doc_id long, score double"
         )
+        return hits_df, len(pdf)
 
     def _with_text(self, hits: DataFrame, include_text: bool) -> DataFrame:
         """Optionally join each hit's corpus text as ``corpus_doc``."""

@@ -28,3 +28,15 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def spark_tail():
+    """Force a query engine onto its distributed scoring tail by patching
+    the engine's private in-process gate; returns the engine."""
+
+    def force(engine):
+        engine._score_in_process = lambda candidates: False
+        return engine
+
+    return force

@@ -61,8 +61,18 @@ QUERIES = [
 ]
 
 
-def _check(index, oracle, queries, topn, max_floor_ulp=1e-9):
-    engine = BM25QueryEngine(index)
+def _check(index, oracle, queries, topn, spark_tail):
+    """Oracle parity of both scoring tails: the in-process one these small
+    batches take by default and the distributed one."""
+    for path, engine in (
+        ("driver", BM25QueryEngine(index)),
+        ("spark", spark_tail(BM25QueryEngine(index))),
+    ):
+        _check_engine(engine, oracle, queries, topn)
+        assert engine.last_search["path"] == path
+
+
+def _check_engine(engine, oracle, queries, topn):
     hits = engine.search(list(queries), topn=topn).collect()
     by_q = {}
     for r in hits:
@@ -124,14 +134,14 @@ def test_salting_applied_to_head_terms(built):
         assert r["term_tokens"] >= CFG.salt_df_threshold
 
 
-def test_topk_parity_top10(built):
+def test_topk_parity_top10(built, spark_tail):
     index, oracle, _ = built
-    _check(index, oracle, QUERIES, topn=10)
+    _check(index, oracle, QUERIES, topn=10, spark_tail=spark_tail)
 
 
-def test_topk_parity_top3(built):
+def test_topk_parity_top3(built, spark_tail):
     index, oracle, _ = built
-    _check(index, oracle, QUERIES, topn=3)
+    _check(index, oracle, QUERIES, topn=3, spark_tail=spark_tail)
 
 
 def test_include_text_returns_corpus_doc(built):
@@ -142,22 +152,22 @@ def test_include_text_returns_corpus_doc(built):
         assert r["corpus_doc"] == texts[r["doc_id"]]
 
 
-def test_exact_mode_matches_wand_mode(built, spark):
+def test_exact_mode_matches_wand_mode(built, spark, spark_tail):
     index, oracle, _ = built
     import dataclasses
 
     exact_cfg = dataclasses.replace(index.config(), score_mode="exact")
-    engine = BM25QueryEngine(index)
-    engine.cfg = exact_cfg
-    hits = engine.search(QUERIES[:3], topn=10).collect()
-    by_q = {}
-    for r in hits:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid in range(3):
-        tokens = tokenize_text(QUERIES[qid], mode="query")
-        expect = oracle.most_similar(tokens, topn=10)
-        got = sorted(by_q[qid], key=lambda r: r["rank"])
-        assert [r["doc_id"] for r in got] == [d for d, _ in expect]
+    for engine in (BM25QueryEngine(index), spark_tail(BM25QueryEngine(index))):
+        engine.cfg = exact_cfg
+        hits = engine.search(QUERIES[:3], topn=10).collect()
+        by_q = {}
+        for r in hits:
+            by_q.setdefault(r["query_id"], []).append(r)
+        for qid in range(3):
+            tokens = tokenize_text(QUERIES[qid], mode="query")
+            expect = oracle.most_similar(tokens, topn=10)
+            got = sorted(by_q[qid], key=lambda r: r["rank"])
+            assert [r["doc_id"] for r in got] == [d for d, _ in expect]
 
 
 def test_auto_fanout_triggers_on_fat_query_and_is_bit_identical(built, spark):

@@ -1,15 +1,17 @@
 """Query-path tails: in-process (driver) scoring vs the distributed tail.
 
 A batch whose whole candidate volume fits one scorer task is scored in the
-driver process; anything larger (or a forced ``fan_out=``) runs the
-distributed tail. Both must return the same hits, bit for bit, and say
-which tail ran in ``engine.last_search``. The distributed tail is forced
-here by patching the engine's gate (``_score_in_process``); the fan-out
-tests elsewhere keep covering it through small thresholds.
+driver process when serial scoring is predicted to win; anything larger
+(or a forced ``fan_out=``) runs the distributed tail. Both must return the
+same hits, bit for bit, and say which tail ran in ``engine.last_search``.
+The distributed tail is forced here by patching the engine's gate
+(``_score_in_process``, see the ``spark_tail`` fixture); the fan-out tests
+elsewhere keep covering it through small thresholds.
 """
 
 import dataclasses
 
+import numpy as np
 import pytest
 
 from similarities_spark.config import EngineConfig
@@ -53,22 +55,20 @@ def _rows(df):
     )
 
 
-def _spark_engine(index, cfg=None):
-    eng = BM25QueryEngine(index, cfg=cfg)
-    eng._score_in_process = lambda candidates: False
-    return eng
+@pytest.fixture
+def both(spark_tail):
+    def run_both(index, run, cfg=None):
+        """(driver hits, spark hits) of ``run(engine)``, asserting each
+        tail really ran."""
+        drv = BM25QueryEngine(index, cfg=cfg)
+        d = _rows(run(drv))
+        assert drv.last_search["path"] == "driver"
+        spk = spark_tail(BM25QueryEngine(index, cfg=cfg))
+        s = _rows(run(spk))
+        assert spk.last_search["path"] == "spark"
+        return d, s
 
-
-def _both(index, run, cfg=None):
-    """(driver hits, spark hits) of ``run(engine)``, asserting each tail
-    really ran."""
-    drv = BM25QueryEngine(index, cfg=cfg)
-    d = _rows(run(drv))
-    assert drv.last_search["path"] == "driver"
-    spk = _spark_engine(index, cfg)
-    s = _rows(run(spk))
-    assert spk.last_search["path"] == "spark"
-    return d, s
+    return run_both
 
 
 @pytest.mark.parametrize(
@@ -76,27 +76,29 @@ def _both(index, run, cfg=None):
     [("okapi", "wand"), ("bm25l", "wand"), ("bm25plus", "wand"),
      ("okapi", "exact")],
 )
-def test_driver_tail_matches_spark_tail(spark, index, variant, score_mode):
+def test_driver_tail_matches_spark_tail(
+    spark, index, both, variant, score_mode
+):
     cfg = dataclasses.replace(
         index.config(), variant=variant, score_mode=score_mode
     )
-    d, s = _both(index, lambda e: e.search(QUERIES, topn=10), cfg)
+    d, s = both(index, lambda e: e.search(QUERIES, topn=10), cfg)
     assert d == s
     # every query, padded or not, holds exactly k hits
     assert len(d) == 10 * len(QUERIES)
 
 
-def test_driver_tail_search_df_and_text(spark, index):
+def test_driver_tail_search_df_and_text(spark, index, both, spark_tail):
     qdf = spark.createDataFrame(
         list(enumerate(QUERIES)), "query_id long, text string"
     )
-    d, s = _both(index, lambda e: e.search_df(qdf, topn=7))
+    d, s = both(index, lambda e: e.search_df(qdf, topn=7))
     assert d == s
 
     def with_text(e):
         return e.search(QUERIES[:3], topn=5, include_text=True)
 
-    drv, spk = BM25QueryEngine(index), _spark_engine(index)
+    drv, spk = BM25QueryEngine(index), spark_tail(BM25QueryEngine(index))
     dt = sorted(tuple(r) for r in with_text(drv).collect())
     st = sorted(tuple(r) for r in with_text(spk).collect())
     assert drv.last_search["path"] == "driver"
@@ -104,7 +106,7 @@ def test_driver_tail_search_df_and_text(spark, index):
     assert all(r[4] is not None for r in dt)
 
 
-def test_driver_tail_on_merged_index(spark, tmp_path):
+def test_driver_tail_on_merged_index(spark, tmp_path, both):
     base = synth_webtext_pandas(n_docs=90, seed=21)
     more = synth_webtext_pandas(n_docs=60, seed=22)
     builder = BM25IndexBuilder(spark, CFG)
@@ -112,8 +114,33 @@ def test_driver_tail_on_merged_index(spark, tmp_path):
                   input_desc="base")
     builder.merge_new_docs(spark.createDataFrame(more), str(tmp_path / "m"))
     idx = BM25Index(spark, str(tmp_path / "m"))
-    d, s = _both(idx, lambda e: e.search(QUERIES, topn=10))
+    d, s = both(idx, lambda e: e.search(QUERIES, topn=10))
     assert d == s
+
+
+def test_driver_tail_matches_spark_tail_on_large_batch(
+    spark, tmp_path, both
+):
+    """A batch shaped like real serving traffic — hundreds of queries drawn
+    from the corpus over thousands of docs, with default block sizes — is
+    scored identically by both tails."""
+    pdf = synth_webtext_pandas(n_docs=2000, seed=5)
+    cfg = EngineConfig(stopwords=frozenset({"the", "a"}), num_term_buckets=8)
+    idx = BM25IndexBuilder(spark, cfg).build(
+        spark.createDataFrame(pdf), str(tmp_path / "big"), input_desc="2k"
+    )
+    rng = np.random.RandomState(9)
+    texts = [t.split() for t in pdf["text"] if t.split()]
+    queries = []
+    for i in range(250):  # about 1M candidate postings
+        words = texts[rng.randint(len(texts))]
+        picks = [words[j] for j in rng.randint(len(words), size=rng.randint(2, 6))]
+        if i % 25 == 0:
+            picks[-1] = f"zzq{i}"  # one out-of-vocabulary token
+        queries.append(" ".join(picks))
+    d, s = both(idx, lambda e: e.search(queries, topn=10))
+    assert d == s
+    assert len(d) == 10 * len(queries)
 
 
 def test_threshold_boundary_switches_tail(spark, index):
@@ -170,6 +197,26 @@ def test_last_search_record(spark, index):
         "path": "spark", "candidate_postings": rec["candidate_postings"],
         "blocks_read": None, "fan_out": None,
     }
+
+
+def test_gate_follows_cluster_parallelism(spark, index, monkeypatch):
+    """The driver tail takes a batch within fan_out_threshold() only while
+    serial scoring is predicted to beat the distributed tail on the
+    cluster's cores: on 2 or 4 cores every such batch, on many cores about
+    1.2M postings."""
+    eng = BM25QueryEngine(index)
+    thr = eng.fan_out_threshold()
+    cases = [
+        (2, thr, thr + 1), (4, thr, thr + 1),
+        (64, 1_200_000, 1_300_000), (10_000, 1_150_000, 1_250_000),
+    ]
+    for cores, fits, too_big in cases:
+        monkeypatch.setattr(
+            type(spark.sparkContext), "defaultParallelism",
+            property(lambda sc, c=cores: c),
+        )
+        assert eng._score_in_process(fits), cores
+        assert not eng._score_in_process(too_big), cores
 
 
 def _jobs(spark, group, fn):

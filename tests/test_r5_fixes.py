@@ -43,9 +43,10 @@ def test_fan_out_floor_applied_to_derived_threshold(spark, tmp_path):
 
 def test_auto_fan_out_declines_at_demo_scale_no_inversion(spark, tmp_path):
     """At bench-demo scale (thousands of docs, far below one floored
-    task-second of kernel work) auto fan-out must NOT engage — auto then
-    runs the physically identical plan as fan_out=0, so the published
-    demo can never invert again."""
+    task-second of kernel work) auto fan-out must NOT engage: auto then
+    scores without sharding (here in-process on the driver) and returns
+    the hits of fan_out=0, the unsharded distributed plan, so the
+    published demo can never invert again."""
     df = spark.createDataFrame(synth_webtext_pandas(n_docs=120, seed=4))
     cfg = EngineConfig(num_term_buckets=4, fan_out_target_task_s=0.001)
     idx = _build(spark, df, tmp_path / "i", cfg)

@@ -62,7 +62,9 @@ def fixtures():
 
 
 @pytest.mark.parametrize("case", ["test_bm25", "test_bm25_hardcase"])
-def test_reference_case_parity(spark, tmp_path_factory, fixtures, case):
+def test_reference_case_parity(
+    spark, tmp_path_factory, fixtures, case, spark_tail
+):
     cfg = _cfg()
     data = fixtures[case]
     corpus = data["corpus"]
@@ -77,27 +79,29 @@ def test_reference_case_parity(spark, tmp_path_factory, fixtures, case):
         assert corpus[7] == corpus[19]
 
     oracle = BM25Oracle.from_texts(corpus, stopwords=cfg.stopwords)
-    engine = BM25QueryEngine(index)
-    topn = data["topn"]
-    hits = engine.search(list(data["queries"]), topn=topn).collect()
-    by_q = {}
-    for r in hits:
-        by_q.setdefault(r["query_id"], []).append(r)
+    # both scoring tails: in-process (these tiny batches take it by
+    # default) and the distributed one
+    for engine in (BM25QueryEngine(index), spark_tail(BM25QueryEngine(index))):
+        topn = data["topn"]
+        hits = engine.search(list(data["queries"]), topn=topn).collect()
+        by_q = {}
+        for r in hits:
+            by_q.setdefault(r["query_id"], []).append(r)
 
-    # one result list per query (reference test_literalsim.py:119-121)
-    assert len(by_q) == len(data["queries"])
+        # one result list per query (reference test_literalsim.py:119-121)
+        assert len(by_q) == len(data["queries"])
 
-    for qid, query in enumerate(data["queries"]):
-        got = sorted(by_q[qid], key=lambda r: r["rank"])
-        expect = oracle.most_similar(
-            tokenize_text(query, mode="query"), topn=topn
-        )
-        if case == "test_bm25" and qid == 0:
-            # zero-score padding: ALL 4 docs returned at topn=10
-            # (reference test_literalsim.py:116-118)
-            assert len(got) == 4 == data["expect_hits_q0"]
-        assert [r["doc_id"] for r in got] == [d for d, _ in expect]
-        for r, (_, es) in zip(got, expect):
-            assert r["score"] == pytest.approx(es, rel=1e-12, abs=1e-13)
-        # best hit scores strictly above the padding zeros
-        assert got[0]["score"] > 0.0
+        for qid, query in enumerate(data["queries"]):
+            got = sorted(by_q[qid], key=lambda r: r["rank"])
+            expect = oracle.most_similar(
+                tokenize_text(query, mode="query"), topn=topn
+            )
+            if case == "test_bm25" and qid == 0:
+                # zero-score padding: ALL 4 docs returned at topn=10
+                # (reference test_literalsim.py:116-118)
+                assert len(got) == 4 == data["expect_hits_q0"]
+            assert [r["doc_id"] for r in got] == [d for d, _ in expect]
+            for r, (_, es) in zip(got, expect):
+                assert r["score"] == pytest.approx(es, rel=1e-12, abs=1e-13)
+            # best hit scores strictly above the padding zeros
+            assert got[0]["score"] > 0.0
