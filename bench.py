@@ -14,20 +14,15 @@ local[SPARK_GRAFT_CPUS]):
 `value` sums exactly these phases — comparable round over round.
 
 Informational keys (NOT in the total):
-  value_normalized : value x (same-window memcpy GB/s / 13.0 reference) —
-              the bandwidth-normalized wall, comparable across windows on
-              this co-tenant box (no quiet window exists; r4 proved it).
   index_build_stages / resolved_postings_mode : the headline build's
               per-stage walls and the physical plan `auto` resolved to —
               a build regression is attributable to a named stage.
   calib     : {pre, post} single-thread memcpy/cpu probes (scripts/calib.py)
               — the same-window noise control. A suite regression with a
               collapsed memcpy probe is the multi-tenant box, not the engine.
-  ab        : same-process interleaved build-plan A/B on identical input:
-              groupby (r1 two-exchange) vs fused (r2 one-exchange) vs
-              fused_tf (r4 one-exchange + map-side per-doc TF, the default).
-  fat_query : single fattest-term query latency with auto doc-range fan-out
-              engaged vs forced off, incl. the kernel-rate-derived threshold.
+  ab        : same-process build-plan A/B on identical input: fused (raw
+              token rows) vs fused_tf (map-side per-doc TF) — the two plans
+              `auto` resolves between.
   docs_per_sec, queries_per_sec, n_docs.
   quiet_gate  : present when --require-quiet GBPS was given — the bench
               probed memcpy bandwidth and slept until a window cleared the
@@ -191,51 +186,15 @@ def main():
         lambda: textops.add_text_features(docs).select(F.sum("n_tokens")).collect(),
     )
 
-    # --- informational: fattest-term query, fan-out off vs auto ---
-    # The auto engine runs the PRODUCTION heuristic: kernel-rate-derived
-    # threshold with the per-task budget floored at scheduler overhead
-    # (cfg.fan_out_min_task_s). At this SF the floor means auto correctly
-    # declines to shard (5k docs is far below one task-second of kernel
-    # work) — auto_s must track off_s, never invert (the r4 demo forced a
-    # 1 ms task budget and published auto 36% SLOWER; pytest
-    # test_r5_fixes.py pins non-inversion). forced8_s exercises the
-    # sharded path itself (fan_out=8 explicit) for the record.
-    fat = {}
-    fat_q = " ".join(terms[:6])  # the 6 fattest terms: max candidate volume
-    eng_off = BM25QueryEngine(index)
-    qdf = spark.createDataFrame([(0, fat_q)], "query_id long, text string")
-    clock("off_s", lambda: eng_off.search_df(qdf, topn=10, fan_out=0).count(), into=fat)
-    eng_auto = BM25QueryEngine(
-        index, cfg=replace(cfg, fan_out_target_task_s=0.001)
-    )
-    clock("auto_s", lambda: eng_auto.search_df(qdf, topn=10).count(), into=fat)
-    fat["fan_out"] = eng_auto.last_fan_out
-    fat["calibration"] = eng_auto.last_calibration
-    eng_forced = BM25QueryEngine(index)
-    clock(
-        "forced8_s",
-        lambda: eng_forced.search_df(qdf, topn=10, fan_out=8).count(),
-        into=fat,
-    )
-
     # --- informational: same-process build-plan A/B ---
     # (fresh dirs, warmed JVM, identical input — plan deltas measured
-    # inside ONE window so they are attributable): groupby = the r1
-    # two-exchange plan, fused = the r2 single-exchange plan, fused_tf =
-    # the r4 single-exchange plan with map-side per-doc TF. The plan
+    # inside ONE window so they are attributable): fused = raw token rows
+    # into the encoder, fused_tf = map-side per-doc TF entries. The plan
     # `index_build` above actually ran is recorded in the JSON as
     # `resolved_postings_mode` (auto size-resolves per batch).
     ab = {}
-    g_dir = tempfile.mkdtemp(prefix="bench_ab_g_")
     f_dir = tempfile.mkdtemp(prefix="bench_ab_f_")
     ft_dir = tempfile.mkdtemp(prefix="bench_ab_ft_")
-    clock(
-        "groupby_s",
-        lambda: BM25IndexBuilder(
-            spark, replace(cfg, postings_mode="groupby")
-        ).build(webtext, g_dir, input_desc=sf_dir),
-        into=ab,
-    )
     clock(
         "fused_s",
         lambda: BM25IndexBuilder(
@@ -250,29 +209,16 @@ def main():
         ).build(webtext, ft_dir, input_desc=sf_dir),
         into=ab,
     )
-    ab["fused_speedup"] = round(ab["groupby_s"] / ab["fused_s"], 3)
     ab["fused_tf_speedup"] = round(ab["fused_s"] / ab["fused_tf_s"], 3)
-    shutil.rmtree(g_dir, ignore_errors=True)
     shutil.rmtree(f_dir, ignore_errors=True)
     shutil.rmtree(ft_dir, ignore_errors=True)
 
     calib_post = probe()
 
     total = round(sum(timings.values()), 3)
-    # Self-normalized wall (VERDICT r4 'Next round' #2): six hours of r4
-    # probing proved no quiet window exists on this co-tenant box, so every
-    # raw wall is scaled by the same-window bandwidth ratio against the
-    # r1-era reference ceiling (13 GB/s). value stays the raw comparable
-    # number; value_normalized estimates what the same run costs at the
-    # reference bandwidth. mean(pre,post) guards against a window that
-    # flips mid-suite.
-    memcpy_ref = 13.0
-    memcpy_now = (calib_pre["memcpy_gbps"] + calib_post["memcpy_gbps"]) / 2
     out = {
         "metric": "bm25_index_and_query_suite_wall",
         "value": total,
-        "value_normalized": round(total * memcpy_now / memcpy_ref, 3),
-        "memcpy_ref_gbps": memcpy_ref,
         "unit": "sec",
         "queries": timings,
         "sf": sf_dir,
@@ -287,7 +233,6 @@ def main():
         "resolved_postings_mode": index.meta.get("resolved_postings_mode"),
         "calib": {"pre": calib_pre, "post": calib_post},
         "ab": ab,
-        "fat_query": fat,
         "minhash_xxh64_s": xxh["minhash_xxh64_s"],
     }
     if quiet_gate is not None:

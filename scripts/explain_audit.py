@@ -53,7 +53,7 @@ def main():
     # 1) distributed query path: blocks join + grouped scoring. A
     # three-term query fits one scorer task, so search() would score it
     # in-process; the engine's gate is patched to plan the distributed
-    # tail that batches above fan_out_threshold() run
+    # tail that batches above cfg.fan_out_threshold run
     spark_engine = BM25QueryEngine(idx)
     spark_engine._score_in_process = lambda candidates: False
     hits = spark_engine.search(["dup key scan"], topn=10)
@@ -126,19 +126,7 @@ def main():
         ("distributed join query path (search_join_df)", grab_plan(jp_hits))
     )
 
-    # 7) term-centric path (search_term_centric_df): each (term, block)
-    # decoded once per batch. The plan must broadcast the vocab-sized
-    # per-term values into the blocks scan (no blocks shuffle before the
-    # decode kernel), truncate per-query top-k via WindowGroupLimit, and
-    # read only the decode columns from blocks (no tf_max/dl metadata —
-    # there is no MaxScore pruning on this path, so the metadata columns
-    # must be pruned from the scan entirely).
-    tc_hits = engine.search_term_centric_df(qdf, topn=10)
-    sections.append(
-        ("term-centric query path (search_term_centric_df)", grab_plan(tc_hits))
-    )
-
-    # 8) in-process query path: the same search on an unpatched engine
+    # 7) in-process query path: the same search on an unpatched engine
     drv_hits = engine.search(["dup key scan"], topn=10)
     drv_path = engine.last_search["path"]
     sections.append(
@@ -200,25 +188,7 @@ def main():
         ("join query path joins the term_stats scan (no driver staging)",
          "term_stats" in jp and "Join" in jp)
     )
-    tp = sections[7][1]
-    checks.append(
-        ("term-centric path broadcasts term values into blocks scan",
-         "BroadcastHashJoin" in tp)
-    )
-    checks.append(
-        ("term-centric top-k truncation compiles to WindowGroupLimit",
-         "WindowGroupLimit" in tp)
-    )
-    checks.append(
-        ("term-centric blocks scan prunes MaxScore metadata columns",
-         "tf_max" not in tp and "dl_max" not in tp)
-    )
-    checks.append(
-        ("term-centric path scans term_stats distributed (no driver staging)",
-         "term_stats" in tp and "Join" in tp)
-    )
-
-    dp = sections[8][1]
+    dp = sections[7][1]
     checks.append(
         ("in-process search plan is a LocalTableScan with no Exchange",
          drv_path == "driver" and "LocalTableScan" in dp

@@ -103,12 +103,6 @@ def run_join(engine, qdf, topn):
     return time.time() - t0, n_hits, 1
 
 
-def run_term_centric(engine, qdf, topn):
-    t0 = time.time()
-    n_hits = engine.search_term_centric_df(qdf, topn=topn).count()
-    return time.time() - t0, n_hits, 1
-
-
 def run_staged(engine, qdf, n_queries, batch_size, topn):
     from pyspark.sql import functions as F
 
@@ -176,11 +170,10 @@ def main():
     engine = BM25QueryEngine(index)
 
     # warmup: one tiny batch through each path so the timed runs don't
-    # absorb JVM JIT, fan-out calibration, and parquet footer caching
+    # absorb JVM JIT and parquet footer caching
     warm = make_queries_df(spark, terms, 64)
     engine.search_df(warm, topn=args.topn).count()
     engine.search_join_df(warm, topn=args.topn).count()
-    engine.search_term_centric_df(warm, topn=args.topn).count()
 
     def emit(rec):
         line = json.dumps(rec)
@@ -193,8 +186,6 @@ def main():
         qdf = make_queries_df(spark, terms, n)
         for path, runner in (
             ("join", lambda: run_join(engine, qdf, args.topn)),
-            ("term_centric",
-             lambda: run_term_centric(engine, qdf, args.topn)),
             ("staged", lambda: run_staged(
                 engine, qdf, n, args.batch_size, args.topn)),
         ):

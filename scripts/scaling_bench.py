@@ -119,7 +119,7 @@ def main():
     p.add_argument("--cpus", type=int, default=32)
     p.add_argument("--index-dir", default=None)
     p.add_argument("--postings-mode", default="fused_tf",
-                   choices=["auto", "fused_tf", "fused", "groupby"])
+                   choices=["auto", "fused_tf", "fused"])
     p.add_argument("--salt-sample", type=float, default=0.05,
                    help="heavy-term sample fraction; 0 = exact pass + token cache")
     args = p.parse_args()

@@ -51,22 +51,6 @@ class EngineConfig:
     # about 1.2M postings, see query/engine.py. None disables it too.
     fan_out_threshold: Optional[int] = 2_000_000
     fan_out_max: int = 1024        # cap on auto-chosen range shards per batch
-    # When set, the engine DERIVES fan_out_threshold from a one-time
-    # measurement of the scorer kernel's decode+score throughput (driver-side
-    # microbench over synthetic blocks) so that one scoring task targets
-    # ~this many seconds of work — hardware-aware instead of a fixed posting
-    # count. None keeps the explicit fan_out_threshold.
-    fan_out_target_task_s: Optional[float] = None
-    # Floor on the effective per-task time budget when DERIVING the
-    # threshold. Splitting a query into tasks shorter than Spark's own
-    # scheduling + Arrow-batch overhead (~30 ms on local mode, more on a
-    # real cluster) makes fan-out a net loss: the r4 bench forced a 1 ms
-    # target and published an inverted demo (auto 36% slower than off,
-    # VERDICT r4 'What's wrong' #2). The derived threshold therefore uses
-    # max(fan_out_target_task_s, fan_out_min_task_s): a task always holds
-    # at least ~scheduler-overhead-many seconds of kernel work, so engaging
-    # fan-out can never be dominated by the cost of having more tasks.
-    fan_out_min_task_s: float = 0.03
     # BM25 variant: "okapi" (reference BM25Similarity default) | "bm25l" |
     # "bm25plus" (reference rank_bm25.py:116-161). One physical index serves
     # all variants (blocks store raw tf/dl/df; idf recomputed at decode).
@@ -90,9 +74,7 @@ class EngineConfig:
     # BENCH/ab_fused_tf*.jsonl). 'fused': raw exploded tokens shuffle
     # straight into the block encoder, which counts doc_id duplicates as tf
     # (np.unique) — wins below the crossover, where the per-doc sort CPU
-    # outweighs the tiny shuffle it saves. 'groupby': legacy explode ->
-    # groupBy(term, doc_id) hash aggregate feeding a second encode exchange
-    # (kept for A/B scaling measurements). All modes produce bit-identical
+    # outweighs the tiny shuffle it saves. Both plans produce bit-identical
     # indexes (parity-tested).
     postings_mode: str = "auto"
     # 'auto' crossover, in input-batch documents. Measured on this box
@@ -131,7 +113,7 @@ class EngineConfig:
         """Stable digest of every config field that determines index CONTENT
         or physical layout (blocks/stats bytes). Participates in the resume
         lineage key: changing any of these (stopwords, tokenizer, block
-        size, bucketing, salting, postings mode) must invalidate stage and
+        size, bucketing, salting) must invalidate stage and
         bucket manifests — a resume that trusted an index built under a
         different tokenizer config would serve wrong scores. Query-time-only
         knobs (score_mode, fan_out_*, variant, delta, checkpoint_*, and the
@@ -152,15 +134,12 @@ class EngineConfig:
                 "num_term_buckets": self.num_term_buckets,
                 "salt_df_threshold": self.salt_df_threshold,
                 "num_salts": self.num_salts,
-                # auto/fused/fused_tf are the same index family with
-                # bit-identical output (parity-tested) — normalized so
-                # switching between them never invalidates a resume
-                # (auto_tf_docs is likewise layout-neutral and excluded)
-                "postings_mode": (
-                    "fused"
-                    if self.postings_mode in ("fused_tf", "auto")
-                    else self.postings_mode
-                ),
+                # auto/fused/fused_tf build bit-identical indexes
+                # (parity-tested), so the mode is layout-neutral; the
+                # constant entry keeps digests, and with them the resume
+                # manifests of existing indexes, unchanged (auto_tf_docs
+                # is likewise excluded)
+                "postings_mode": "fused",
                 "salt_sample_fraction": self.salt_sample_fraction,
             },
             sort_keys=True,

@@ -26,9 +26,6 @@ the tokenizer UDF and the Arrow block encoder):
     -> write parquet partitioned by bucket = xxhash64(term) % B,
        per-bucket checkpoint manifests (lineage + metrics) -> resumable
 
-  (postings_mode='groupby' keeps the legacy two-exchange plan — explode ->
-  groupBy(term, doc_id) hash agg -> stats -> encode — for A/B measurements.)
-
 Scale notes (the 1000-executor story):
 - The only driver-side values are scalars (N, total_tokens, average_idf) and
   the heavy-term salt list (df >= threshold: thousands of terms, not vocab).
@@ -117,6 +114,12 @@ _STATS_ROWS_PER_PARTITION = 4_000_000
 # (3-4 jobs) for one collect of a few-MB table. Above this, the fully
 # distributed path runs unchanged (10^9-term vocabs never collect).
 _DRIVER_STATS_MAX_VOCAB = 20_000
+
+_POSTINGS_MODES = frozenset({"auto", "fused", "fused_tf"})
+
+# config keys that meta.json of older indexes may still carry but
+# EngineConfig no longer has (the retired kernel-rate fan-out threshold)
+_RETIRED_CONFIG_KEYS = ("fan_out_target_task_s", "fan_out_min_task_s")
 
 # explicit read schemas everywhere: an all-stopword corpus produces empty
 # blocks/term_stats dirs, where schema inference would fail
@@ -286,6 +289,8 @@ class BM25Index:
 
     def config(self) -> EngineConfig:
         c = dict(self.meta["config"])
+        for key in _RETIRED_CONFIG_KEYS:
+            c.pop(key, None)
         c["stopwords"] = frozenset(c.get("stopwords") or ())
         return EngineConfig(**c)
 
@@ -499,8 +504,8 @@ def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
 
     Input rows: (term, salt, doc_id, doc_len[, tf]). Without ``tf`` (fused
     mode) duplicates of a doc_id ARE the term frequency and are
-    run-length-counted on the sorted ids; with it (fused_tf / groupby /
-    compact) rows are one per distinct (term, doc)."""
+    run-length-counted on the sorted ids; with it (fused_tf / compact)
+    rows are one per distinct (term, doc)."""
     has_tf = "tf" in salted.columns
     cols = ["term", "salt", "doc_id", "doc_len"] + (["tf"] if has_tf else [])
     block_size = cfg.block_size
@@ -643,6 +648,11 @@ def _idf_raw_udf(df_col: pd.Series, n_col: pd.Series) -> pd.Series:
 
 class BM25IndexBuilder:
     def __init__(self, spark: SparkSession, cfg: EngineConfig = EngineConfig()):
+        if cfg.postings_mode not in _POSTINGS_MODES:
+            raise ValueError(
+                f"postings_mode must be one of {sorted(_POSTINGS_MODES)}, "
+                f"got {cfg.postings_mode!r}"
+            )
         self.spark = spark
         self.cfg = cfg
 
@@ -773,8 +783,8 @@ class BM25IndexBuilder:
             f"|{n_docs}|cfg={cfg.index_key()}"
         )
 
-        # stats manifest validation shared by both modes: trust only a
-        # manifest written for THIS lineage (format, input, N, config)
+        # stats manifest validation: trust only a manifest written for THIS
+        # lineage (format, input, N, config)
         stats_manifest = os.path.join(ckpt, "stage-term_stats.json")
         stats_meta = None
         if resume and os.path.exists(stats_manifest):
@@ -784,112 +794,65 @@ class BM25IndexBuilder:
                 stats_meta = None
         done = completed_buckets(ckpt, lineage_key) if resume else []
 
-        if cfg.postings_mode == "groupby":
-            # legacy two-shuffle plan (A/B baseline): postings hash agg
-            # feeds term_stats, then a second exchange feeds the encoder
-            _finalize_docs_stage()  # legacy mode gains no overlap: join now
-            tokenized, postings = self._tokenized_postings(docs)
-            if stats_meta is not None:
-                term_stats = self.spark.read.schema(_STATS_READ_SCHEMA).parquet(stats_path)
-            else:
-                term_stats, stats_meta = self._build_term_stats(
-                    postings, n_docs, stats_path
-                )
-                stats_meta["lineage_key"] = lineage_key
-                with open(stats_manifest, "w", encoding="utf-8") as f:
-                    json.dump(stats_meta, f, sort_keys=True)
-                term_stats = self.spark.read.schema(_STATS_READ_SCHEMA).parquet(stats_path)
-            _mark("postings_and_stats")
-            _release_docs_cache(docs)
-            tokenized.unpersist()
-            heavy = term_stats.filter(
-                F.col("df") >= cfg.salt_df_threshold
-            ).select("term", F.lit(True).alias("_heavy"))
-            blocks_cached, _ = self._build_blocks(
-                postings,
-                heavy,
-                blocks_path,
-                ckpt,
-                lineage_key,
-                n_docs=n_docs,
-                done_buckets=set(done),
-                fail_after_groups=_fail_after_groups,
+        # ONE all-to-all exchange for the whole build: token rows (raw, or
+        # per-doc TF entries under fused_tf) shuffle straight into the block
+        # encoder (which counts doc_id duplicates as tf — see
+        # _encode_blocks_df); term_stats then derive from the tiny blocks
+        # table (df = sum(n_postings), tokens = sum(tf_sum)).
+        # With salt_sample_fraction set, the token cache is skipped
+        # entirely: the corpus streams tokenize -> explode -> shuffle
+        # exactly once (the only way this works at 100 TB — you cannot
+        # cache the tokenized corpus) and the heavy list comes from a
+        # deterministic sample. With it unset, the cache serves both the
+        # exact heavy pass and the encode pass.
+        use_cache = cfg.salt_sample_fraction is None
+        tokenized, exploded = self._tokenized_exploded(
+            docs, cfg.resolved_postings_mode(n_docs), cache=use_cache
+        )
+        # the salt list is TINY (terms above threshold) — collect it and
+        # re-broadcast a literal so the sample/cache pass runs exactly
+        # once (a broadcast of the lazy plan would recompute it), and so
+        # the stage wall attributes it separately
+        heavy = self._collect_heavy(self._heavy_terms(docs, tokenized))
+        _mark("salt_detect")
+        # the async docs file write has been overlapping tokenize +
+        # heavy detection; join it (and record the stage manifest)
+        # before the encode stage commits to the lineage
+        _finalize_docs_stage()
+        # group writes run ASYNC, overlapped with the stats computation
+        # below — both only read the blocks cache; the join (which also
+        # surfaces write failures) runs before the cache is released
+        blocks_cached, blocks_join = self._build_blocks(
+            exploded,
+            heavy,
+            blocks_path,
+            ckpt,
+            lineage_key,
+            n_docs=n_docs,
+            done_buckets=set(done),
+            fail_after_groups=_fail_after_groups,
+            mark=_mark,
+        )
+        _release_docs_cache(docs)
+        tokenized.unpersist()
+        _mark("blocks_write")
+        if stats_meta is None:
+            # stats derive from the STILL-CACHED blocks table when the
+            # stage just ran (no re-read of the parquet it wrote);
+            # a fully-resumed stage falls back to the on-disk table
+            _, stats_meta = self._stats_from_blocks(
+                blocks_path, n_docs, stats_path, blocks_df=blocks_cached
             )
-            if blocks_cached is not None:
-                blocks_cached.unpersist()
-            postings.unpersist()
-            _mark("blocks")
-        else:
-            # FUSED (default): ONE all-to-all exchange for the whole build.
-            # Raw exploded tokens shuffle straight into the block encoder
-            # (which counts doc_id duplicates as tf — see
-            # _make_block_encoder); term_stats then derive from the tiny
-            # blocks table (df = sum(n_postings), tokens = sum(tf_sum)).
-            # The legacy plan shuffled the distinct (term, doc) pairs TWICE
-            # (agg exchange + encode exchange) and built two vocab×docs hash
-            # tables; at webtext scale that exchange+agg traffic dominated
-            # the build and capped scaling efficiency.
-            # With salt_sample_fraction set, the token cache is skipped
-            # entirely: the corpus streams tokenize -> explode -> shuffle
-            # exactly once (the only way this works at 100 TB — you cannot
-            # cache the tokenized corpus) and the heavy list comes from a
-            # deterministic sample. With it unset, the cache serves both the
-            # exact heavy pass and the encode pass.
-            use_cache = cfg.salt_sample_fraction is None
-            resolved_mode = cfg.resolved_postings_mode(n_docs)
-            tokenized, exploded = self._tokenized_exploded(
-                docs,
-                cache=use_cache,
-                mode=resolved_mode,
-            )
-            # the salt list is TINY (terms above threshold) — collect it and
-            # re-broadcast a literal so the sample/cache pass runs exactly
-            # once (a broadcast of the lazy plan would recompute it), and so
-            # the stage wall attributes it separately
-            heavy = self._collect_heavy(self._heavy_terms(docs, tokenized))
-            _mark("salt_detect")
-            # the async docs file write has been overlapping tokenize +
-            # heavy detection; join it (and record the stage manifest)
-            # before the encode stage commits to the lineage
-            _finalize_docs_stage()
-            # group writes run ASYNC, overlapped with the stats computation
-            # below — both only read the blocks cache; the join (which also
-            # surfaces write failures) runs before the cache is released
-            blocks_cached, blocks_join = self._build_blocks(
-                exploded,
-                heavy,
-                blocks_path,
-                ckpt,
-                lineage_key,
-                n_docs=n_docs,
-                done_buckets=set(done),
-                fail_after_groups=_fail_after_groups,
-                mark=_mark,
-                async_writes=True,
-            )
-            _release_docs_cache(docs)
-            tokenized.unpersist()
-            _mark("blocks_write")
-            if stats_meta is not None:
-                if blocks_join is not None:
-                    blocks_join()
-                term_stats = self.spark.read.schema(_STATS_READ_SCHEMA).parquet(stats_path)
-            else:
-                # stats derive from the STILL-CACHED blocks table when the
-                # stage just ran (no re-read of the parquet it wrote);
-                # a fully-resumed stage falls back to the on-disk table
-                term_stats, stats_meta = self._stats_from_blocks(
-                    blocks_path, n_docs, stats_path, blocks_df=blocks_cached
-                )
-                if blocks_join is not None:
-                    blocks_join()
-                stats_meta["lineage_key"] = lineage_key
-                with open(stats_manifest, "w", encoding="utf-8") as f:
-                    json.dump(stats_meta, f, sort_keys=True)
-                term_stats = self.spark.read.schema(_STATS_READ_SCHEMA).parquet(stats_path)
-            if blocks_cached is not None:
-                blocks_cached.unpersist()
-            _mark("stats")
+            if blocks_join is not None:
+                blocks_join()
+            stats_meta["lineage_key"] = lineage_key
+            with open(stats_manifest, "w", encoding="utf-8") as f:
+                json.dump(stats_meta, f, sort_keys=True)
+        elif blocks_join is not None:
+            blocks_join()
+        if blocks_cached is not None:
+            blocks_cached.unpersist()
+        _mark("stats")
 
         total_tokens = stats_meta["total_tokens"]
         docs_meta["total_tokens"] = total_tokens
@@ -913,11 +876,7 @@ class BM25IndexBuilder:
             # the PHYSICAL plan this build actually ran (postings_mode may
             # be 'auto'; this names its size-resolution so bench artifacts
             # attribute walls to the right plan — VERDICT r4 'wrong' #1)
-            "resolved_postings_mode": (
-                "groupby"
-                if cfg.postings_mode == "groupby"
-                else cfg.resolved_postings_mode(n_docs)
-            ),
+            "resolved_postings_mode": cfg.resolved_postings_mode(n_docs),
             "salt_per_range": cfg.salt_bounds(n_docs),
             "increments": [],
             "config": {
@@ -936,8 +895,6 @@ class BM25IndexBuilder:
                 "salt_sample_fraction": cfg.salt_sample_fraction,
                 "fan_out_threshold": cfg.fan_out_threshold,
                 "fan_out_max": cfg.fan_out_max,
-                "fan_out_target_task_s": cfg.fan_out_target_task_s,
-                "fan_out_min_task_s": cfg.fan_out_min_task_s,
                 "variant": cfg.variant,
                 "delta": cfg.delta,
                 "checkpoint_dir": cfg.checkpoint_dir,
@@ -1029,21 +986,17 @@ class BM25IndexBuilder:
         # (physical layout only — a term heavy in the old corpus but light
         # in this batch just gets an unsalted small segment).
         per_salt = idx.meta.get("salt_per_range") or cfg.salt_bounds(old_n)
-        if cfg.postings_mode == "groupby":
-            tokenized, rows = self._tokenized_postings(new_docs)
-            heavy_src = rows.select("term")  # one row per (term, doc): df
-        else:
-            # resolved on the NEW batch's size: incremental batches are
-            # usually far below the fused_tf crossover even when the
-            # accumulated corpus is far above it
-            tokenized, rows = self._tokenized_exploded(
-                new_docs, mode=cfg.resolved_postings_mode(m_new)
-            )
-            # per-doc distinct BEFORE explode: count(1) per term = batch df,
-            # consistent with groupby mode (salt_df_threshold means df)
-            heavy_src = tokenized.select(
-                F.explode(F.array_distinct("toks")).alias("term")
-            )
+        # resolved on the NEW batch's size: incremental batches are usually
+        # far below the fused_tf crossover even when the accumulated corpus
+        # is far above it
+        tokenized, rows = self._tokenized_exploded(
+            new_docs, cfg.resolved_postings_mode(m_new)
+        )
+        # per-doc distinct BEFORE explode: count(1) per term = batch df
+        # (salt_df_threshold means df)
+        heavy_src = tokenized.select(
+            F.explode(F.array_distinct("toks")).alias("term")
+        )
         heavy = (
             heavy_src.groupBy("term")
             .agg(F.count(F.lit(1)).alias("hits"))
@@ -1173,7 +1126,6 @@ class BM25IndexBuilder:
                 .parquet(tmp_stats)
             )
             raw.unpersist()
-        rows.unpersist()  # no-op in fused mode (exploded is never persisted)
 
         # ---- stage next meta, write the commit record, roll forward ----
         meta = dict(idx.meta)
@@ -1349,10 +1301,8 @@ class BM25IndexBuilder:
             "doc_id", tok_fn(F.col("text")).alias("toks")
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _tokenized_exploded(
-        self, docs: DataFrame, cache: bool = True, mode: Optional[str] = None
-    ):
-        """FUSED-mode input rows for the one build shuffle. ``cache=False``
+    def _tokenized_exploded(self, docs: DataFrame, mode: str, cache: bool = True):
+        """Input rows for the one build shuffle. ``cache=False``
         skips the token cache (sampled heavy detection makes the exact
         second pass unnecessary — the corpus then streams through tokenize
         exactly once).
@@ -1375,14 +1325,8 @@ class BM25IndexBuilder:
         consumes the tf column, so blocks are bit-identical to 'fused'
         (parity-tested).
 
-        ``mode`` is the RESOLVED mode ('fused' | 'fused_tf') — callers
-        with a known batch size pass cfg.resolved_postings_mode(n); None
-        falls back to the config value, with 'auto' defaulting to the
-        scale path ('fused_tf')."""
-        if mode is None:
-            mode = self.cfg.postings_mode
-        if mode == "auto":
-            mode = "fused_tf"
+        ``mode`` is the RESOLVED mode ('fused' | 'fused_tf'):
+        cfg.resolved_postings_mode(n) for a batch of n documents."""
         if cache:
             tokenized = self._tokenize_cached(docs)
         else:
@@ -1402,8 +1346,8 @@ class BM25IndexBuilder:
 
     def _heavy_terms(self, docs: DataFrame, tokenized: DataFrame) -> DataFrame:
         """Salt list (term, _heavy) for head-term skew, thresholded on
-        DOCUMENT frequency in every mode (salt_df_threshold means df — the
-        same semantics as groupby mode). The per-doc distinct pass is free of
+        DOCUMENT frequency in every mode (salt_df_threshold means df). The
+        per-doc distinct pass is free of
         any new exchange: array_distinct(toks) dedups within each row BEFORE
         explode, so count(1) per term counts docs, and the shuffle stays the
         vocab-sized partial agg. Exact mode reads the token cache (one row
@@ -1442,23 +1386,6 @@ class BM25IndexBuilder:
         detection plan)."""
         rows = [(r["term"], True) for r in heavy.collect()]
         return literal_df(self.spark, rows, "term string, _heavy boolean")
-
-    def _tokenized_postings(self, docs: DataFrame):
-        """Legacy (postings_mode='groupby') pre-aggregated postings: one row
-        per distinct (term, doc) via a two-phase hash aggregate — costs an
-        extra all-to-all exchange vs the fused path; kept for A/B scaling
-        measurements. Returns (tokenized, postings), both persisted."""
-        tokenized = self._tokenize_cached(docs)
-        postings = (
-            tokenized.select(
-                "doc_id",
-                F.size("toks").alias("doc_len"),
-                F.explode("toks").alias("term"),
-            )
-            .groupBy("term", "doc_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        return tokenized, postings.persist(StorageLevel.MEMORY_AND_DISK)
 
     def _build_docs(self, webtext: DataFrame, docs_path: str, input_desc: str):
         # NO dedup on the initial build: reference add_corpus keeps
@@ -1540,15 +1467,6 @@ class BM25IndexBuilder:
         }
         return docs, meta
 
-    def _build_term_stats(self, postings: DataFrame, n_docs: int, stats_path: str):
-        # legacy mode: single pass over the (persisted) postings gives df AND
-        # per-term token totals
-        df_tbl = postings.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("tf").alias("term_tokens"),
-        )
-        return self._finish_term_stats(df_tbl, n_docs, stats_path)
-
     def _stats_from_blocks(
         self,
         blocks_path: str,
@@ -1556,7 +1474,7 @@ class BM25IndexBuilder:
         stats_path: str,
         blocks_df: Optional[DataFrame] = None,
     ):
-        """FUSED mode: term_stats derive from the blocks table (the cached
+        """term_stats derive from the blocks table (the cached
         blocks DF when the stage just ran — no re-read of the parquet it
         wrote — else a column-pruned parquet read of term/n_postings/tf_sum,
         ~n_postings/block_size rows; the groupBy(term) shuffles only
@@ -1686,18 +1604,17 @@ class BM25IndexBuilder:
         done_buckets: set,
         fail_after_groups: Optional[int] = None,
         mark=None,
-        async_writes: bool = False,
     ):
-        """``postings`` is either pre-aggregated (term, doc_id, doc_len, tf)
-        rows (legacy mode) or raw exploded token rows without tf (fused mode
-        — the encoder counts duplicates). ``heavy`` is the tiny salt list
+        """``postings`` is either per-doc TF entries (term, doc_id, doc_len,
+        tf) (fused_tf) or raw exploded token rows without tf (fused — the
+        encoder counts duplicates). ``heavy`` is the tiny salt list
         (term, _heavy) — always broadcast. ``mark`` (optional) records the
         encode-vs-write stage boundary in the build's stage walls.
 
         Returns (blocks, join): the persisted blocks DataFrame so the
         caller can derive term_stats from the cache instead of re-reading
-        the freshly written parquet (the caller unpersists), and — when
-        ``async_writes`` — a join callable that must run before the cache
+        the freshly written parquet (the caller unpersists), and a join
+        callable for the async group writes that must run before the cache
         is released or meta is written. (None, None) when the stage fully
         resumed."""
         cfg = self.cfg
@@ -1806,10 +1723,6 @@ class BM25IndexBuilder:
                             "group_wall_s": wall,
                         },
                     )
-
-        if not async_writes:
-            _write_groups()
-            return blocks, None
 
         # run the group writes CONCURRENTLY with the caller's stats
         # computation (guide §2.6) — both only read the blocks cache, and

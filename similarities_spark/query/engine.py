@@ -9,7 +9,7 @@ Physical plan (``search`` / ``search_df``, per query batch):
        from the index carry no blocks and drop out here
     -> candidate volume: sum of df over each query's in-index terms, summed
        over the batch — known before any block is read
-    -> GATE: no explicit ``fan_out``, batch volume <= fan_out_threshold()
+    -> GATE: no explicit ``fan_out``, batch volume <= cfg.fan_out_threshold
        (the postings one scorer task may hold), and serial scoring in the
        driver is predicted to finish before the distributed tail would
        with the cluster's parallelism (_score_in_process)?
@@ -44,7 +44,7 @@ from __future__ import annotations
 from typing import Dict, Optional, Sequence, Union
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -87,51 +87,6 @@ _TASK_POSTINGS_PER_S = 0.4e6
 _SPARK_TAIL_EXTRA_S = 1.2
 
 
-def _measure_scorer_rate(cfg, avgdl: float) -> float:
-    """Decode+score throughput (postings/sec) of the MaxScore kernel on
-    synthetic single-term blocks — the driver-side microbench behind
-    ``fan_out_target_task_s``. Runs in ~100 ms once per engine; the same
-    numpy kernel executes inside every applyInPandas scoring task, so the
-    measured rate transfers to executor tasks directly."""
-    import time as _time
-
-    import numpy as np
-
-    from similarities_spark.index import codec as _codec
-
-    n = 200_000
-    ids = np.arange(n, dtype=np.int64)
-    tfs = (ids % 7 + 1).astype(np.int64)
-    dls = np.full(n, max(1, int(avgdl)), dtype=np.int64)
-    blocks = _codec.encode_blocks_batch(ids, tfs, dls, cfg.block_size)
-    rows = [
-        (
-            "t", 0, bi, int(ids[lo]), int(ids[hi - 1]), hi - lo,
-            int(tfs[lo:hi].max()), int(tfs[lo:hi].min()),
-            int(dls[lo:hi].max()), int(dls[lo:hi].min()),
-            payload, n, 1.0,
-        )
-        for bi, (payload, lo, hi) in enumerate(blocks)
-    ]
-    pdf = pd.DataFrame(
-        rows,
-        columns=[
-            "term", "salt", "block_id", "min_doc", "max_doc", "n_postings",
-            "tf_max", "tf_min", "dl_max", "dl_min", "payload", "df", "idf",
-        ],
-    )
-    best = float("inf")
-    for _ in range(2):  # second run is warm (numpy/codec JIT-free, cache-hot)
-        t0 = _time.perf_counter()
-        _scorer.score_query(
-            ["t"], pdf, 10, avgdl, cfg.k1, cfg.b,
-            prune=False,  # full decode: measures the worst-case task
-            variant="okapi", delta=0.0, n_docs=n,
-        )
-        best = min(best, _time.perf_counter() - t0)
-    return n / best
-
-
 class BM25QueryEngine:
     def __init__(self, index: BM25Index, cfg=None):
         """``cfg`` overrides the index's stored config for query-time-only
@@ -145,9 +100,6 @@ class BM25QueryEngine:
         # path ("driver" | "spark"), candidate_postings (the batch volume
         # the gate compared), blocks_read (driver path only) and fan_out
         self.last_search: Optional[dict] = None
-        # populated on first use when fan_out_target_task_s is set
-        self.last_calibration: Optional[dict] = None
-        self._resolved_fan_out_threshold: Optional[int] = None
         # DataFrame HANDLES (not data) to the index tables, created once:
         # spark.read.parquet lists files eagerly on the driver, so a fresh
         # blocks()/term_stats() per batch re-paid the listing every search.
@@ -174,32 +126,6 @@ class BM25QueryEngine:
         for df in self._live_cached:
             df.unpersist()
         self._live_cached = []
-
-    def fan_out_threshold(self) -> Optional[int]:
-        """Effective auto-fan-out threshold: the configured posting count,
-        or — when ``fan_out_target_task_s`` is set — derived once from the
-        measured kernel rate so one scoring task holds ~target seconds of
-        decode+score work on THIS hardware."""
-        cfg = self.cfg
-        if cfg.fan_out_target_task_s is None:
-            return cfg.fan_out_threshold
-        if self._resolved_fan_out_threshold is None:
-            rate = _measure_scorer_rate(cfg, self.index.avgdl)
-            # floor the per-task budget at scheduler+Arrow overhead: a task
-            # shorter than that costs more to launch than it saves, so a
-            # sub-floor target would derive a threshold that makes auto
-            # fan-out a pessimization (the r4 bench demo inversion)
-            eff_target = max(cfg.fan_out_target_task_s, cfg.fan_out_min_task_s)
-            self._resolved_fan_out_threshold = max(
-                1_000, int(rate * eff_target)
-            )
-            self.last_calibration = {
-                "scorer_postings_per_s": round(rate, 1),
-                "fan_out_threshold": self._resolved_fan_out_threshold,
-                "target_task_s": cfg.fan_out_target_task_s,
-                "effective_target_task_s": eff_target,
-            }
-        return self._resolved_fan_out_threshold
 
     def _lookup_stats(self, terms) -> Dict[str, tuple]:
         """df/idf for the given terms: from the vocab-capped driver
@@ -355,7 +281,7 @@ class BM25QueryEngine:
             self._record_search("driver", candidates, None, blocks_read)
             return self._with_text(hits, include_text)
 
-        fan_thr = self.fan_out_threshold()
+        fan_thr = cfg.fan_out_threshold
         if fan_out is None and fan_thr:
             # auto fan-out: shard once the fattest query outgrows one task
             max_cand = max(per_q.values(), default=0)
@@ -398,13 +324,13 @@ class BM25QueryEngine:
 
     def _score_in_process(self, candidates: int) -> bool:
         """Gate of the driver tail: the batch's whole candidate volume fits
-        what one scorer task may hold (``fan_out_threshold()``, which also
+        what one scorer task may hold (``cfg.fan_out_threshold``, which also
         bounds the one blocks collect the driver tail makes), and scoring
         it serially is predicted to beat the distributed tail spread over
         the cluster's ``defaultParallelism`` cores (sizing constants above).
         With enough cores the distributed tail overtakes the driver from
         about 1.2M postings on; with 2 it never does."""
-        thr = self.fan_out_threshold()
+        thr = self.cfg.fan_out_threshold
         if not thr or candidates > thr:
             return False
         cores = self.spark.sparkContext.defaultParallelism
@@ -445,7 +371,7 @@ class BM25QueryEngine:
     ):
         """Driver tail over the batch's in-index ``terms``: ONE pruned
         blocks read collected as Arrow (bounded by the gate: at most
-        ``fan_out_threshold()`` postings), the scorer kernel per query in
+        ``cfg.fan_out_threshold`` postings), the scorer kernel per query in
         driver Python with the arguments the distributed tail passes, and
         _pad_and_rank's padding for the queries the scorer flags. Returns
         (hits as a LocalRelation — collecting them runs no Spark job,
@@ -624,10 +550,10 @@ class BM25QueryEngine:
             F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
         )
         qblocks = qstats.join(self._blocks_df, ["bucket", "term"], "inner")
-        qtok = self._attach_token_dfs(qtok, qstats, broadcast_stats=False)
+        qtok = self._attach_token_dfs(qtok, qstats)
 
         fan_out = candidates = None
-        fan_thr = self.fan_out_threshold()
+        fan_thr = cfg.fan_out_threshold
         if fan_thr:
             row = (
                 qstats.groupBy("query_id")
@@ -643,183 +569,7 @@ class BM25QueryEngine:
             qtok, qblocks, queries_df, topn, fan_out, include_text
         )
 
-    def search_term_centric_df(
-        self,
-        queries_df: DataFrame,
-        topn: int = 10,
-        include_text: bool = False,
-    ) -> DataFrame:
-        """Term-centric batch scoring: decode and score each (term, block)
-        ONCE per batch, regardless of how many queries share the term.
-
-        The cogroup paths (search_df / search_join_df) replicate a term's
-        block payloads through the exchange once per query containing it —
-        the right plan for small or low-overlap batches, where MaxScore
-        block skipping prunes most of the work per query. For LARGE
-        batches with Zipf-shaped term overlap (10^5 web queries over a
-        shared vocabulary), payload replication dominates: a term shared
-        by 300 queries ships its postings 300x. This path instead:
-
-          1. per-(query, term) multiplicity ``mult`` (duplicate query
-             tokens kept — reference semantics);
-          2. vocab-sized per-term values (variant idf via the same
-             math.log path as the scorer; BM25Plus unmatched baseline);
-          3. every matching block decoded ONCE in a (term, salt)
-             applyInPandas kernel -> narrow (term, doc_id, contrib) rows,
-             contrib = matched minus unmatched baseline so the final sum
-             is baseline-shifted exactly like the fan-out algebra;
-          4. contribs x query-term weights join (the only place work
-             scales with query count — rows are 24 bytes, not payloads),
-             partial-aggregated sum to (query_id, doc_id) scores;
-          5. per-query B_q baseline re-added, then the shared
-             padding + ranking tail (_pad_and_rank).
-
-        Trade-off: no per-query MaxScore pruning (every posting of every
-        batch term is scored once), so latency for a SINGLE query is
-        worse — throughput for overlapping batches is the win. Results
-        match search_df to float-summation order (parity-tested at
-        rel 1e-9; the reference accumulates per token, Spark's sum is
-        order-free)."""
-        import numpy as np
-
-        from similarities_spark import variants as _variants
-        from similarities_spark.index import codec as _codec
-
-        cfg = self.cfg
-        variant, delta = cfg.variant, cfg.resolved_delta()
-        avgdl, n_docs = self.index.avgdl, self.index.n_docs
-        k1, b = cfg.k1, cfg.b
-
-        tok_udf = make_tokenizer_udf("query")
-        qtok = queries_df.select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.explode(tok_udf(F.col("text"))).alias("term"),
-        )
-        qw = qtok.groupBy("query_id", "term").agg(
-            F.count(F.lit(1)).alias("mult")
-        )
-
-        # vocab-sized per-term values: variant idf (math.log, same C-libm
-        # path as the scorer) and the per-occurrence unmatched baseline
-        tstats = (
-            qw.select("term")
-            .distinct()
-            .join(self._stats_df, "term", "inner")
-        )
-
-        def tvals_fn(it):
-            f = (
-                _variants.idf_fn(variant, n_docs)
-                if variant != "okapi"
-                else None
-            )
-            for pdf in it:
-                if f is None:
-                    idf_v = pdf["idf"].to_numpy(dtype="float64")
-                else:
-                    idf_v = np.array(
-                        [f(int(d)) for d in pdf["df"]], dtype="float64"
-                    )
-                base = np.array(
-                    [
-                        _variants.unmatched_contrib(variant, iv, delta)
-                        for iv in idf_v
-                    ],
-                    dtype="float64",
-                )
-                yield pd.DataFrame(
-                    {"term": pdf["term"], "idf_v": idf_v, "base": base}
-                )
-
-        tvals = tstats.mapInPandas(
-            tvals_fn, "term string, idf_v double, base double"
-        ).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
-        )
-
-        # each matching block exactly ONCE: broadcast the tiny term table
-        # into the bucket-partitioned blocks scan (runtime partition
-        # pruning on the broadcast join keys)
-        blocks = self._blocks_df.select(
-            "bucket", "term", "salt", "block_id", "n_postings", "payload"
-        )
-        tblocks = blocks.join(F.broadcast(tvals), ["bucket", "term"], "inner")
-
-        def contrib_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            term = pdf["term"].iloc[0]
-            idf_v = float(pdf["idf_v"].iloc[0])
-            base = float(pdf["base"].iloc[0])
-            ids_, tfs_, dls_ = _codec.decode_blocks_batch(
-                pdf["payload"].tolist(),
-                pdf["n_postings"].to_numpy(dtype="int64"),
-            )
-            c = _variants.matched_contribs(
-                variant, tfs_, dls_, idf_v, avgdl, k1, b, delta
-            )
-            return pd.DataFrame(
-                {"term": term, "doc_id": ids_, "contrib": c - base}
-            )
-
-        contribs = tblocks.groupBy("term", "salt").applyInPandas(
-            contrib_group, "term string, doc_id long, contrib double"
-        )
-
-        # the only stage whose row count scales with the query set — and
-        # the rows are narrow scalars, not payloads; partial (map-side)
-        # aggregation combines same-(query, doc) parts before the exchange
-        parts = contribs.join(qw, "term").select(
-            "query_id",
-            "doc_id",
-            (F.col("mult") * F.col("contrib")).alias("part"),
-        )
-        msum = parts.groupBy("query_id", "doc_id").agg(
-            F.sum("part").alias("mscore")
-        )
-        bq = (
-            qw.join(tvals.select("term", "base"), "term", "inner")
-            .groupBy("query_id")
-            .agg(F.sum(F.col("mult") * F.col("base")).alias("bq"))
-        )
-        scored_tc = msum.join(bq, "query_id", "left").select(
-            "query_id",
-            "doc_id",
-            (F.col("mscore") + F.coalesce(F.col("bq"), F.lit(0.0))).alias(
-                "score"
-            ),
-            F.coalesce(F.col("bq"), F.lit(0.0)).alias("pad_score"),
-        )
-
-        # truncate to per-query top-k BEFORE the padding tail: the rank
-        # filter compiles to WindowGroupLimit (partial per-partition limits
-        # ahead of the final sort), so the full matched set — every doc
-        # any query matched — never rides a global sort. Padding flags are
-        # then decidable from the TRUNCATED counts: truncated < topn iff
-        # matched < topn, and when padding engages the truncated count IS
-        # the exact matched count (pad-pool sizing only reads it then).
-        w_ord = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        wq = Window.partitionBy("query_id")
-        topk = scored_tc.withColumn(
-            "rank", F.row_number().over(w_ord)
-        ).filter(F.col("rank") <= topn)
-        scored = topk.select(
-            "query_id",
-            F.lit(0).cast("long").alias("range_id"),
-            "doc_id",
-            "score",
-            F.count(F.lit(1)).over(wq).cast("long").alias("n_matched"),
-            (F.count(F.lit(1)).over(wq) < F.lit(topn)).alias("needs_pad"),
-            "pad_score",
-        )
-        self._record_search("spark", None, None)
-        hits = self._pad_and_rank(queries_df, scored, topn, single_range=True)
-        return self._with_text(hits, include_text)
-
-    def _attach_token_dfs(
-        self, qtok: DataFrame, qstats: DataFrame, broadcast_stats: bool = True
-    ) -> DataFrame:
+    def _attach_token_dfs(self, qtok: DataFrame, qstats: DataFrame) -> DataFrame:
         """Carry each in-index token's corpus df on the token side of the
         cogroup (null for unknown terms). Only BM25Plus consumes it (the
         scorer rebuilds per-token idf*delta baselines from it so doc-range
@@ -836,8 +586,6 @@ class BM25QueryEngine:
             F.col("term").alias("term"),
             F.col("df").alias("df"),
         )
-        if broadcast_stats:
-            stats = F.broadcast(stats)
         return qtok.join(stats, ["query_id", "term"], "left")
 
     def _finish_search(

@@ -200,12 +200,12 @@ def test_last_search_record(spark, index):
 
 
 def test_gate_follows_cluster_parallelism(spark, index, monkeypatch):
-    """The driver tail takes a batch within fan_out_threshold() only while
+    """The driver tail takes a batch within cfg.fan_out_threshold only while
     serial scoring is predicted to beat the distributed tail on the
     cluster's cores: on 2 or 4 cores every such batch, on many cores about
     1.2M postings."""
     eng = BM25QueryEngine(index)
-    thr = eng.fan_out_threshold()
+    thr = eng.cfg.fan_out_threshold
     cases = [
         (2, thr, thr + 1), (4, thr, thr + 1),
         (64, 1_200_000, 1_300_000), (10_000, 1_150_000, 1_250_000),

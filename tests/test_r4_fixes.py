@@ -71,7 +71,7 @@ def test_lsh_candidates_deterministic_and_covers_self(spark):
 
 def test_bm25plus_search_join_df_fanout_parity(spark, tmp_path):
     """The fully-distributed join path must also decompose BM25Plus over
-    doc ranges exactly (token-side df join with broadcast_stats=False)."""
+    doc ranges exactly (token-side df join)."""
     import dataclasses
 
     from similarities_spark.config import EngineConfig
@@ -205,7 +205,7 @@ def test_doc_tf_entries_plan_sorts_once(spark):
 
 
 def test_postings_mode_parity_bit_identical(spark, tmp_path):
-    """fused / fused_tf / groupby must produce BIT-IDENTICAL indexes:
+    """fused / fused_tf must produce BIT-IDENTICAL indexes:
     same blocks (payload bytes included), same term_stats, same meta."""
     from similarities_spark.config import EngineConfig
     from similarities_spark.index.build import BM25IndexBuilder
@@ -221,7 +221,7 @@ def test_postings_mode_parity_bit_identical(spark, tmp_path):
         postings_mode=mode,
     )
     out = {}
-    for mode in ("fused", "fused_tf", "groupby"):
+    for mode in ("fused", "fused_tf"):
         idx = BM25IndexBuilder(spark, mk(mode)).build(
             df, str(tmp_path / mode), input_desc="t"
         )
@@ -246,17 +246,6 @@ def test_postings_mode_parity_bit_identical(spark, tmp_path):
             idx.meta["avgdl"],
         )
     assert out["fused_tf"] == out["fused"]
-    # groupby shares _finish_term_stats but sums idf_raw over a different
-    # partition layout: average_idf (and so the epsilon floor) can differ
-    # in the last ulps — blocks and df stay bit-identical, idf to 1e-9
-    gb, fb = out["groupby"], out["fused"]
-    assert gb[0] == fb[0]  # blocks bit-identical
-    assert [(t, d) for t, d, _ in gb[1]] == [(t, d) for t, d, _ in fb[1]]
-    assert all(
-        abs(gi - fi) < 1e-9
-        for (_, _, gi), (_, _, fi) in zip(gb[1], fb[1])
-    )
-    assert gb[2:] == fb[2:]
 
 
 def test_fused_tf_incremental_merge_parity(spark, tmp_path):
@@ -317,7 +306,7 @@ def test_auto_postings_mode_resolution():
     assert cfg.resolved_postings_mode(cfg.auto_tf_docs) == "fused_tf"
     import dataclasses
 
-    for m in ("fused", "fused_tf", "groupby"):
+    for m in ("fused", "fused_tf"):
         c = dataclasses.replace(cfg, postings_mode=m)
         assert c.resolved_postings_mode(1) == m
         assert c.resolved_postings_mode(10**9) == m
@@ -352,51 +341,3 @@ def test_auto_mode_small_batch_uses_fused_plan(spark, tmp_path):
         mode=cfg.resolved_postings_mode(10**6),
     )
     assert "tf" in rows_big.columns
-
-
-# ---------- term-centric batch scoring ----------
-
-
-def test_search_term_centric_df_matches_search_df(spark, tmp_path):
-    """Each (term, block) decoded once per batch must reproduce the
-    cogroup path exactly: same ranks/docs for every variant, scores to
-    float-summation order (the reference accumulates per token in order;
-    the term-centric sum is order-free)."""
-    import dataclasses
-
-    from similarities_spark.config import EngineConfig
-    from similarities_spark.query.engine import BM25QueryEngine
-    from similarities_spark.sources.synth import synth_webtext_pandas
-    from tests.test_r3_fixes import _build
-
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=120, seed=21))
-    idx = _build(
-        spark,
-        df,
-        tmp_path / "i",
-        EngineConfig(num_term_buckets=4, salt_df_threshold=30, num_salts=4),
-    )
-    qdf = spark.createDataFrame(
-        [
-            (0, "data web w0003"),     # multi-term, shared vocab
-            (1, "zzz unknown"),        # zero-match -> full zero padding
-            (2, "the of and the"),     # duplicate token (mult=2) + head terms
-            (3, "w0007"),              # sparse term -> partial padding
-        ],
-        "query_id long, text string",
-    )
-    for variant in ("okapi", "bm25l", "bm25plus"):
-        eng = BM25QueryEngine(
-            idx, cfg=dataclasses.replace(idx.config(), variant=variant)
-        )
-        a = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], r["score"])
-            for r in eng.search_df(qdf, topn=7).collect()
-        )
-        t = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], r["score"])
-            for r in eng.search_term_centric_df(qdf, topn=7).collect()
-        )
-        assert [x[:3] for x in a] == [x[:3] for x in t], variant
-        for x, y in zip(a, t):
-            assert y[3] == pytest.approx(x[3], rel=1e-9), (variant, x, y)
