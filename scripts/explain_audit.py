@@ -76,10 +76,7 @@ def main():
     # pipeline must contain exactly ONE all-to-all Exchange (the groupBy
     # (term, salt) into the block encoder; the broadcast of the heavy-term
     # list is a BroadcastExchange, not a shuffle)
-    from similarities_spark.index.build import (
-        BM25IndexBuilder,
-        _encode_blocks_df,
-    )
+    from similarities_spark.index.build import BM25IndexBuilder, _encode_salted
 
     builder = BM25IndexBuilder(spark, idx.config())
     # audit the SCALE-path plan explicitly: 'auto' resolves by batch size
@@ -91,18 +88,7 @@ def main():
     # exchanges the posting rows themselves travel through
     heavy = spark.createDataFrame([("the", True)], "term string, _heavy boolean")
     per_salt = builder.cfg.salt_bounds(idx.n_docs)
-    salted = (
-        exploded.join(F.broadcast(heavy), "term", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("_heavy").isNotNull(),
-                (F.col("doc_id") / F.lit(per_salt)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_heavy")
-    )
-    enc = _encode_blocks_df(salted, builder.cfg)
+    enc = _encode_salted(exploded, heavy, per_salt, builder.cfg)
     engine_build_plan = grab_plan(enc)
     tok_df.unpersist()
     sections.append(

@@ -55,7 +55,6 @@ def build_index(spark, corpus_path, index_dir, n_docs):
         num_term_buckets=64,
         salt_df_threshold=20_000,
         num_salts=16,
-        salt_sample_fraction=0.05,
     )
     shutil.rmtree(index_dir, ignore_errors=True)
     return BM25IndexBuilder(spark, cfg).build(

@@ -48,7 +48,6 @@ def run(
     corpus: str,
     index_dir: str,
     postings_mode: str = "fused_tf",
-    salt_sample: float = 0.05,
 ):
     from pyspark.sql import SparkSession, functions as F
 
@@ -76,9 +75,6 @@ def run(
         salt_df_threshold=20_000,
         num_salts=16,
         postings_mode=postings_mode,
-        # stream-once build: heavy terms from a deterministic sample, no
-        # token cache (the only shape that works at 100 TB)
-        salt_sample_fraction=salt_sample if salt_sample > 0 else None,
     )
     t0 = time.time()
     index = BM25IndexBuilder(spark, cfg).build(webtext, index_dir, input_desc=corpus)
@@ -120,8 +116,6 @@ def main():
     p.add_argument("--index-dir", default=None)
     p.add_argument("--postings-mode", default="fused_tf",
                    choices=["auto", "fused_tf", "fused"])
-    p.add_argument("--salt-sample", type=float, default=0.05,
-                   help="heavy-term sample fraction; 0 = exact pass + token cache")
     args = p.parse_args()
     if args.gen:
         gen_corpus(args.n_docs, args.corpus)
@@ -130,9 +124,8 @@ def main():
     import shutil
 
     shutil.rmtree(index_dir, ignore_errors=True)
-    out = run(args.cpus, args.corpus, index_dir, args.postings_mode, args.salt_sample)
+    out = run(args.cpus, args.corpus, index_dir, args.postings_mode)
     out["postings_mode"] = args.postings_mode
-    out["salt_sample"] = args.salt_sample
     print(json.dumps(out))
 
 

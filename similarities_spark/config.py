@@ -88,15 +88,6 @@ class EngineConfig:
         if self.postings_mode != "auto":
             return self.postings_mode
         return "fused_tf" if n_docs >= self.auto_tf_docs else "fused"
-    # Heavy-term (salt-list) detection in fused mode. None = exact pass over
-    # the full corpus, which requires CACHING the tokenized corpus (written
-    # once, read twice — impossible at 100 TB and bandwidth-hostile
-    # everywhere). A fraction f in (0, 1) tokenizes only a deterministic
-    # f-sample to find heavy terms (cutoff scaled to 0.5*f*threshold for
-    # slack), so the full corpus streams tokenize -> explode -> shuffle
-    # EXACTLY ONCE with no token cache. Salting is physical layout only:
-    # a missed heavy term can skew one encoder task, never change results.
-    salt_sample_fraction: Optional[float] = None
 
     # --- checkpointing ---
     checkpoint_dir: Optional[str] = None  # manifests + resumability; None = off
@@ -140,7 +131,9 @@ class EngineConfig:
                 # manifests of existing indexes, unchanged (auto_tf_docs
                 # is likewise excluded)
                 "postings_mode": "fused",
-                "salt_sample_fraction": self.salt_sample_fraction,
+                # retired field (the salt list is always exact now); the
+                # constant keeps existing digests unchanged
+                "salt_sample_fraction": None,
             },
             sort_keys=True,
         )

@@ -20,9 +20,12 @@ the tokenizer UDF and the Arrow block encoder):
        (np.unique counts doc_id duplicates = tf — the per-doc TF aggregate
        costs no exchange of its own; delta+varint blocks + per-block
        max/min/sum tf + dl extrema for block-max bounds)
-    -> term_stats from the blocks table: df = sum(n_postings), tokens =
-       sum(tf_sum), exact math.log idf + global average + epsilon floor
-       (rank_bm25.py:88-98 semantics)                     [vocab-sized agg]
+    -> term_stats: df = sum(n_postings), tokens = sum(tf_sum) from the
+       blocks table, each term's first occurrence (doc_id, position) from
+       the salt-list pass; exact math.log idf, average idf summed in
+       first-occurrence order (the reference's vocabulary insertion
+       order) + epsilon floor (rank_bm25.py:88-98 semantics)
+                                                          [vocab-sized agg]
     -> write parquet partitioned by bucket = xxhash64(term) % B,
        per-bucket checkpoint manifests (lineage + metrics) -> resumable
 
@@ -50,6 +53,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,7 +76,7 @@ from similarities_spark.tokenize import choose_corpus_tokenizer
 
 # bump whenever the block payload layout or block-table schema changes —
 # it participates in the resume lineage key
-FORMAT_VERSION = 3  # v3: + tf_sum block column (term_stats derive from blocks)
+FORMAT_VERSION = 4  # v4: + term_stats first-occurrence key (first_doc, first_pos)
 
 # Block metadata is deliberately STATS-FREE: no idf/df/avgdl-derived values.
 # tf/dl extrema give valid (slightly loose) contribution bounds at query
@@ -107,19 +111,20 @@ _BLOCKS_READ_SCHEMA = StructType(
 # single sorted file serves the same row-group pruning
 _STATS_ROWS_PER_PARTITION = 4_000_000
 
-# vocab size up to which term_stats finish on the driver (collect the
-# per-term aggregates, compute idf/eps in Python — same math.log the
-# pandas UDF runs — and write one sorted literal file): trades a
-# distributed idf projection + scalar agg + persisted intermediate
-# (3-4 jobs) for one collect of a few-MB table. Above this, the fully
-# distributed path runs unchanged (10^9-term vocabs never collect).
+# vocab size up to which term_stats finish on the driver (one collect of
+# the per-term aggregates, bounded at cap + 1 rows, and one sorted literal
+# file). Above it one task streams the idf sum in key order and the floored
+# idf is written distributed, so 10^9-term vocabs never collect.
 _DRIVER_STATS_MAX_VOCAB = 20_000
 
 _POSTINGS_MODES = frozenset({"auto", "fused", "fused_tf"})
 
 # config keys that meta.json of older indexes may still carry but
-# EngineConfig no longer has (the retired kernel-rate fan-out threshold)
-_RETIRED_CONFIG_KEYS = ("fan_out_target_task_s", "fan_out_min_task_s")
+# EngineConfig no longer has (the retired kernel-rate fan-out threshold
+# and sampled salt-list detection)
+_RETIRED_CONFIG_KEYS = (
+    "fan_out_target_task_s", "fan_out_min_task_s", "salt_sample_fraction"
+)
 
 # explicit read schemas everywhere: an all-stopword corpus produces empty
 # blocks/term_stats dirs, where schema inference would fail
@@ -129,6 +134,15 @@ _STATS_READ_SCHEMA = StructType(
         StructField("df", LongType()),
         StructField("idf", DoubleType()),
     ]
+)
+
+# term_stats as written: the query-time columns plus each term's first
+# occurrence in the corpus — the reference's vocabulary insertion order,
+# which fixes the order average_idf sums in. A merge reuses the stored key
+# of old terms; engines read only _STATS_READ_SCHEMA.
+_STATS_KEY = ("first_doc", "first_pos")
+_STATS_WRITE_DDL = (
+    "term string, df long, idf double, first_doc long, first_pos int"
 )
 
 
@@ -595,6 +609,33 @@ def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
+def _encode_salted(
+    postings: DataFrame, heavy: DataFrame, per_salt: int, cfg: EngineConfig
+) -> DataFrame:
+    """Blocks of ``postings`` with their ``bucket`` column: the tiny salt
+    list ``heavy`` (term, _heavy) is broadcast, a heavy term's postings are
+    salted by fixed global doc-id range ``per_salt`` (cfg.salt_bounds) —
+    so every (term, salt) segment stays a sorted run — and the rest get
+    salt 0. NO stats join: blocks are immutable, stats-free segments (see
+    the FORMAT_VERSION note), so merges append segments without touching
+    existing data."""
+    salted = (
+        postings.join(F.broadcast(heavy), "term", "left")
+        .withColumn(
+            "salt",
+            F.when(
+                F.col("_heavy").isNotNull(),
+                (F.col("doc_id") / F.lit(per_salt)).cast("int"),
+            ).otherwise(F.lit(0)),
+        )
+        .drop("_heavy")
+    )
+    return _encode_blocks_df(salted, cfg).withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
+    )
+
+
 def _warm_python_workers_async(spark: SparkSession):
     """Fork-and-import the Python worker pool CONCURRENTLY with the
     JVM-only docs/sort stages (guide §2.6: overlap independent jobs).
@@ -634,15 +675,91 @@ def _warm_python_workers_async(spark: SparkSession):
     return t
 
 
+def _idf_raw(n_docs: int, df: int) -> float:
+    """Exact reference idf before the epsilon floor: math.log (C libm) —
+    NOT jvm Math.log or numpy SIMD log, so floats match the oracle
+    bit-for-bit (rank_bm25.py:91 semantics)."""
+    return math.log(n_docs - df + 0.5) - math.log(df + 0.5)
+
+
 @F.pandas_udf(DoubleType())
 def _idf_raw_udf(df_col: pd.Series, n_col: pd.Series) -> pd.Series:
-    """Exact reference idf: math.log (C libm) per term — NOT jvm Math.log or
-    numpy SIMD log, so floats match the oracle bit-for-bit
-    (rank_bm25.py:91 semantics). Per-TERM work: vocab-sized, cheap."""
-    n = n_col.to_numpy()
-    d = df_col.to_numpy()
+    """_idf_raw per term on the executors. Per-TERM work: vocab-sized."""
     return pd.Series(
-        [math.log(int(ni) - int(di) + 0.5) - math.log(int(di) + 0.5) for ni, di in zip(n, d)]
+        [_idf_raw(int(n), int(d)) for n, d in zip(n_col, df_col)],
+        dtype="float64",
+    )
+
+
+def _ordered_sum(total: float, values: np.ndarray) -> float:
+    """``total + values[0] + values[1] + ...`` strictly left to right —
+    the reference's sequential ``+=`` (np.add.accumulate never
+    reassociates; np.sum is pairwise and rounds differently)."""
+    return float(np.cumsum(np.concatenate(([total], values)))[-1])
+
+
+def _ordered_sum_kernel(batches):
+    """mapInArrow over ONE partition sorted by the first-occurrence key:
+    the raw-idf sum carried across Arrow batches in that order, plus the
+    vocab, posting and token counts, as a single row."""
+    idf_sum, vocab, postings, tokens = 0.0, 0, 0, 0
+    for b in batches:
+        idf_sum = _ordered_sum(idf_sum, b.column("idf_raw").to_numpy())
+        vocab += b.num_rows
+        postings += int(b.column("df").to_numpy().sum())
+        tokens += int(b.column("tokens").to_numpy().sum())
+    yield pa.RecordBatch.from_pydict(
+        {
+            "idf_sum": [idf_sum],
+            "vocab_size": [vocab],
+            "n_postings": [postings],
+            "total_tokens": [tokens],
+        }
+    )
+
+
+def _term_firsts(tokenized: DataFrame) -> DataFrame:
+    """(term, hits, first_doc, first_pos) of a tokenized batch, persisted:
+    ``hits`` is the term's document frequency and (first_doc, first_pos)
+    its first occurrence — the key the reference's vocabulary is inserted
+    in (oracle.py: documents in id order, each document's distinct terms
+    in first-occurrence order).
+
+    array_distinct dedups within each row BEFORE the explode and keeps
+    first-occurrence order, so count(1) per term counts documents, pos
+    ranks the term among its document's distinct terms, and the shuffle
+    stays a vocab-sized partial agg with no exchange of its own. A term
+    occurs once per document here, so min_by(pos, doc_id) is the position
+    in the first document (fixed-width buffers: a hash aggregate, where a
+    min over a struct would force a sort aggregate)."""
+    return (
+        tokenized.select(
+            "doc_id",
+            F.posexplode(F.array_distinct("toks")).alias("pos", "term"),
+        )
+        .groupBy("term")
+        .agg(
+            F.count(F.lit(1)).alias("hits"),
+            F.min("doc_id").alias("first_doc"),
+            F.min_by("pos", "doc_id").alias("first_pos"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _batch_terms(blocks: DataFrame, firsts: DataFrame) -> DataFrame:
+    """(term, df, tokens, first_doc, first_pos) of one batch: df = Σ
+    n_postings (each posting is one distinct doc) and tokens = Σ tf_sum
+    from its blocks — exact, identical to aggregating the postings — and
+    the first-occurrence key from ``_term_firsts``. The blocks groupBy
+    shuffles only vocab-sized partials (~n_postings/block_size rows)."""
+    return (
+        blocks.groupBy("term")
+        .agg(
+            F.sum("n_postings").cast("long").alias("df"),
+            F.sum("tf_sum").cast("long").alias("tokens"),
+        )
+        .join(firsts.select("term", *_STATS_KEY), "term")
     )
 
 
@@ -674,7 +791,6 @@ class BM25IndexBuilder:
         """
         cfg = self.cfg
         t0 = time.time()
-        self._last_vocab_hint = None
         _warm_python_workers_async(self.spark)
         stage_wall = {}
         _last = [t0]
@@ -798,60 +914,73 @@ class BM25IndexBuilder:
         # per-doc TF entries under fused_tf) shuffle straight into the block
         # encoder (which counts doc_id duplicates as tf — see
         # _encode_blocks_df); term_stats then derive from the tiny blocks
-        # table (df = sum(n_postings), tokens = sum(tf_sum)).
-        # With salt_sample_fraction set, the token cache is skipped
-        # entirely: the corpus streams tokenize -> explode -> shuffle
-        # exactly once (the only way this works at 100 TB — you cannot
-        # cache the tokenized corpus) and the heavy list comes from a
-        # deterministic sample. With it unset, the cache serves both the
-        # exact heavy pass and the encode pass.
-        use_cache = cfg.salt_sample_fraction is None
+        # table (df = sum(n_postings), tokens = sum(tf_sum)) and the
+        # per-term first occurrences of the salt-list pass. The token cache
+        # serves both that pass and the encode pass.
         tokenized, exploded = self._tokenized_exploded(
-            docs, cfg.resolved_postings_mode(n_docs), cache=use_cache
+            docs, cfg.resolved_postings_mode(n_docs)
         )
-        # the salt list is TINY (terms above threshold) — collect it and
-        # re-broadcast a literal so the sample/cache pass runs exactly
-        # once (a broadcast of the lazy plan would recompute it), and so
-        # the stage wall attributes it separately
-        heavy = self._collect_heavy(self._heavy_terms(docs, tokenized))
-        _mark("salt_detect")
-        # the async docs file write has been overlapping tokenize +
-        # heavy detection; join it (and record the stage manifest)
-        # before the encode stage commits to the lineage
-        _finalize_docs_stage()
-        # group writes run ASYNC, overlapped with the stats computation
-        # below — both only read the blocks cache; the join (which also
-        # surfaces write failures) runs before the cache is released
-        blocks_cached, blocks_join = self._build_blocks(
-            exploded,
-            heavy,
-            blocks_path,
-            ckpt,
-            lineage_key,
-            n_docs=n_docs,
-            done_buckets=set(done),
-            fail_after_groups=_fail_after_groups,
-            mark=_mark,
-        )
-        _release_docs_cache(docs)
-        tokenized.unpersist()
-        _mark("blocks_write")
-        if stats_meta is None:
-            # stats derive from the STILL-CACHED blocks table when the
-            # stage just ran (no re-read of the parquet it wrote);
-            # a fully-resumed stage falls back to the on-disk table
-            _, stats_meta = self._stats_from_blocks(
-                blocks_path, n_docs, stats_path, blocks_df=blocks_cached
+        firsts = _term_firsts(tokenized)
+        try:
+            # the salt list is TINY (terms above threshold) — collect it and
+            # re-broadcast a literal so the pass runs exactly once (a
+            # broadcast of the lazy plan would recompute it), and so the
+            # stage wall attributes it separately
+            heavy = self._collect_heavy(
+                firsts.filter(F.col("hits") >= cfg.salt_df_threshold).select(
+                    "term", F.lit(True).alias("_heavy")
+                )
             )
-            if blocks_join is not None:
+            _mark("salt_detect")
+            # the async docs file write has been overlapping tokenize +
+            # heavy detection; join it (and record the stage manifest)
+            # before the encode stage commits to the lineage
+            _finalize_docs_stage()
+            # group writes run ASYNC, overlapped with the stats computation
+            # below — both only read the blocks cache; the join (which also
+            # surfaces write failures) runs before the cache is released
+            blocks_cached, blocks_join, vocab = self._build_blocks(
+                exploded,
+                heavy,
+                blocks_path,
+                ckpt,
+                lineage_key,
+                n_docs=n_docs,
+                done_buckets=set(done),
+                fail_after_groups=_fail_after_groups,
+                mark=_mark,
+            )
+            _release_docs_cache(docs)
+            tokenized.unpersist()
+            _mark("blocks_write")
+            if stats_meta is None:
+                # stats derive from the STILL-CACHED blocks table when the
+                # stage just ran (no re-read of the parquet it wrote);
+                # a fully-resumed stage falls back to the on-disk table
+                # (explicit schema: a corpus whose docs all tokenize to
+                # empty writes no block files, where inference would fail)
+                blocks_df = blocks_cached
+                if blocks_df is None:
+                    blocks_df = self.spark.read.schema(
+                        _BLOCKS_READ_SCHEMA
+                    ).parquet(blocks_path)
+                stats_meta = self._write_term_stats(
+                    _batch_terms(blocks_df, firsts),
+                    n_docs,
+                    stats_path,
+                    min_vocab=vocab,
+                )
+                if blocks_join is not None:
+                    blocks_join()
+                stats_meta["lineage_key"] = lineage_key
+                with open(stats_manifest, "w", encoding="utf-8") as f:
+                    json.dump(stats_meta, f, sort_keys=True)
+            elif blocks_join is not None:
                 blocks_join()
-            stats_meta["lineage_key"] = lineage_key
-            with open(stats_manifest, "w", encoding="utf-8") as f:
-                json.dump(stats_meta, f, sort_keys=True)
-        elif blocks_join is not None:
-            blocks_join()
-        if blocks_cached is not None:
-            blocks_cached.unpersist()
+            if blocks_cached is not None:
+                blocks_cached.unpersist()
+        finally:
+            firsts.unpersist()
         _mark("stats")
 
         total_tokens = stats_meta["total_tokens"]
@@ -861,6 +990,9 @@ class BM25IndexBuilder:
 
         # ---- meta.json: overall commit marker ----
         meta = {
+            # term_stats layout: a merge refuses indexes older than v4,
+            # whose term_stats carry no first-occurrence key
+            "format_version": FORMAT_VERSION,
             "n_docs": n_docs,
             "total_tokens": total_tokens,
             "avgdl": avgdl,
@@ -892,7 +1024,6 @@ class BM25IndexBuilder:
                 "num_salts": cfg.num_salts,
                 "score_mode": cfg.score_mode,
                 "postings_mode": cfg.postings_mode,
-                "salt_sample_fraction": cfg.salt_sample_fraction,
                 "fan_out_threshold": cfg.fan_out_threshold,
                 "fan_out_max": cfg.fan_out_max,
                 "variant": cfg.variant,
@@ -940,6 +1071,13 @@ class BM25IndexBuilder:
         cfg = self.cfg
         t0 = time.time()
         idx = BM25Index(self.spark, index_dir)  # rolls forward any pending inc
+        if idx.meta.get("format_version", 3) < FORMAT_VERSION:
+            raise ValueError(
+                f"{index_dir}: term_stats carry no first-occurrence key "
+                "(index format older than v4), so a merge cannot sum idf in "
+                "the reference's order; rebuild the index with build() "
+                "before merging into it"
+            )
         old_n = idx.n_docs
         old_docs = idx.docs()
 
@@ -992,149 +1130,63 @@ class BM25IndexBuilder:
         tokenized, rows = self._tokenized_exploded(
             new_docs, cfg.resolved_postings_mode(m_new)
         )
-        # per-doc distinct BEFORE explode: count(1) per term = batch df
-        # (salt_df_threshold means df)
-        heavy_src = tokenized.select(
-            F.explode(F.array_distinct("toks")).alias("term")
-        )
-        heavy = (
-            heavy_src.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .filter(F.col("hits") >= cfg.salt_df_threshold)
-            .select("term", F.lit(True).alias("_heavy"))
-        )
-        salted = (
-            rows.join(F.broadcast(heavy), "term", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("_heavy").isNotNull(),
-                    (F.col("doc_id") / F.lit(per_salt)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_heavy")
-        )
-        blocks = _encode_blocks_df(salted, cfg).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
-        )
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(inc_dir, "blocks")
-        )
-        tokenized.unpersist()
+        # per-batch df (salt_df_threshold means df) and first occurrences;
+        # new doc ids already start at old_n, so a new term's key sorts
+        # after every old term's, as in the reference's insertion order
+        firsts = _term_firsts(tokenized)
+        try:
+            heavy = firsts.filter(
+                F.col("hits") >= cfg.salt_df_threshold
+            ).select("term", F.lit(True).alias("_heavy"))
+            _encode_salted(rows, heavy, per_salt, cfg).write.mode(
+                "overwrite"
+            ).partitionBy("bucket").parquet(os.path.join(inc_dir, "blocks"))
+            tokenized.unpersist()
 
-        # ---- stats refresh: combined df over old term_stats + the NEW
-        # segments (column-pruned read of the tiny staged blocks table)
-        df_new = (
-            # explicit schema: a batch whose docs all tokenize to empty
-            # writes no block files, and schema inference would fail there
-            self.spark.read.schema(_BLOCKS_READ_SCHEMA)
-            .parquet(os.path.join(inc_dir, "blocks"))
-            .groupBy("term")
-            .agg(
-                F.sum("n_postings").cast("long").alias("df_new"),
-                F.sum("tf_sum").cast("long").alias("tok_new"),
+            # ---- stats refresh: old term_stats ∪ the batch's terms (a
+            # column-pruned read of the tiny staged blocks table). A term
+            # present before keeps its stored first-occurrence key; a new
+            # term takes the batch's. Summed in that key order, the merged
+            # average_idf is bit-identical to a full rebuild's.
+            new = _batch_terms(
+                # explicit schema: a batch whose docs all tokenize to empty
+                # writes no block files, and schema inference would fail
+                self.spark.read.schema(_BLOCKS_READ_SCHEMA).parquet(
+                    os.path.join(inc_dir, "blocks")
+                ),
+                firsts,
             )
-        )
-        combined = (
-            idx.term_stats()
-            .select("term", F.col("df").alias("df_old"))
-            .join(df_new, "term", "full_outer")
-            .select(
+            old = self.spark.read.schema(_STATS_WRITE_DDL).parquet(
+                os.path.join(index_dir, "term_stats")
+            )
+            combined = old.join(new, "term", "full_outer").select(
                 "term",
                 (
-                    F.coalesce(F.col("df_old"), F.lit(0))
-                    + F.coalesce(F.col("df_new"), F.lit(0))
+                    F.coalesce(old["df"], F.lit(0))
+                    + F.coalesce(new["df"], F.lit(0))
                 ).alias("df"),
-                F.coalesce(F.col("tok_new"), F.lit(0)).alias("tok_new"),
+                F.coalesce(new["tokens"], F.lit(0)).alias("tokens"),
+                *(F.coalesce(old[k], new[k]).alias(k) for k in _STATS_KEY),
             )
-        )
-        n_total = old_n + m_new
-        tmp_stats = os.path.join(inc_dir, "term_stats")
-
-        # Driver-side tail under the SAME criterion as a full rebuild
-        # (_stats_from_blocks): a merged index and a from-scratch rebuild
-        # over the same corpus must produce BIT-identical idf values, and
-        # the epsilon floor bakes in a float average whose summation order
-        # matters in the last ulp. Both paths therefore use the identical
-        # deterministic ascending-term Python sum whenever the vocab fits
-        # the driver cap, and the identical distributed plan otherwise. The
-        # collect is bounded before it runs: at most cap+1 rows come back,
-        # and one past the cap means old ∪ new crossed it this merge.
-        driver_rows = None
-        if int(idx.meta.get("vocab_size") or 0) <= _DRIVER_STATS_MAX_VOCAB:
-            driver_rows = sorted(
-                (r["term"], int(r["df"]), int(r["tok_new"]))
-                for r in combined.limit(_DRIVER_STATS_MAX_VOCAB + 1).collect()
+            n_total = old_n + m_new
+            stats_meta = self._write_term_stats(
+                combined,
+                n_total,
+                os.path.join(inc_dir, "term_stats"),
+                min_vocab=int(idx.meta.get("vocab_size") or 0),
             )
-            if len(driver_rows) > _DRIVER_STATS_MAX_VOCAB:
-                driver_rows = None  # crossed the cap this merge: go distributed
-        if driver_rows is not None:
-            idf_raw = [
-                math.log(n_total - d + 0.5) - math.log(d + 0.5)
-                for _, d, _ in driver_rows
-            ]
-            vocab_size = len(driver_rows)
-            average_idf = sum(idf_raw) / vocab_size if vocab_size else 0.0
-            eps = cfg.epsilon * average_idf
-            out_rows = [
-                (t, d, eps if raw < 0 else raw)
-                for (t, d, _), raw in zip(driver_rows, idf_raw)
-            ]
-            g = {"np": sum(d for _, d, _ in driver_rows)}
-            new_tokens = sum(tok for _, _, tok in driver_rows)
-            (
-                literal_df(self.spark, out_rows, "term string, df long, idf double")
-                .repartition(1)
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(tmp_stats)
-            )
-        else:
-            raw = combined.withColumn(
-                "idf_raw", _idf_raw_udf(F.col("df"), F.lit(n_total).cast("long"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            g = raw.agg(
-                F.sum("idf_raw").alias("s"),
-                F.count(F.lit(1)).alias("v"),
-                F.sum("df").alias("np"),
-            ).collect()[0]
-            vocab_size = int(g["v"] or 0)
-            average_idf = float(g["s"]) / vocab_size if vocab_size else 0.0
-            eps = cfg.epsilon * average_idf
-            new_tokens = int(
-                df_new.agg(F.sum("tok_new").alias("t")).collect()[0]["t"] or 0
-            )
-            stats = raw.select(
-                "term",
-                "df",
-                F.when(F.col("idf_raw") < 0, F.lit(eps))
-                .otherwise(F.col("idf_raw"))
-                .alias("idf"),
-            )
-            # same sorted, vocab-size-adaptive layout as _finish_term_stats
-            # (row-group prunable)
-            parts = max(1, -(-vocab_size // _STATS_ROWS_PER_PARTITION))
-            sink = (
-                stats.repartition(1)
-                if parts == 1
-                else stats.repartitionByRange(parts, F.col("term"))
-            )
-            (
-                sink.sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(tmp_stats)
-            )
-            raw.unpersist()
+        finally:
+            firsts.unpersist()
+        new_tokens = stats_meta["total_tokens"]
 
         # ---- stage next meta, write the commit record, roll forward ----
         meta = dict(idx.meta)
         meta["n_docs"] = n_total
         meta["total_tokens"] = meta["total_tokens"] + new_tokens
         meta["avgdl"] = meta["total_tokens"] / n_total
-        meta["vocab_size"] = vocab_size
-        meta["average_idf"] = average_idf
-        meta["n_postings"] = int(g["np"] or 0)
+        meta["vocab_size"] = stats_meta["vocab_size"]
+        meta["average_idf"] = stats_meta["average_idf"]
+        meta["n_postings"] = stats_meta["n_postings"]
         meta.setdefault("increments", []).append(
             {
                 "inc_id": inc_id,
@@ -1233,27 +1285,10 @@ class BM25IndexBuilder:
             .select("term", F.lit(True).alias("_heavy"))
         )
         per_salt = cfg.salt_bounds(n_docs)
-        salted = (
-            postings.join(F.broadcast(heavy), "term", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("_heavy").isNotNull(),
-                    (F.col("doc_id") / F.lit(per_salt)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_heavy")
-        )
         swap_id = uuid.uuid4().hex[:8]
         next_name = f"blocks.next-{swap_id}"
         (
-            _encode_blocks_df(salted, cfg)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast(
-                    "int"
-                ),
-            )
+            _encode_salted(postings, heavy, per_salt, cfg)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(os.path.join(index_dir, next_name))
@@ -1281,31 +1316,20 @@ class BM25IndexBuilder:
 
     # ---------- stages ----------
 
-    def _tokenize_cached(self, docs: DataFrame) -> DataFrame:
-        """SINGLE tokenization pass (tokenization dominates build cost at
+    def _tokenized_exploded(self, docs: DataFrame, mode: str):
+        """(tokenized, rows): the persisted token cache and the input rows
+        for the one build shuffle.
+
+        SINGLE tokenization pass (tokenization dominates build cost at
         webtext scale — never run it twice; deterministic retokenize from
-        the docs table on resume).
-
-        JVM regexp path by default (no Python workers in the scan — a Python
-        UDF stage at local[cores] oversubscribes the box 2x and scales
-        negatively); jieba flips this to the Arrow UDF.
-
-        The tokenized DF is PERSISTED before fan-out: Catalyst collapses
-        projections, so without the cache the tokenizer expression would be
-        inlined into every consumer and run twice+ — measured 2x the whole
-        stage cost at 1M docs.
-        """
-        cfg = self.cfg
-        _, tok_fn = choose_corpus_tokenizer(cfg.stopwords, cfg.tokenizer)
-        return docs.select(
-            "doc_id", tok_fn(F.col("text")).alias("toks")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    def _tokenized_exploded(self, docs: DataFrame, mode: str, cache: bool = True):
-        """Input rows for the one build shuffle. ``cache=False``
-        skips the token cache (sampled heavy detection makes the exact
-        second pass unnecessary — the corpus then streams through tokenize
-        exactly once).
+        the docs table on resume). JVM regexp path by default (no Python
+        workers in the scan — a Python UDF stage at local[cores]
+        oversubscribes the box 2x and scales negatively); jieba flips this
+        to the Arrow UDF. The tokenized DF is PERSISTED before fan-out (it
+        feeds the first-occurrence/salt-list pass and the encode pass):
+        Catalyst collapses projections, so without the cache the tokenizer
+        expression would be inlined into every consumer and run twice+ —
+        measured 2x the whole stage cost at 1M docs.
 
         mode='fused': raw (doc_id, doc_len, term) token rows — duplicates
         kept (they ARE the term frequency; the block encoder counts them
@@ -1327,14 +1351,11 @@ class BM25IndexBuilder:
 
         ``mode`` is the RESOLVED mode ('fused' | 'fused_tf'):
         cfg.resolved_postings_mode(n) for a batch of n documents."""
-        if cache:
-            tokenized = self._tokenize_cached(docs)
-        else:
-            cfg = self.cfg
-            _, tok_fn = choose_corpus_tokenizer(cfg.stopwords, cfg.tokenizer)
-            tokenized = docs.select(
-                "doc_id", tok_fn(F.col("text")).alias("toks")
-            )
+        cfg = self.cfg
+        _, tok_fn = choose_corpus_tokenizer(cfg.stopwords, cfg.tokenizer)
+        tokenized = docs.select(
+            "doc_id", tok_fn(F.col("text")).alias("toks")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         if mode == "fused_tf":
             return tokenized, _doc_tf_entries(tokenized)
         exploded = tokenized.select(
@@ -1343,40 +1364,6 @@ class BM25IndexBuilder:
             F.explode("toks").alias("term"),
         )
         return tokenized, exploded
-
-    def _heavy_terms(self, docs: DataFrame, tokenized: DataFrame) -> DataFrame:
-        """Salt list (term, _heavy) for head-term skew, thresholded on
-        DOCUMENT frequency in every mode (salt_df_threshold means df). The
-        per-doc distinct pass is free of
-        any new exchange: array_distinct(toks) dedups within each row BEFORE
-        explode, so count(1) per term counts docs, and the shuffle stays the
-        vocab-sized partial agg. Exact mode reads the token cache (one row
-        per doc); sampled mode tokenizes a deterministic f-fraction of docs
-        and scales the cutoff to 0.5*f*threshold (generous slack: a term at
-        the threshold has E[sample df] = f*threshold, so missing it needs a
-        <half-expectation deviation). Salting is physical layout only — a
-        missed heavy term can skew one encoder task, never change a score."""
-        cfg = self.cfg
-        f = cfg.salt_sample_fraction
-        if f is None:
-            src = tokenized.select(
-                F.explode(F.array_distinct("toks")).alias("term")
-            )
-            cutoff = cfg.salt_df_threshold
-        else:
-            _, tok_fn = choose_corpus_tokenizer(cfg.stopwords, cfg.tokenizer)
-            src = (
-                docs.sample(fraction=f, seed=8162026)
-                .select(tok_fn(F.col("text")).alias("toks"))
-                .select(F.explode(F.array_distinct("toks")).alias("term"))
-            )
-            cutoff = max(1, int(0.5 * f * cfg.salt_df_threshold))
-        return (
-            src.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .filter(F.col("hits") >= cutoff)
-            .select("term", F.lit(True).alias("_heavy"))
-        )
 
     def _collect_heavy(self, heavy: DataFrame) -> DataFrame:
         """Materialize the salt list on the driver (thousands of rows even at
@@ -1467,131 +1454,121 @@ class BM25IndexBuilder:
         }
         return docs, meta
 
-    def _stats_from_blocks(
+    def _write_term_stats(
         self,
-        blocks_path: str,
+        terms: DataFrame,
         n_docs: int,
         stats_path: str,
-        blocks_df: Optional[DataFrame] = None,
-    ):
-        """term_stats derive from the blocks table (the cached
-        blocks DF when the stage just ran — no re-read of the parquet it
-        wrote — else a column-pruned parquet read of term/n_postings/tf_sum,
-        ~n_postings/block_size rows; the groupBy(term) shuffles only
-        vocab-sized partials). df = Σ n_postings (each posting is one
-        distinct doc), tokens = Σ tf_sum — both exact, identical to
-        aggregating the postings directly."""
-        if blocks_df is None:
-            # explicit schema: a corpus whose docs all tokenize to empty
-            # writes no block files, and schema inference would fail there
-            blocks_df = self.spark.read.schema(_BLOCKS_READ_SCHEMA).parquet(
-                blocks_path
+        min_vocab: int = 0,
+    ) -> dict:
+        """The stats arithmetic of build and merge: exact BM25Okapi idf,
+        average_idf over the full vocab, epsilon floor (rank_bm25.py:88-98)
+        and the term_stats write.
+
+        ``terms`` has one (term, df, tokens, first_doc, first_pos) row per
+        term. The raw idf is summed sequentially (_ordered_sum) in
+        (first_doc, first_pos) order — the order the reference inserts
+        terms into its vocabulary and sums them in — so average_idf, and
+        every floored idf, is bit-identical to the reference's and the
+        same for a merge and a full rebuild. (A pairwise np.sum, math.fsum
+        or a partitioned Spark sum would each round differently.)
+
+        Up to _DRIVER_STATS_MAX_VOCAB terms, one Arrow collect bounded at
+        cap + 1 rows brings them to the driver, which sorts, sums and
+        writes one sorted file. Past the cap (known from the collect, or from
+        ``min_vocab``, a lower bound on the vocab the caller already has)
+        the idf is computed distributed and persisted, one task streams it
+        in key order through _ordered_sum_kernel (a single result row: the
+        driver holds no vocab-sized state), and the floored idf is written
+        distributed. Returns the meta: vocab_size, average_idf,
+        epsilon_floor, n_postings and total_tokens (Σ tokens)."""
+        cap = _DRIVER_STATS_MAX_VOCAB
+        terms = terms.select("term", "df", "tokens", *_STATS_KEY)
+        tbl = None
+        if min_vocab <= cap:
+            tbl = terms.limit(cap + 1).toArrow()
+            if tbl.num_rows > cap:
+                tbl = None  # past the cap: sum distributed
+        raw = None
+        try:
+            if tbl is not None:
+                tbl = tbl.sort_by([(k, "ascending") for k in _STATS_KEY])
+                dfs = tbl.column("df").to_pylist()
+                raws = np.array([_idf_raw(n_docs, d) for d in dfs], np.float64)
+                g = {
+                    "idf_sum": _ordered_sum(0.0, raws),
+                    "vocab_size": tbl.num_rows,
+                    "n_postings": sum(dfs),
+                    "total_tokens": sum(tbl.column("tokens").to_pylist()),
+                }
+            else:
+                raw = terms.withColumn(
+                    "idf_raw",
+                    _idf_raw_udf(F.col("df"), F.lit(n_docs).cast("long")),
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+                g = (
+                    raw.repartition(1)
+                    .sortWithinPartitions(*_STATS_KEY)
+                    .mapInArrow(
+                        _ordered_sum_kernel,
+                        "idf_sum double, vocab_size long, n_postings long, "
+                        "total_tokens long",
+                    )
+                    .collect()[0]
+                    .asDict()
+                )
+            vocab_size = g["vocab_size"]
+            average_idf = g["idf_sum"] / vocab_size if vocab_size else 0.0
+            eps = self.cfg.epsilon * average_idf
+            if raw is None:
+                # an Arrow-backed frame: a VALUES literal of this many rows
+                # would cost seconds of SQL parsing
+                stats = self.spark.createDataFrame(
+                    pa.table(
+                        {
+                            "term": tbl.column("term"),
+                            "df": tbl.column("df"),
+                            "idf": np.where(raws < 0, eps, raws),
+                            **{k: tbl.column(k) for k in _STATS_KEY},
+                        }
+                    )
+                )
+            else:
+                stats = raw.select(
+                    "term",
+                    "df",
+                    F.when(F.col("idf_raw") < 0, F.lit(eps))
+                    .otherwise(F.col("idf_raw"))
+                    .alias("idf"),
+                    *_STATS_KEY,
+                )
+            # range-partitioned + sorted by term: the query path's
+            # per-batch stats lookup (term IN [...]) then prunes to a
+            # handful of row groups via parquet min/max stats instead of
+            # scanning the whole vocab table. A vocab that fits one sorted
+            # file needs no range-sampling job — min/max row-group pruning
+            # works the same within one file.
+            parts = max(1, -(-vocab_size // _STATS_ROWS_PER_PARTITION))
+            sink = (
+                stats.repartition(1)
+                if parts == 1
+                else stats.repartitionByRange(parts, F.col("term"))
             )
-        df_tbl = blocks_df.groupBy("term").agg(
-            F.sum("n_postings").cast("long").alias("df"),
-            F.sum("tf_sum").cast("long").alias("term_tokens"),
-        )
-        # the bucket metrics (when the blocks stage just ran) give the EXACT
-        # vocab size up front (buckets partition the vocab by term hash, so
-        # sum of per-bucket distinct terms is the global distinct count) —
-        # a small vocab then finishes on the driver in one job
-        vocab_hint = getattr(self, "_last_vocab_hint", None)
-        if vocab_hint is not None and vocab_hint <= _DRIVER_STATS_MAX_VOCAB:
-            return self._finish_term_stats_driver(df_tbl, n_docs, stats_path)
-        return self._finish_term_stats(df_tbl, n_docs, stats_path)
-
-    def _finish_term_stats_driver(self, df_tbl, n_docs: int, stats_path: str):
-        """Small-vocab tail: same reference arithmetic as _finish_term_stats
-        (math.log per term — the very C-libm calls the pandas UDF makes,
-        here in the driver process; floored by epsilon x full-vocab
-        average), one sorted literal file. Summation order for the average
-        is ascending term — deterministic run to run, unlike a partitioned
-        float sum."""
-        cfg = self.cfg
-        rows = sorted(
-            (r["term"], int(r["df"]), int(r["term_tokens"]))
-            for r in df_tbl.collect()
-        )
-        idf_raw = [
-            math.log(n_docs - d + 0.5) - math.log(d + 0.5) for _, d, _ in rows
-        ]
-        vocab_size = len(rows)
-        average_idf = sum(idf_raw) / vocab_size if vocab_size else 0.0
-        eps = cfg.epsilon * average_idf
-        out_rows = [
-            (t, d, eps if raw < 0 else raw)
-            for (t, d, _), raw in zip(rows, idf_raw)
-        ]
-        stats = literal_df(self.spark, out_rows, "term string, df long, idf double")
-        (
-            stats.repartition(1)
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(stats_path)
-        )
-        meta = {
+            (
+                sink.sortWithinPartitions("term")
+                .write.mode("overwrite")
+                .parquet(stats_path)
+            )
+        finally:
+            if raw is not None:
+                raw.unpersist()
+        return {
             "vocab_size": vocab_size,
             "average_idf": average_idf,
             "epsilon_floor": eps,
-            "n_postings": sum(d for _, d, _ in rows),
-            "total_tokens": sum(tok for _, _, tok in rows),
+            "n_postings": int(g["n_postings"]),
+            "total_tokens": int(g["total_tokens"]),
         }
-        return stats, meta
-
-    def _finish_term_stats(self, df_tbl: DataFrame, n_docs: int, stats_path: str):
-        """Shared tail: exact BM25Okapi idf (math.log UDF), full-vocab
-        average, ε floor (rank_bm25.py:88-98 semantics), parquet write;
-        every corpus scalar comes from the tiny vocab table in one agg."""
-        cfg = self.cfg
-        raw = df_tbl.withColumn(
-            "idf_raw", _idf_raw_udf(F.col("df"), F.lit(n_docs).cast("long"))
-        )
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        g = raw.agg(
-            F.sum("idf_raw").alias("s"),
-            F.count(F.lit(1)).alias("v"),
-            F.sum("term_tokens").alias("tok"),
-            F.sum("df").alias("np"),
-        ).collect()[0]
-        vocab_size = int(g["v"] or 0)
-        average_idf = float(g["s"]) / vocab_size if vocab_size else 0.0
-        eps = cfg.epsilon * average_idf
-        stats = raw.select(
-            "term",
-            "df",
-            F.when(F.col("idf_raw") < 0, F.lit(eps))
-            .otherwise(F.col("idf_raw"))
-            .alias("idf"),
-        )
-        # range-partitioned + sorted by term: the query path's per-batch
-        # stats lookup (term IN [...]) then prunes to a handful of row
-        # groups via parquet min/max stats instead of scanning the whole
-        # vocab table — immaterial at test vocab sizes, decisive at 10^9
-        # terms. Partition count derives from the vocab size just measured
-        # (keyless repartitionByRange would use spark.sql.shuffle.partitions
-        # AND pay a range-sampling job; a vocab that fits one sorted file
-        # needs neither — min/max row-group pruning works the same within
-        # one file).
-        parts = max(1, -(-vocab_size // _STATS_ROWS_PER_PARTITION))
-        sink = (
-            stats.repartition(1)
-            if parts == 1
-            else stats.repartitionByRange(parts, F.col("term"))
-        )
-        (
-            sink.sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(stats_path)
-        )
-        raw.unpersist()
-        meta = {
-            "vocab_size": vocab_size,
-            "average_idf": average_idf,
-            "epsilon_floor": eps,
-            "n_postings": int(g["np"] or 0),
-            "total_tokens": int(g["tok"] or 0),
-        }
-        return stats, meta
 
     def _build_blocks(
         self,
@@ -1611,34 +1588,16 @@ class BM25IndexBuilder:
         (term, _heavy) — always broadcast. ``mark`` (optional) records the
         encode-vs-write stage boundary in the build's stage walls.
 
-        Returns (blocks, join): the persisted blocks DataFrame so the
-        caller can derive term_stats from the cache instead of re-reading
-        the freshly written parquet (the caller unpersists), and a join
-        callable for the async group writes that must run before the cache
-        is released or meta is written. (None, None) when the stage fully
-        resumed."""
+        Returns (blocks, join, vocab): the persisted blocks DataFrame so
+        the caller can derive term_stats from the cache instead of
+        re-reading the freshly written parquet (the caller unpersists), a
+        join callable for the async group writes that must run before the
+        cache is released or meta is written, and the exact vocab size.
+        (None, None, 0) when the stage fully resumed."""
         cfg = self.cfg
-        per_salt = cfg.salt_bounds(n_docs)
-        salted = (
-            postings.join(F.broadcast(heavy), "term", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("_heavy").isNotNull(),
-                    (F.col("doc_id") / F.lit(per_salt)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_heavy")
-        )
-        # NO stats join: blocks are immutable, stats-free segments (idf/df
-        # are looked up from term_stats at query time — see FORMAT_VERSION
-        # note). Incremental merges can therefore append segments without
-        # touching existing data.
-        blocks = _encode_blocks_df(salted, cfg).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
-        )
-        blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+        blocks = _encode_salted(
+            postings, heavy, cfg.salt_bounds(n_docs), cfg
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
         all_buckets = list(range(cfg.num_term_buckets))
         todo = [b for b in all_buckets if b not in done_buckets]
@@ -1651,7 +1610,7 @@ class BM25IndexBuilder:
             # fully-resumed blocks stage: every bucket manifest matches this
             # lineage — never trigger the encode job (metrics included)
             blocks.unpersist()
-            return None, None
+            return None, None, 0
 
         # per-bucket metrics in ONE job (not one per group) — the group loop
         # below then only pays the write
@@ -1666,11 +1625,9 @@ class BM25IndexBuilder:
             )
             .collect()
         }
-        # exact global vocab (buckets partition terms by hash): lets the
-        # stats stage pick the driver-side tail for small vocabs
-        self._last_vocab_hint = sum(
-            int(m["n_terms"] or 0) for m in metrics.values()
-        )
+        # exact global vocab (buckets partition terms by hash): a vocab
+        # past the driver stats cap then skips the bounded collect
+        vocab = sum(int(m["n_terms"] or 0) for m in metrics.values())
         if mark is not None:
             mark("encode")  # tokenize+shuffle+encode+cache materialized here
 
@@ -1749,4 +1706,4 @@ class BM25IndexBuilder:
             if errbox:
                 raise errbox[0]
 
-        return blocks, _join
+        return blocks, _join, vocab

@@ -87,10 +87,9 @@ def _check_engine(engine, oracle, queries, topn):
             f"q{qid} {query!r}: ids {got_ids} != {exp_ids}"
         )
         for r, (ed, es) in zip(got, expect):
-            # exact float64 equality except for the documented ulp-level
-            # tolerance on epsilon-floored corpora (average_idf is a
-            # distributed float sum; summation order differs from the oracle)
-            assert r["score"] == pytest.approx(es, rel=1e-12, abs=1e-13), (
+            # exact float64 equality, epsilon-floored terms included:
+            # average_idf sums raw idf in the oracle's insertion order
+            assert r["score"] == es, (
                 f"q{qid} doc {ed}: {r['score']!r} != {es!r}"
             )
 
@@ -100,7 +99,7 @@ def test_meta_stats_match_oracle(built):
     assert index.n_docs == oracle.n_docs
     assert index.meta["avgdl"] == oracle.avgdl
     assert index.meta["vocab_size"] == len(oracle.idf)
-    assert index.meta["average_idf"] == pytest.approx(oracle.average_idf, rel=1e-12)
+    assert index.meta["average_idf"] == oracle.average_idf
 
 
 def test_term_stats_match_oracle(built):
@@ -109,7 +108,7 @@ def test_term_stats_match_oracle(built):
     assert set(stats) == set(oracle.idf)
     for term, row in stats.items():
         assert row["df"] == oracle.df[term]
-        assert row["idf"] == pytest.approx(oracle.idf[term], rel=1e-12, abs=1e-15)
+        assert row["idf"] == oracle.idf[term]
 
 
 def test_salting_applied_to_head_terms(built):
@@ -263,31 +262,3 @@ def test_fanout_matches_single_task_path(built, spark):
     b_rows = sorted([(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in base])
     f_rows = sorted([(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in fan])
     assert b_rows == f_rows
-
-
-def test_sampled_salt_detection_identical_results(spark, tmp_path):
-    """salt_sample_fraction streams the corpus through tokenize exactly once
-    (no token cache) and picks the salt list from a sample — physical layout
-    may differ, every rank and score must not."""
-    import dataclasses
-
-    pdf = synth_webtext_pandas(n_docs=250, seed=41, dup_fraction=0.05)
-    docs = spark.createDataFrame(pdf)
-    cfg_sampled = dataclasses.replace(CFG, salt_sample_fraction=0.5)
-    idx_e = BM25IndexBuilder(spark, CFG).build(docs, str(tmp_path / "exact"))
-    idx_s = BM25IndexBuilder(spark, cfg_sampled).build(
-        docs, str(tmp_path / "sampled")
-    )
-    assert idx_e.meta["n_postings"] == idx_s.meta["n_postings"]
-    assert idx_e.meta["avgdl"] == idx_s.meta["avgdl"]
-    qs = ["data web w0003", "of and w0001 w0002", "zzz-none"]
-    h_e = BM25QueryEngine(idx_e).search(qs, topn=10).collect()
-    h_s = BM25QueryEngine(idx_s).search(qs, topn=10).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    for a, b in zip(sorted(h_e, key=key), sorted(h_s, key=key)):
-        assert (a["query_id"], a["rank"], a["doc_id"]) == (
-            b["query_id"],
-            b["rank"],
-            b["doc_id"],
-        )
-        assert a["score"] == pytest.approx(b["score"], rel=1e-12)

@@ -329,15 +329,15 @@ def test_auto_mode_small_batch_uses_fused_plan(spark, tmp_path):
     df = spark.createDataFrame(synth_webtext_pandas(n_docs=60, seed=9))
     cfg = EngineConfig(num_term_buckets=4)
     b = BM25IndexBuilder(spark, cfg)
-    _, rows = b._tokenized_exploded(
+    tok, rows = b._tokenized_exploded(
         df.selectExpr("monotonically_increasing_id() as doc_id", "text"),
-        cache=False,
         mode=cfg.resolved_postings_mode(60),
     )
+    tok.unpersist()
     assert "tf" not in rows.columns  # raw explode, not run-length entries
-    _, rows_big = b._tokenized_exploded(
+    tok, rows_big = b._tokenized_exploded(
         df.selectExpr("monotonically_increasing_id() as doc_id", "text"),
-        cache=False,
         mode=cfg.resolved_postings_mode(10**6),
     )
+    tok.unpersist()
     assert "tf" in rows_big.columns
