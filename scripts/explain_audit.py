@@ -13,6 +13,7 @@ Writes BENCH/PLANS.md. Run: python scripts/explain_audit.py [sf_dir]
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -25,6 +26,17 @@ def grab_plan(df) -> str:
         df.explain("formatted")
         df.explain()  # simple mode: '*(n)' marks WholeStageCodegen spans
     return buf.getvalue()
+
+
+def stable_plan(plan: str, index_dir: str) -> str:
+    """``plan`` without what changes between two runs over the same input:
+    the audit index's directory (it lives under the temp dir) becomes
+    ``<index_dir>``, and Spark's expression ids (``#1672L``), plan ids
+    (``plan_id=535``) and RDD ids (``MapPartitionsRDD[84]``) are dropped."""
+    plan = plan.replace(os.path.abspath(index_dir), "<index_dir>")
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD", plan)
+    return re.sub(r"plan_id=\d+", "plan_id", plan)
 
 
 def main():
@@ -189,6 +201,7 @@ def main():
         for name, ok in checks:
             f.write(f"- [{'x' if ok else ' '}] {name}\n")
         for title, plan in sections:
+            plan = stable_plan(plan, idx.index_dir)
             f.write(f"\n## {title}\n\n```\n{plan}\n```\n")
     for name, ok in checks:
         print(("PASS " if ok else "FAIL ") + name)

@@ -29,6 +29,12 @@ the tokenizer UDF and the Arrow block encoder):
     -> write parquet partitioned by bucket = xxhash64(term) % B,
        per-bucket checkpoint manifests (lineage + metrics) -> resumable
 
+Stage state is passed explicitly: build(), merge_new_docs() and compact()
+each hold one BuildRun for the whole call — the caches it persisted, its
+async writes, its stage walls and the Spark job description of the running
+stage. A failed call joins its writes and releases its caches before the
+error propagates, so no writer outlives it and no cache leaks.
+
 Scale notes (the 1000-executor story):
 - The only driver-side values are scalars (N, total_tokens, average_idf) and
   the heavy-term salt list (df >= threshold: thousands of terms, not vocab).
@@ -146,13 +152,84 @@ _STATS_WRITE_DDL = (
 )
 
 
-def _release_docs_cache(docs: DataFrame) -> None:
-    """Unpersist the docs cache plus (small-corpus branch) the sorted
-    parent cache whose release was deferred until docs materialized."""
-    parent = getattr(docs, "_defer_unpersist_parent", None)
-    if parent is not None:
-        parent.unpersist()
-    docs.unpersist()
+class BuildRun:
+    """The stage state of one build(), merge_new_docs() or compact() call,
+    passed to its stages: held caches, async writes, per-stage walls and
+    the Spark job description of the running stage. ``with BuildRun(spark,
+    entry) as run:`` spans the call. Exit joins every write, then releases
+    every held cache (a write may read one) and restores the caller's job
+    description; an exception exit re-raises the original error."""
+
+    def __init__(self, spark: SparkSession, entry: str):
+        self.spark, self.entry = spark, entry
+        self.stage_wall_s = {}
+        self._held, self._writes, self._errors = [], [], []
+        self._stage, self._since = None, 0.0
+        self._caller_desc = spark.sparkContext.getLocalProperty(
+            "spark.job.description"
+        )
+
+    def __enter__(self) -> "BuildRun":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            if exc_type is None:
+                self.join_writes()
+            for t in self._writes:  # exception exit: writes joined, not raised
+                t.join()
+        finally:
+            self.release(*self._held)
+            self.spark.sparkContext.setJobDescription(self._caller_desc)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` (unless cached already); held until release/exit."""
+        if not df.is_cached:
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._held.append(df)
+        return df
+
+    def release(self, *dfs: Optional[DataFrame]) -> None:
+        """Unpersist the held caches among ``dfs``; others are skipped."""
+        for df in dfs:
+            if any(df is h for h in self._held):
+                self._held = [h for h in self._held if h is not df]
+                df.unpersist()
+
+    def mark(self, stage: Optional[str]) -> None:
+        """End the running stage (its wall goes to stage_wall_s) and start
+        ``stage``, if any: later jobs are described "<entry>: <stage>"."""
+        now = time.time()
+        if self._stage is not None:
+            self.stage_wall_s[self._stage] = round(now - self._since, 2)
+        self._stage, self._since = stage, now
+        self.spark.sparkContext.setJobDescription(
+            f"{self.entry}: {stage}" if stage else self._caller_desc
+        )
+
+    def write_async(self, desc: str, fn) -> None:
+        """Run the write ``fn`` on a daemon thread named ``desc``, its jobs
+        described "<entry>: <desc>"; join_writes() raises its error."""
+        sc, job = self.spark.sparkContext, f"{self.entry}: {desc}"
+
+        def _run():
+            try:
+                sc.setJobDescription(job)
+                fn()
+            except BaseException as e:  # re-raised by join_writes
+                self._errors.append(e)
+
+        t = threading.Thread(target=_run, daemon=True, name=desc)
+        t.start()
+        self._writes.append(t)
+
+    def join_writes(self) -> None:
+        """Wait for every async write; raise the first error one hit."""
+        while self._writes:
+            self._writes.pop(0).join()
+        errors, self._errors = self._errors, []
+        if errors:
+            raise errors[0]
 
 
 def _staging_root(index_dir: str) -> str:
@@ -341,7 +418,7 @@ def _estimate_input_bytes(df: DataFrame) -> Optional[int]:
 _SORT_BYTES_PER_PARTITION = 32 << 20
 
 
-def _dense_doc_ids(pages: DataFrame, sort_partitions: int) -> DataFrame:
+def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
     """Dense 0..N-1 doc ids in deterministic (warc_ts, url) ingestion order.
 
     Scalable dense-rank, pure JVM (no zipWithIndex: that would pickle every
@@ -351,12 +428,14 @@ def _dense_doc_ids(pages: DataFrame, sort_partitions: int) -> DataFrame:
     already satisfied) and partitionBy(_pid) matches the distribution, so
     no extra shuffle. The sorted input is cached so the counts pass doesn't
     recompute the range exchange.
+
+    Returns (ids, sort_cache, n_rows, input_fp): the sorted input cache is
+    held on ``run``, to be released once the ids have materialized.
     """
-    ordered = (
+    ordered = run.persist(
         pages.repartitionByRange(sort_partitions, "warc_ts", "url")
         .sortWithinPartitions("warc_ts", "url")
         .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # the per-partition counts pass doubles as the input-fingerprint pass:
     # bit_xor is associative/commutative, so the xor of per-partition xors
@@ -400,12 +479,7 @@ def _dense_doc_ids(pages: DataFrame, sort_partitions: int) -> DataFrame:
         )
         .drop("_pid", "_offset")
     )
-    out._cached_sort_parent = ordered  # released once docs materialize
-    out._input_fp = {
-        "n_input_rows": sum(n for _, n in counts),
-        "input_fp": fp,
-    }
-    return out
+    return out, ordered, acc, fp
 
 
 def _doc_tf_entries(tokenized: DataFrame) -> DataFrame:
@@ -647,7 +721,6 @@ def _warm_python_workers_async(spark: SparkSession):
     while the docs stage runs pure-JVM work that leaves most cores idle;
     FIFO scheduling back-fills the warm tasks into those idle slots.
     Computes nothing anyone reads; failures are ignored."""
-    import threading
 
     def _run():
         try:
@@ -670,9 +743,7 @@ def _warm_python_workers_async(spark: SparkSession):
         except Exception:
             pass  # best-effort: the pool then warms lazily as before
 
-    t = threading.Thread(target=_run, daemon=True, name="py-worker-warmup")
-    t.start()
-    return t
+    threading.Thread(target=_run, daemon=True, name="py-worker-warmup").start()
 
 
 def _idf_raw(n_docs: int, df: int) -> float:
@@ -719,8 +790,8 @@ def _ordered_sum_kernel(batches):
 
 
 def _term_firsts(tokenized: DataFrame) -> DataFrame:
-    """(term, hits, first_doc, first_pos) of a tokenized batch, persisted:
-    ``hits`` is the term's document frequency and (first_doc, first_pos)
+    """(term, hits, first_doc, first_pos) of a tokenized batch: ``hits``
+    is the term's document frequency and (first_doc, first_pos)
     its first occurrence — the key the reference's vocabulary is inserted
     in (oracle.py: documents in id order, each document's distinct terms
     in first-occurrence order).
@@ -743,7 +814,6 @@ def _term_firsts(tokenized: DataFrame) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.min_by("pos", "doc_id").alias("first_pos"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -791,137 +861,110 @@ class BM25IndexBuilder:
         """
         cfg = self.cfg
         t0 = time.time()
-        _warm_python_workers_async(self.spark)
-        stage_wall = {}
-        _last = [t0]
+        with BuildRun(self.spark, "build") as run:
+            run.mark("docs")
+            _warm_python_workers_async(self.spark)
+            os.makedirs(index_dir, exist_ok=True)
+            # a full (re)build supersedes any staged-but-uncommitted increment
+            shutil.rmtree(_staging_root(index_dir), ignore_errors=True)
+            ckpt = cfg.checkpoint_dir or os.path.join(index_dir, "manifests")
+            if resume:
+                # stage/bucket manifests describe the ORIGINAL full build;
+                # once incremental merges have appended segments, the live
+                # dirs no longer match them — distrust everything and
+                # rebuild (docs and per-bucket writes are overwrite-mode,
+                # clearing merge segments)
+                meta_path = os.path.join(index_dir, "meta.json")
+                if os.path.exists(meta_path):
+                    with open(meta_path, "r", encoding="utf-8") as f:
+                        if json.load(f).get("increments"):
+                            shutil.rmtree(ckpt, ignore_errors=True)
+                            resume = False
 
-        def _mark(stage: str):
-            now = time.time()
-            stage_wall[stage] = round(now - _last[0], 2)
-            _last[0] = now
+            docs_path = os.path.join(index_dir, "docs")
+            stats_path = os.path.join(index_dir, "term_stats")
+            blocks_path = os.path.join(index_dir, "blocks")
 
-        os.makedirs(index_dir, exist_ok=True)
-        # a full (re)build supersedes any staged-but-uncommitted increment
-        shutil.rmtree(_staging_root(index_dir), ignore_errors=True)
-        ckpt = cfg.checkpoint_dir or os.path.join(index_dir, "manifests")
-        if resume:
-            # stage/bucket manifests describe the ORIGINAL full build; once
-            # incremental merges have appended segments, the live dirs no
-            # longer match them — distrust everything and rebuild (docs and
-            # per-bucket writes are overwrite-mode, clearing merge segments)
-            meta_path = os.path.join(index_dir, "meta.json")
-            if os.path.exists(meta_path):
-                with open(meta_path, "r", encoding="utf-8") as f:
-                    if json.load(f).get("increments"):
-                        shutil.rmtree(ckpt, ignore_errors=True)
-                        resume = False
+            # ---- stage 1: ingest -> docs(doc_id, url, text, doc_len) ----
+            # The docs manifest is trusted only when its format/input
+            # identity AND an input content fingerprint (row count +
+            # order-independent xxhash64(url, warc_ts) xor — a
+            # two-narrow-column scan, no shuffle) match the CURRENT input:
+            # different data at the same path must recompute, not silently
+            # serve the stale corpus. Same-count content swaps are caught
+            # by the hash term (see _input_fingerprint). That standalone
+            # scan job is only paid to validate a resume; a fresh build
+            # folds the fingerprint into the docs stage's per-partition
+            # counts pass (_dense_doc_ids) — one less full-input job.
+            docs_manifest = os.path.join(ckpt, "stage-docs.json")
+            docs_key = f"v{FORMAT_VERSION}|{input_desc}"
+            docs_meta = None
+            if resume and os.path.exists(docs_manifest):
+                input_fp = _input_fingerprint(webtext)
+                with open(docs_manifest, "r", encoding="utf-8") as f:
+                    docs_meta = json.load(f)
+                if docs_meta.get("docs_key") != docs_key or any(
+                    docs_meta.get(k) != v for k, v in input_fp.items()
+                ):
+                    docs_meta = None  # stale: input changed under the checkpoint
+            sort_cache = None
+            if docs_meta is not None:
+                # re-read loses the build-time partitioning: small parquet
+                # files get packed to maxPartitionBytes and would throttle
+                # the tokenize stage's parallelism, so spread explicitly
+                # (resume-only cost)
+                docs = self.spark.read.parquet(docs_path).repartition(
+                    self.spark.sparkContext.defaultParallelism * 2
+                )
+            else:
+                docs, sort_cache, docs_meta = self._build_docs(
+                    run, webtext, docs_path, input_desc
+                )
+                docs_meta["docs_key"] = docs_key
+                os.makedirs(ckpt, exist_ok=True)
 
-        docs_path = os.path.join(index_dir, "docs")
-        stats_path = os.path.join(index_dir, "term_stats")
-        blocks_path = os.path.join(index_dir, "blocks")
-
-        # ---- stage 1: ingest -> docs(doc_id, url, text, doc_len) ----
-        # The docs manifest is trusted only when its format/input identity
-        # AND an input content fingerprint (row count + order-independent
-        # xxhash64(url, warc_ts) xor — a two-narrow-column scan, no shuffle)
-        # match the CURRENT input: different data at the same path must
-        # recompute, not silently serve the stale corpus. Same-count content
-        # swaps are caught by the hash term (see _input_fingerprint).
-        docs_manifest = os.path.join(ckpt, "stage-docs.json")
-        docs_key = f"v{FORMAT_VERSION}|{input_desc}"
-        # The input fingerprint is needed on every build (it participates in
-        # the lineage key and the docs manifest). A STANDALONE narrow-column
-        # scan job is only paid when a resume must validate an existing
-        # manifest BEFORE deciding to rebuild; a fresh build folds the
-        # fingerprint into the docs stage's per-partition counts pass
-        # (_dense_doc_ids) — one less full-input job.
-        docs_meta = None
-        input_fp = None
-        if resume and os.path.exists(docs_manifest):
-            input_fp = _input_fingerprint(webtext)
-            with open(docs_manifest, "r", encoding="utf-8") as f:
-                docs_meta = json.load(f)
-            if (
-                docs_meta.get("docs_key") != docs_key
-                or docs_meta.get("n_input_rows") != input_fp["n_input_rows"]
-                or docs_meta.get("input_fp") != input_fp["input_fp"]
-            ):
-                docs_meta = None  # stale: input changed under the checkpoint
-        fresh_docs = docs_meta is None
-        if docs_meta is not None:
-            # re-read loses the build-time partitioning: small parquet files
-            # get packed to maxPartitionBytes and would throttle the tokenize
-            # stage's parallelism, so spread explicitly (resume-only cost)
-            docs = self.spark.read.parquet(docs_path).repartition(
-                self.spark.sparkContext.defaultParallelism * 2
+            run.mark("salt_detect")
+            n_docs = docs_meta["n_docs"]
+            if n_docs == 0:
+                raise ValueError(
+                    "cannot build a BM25 index over an empty corpus (the "
+                    "reference raises on empty corpora too, "
+                    "literal_similarity.py:424-425)"
+                )
+            # lineage key = format version (a resume must never trust
+            # partitions written by an older layout) + input identity
+            # (path, fingerprint, N) + a digest of EVERY config field that
+            # shapes block/stats bytes (see EngineConfig.index_key):
+            # changing any of them invalidates all stage/bucket manifests
+            # instead of resuming onto a stale layout
+            lineage_key = (
+                f"v{FORMAT_VERSION}|{input_desc}|fp={docs_meta['input_fp']}"
+                f"|{n_docs}|cfg={cfg.index_key()}"
             )
-        else:
-            docs, docs_meta = self._build_docs(webtext, docs_path, input_desc)
-            docs_meta["docs_key"] = docs_key
-            input_fp = {
-                "input_fp": docs_meta["input_fp"],
-                "n_input_rows": docs_meta["n_input_rows"],
-            }
-            os.makedirs(ckpt, exist_ok=True)
 
-        def _finalize_docs_stage():
-            """Join the (possibly async) docs file write and only then
-            record the stage manifest — a manifest must never describe
-            files that are not fully on disk. No-op on the resume path."""
-            pend = getattr(docs, "_pending_write", None)
-            if pend is not None:
-                thread, errbox = pend
-                thread.join()
-                docs._pending_write = None
-                if errbox:
-                    raise errbox[0]
-            if fresh_docs:
-                with open(docs_manifest, "w", encoding="utf-8") as f:
-                    json.dump(docs_meta, f, sort_keys=True)
+            # stats manifest validation: trust only a manifest written for
+            # THIS lineage (format, input, N, config)
+            stats_manifest = os.path.join(ckpt, "stage-term_stats.json")
+            stats_meta = None
+            if resume and os.path.exists(stats_manifest):
+                with open(stats_manifest, "r", encoding="utf-8") as f:
+                    stats_meta = json.load(f)
+                if stats_meta.get("lineage_key") != lineage_key:
+                    stats_meta = None
+            done = completed_buckets(ckpt, lineage_key) if resume else []
 
-        _mark("docs")
-        n_docs = docs_meta["n_docs"]
-        # FORMAT_VERSION in the lineage key: a resume must never trust
-        # partitions written by an older block/payload layout
-        if n_docs == 0:
-            raise ValueError(
-                "cannot build a BM25 index over an empty corpus (the "
-                "reference raises on empty corpora too, "
-                "literal_similarity.py:424-425)"
+            # ONE all-to-all exchange for the whole build: token rows (raw,
+            # or per-doc TF entries under fused_tf) shuffle straight into
+            # the block encoder (which counts doc_id duplicates as tf — see
+            # _encode_blocks_df); term_stats then derive from the tiny
+            # blocks table (df = sum(n_postings), tokens = sum(tf_sum)) and
+            # the per-term first occurrences of the salt-list pass. The
+            # token cache serves both that pass and the encode pass.
+            tokenized, exploded = self._tokenized_exploded(
+                docs, cfg.resolved_postings_mode(n_docs)
             )
-        # lineage key = format version + input identity (path, fingerprint,
-        # N) + a digest of EVERY config field that shapes block/stats bytes
-        # (stopwords, tokenizer, block_size, salting, postings_mode, ... —
-        # see EngineConfig.index_key): changing any of them invalidates all
-        # stage/bucket manifests instead of resuming onto a stale layout
-        lineage_key = (
-            f"v{FORMAT_VERSION}|{input_desc}|fp={input_fp['input_fp']}"
-            f"|{n_docs}|cfg={cfg.index_key()}"
-        )
-
-        # stats manifest validation: trust only a manifest written for THIS
-        # lineage (format, input, N, config)
-        stats_manifest = os.path.join(ckpt, "stage-term_stats.json")
-        stats_meta = None
-        if resume and os.path.exists(stats_manifest):
-            with open(stats_manifest, "r", encoding="utf-8") as f:
-                stats_meta = json.load(f)
-            if stats_meta.get("lineage_key") != lineage_key:
-                stats_meta = None
-        done = completed_buckets(ckpt, lineage_key) if resume else []
-
-        # ONE all-to-all exchange for the whole build: token rows (raw, or
-        # per-doc TF entries under fused_tf) shuffle straight into the block
-        # encoder (which counts doc_id duplicates as tf — see
-        # _encode_blocks_df); term_stats then derive from the tiny blocks
-        # table (df = sum(n_postings), tokens = sum(tf_sum)) and the
-        # per-term first occurrences of the salt-list pass. The token cache
-        # serves both that pass and the encode pass.
-        tokenized, exploded = self._tokenized_exploded(
-            docs, cfg.resolved_postings_mode(n_docs)
-        )
-        firsts = _term_firsts(tokenized)
-        try:
+            run.persist(tokenized)
+            firsts = run.persist(_term_firsts(tokenized))
             # the salt list is TINY (terms above threshold) — collect it and
             # re-broadcast a literal so the pass runs exactly once (a
             # broadcast of the lazy plan would recompute it), and so the
@@ -931,110 +974,95 @@ class BM25IndexBuilder:
                     "term", F.lit(True).alias("_heavy")
                 )
             )
-            _mark("salt_detect")
-            # the async docs file write has been overlapping tokenize +
-            # heavy detection; join it (and record the stage manifest)
-            # before the encode stage commits to the lineage
-            _finalize_docs_stage()
-            # group writes run ASYNC, overlapped with the stats computation
-            # below — both only read the blocks cache; the join (which also
-            # surfaces write failures) runs before the cache is released
-            blocks_cached, blocks_join, vocab = self._build_blocks(
-                exploded,
-                heavy,
-                blocks_path,
-                ckpt,
-                lineage_key,
-                n_docs=n_docs,
-                done_buckets=set(done),
+            run.mark("encode")
+            # the async docs file write overlapped tokenize + heavy
+            # detection; a manifest must never describe files not yet on
+            # disk (a resumed docs stage rewrites its manifest unchanged)
+            run.join_writes()
+            with open(docs_manifest, "w", encoding="utf-8") as f:
+                json.dump(docs_meta, f, sort_keys=True)
+            blocks, vocab = self._build_blocks(
+                run, exploded, heavy, blocks_path, ckpt, lineage_key,
+                n_docs=n_docs, done_buckets=set(done),
                 fail_after_groups=_fail_after_groups,
-                mark=_mark,
             )
-            _release_docs_cache(docs)
-            tokenized.unpersist()
-            _mark("blocks_write")
+            run.release(docs, sort_cache, tokenized)
+            run.mark("stats")
             if stats_meta is None:
                 # stats derive from the STILL-CACHED blocks table when the
-                # stage just ran (no re-read of the parquet it wrote);
-                # a fully-resumed stage falls back to the on-disk table
+                # stage just ran (no re-read of the parquet it wrote); a
+                # fully-resumed stage falls back to the on-disk table
                 # (explicit schema: a corpus whose docs all tokenize to
                 # empty writes no block files, where inference would fail)
-                blocks_df = blocks_cached
-                if blocks_df is None:
-                    blocks_df = self.spark.read.schema(
+                if blocks is None:
+                    blocks = self.spark.read.schema(
                         _BLOCKS_READ_SCHEMA
                     ).parquet(blocks_path)
                 stats_meta = self._write_term_stats(
-                    _batch_terms(blocks_df, firsts),
-                    n_docs,
-                    stats_path,
+                    run, _batch_terms(blocks, firsts), n_docs, stats_path,
                     min_vocab=vocab,
                 )
-                if blocks_join is not None:
-                    blocks_join()
                 stats_meta["lineage_key"] = lineage_key
-                with open(stats_manifest, "w", encoding="utf-8") as f:
-                    json.dump(stats_meta, f, sort_keys=True)
-            elif blocks_join is not None:
-                blocks_join()
-            if blocks_cached is not None:
-                blocks_cached.unpersist()
-        finally:
-            firsts.unpersist()
-        _mark("stats")
+            # the bucket-group writes overlapped the stats pass: all land
+            # (or raise) before a manifest or meta.json records this build
+            run.join_writes()
+            with open(stats_manifest, "w", encoding="utf-8") as f:
+                json.dump(stats_meta, f, sort_keys=True)
+            run.mark(None)
 
-        total_tokens = stats_meta["total_tokens"]
-        docs_meta["total_tokens"] = total_tokens
-        # exact reference arithmetic: python int/int division -> float64
-        avgdl = total_tokens / n_docs
+            total_tokens = stats_meta["total_tokens"]
+            # exact reference arithmetic: python int/int division -> float64
+            avgdl = total_tokens / n_docs
 
-        # ---- meta.json: overall commit marker ----
-        meta = {
-            # term_stats layout: a merge refuses indexes older than v4,
-            # whose term_stats carry no first-occurrence key
-            "format_version": FORMAT_VERSION,
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": avgdl,
-            "vocab_size": stats_meta["vocab_size"],
-            "average_idf": stats_meta["average_idf"],
-            "n_postings": stats_meta["n_postings"],
-            "lineage_key": lineage_key,
-            "input_desc": input_desc,
-            "n_input_rows": docs_meta["n_input_rows"],
-            "n_dups_dropped": docs_meta["n_input_rows"] - n_docs,
-            "build_wall_s": time.time() - t0,
-            "stage_wall_s": stage_wall,
-            # the PHYSICAL plan this build actually ran (postings_mode may
-            # be 'auto'; this names its size-resolution so bench artifacts
-            # attribute walls to the right plan — VERDICT r4 'wrong' #1)
-            "resolved_postings_mode": cfg.resolved_postings_mode(n_docs),
-            "salt_per_range": cfg.salt_bounds(n_docs),
-            "increments": [],
-            "config": {
-                "k1": cfg.k1,
-                "b": cfg.b,
-                "epsilon": cfg.epsilon,
-                "stopwords": sorted(cfg.stopwords),
-                "lowercase_stopword_match": cfg.lowercase_stopword_match,
-                "tokenizer": cfg.tokenizer,
-                "block_size": cfg.block_size,
-                "num_term_buckets": cfg.num_term_buckets,
-                "salt_df_threshold": cfg.salt_df_threshold,
-                "num_salts": cfg.num_salts,
-                "score_mode": cfg.score_mode,
-                "postings_mode": cfg.postings_mode,
-                "fan_out_threshold": cfg.fan_out_threshold,
-                "fan_out_max": cfg.fan_out_max,
-                "variant": cfg.variant,
-                "delta": cfg.delta,
-                "checkpoint_dir": cfg.checkpoint_dir,
-                "checkpoint_groups": cfg.checkpoint_groups,
-                "checkpoint_group_min_bytes": cfg.checkpoint_group_min_bytes,
-            },
-        }
-        with open(os.path.join(index_dir, "meta.json"), "w", encoding="utf-8") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
+            # ---- meta.json: overall commit marker ----
+            meta = {
+                # term_stats layout: a merge refuses indexes older than v4,
+                # whose term_stats carry no first-occurrence key
+                "format_version": FORMAT_VERSION,
+                "n_docs": n_docs,
+                "total_tokens": total_tokens,
+                "avgdl": avgdl,
+                "vocab_size": stats_meta["vocab_size"],
+                "average_idf": stats_meta["average_idf"],
+                "n_postings": stats_meta["n_postings"],
+                "lineage_key": lineage_key,
+                "input_desc": input_desc,
+                "n_input_rows": docs_meta["n_input_rows"],
+                "n_dups_dropped": docs_meta["n_input_rows"] - n_docs,
+                "build_wall_s": time.time() - t0,
+                "stage_wall_s": run.stage_wall_s,
+                # the PHYSICAL plan this build actually ran (postings_mode
+                # may be 'auto'; this names its size-resolution so bench
+                # artifacts attribute walls to the right plan)
+                "resolved_postings_mode": cfg.resolved_postings_mode(n_docs),
+                "salt_per_range": cfg.salt_bounds(n_docs),
+                "increments": [],
+                "config": {
+                    "k1": cfg.k1,
+                    "b": cfg.b,
+                    "epsilon": cfg.epsilon,
+                    "stopwords": sorted(cfg.stopwords),
+                    "lowercase_stopword_match": cfg.lowercase_stopword_match,
+                    "tokenizer": cfg.tokenizer,
+                    "block_size": cfg.block_size,
+                    "num_term_buckets": cfg.num_term_buckets,
+                    "salt_df_threshold": cfg.salt_df_threshold,
+                    "num_salts": cfg.num_salts,
+                    "score_mode": cfg.score_mode,
+                    "postings_mode": cfg.postings_mode,
+                    "fan_out_threshold": cfg.fan_out_threshold,
+                    "fan_out_max": cfg.fan_out_max,
+                    "variant": cfg.variant,
+                    "delta": cfg.delta,
+                    "checkpoint_dir": cfg.checkpoint_dir,
+                    "checkpoint_groups": cfg.checkpoint_groups,
+                    "checkpoint_group_min_bytes": cfg.checkpoint_group_min_bytes,
+                },
+            }
+            with open(
+                os.path.join(index_dir, "meta.json"), "w", encoding="utf-8"
+            ) as f:
+                json.dump(meta, f, indent=1, sort_keys=True)
         return BM25Index(self.spark, index_dir)
 
     def merge_new_docs(
@@ -1070,84 +1098,86 @@ class BM25IndexBuilder:
         """
         cfg = self.cfg
         t0 = time.time()
-        idx = BM25Index(self.spark, index_dir)  # rolls forward any pending inc
-        if idx.meta.get("format_version", 3) < FORMAT_VERSION:
-            raise ValueError(
-                f"{index_dir}: term_stats carry no first-occurrence key "
-                "(index format older than v4), so a merge cannot sum idf in "
-                "the reference's order; rebuild the index with build() "
-                "before merging into it"
+        with BuildRun(self.spark, "merge") as run:
+            run.mark("docs")
+            idx = BM25Index(self.spark, index_dir)  # rolls forward any pending inc
+            if idx.meta.get("format_version", 3) < FORMAT_VERSION:
+                raise ValueError(
+                    f"{index_dir}: term_stats carry no first-occurrence key "
+                    "(index format older than v4), so a merge cannot sum idf "
+                    "in the reference's order; rebuild the index with build() "
+                    "before merging into it"
+                )
+            old_n = idx.n_docs
+            old_docs = idx.docs()
+
+            # discard aborted stagings (no commit record: their data never
+            # reached the live index); this merge stages under inc_dir
+            staging = _staging_root(index_dir)
+            for name in os.listdir(staging) if os.path.isdir(staging) else []:
+                aborted = os.path.join(staging, name)
+                if not os.path.exists(os.path.join(aborted, "COMMIT.json")):
+                    shutil.rmtree(aborted, ignore_errors=True)
+            # zero-padded old_n: _pending_increments sorts staging dir names
+            # lexicographically for oldest-first roll-forward, and "inc100-…"
+            # must not sort before "inc80-…" if several increments ever pend
+            inc_id = f"inc{old_n:015d}-{uuid.uuid4().hex[:8]}"
+            inc_dir = os.path.join(staging, inc_id)
+
+            pages = extract_text(new_webtext).select("url", "warc_ts", "text")
+            # left_anti never multiplies rows, even for duplicated old texts
+            pages = pages.join(old_docs.select("text"), "text", "left_anti")
+            sort_parts = max(1, self.spark.sparkContext.defaultParallelism)
+            # the per-partition counts pass already totals the batch: an
+            # all-duplicate batch stops here, before any further job
+            with_ids, sort_cache, m_new, _ = _dense_doc_ids(run, pages, sort_parts)
+            if m_new == 0:
+                return idx
+            # localCheckpoint TRUNCATES lineage: the append below rewrites the
+            # very docs path this batch's anti-join reads, and Spark's
+            # recacheByPath would otherwise recompute the batch against the
+            # appended files (filtering everything out). A lineage-free copy
+            # is immune.
+            new_docs = with_ids.select(
+                (F.col("doc_id") + F.lit(old_n)).alias("doc_id"), "url", "text"
+            ).localCheckpoint(eager=True)
+            run.release(sort_cache)
+            new_docs.write.mode("overwrite").parquet(os.path.join(inc_dir, "docs"))
+
+            # ---- encode the batch's NEW segments into staging first
+            # (fused: one shuffle, the encoder aggregates tf). Salts beyond
+            # the old ranges: new doc ids all exceed old_n, so sorted-run
+            # and no-collision properties hold. Salting uses per-BATCH term
+            # counts (physical layout only — a term heavy in the old corpus
+            # but light in this batch just gets an unsalted small segment).
+            run.mark("encode")
+            per_salt = idx.meta.get("salt_per_range") or cfg.salt_bounds(old_n)
+            # resolved on the NEW batch's size: incremental batches are
+            # usually far below the fused_tf crossover even when the
+            # accumulated corpus is far above it
+            tokenized, rows = self._tokenized_exploded(
+                new_docs, cfg.resolved_postings_mode(m_new)
             )
-        old_n = idx.n_docs
-        old_docs = idx.docs()
-
-        # discard aborted stagings (no commit record: their data never
-        # reached the live index) and carve out this merge's staging dir
-        staging = _staging_root(index_dir)
-        if os.path.isdir(staging):
-            for name in os.listdir(staging):
-                if not os.path.exists(os.path.join(staging, name, "COMMIT.json")):
-                    shutil.rmtree(os.path.join(staging, name), ignore_errors=True)
-        # zero-padded old_n: _pending_increments sorts staging dir names
-        # lexicographically for oldest-first roll-forward, and "inc100-…"
-        # must not sort before "inc80-…" if several increments ever pend
-        inc_id = f"inc{old_n:015d}-{uuid.uuid4().hex[:8]}"
-        inc_dir = os.path.join(staging, inc_id)
-        os.makedirs(inc_dir, exist_ok=True)
-
-        pages = extract_text(new_webtext).select("url", "warc_ts", "text")
-        # left_anti never multiplies rows even when old texts are duplicated
-        pages = pages.join(old_docs.select("text"), "text", "left_anti")
-        sort_parts = max(1, self.spark.sparkContext.defaultParallelism)
-        with_ids = _dense_doc_ids(pages, sort_parts)
-        # localCheckpoint TRUNCATES lineage: the append below rewrites the
-        # very docs path this batch's anti-join reads, and Spark's
-        # recacheByPath would otherwise recompute the batch against the
-        # appended files (filtering everything out). A lineage-free copy is
-        # immune.
-        new_docs = with_ids.select(
-            (F.col("doc_id") + F.lit(old_n)).alias("doc_id"), "url", "text"
-        ).localCheckpoint(eager=True)
-        m_new = new_docs.count()
-        parent = getattr(with_ids, "_cached_sort_parent", None)
-        if parent is not None:
-            parent.unpersist()
-        if m_new == 0:
-            shutil.rmtree(inc_dir, ignore_errors=True)
-            return idx
-        new_docs.write.mode("overwrite").parquet(os.path.join(inc_dir, "docs"))
-
-        # ---- encode the batch's NEW segments into staging first (fused:
-        # one shuffle, the encoder aggregates tf). Salts beyond the old
-        # ranges: new doc ids all exceed old_n, so sorted-run and
-        # no-collision properties hold. Salting uses per-BATCH term counts
-        # (physical layout only — a term heavy in the old corpus but light
-        # in this batch just gets an unsalted small segment).
-        per_salt = idx.meta.get("salt_per_range") or cfg.salt_bounds(old_n)
-        # resolved on the NEW batch's size: incremental batches are usually
-        # far below the fused_tf crossover even when the accumulated corpus
-        # is far above it
-        tokenized, rows = self._tokenized_exploded(
-            new_docs, cfg.resolved_postings_mode(m_new)
-        )
-        # per-batch df (salt_df_threshold means df) and first occurrences;
-        # new doc ids already start at old_n, so a new term's key sorts
-        # after every old term's, as in the reference's insertion order
-        firsts = _term_firsts(tokenized)
-        try:
+            run.persist(tokenized)
+            # per-batch df (salt_df_threshold means df) and first
+            # occurrences; new doc ids already start at old_n, so a new
+            # term's key sorts after every old term's, as in the
+            # reference's insertion order
+            firsts = run.persist(_term_firsts(tokenized))
             heavy = firsts.filter(
                 F.col("hits") >= cfg.salt_df_threshold
             ).select("term", F.lit(True).alias("_heavy"))
             _encode_salted(rows, heavy, per_salt, cfg).write.mode(
                 "overwrite"
             ).partitionBy("bucket").parquet(os.path.join(inc_dir, "blocks"))
-            tokenized.unpersist()
+            run.release(tokenized)
 
             # ---- stats refresh: old term_stats ∪ the batch's terms (a
             # column-pruned read of the tiny staged blocks table). A term
             # present before keeps its stored first-occurrence key; a new
             # term takes the batch's. Summed in that key order, the merged
             # average_idf is bit-identical to a full rebuild's.
+            run.mark("stats")
             new = _batch_terms(
                 # explicit schema: a batch whose docs all tokenize to empty
                 # writes no block files, and schema inference would fail
@@ -1170,48 +1200,48 @@ class BM25IndexBuilder:
             )
             n_total = old_n + m_new
             stats_meta = self._write_term_stats(
-                combined,
-                n_total,
-                os.path.join(inc_dir, "term_stats"),
+                run, combined, n_total, os.path.join(inc_dir, "term_stats"),
                 min_vocab=int(idx.meta.get("vocab_size") or 0),
             )
-        finally:
-            firsts.unpersist()
-        new_tokens = stats_meta["total_tokens"]
+            run.mark(None)
+            new_tokens = stats_meta["total_tokens"]
 
-        # ---- stage next meta, write the commit record, roll forward ----
-        meta = dict(idx.meta)
-        meta["n_docs"] = n_total
-        meta["total_tokens"] = meta["total_tokens"] + new_tokens
-        meta["avgdl"] = meta["total_tokens"] / n_total
-        meta["vocab_size"] = stats_meta["vocab_size"]
-        meta["average_idf"] = stats_meta["average_idf"]
-        meta["n_postings"] = stats_meta["n_postings"]
-        meta.setdefault("increments", []).append(
-            {
-                "inc_id": inc_id,
-                "added_docs": int(m_new),
-                "added_tokens": new_tokens,
-                "wall_s": round(time.time() - t0, 2),
-            }
-        )
-        with open(os.path.join(inc_dir, "meta_next.json"), "w", encoding="utf-8") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
-        if _fail_before_commit:
-            raise RuntimeError("test hook: crash before commit record")
-        # atomic commit record: once this rename lands, the increment WILL be
-        # applied (here, or by the next BM25Index open if we crash)
-        commit_tmp = os.path.join(inc_dir, "COMMIT.json.tmp")
-        with open(commit_tmp, "w", encoding="utf-8") as f:
-            json.dump(
-                {"inc_id": inc_id, "added_docs": int(m_new), "n_docs": n_total},
-                f,
-                sort_keys=True,
+            # ---- stage next meta, write the commit record, roll forward ----
+            meta = dict(idx.meta)
+            meta["n_docs"] = n_total
+            meta["total_tokens"] = meta["total_tokens"] + new_tokens
+            meta["avgdl"] = meta["total_tokens"] / n_total
+            meta["vocab_size"] = stats_meta["vocab_size"]
+            meta["average_idf"] = stats_meta["average_idf"]
+            meta["n_postings"] = stats_meta["n_postings"]
+            meta.setdefault("increments", []).append(
+                {
+                    "inc_id": inc_id,
+                    "added_docs": int(m_new),
+                    "added_tokens": new_tokens,
+                    "wall_s": round(time.time() - t0, 2),
+                    "stage_wall_s": run.stage_wall_s,
+                }
             )
-        os.replace(commit_tmp, os.path.join(inc_dir, "COMMIT.json"))
-        if _fail_after_commit_record:
-            raise RuntimeError("test hook: crash after commit record")
-        _apply_increment(index_dir, inc_dir)
+            with open(
+                os.path.join(inc_dir, "meta_next.json"), "w", encoding="utf-8"
+            ) as f:
+                json.dump(meta, f, indent=1, sort_keys=True)
+            if _fail_before_commit:
+                raise RuntimeError("test hook: crash before commit record")
+            # atomic commit record: once this rename lands, the increment WILL
+            # be applied (here, or by the next BM25Index open if we crash)
+            commit_tmp = os.path.join(inc_dir, "COMMIT.json.tmp")
+            with open(commit_tmp, "w", encoding="utf-8") as f:
+                json.dump(
+                    {"inc_id": inc_id, "added_docs": int(m_new), "n_docs": n_total},
+                    f,
+                    sort_keys=True,
+                )
+            os.replace(commit_tmp, os.path.join(inc_dir, "COMMIT.json"))
+            if _fail_after_commit_record:
+                raise RuntimeError("test hook: crash after commit record")
+            _apply_increment(index_dir, inc_dir)
         return BM25Index(self.spark, index_dir)
 
     def compact(self, index_dir: str) -> BM25Index:
@@ -1243,75 +1273,82 @@ class BM25IndexBuilder:
         different builder cfg would silently break pruning. Compaction
         never changes semantics — only segment layout."""
         t0 = time.time()
-        idx = BM25Index(self.spark, index_dir)  # rolls forward pending work
-        cfg = idx.config()
-        n_docs = idx.n_docs
+        with BuildRun(self.spark, "compact") as run:
+            run.mark("salt_detect")
+            idx = BM25Index(self.spark, index_dir)  # rolls forward pending work
+            cfg = idx.config()
+            n_docs = idx.n_docs
+            # the open completed any swap blocks.swap.json recorded, so a
+            # blocks.next-*/blocks.old-* dir left now is an orphan of a failed
+            # compact or of a swap's unfinished cleanup: never live
+            for name in os.listdir(index_dir):
+                if name.startswith(("blocks.next-", "blocks.old-")):
+                    shutil.rmtree(os.path.join(index_dir, name))
 
-        # blocks -> postings rows, Arrow-batched; column-pruned scan
-        decode_schema = StructType(
-            [
-                StructField("term", StringType()),
-                StructField("doc_id", LongType()),
-                StructField("doc_len", LongType()),
-                StructField("tf", LongType()),
-            ]
-        )
+            # blocks -> postings rows, Arrow-batched; column-pruned scan
+            def decode_kernel(batches):
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    ids, tfs, dls = codec.decode_blocks_batch(
+                        [bytes(p) for p in pdf["payload"]],
+                        pdf["n_postings"].to_numpy(dtype=np.int64),
+                    )
+                    terms = np.repeat(
+                        pdf["term"].to_numpy(),
+                        pdf["n_postings"].to_numpy(dtype=np.int64),
+                    )
+                    yield pd.DataFrame(
+                        {"term": terms, "doc_id": ids, "doc_len": dls, "tf": tfs}
+                    )
 
-        def decode_kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, tfs, dls = codec.decode_blocks_batch(
-                    [bytes(p) for p in pdf["payload"]],
-                    pdf["n_postings"].to_numpy(dtype=np.int64),
+            postings = (
+                idx.blocks()
+                .select("term", "n_postings", "payload")
+                .mapInPandas(
+                    decode_kernel, "term string, doc_id long, doc_len long, tf long"
                 )
-                terms = np.repeat(
-                    pdf["term"].to_numpy(),
-                    pdf["n_postings"].to_numpy(dtype=np.int64),
-                )
-                yield pd.DataFrame(
-                    {"term": terms, "doc_id": ids, "doc_len": dls, "tf": tfs}
-                )
+            )
+            # exact df is already on disk — the salt list costs one tiny scan
+            heavy = self._collect_heavy(
+                idx.term_stats()
+                .filter(F.col("df") >= cfg.salt_df_threshold)
+                .select("term", F.lit(True).alias("_heavy"))
+            )
+            run.mark("encode")
+            per_salt = cfg.salt_bounds(n_docs)
+            swap_id = uuid.uuid4().hex[:8]
+            next_name = f"blocks.next-{swap_id}"
+            (
+                _encode_salted(postings, heavy, per_salt, cfg)
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(os.path.join(index_dir, next_name))
+            )
+            marker_tmp = os.path.join(index_dir, "blocks.swap.json.tmp")
+            with open(marker_tmp, "w", encoding="utf-8") as f:
+                json.dump({"next": next_name, "old": f"blocks.old-{swap_id}"}, f)
+            os.replace(marker_tmp, os.path.join(index_dir, "blocks.swap.json"))
+            _finish_blocks_swap(index_dir)
+            run.mark(None)
 
-        postings = (
-            idx.blocks()
-            .select("term", "n_postings", "payload")
-            .mapInPandas(decode_kernel, decode_schema)
-        )
-        # exact df is already on disk — the salt list costs one tiny scan
-        heavy = self._collect_heavy(
-            idx.term_stats()
-            .filter(F.col("df") >= cfg.salt_df_threshold)
-            .select("term", F.lit(True).alias("_heavy"))
-        )
-        per_salt = cfg.salt_bounds(n_docs)
-        swap_id = uuid.uuid4().hex[:8]
-        next_name = f"blocks.next-{swap_id}"
-        (
-            _encode_salted(postings, heavy, per_salt, cfg)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(index_dir, next_name))
-        )
-        marker_tmp = os.path.join(index_dir, "blocks.swap.json.tmp")
-        with open(marker_tmp, "w", encoding="utf-8") as f:
-            json.dump({"next": next_name, "old": f"blocks.old-{swap_id}"}, f)
-        os.replace(marker_tmp, os.path.join(index_dir, "blocks.swap.json"))
-        _finish_blocks_swap(index_dir)
-
-        # meta: record the compaction (resume stays distrustful of stage
-        # manifests exactly as after any increment) + the new salt ranges.
-        # A crash before this write leaves a compacted index with a stale
-        # salt_per_range — layout metadata only, scores unaffected.
-        meta = dict(idx.meta)
-        meta["salt_per_range"] = per_salt
-        meta.setdefault("increments", []).append(
-            {"compaction": swap_id, "wall_s": round(time.time() - t0, 2)}
-        )
-        tmp = os.path.join(index_dir, "meta.json.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(index_dir, "meta.json"))
+            # meta: record the compaction (resume stays distrustful of stage
+            # manifests exactly as after any increment) + the new salt ranges.
+            # A crash before this write leaves a compacted index with a stale
+            # salt_per_range — layout metadata only, scores unaffected.
+            meta = dict(idx.meta)
+            meta["salt_per_range"] = per_salt
+            meta.setdefault("increments", []).append(
+                {
+                    "compaction": swap_id,
+                    "wall_s": round(time.time() - t0, 2),
+                    "stage_wall_s": run.stage_wall_s,
+                }
+            )
+            tmp = os.path.join(index_dir, "meta.json.tmp")
+            with open(tmp, "w", encoding="utf-8") as f:
+                json.dump(meta, f, indent=1, sort_keys=True)
+            os.replace(tmp, os.path.join(index_dir, "meta.json"))
         return BM25Index(self.spark, index_dir)
 
     # ---------- stages ----------
@@ -1374,7 +1411,12 @@ class BM25IndexBuilder:
         rows = [(r["term"], True) for r in heavy.collect()]
         return literal_df(self.spark, rows, "term string, _heavy boolean")
 
-    def _build_docs(self, webtext: DataFrame, docs_path: str, input_desc: str):
+    def _build_docs(
+        self, run: BuildRun, webtext: DataFrame, docs_path: str, input_desc: str
+    ):
+        """Stage 1: (docs, sort_cache, meta) — the docs cache and the sort
+        cache it still reads (or None), both held on ``run``, and the stage
+        meta. A small corpus writes its files async on ``run``."""
         # NO dedup on the initial build: reference add_corpus keeps
         # within-batch duplicate texts (its membership check runs against the
         # static pre-batch corpus, literal_similarity.py:389-401) — so every
@@ -1390,72 +1432,52 @@ class BM25IndexBuilder:
         par = max(1, self.spark.sparkContext.defaultParallelism)
         est = _estimate_input_bytes(webtext)
         if est is not None:
-            sort_parts = max(
-                1, min(par, -(-est // _SORT_BYTES_PER_PARTITION))
-            )
+            sort_parts = max(1, min(par, -(-est // _SORT_BYTES_PER_PARTITION)))
         else:
             sort_parts = par
-        with_ids = _dense_doc_ids(pages, sort_parts)
+        with_ids, sort_cache, n_rows, input_fp = _dense_doc_ids(run, pages, sort_parts)
         narrow = with_ids.select("doc_id", "url", "text")
         # keep the partitioned DF alive for the tokenize stage: re-reading
         # the freshly written parquet would re-pack it into
         # ~size/maxPartitionBytes partitions and serialize tokenization
-        obs = Observation(f"docs-{uuid.uuid4().hex[:8]}")
-        parent = getattr(with_ids, "_cached_sort_parent", None)
         if sort_parts < par:
             # small corpus: write the sorted single-partition layout (one
             # well-sized file, cheap commit — guide §6) and cache a spread
             # copy for tokenize parallelism. The spread cache materializes
-            # lazily at its first consumer, so the sorted parent cache must
-            # outlive this call — deferred unpersist is fine HERE because
-            # this branch only exists for inputs under cores x 32MB.
+            # lazily at its first consumer, so the sort cache must outlive
+            # this call — deferring its release is fine HERE because this
+            # branch only exists for inputs under cores x 32MB.
             # The FILE write runs ASYNC (guide §2.6): n_docs is already
-            # known from the counts pass, nothing during the build reads
-            # the docs files (the cache serves tokenize), and the caller
-            # joins the thread before the stage manifest is recorded.
-            errbox = []
-
-            def _write_docs():
-                try:
-                    self.spark.sparkContext.setJobDescription(
-                        "docs parquet write (async)"
-                    )
-                    narrow.write.mode("overwrite").parquet(docs_path)
-                except BaseException as e:  # surfaced at the join
-                    errbox.append(e)
-
-            th = threading.Thread(
-                target=_write_docs, daemon=True, name="docs-write"
+            # known from the counts pass, and nothing during the build
+            # reads the docs files (the cache serves tokenize).
+            run.write_async(
+                "docs-write",
+                lambda: narrow.write.mode("overwrite").parquet(docs_path),
             )
-            th.start()
-            docs = narrow.repartition(par).persist(StorageLevel.MEMORY_AND_DISK)
-            docs._defer_unpersist_parent = parent
-            docs._pending_write = (th, errbox)
-            parent = None
-            n_docs = int(with_ids._input_fp["n_input_rows"])
+            docs = run.persist(narrow.repartition(par))
+            n_docs = n_rows
         else:
-            docs = (
-                narrow.observe(obs, F.count(F.lit(1)).alias("n"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
+            obs = Observation(f"docs-{uuid.uuid4().hex[:8]}")
+            docs = run.persist(narrow.observe(obs, F.count(F.lit(1)).alias("n")))
             # the write populates the cache AND the row-count observation —
             # no separate count job over the corpus
             docs.write.mode("overwrite").parquet(docs_path)
             n_docs = int(obs.get["n"])
-        if parent is not None:
-            parent.unpersist()
+            run.release(sort_cache)
+            sort_cache = None
         meta = {
             "n_docs": int(n_docs),
             "n_input_rows": int(n_docs),  # no initial-build dedup: 1:1
             "input_desc": input_desc,
             # folded into the counts pass by _dense_doc_ids — equals the
             # standalone _input_fingerprint(webtext) (extract_text is 1:1)
-            "input_fp": int(with_ids._input_fp["input_fp"]),
+            "input_fp": int(input_fp),
         }
-        return docs, meta
+        return docs, sort_cache, meta
 
     def _write_term_stats(
         self,
+        run: BuildRun,
         terms: DataFrame,
         n_docs: int,
         stats_path: str,
@@ -1480,8 +1502,9 @@ class BM25IndexBuilder:
         the idf is computed distributed and persisted, one task streams it
         in key order through _ordered_sum_kernel (a single result row: the
         driver holds no vocab-sized state), and the floored idf is written
-        distributed. Returns the meta: vocab_size, average_idf,
-        epsilon_floor, n_postings and total_tokens (Σ tokens)."""
+        distributed (the idf intermediate is held on ``run``). Returns the
+        meta: vocab_size, average_idf, epsilon_floor, n_postings and
+        total_tokens (Σ tokens)."""
         cap = _DRIVER_STATS_MAX_VOCAB
         terms = terms.select("term", "df", "tokens", *_STATS_KEY)
         tbl = None
@@ -1490,78 +1513,77 @@ class BM25IndexBuilder:
             if tbl.num_rows > cap:
                 tbl = None  # past the cap: sum distributed
         raw = None
-        try:
-            if tbl is not None:
-                tbl = tbl.sort_by([(k, "ascending") for k in _STATS_KEY])
-                dfs = tbl.column("df").to_pylist()
-                raws = np.array([_idf_raw(n_docs, d) for d in dfs], np.float64)
-                g = {
-                    "idf_sum": _ordered_sum(0.0, raws),
-                    "vocab_size": tbl.num_rows,
-                    "n_postings": sum(dfs),
-                    "total_tokens": sum(tbl.column("tokens").to_pylist()),
-                }
-            else:
-                raw = terms.withColumn(
+        if tbl is not None:
+            tbl = tbl.sort_by([(k, "ascending") for k in _STATS_KEY])
+            dfs = tbl.column("df").to_pylist()
+            raws = np.array([_idf_raw(n_docs, d) for d in dfs], np.float64)
+            g = {
+                "idf_sum": _ordered_sum(0.0, raws),
+                "vocab_size": tbl.num_rows,
+                "n_postings": sum(dfs),
+                "total_tokens": sum(tbl.column("tokens").to_pylist()),
+            }
+        else:
+            raw = run.persist(
+                terms.withColumn(
                     "idf_raw",
                     _idf_raw_udf(F.col("df"), F.lit(n_docs).cast("long")),
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                g = (
-                    raw.repartition(1)
-                    .sortWithinPartitions(*_STATS_KEY)
-                    .mapInArrow(
-                        _ordered_sum_kernel,
-                        "idf_sum double, vocab_size long, n_postings long, "
-                        "total_tokens long",
-                    )
-                    .collect()[0]
-                    .asDict()
                 )
-            vocab_size = g["vocab_size"]
-            average_idf = g["idf_sum"] / vocab_size if vocab_size else 0.0
-            eps = self.cfg.epsilon * average_idf
-            if raw is None:
-                # an Arrow-backed frame: a VALUES literal of this many rows
-                # would cost seconds of SQL parsing
-                stats = self.spark.createDataFrame(
-                    pa.table(
-                        {
-                            "term": tbl.column("term"),
-                            "df": tbl.column("df"),
-                            "idf": np.where(raws < 0, eps, raws),
-                            **{k: tbl.column(k) for k in _STATS_KEY},
-                        }
-                    )
-                )
-            else:
-                stats = raw.select(
-                    "term",
-                    "df",
-                    F.when(F.col("idf_raw") < 0, F.lit(eps))
-                    .otherwise(F.col("idf_raw"))
-                    .alias("idf"),
-                    *_STATS_KEY,
-                )
-            # range-partitioned + sorted by term: the query path's
-            # per-batch stats lookup (term IN [...]) then prunes to a
-            # handful of row groups via parquet min/max stats instead of
-            # scanning the whole vocab table. A vocab that fits one sorted
-            # file needs no range-sampling job — min/max row-group pruning
-            # works the same within one file.
-            parts = max(1, -(-vocab_size // _STATS_ROWS_PER_PARTITION))
-            sink = (
-                stats.repartition(1)
-                if parts == 1
-                else stats.repartitionByRange(parts, F.col("term"))
             )
-            (
-                sink.sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(stats_path)
+            g = (
+                raw.repartition(1)
+                .sortWithinPartitions(*_STATS_KEY)
+                .mapInArrow(
+                    _ordered_sum_kernel,
+                    "idf_sum double, vocab_size long, n_postings long, "
+                    "total_tokens long",
+                )
+                .collect()[0]
+                .asDict()
             )
-        finally:
-            if raw is not None:
-                raw.unpersist()
+        vocab_size = g["vocab_size"]
+        average_idf = g["idf_sum"] / vocab_size if vocab_size else 0.0
+        eps = self.cfg.epsilon * average_idf
+        if raw is None:
+            # an Arrow-backed frame: a VALUES literal of this many rows
+            # would cost seconds of SQL parsing
+            stats = self.spark.createDataFrame(
+                pa.table(
+                    {
+                        "term": tbl.column("term"),
+                        "df": tbl.column("df"),
+                        "idf": np.where(raws < 0, eps, raws),
+                        **{k: tbl.column(k) for k in _STATS_KEY},
+                    }
+                )
+            )
+        else:
+            stats = raw.select(
+                "term",
+                "df",
+                F.when(F.col("idf_raw") < 0, F.lit(eps))
+                .otherwise(F.col("idf_raw"))
+                .alias("idf"),
+                *_STATS_KEY,
+            )
+        # range-partitioned + sorted by term: the query path's
+        # per-batch stats lookup (term IN [...]) then prunes to a
+        # handful of row groups via parquet min/max stats instead of
+        # scanning the whole vocab table. A vocab that fits one sorted
+        # file needs no range-sampling job — min/max row-group pruning
+        # works the same within one file.
+        parts = max(1, -(-vocab_size // _STATS_ROWS_PER_PARTITION))
+        sink = (
+            stats.repartition(1)
+            if parts == 1
+            else stats.repartitionByRange(parts, F.col("term"))
+        )
+        (
+            sink.sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .parquet(stats_path)
+        )
+        run.release(raw)
         return {
             "vocab_size": vocab_size,
             "average_idf": average_idf,
@@ -1572,6 +1594,7 @@ class BM25IndexBuilder:
 
     def _build_blocks(
         self,
+        run: BuildRun,
         postings: DataFrame,
         heavy: DataFrame,
         blocks_path: str,
@@ -1580,25 +1603,19 @@ class BM25IndexBuilder:
         n_docs: int,
         done_buckets: set,
         fail_after_groups: Optional[int] = None,
-        mark=None,
     ):
         """``postings`` is either per-doc TF entries (term, doc_id, doc_len,
         tf) (fused_tf) or raw exploded token rows without tf (fused — the
         encoder counts duplicates). ``heavy`` is the tiny salt list
-        (term, _heavy) — always broadcast. ``mark`` (optional) records the
-        encode-vs-write stage boundary in the build's stage walls.
+        (term, _heavy) — always broadcast.
 
-        Returns (blocks, join, vocab): the persisted blocks DataFrame so
-        the caller can derive term_stats from the cache instead of
-        re-reading the freshly written parquet (the caller unpersists), a
-        join callable for the async group writes that must run before the
-        cache is released or meta is written, and the exact vocab size.
-        (None, None, 0) when the stage fully resumed."""
+        Returns (blocks, vocab): the blocks cache held on ``run``, so the
+        caller derives term_stats from it instead of re-reading the freshly
+        written parquet, and the exact vocab size. The bucket-group writes
+        run async on ``run``, overlapped with the caller's stats pass; the
+        caller joins them before a manifest or meta.json records the build.
+        (None, 0) when the stage fully resumed."""
         cfg = self.cfg
-        blocks = _encode_salted(
-            postings, heavy, cfg.salt_bounds(n_docs), cfg
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
         all_buckets = list(range(cfg.num_term_buckets))
         todo = [b for b in all_buckets if b not in done_buckets]
         # clean untrusted partials (buckets without manifests)
@@ -1609,8 +1626,10 @@ class BM25IndexBuilder:
         if not todo:
             # fully-resumed blocks stage: every bucket manifest matches this
             # lineage — never trigger the encode job (metrics included)
-            blocks.unpersist()
-            return None, None, 0
+            return None, 0
+        blocks = run.persist(
+            _encode_salted(postings, heavy, cfg.salt_bounds(n_docs), cfg)
+        )
 
         # per-bucket metrics in ONE job (not one per group) — the group loop
         # below then only pays the write
@@ -1628,8 +1647,8 @@ class BM25IndexBuilder:
         # exact global vocab (buckets partition terms by hash): a vocab
         # past the driver stats cap then skips the bounded collect
         vocab = sum(int(m["n_terms"] or 0) for m in metrics.values())
-        if mark is not None:
-            mark("encode")  # tokenize+shuffle+encode+cache materialized here
+        # tokenize+shuffle+encode+cache materialized above
+        run.mark("blocks_write")
 
         # resume granularity scales with the WORK a checkpoint guards: a
         # group that protects less than checkpoint_group_min_bytes of
@@ -1638,7 +1657,7 @@ class BM25IndexBuilder:
         # scale the configured group count is reached quickly. 0 disables
         # the adaptivity (tests that pin exact group counts set it).
         n_groups = max(1, cfg.checkpoint_groups)
-        min_bytes = getattr(cfg, "checkpoint_group_min_bytes", 0) or 0
+        min_bytes = cfg.checkpoint_group_min_bytes
         if min_bytes > 0:
             total_payload = sum(
                 int(m["payload_bytes"] or 0) for m in metrics.values()
@@ -1681,29 +1700,8 @@ class BM25IndexBuilder:
                         },
                     )
 
-        # run the group writes CONCURRENTLY with the caller's stats
-        # computation (guide §2.6) — both only read the blocks cache, and
-        # each bucket manifest is still written strictly after its group's
-        # files land. The caller MUST call the returned join before
-        # unpersisting the cache or writing meta.json; write failures
-        # (and the _fail_after_groups test hook) surface there.
-        errbox = []
-
-        def _run():
-            try:
-                self.spark.sparkContext.setJobDescription(
-                    "blocks group writes (async)"
-                )
-                _write_groups()
-            except BaseException as e:
-                errbox.append(e)
-
-        th = threading.Thread(target=_run, daemon=True, name="blocks-write")
-        th.start()
-
-        def _join():
-            th.join()
-            if errbox:
-                raise errbox[0]
-
-        return blocks, _join, vocab
+        # the group writes run CONCURRENTLY with the caller's stats pass
+        # (guide §2.6) — both only read the blocks cache, and each bucket
+        # manifest is still written strictly after its group's files land
+        run.write_async("blocks-write", _write_groups)
+        return blocks, vocab

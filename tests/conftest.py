@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 
 import pytest
 
@@ -40,3 +41,17 @@ def spark_tail():
         return engine
 
     return force
+
+
+@pytest.fixture
+def run_released(spark):
+    """Check that nothing of a finished (or failed) build, merge or compact
+    call outlives it: no cached frame in Spark's CacheManager and no live
+    async writer thread. Tests clear the cache before the call."""
+
+    def check():
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        alive = {t.name for t in threading.enumerate() if t.is_alive()}
+        assert not alive & {"docs-write", "blocks-write"}
+
+    return check

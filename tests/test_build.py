@@ -1,5 +1,6 @@
-"""Index builder configuration surface: accepted postings modes and
-indexes written with since-retired config keys."""
+"""Index builder configuration surface (accepted postings modes, indexes
+written with since-retired config keys) and what a failed build leaves
+behind."""
 
 import json
 import os
@@ -49,3 +50,44 @@ def test_index_with_retired_config_keys_opens_and_searches(spark, tmp_path):
     old = BM25Index(spark, path)
     assert old.config() == idx.config()
     assert key(BM25QueryEngine(old).search(queries, topn=7)) == want
+
+
+def _fail(*_args, **_kwargs):
+    raise RuntimeError("injected failure")
+
+
+@pytest.mark.parametrize("where", ["tokenize", "blocks_write", "stats"])
+def test_failed_build_joins_writes_and_releases_caches(
+    spark, tmp_path, monkeypatch, run_released, where
+):
+    """A build that fails after its docs stage — in tokenize, in the async
+    bucket-group writes, or in the stats pass they overlap — joins its
+    writers and releases every cache before the error propagates, and
+    writes no meta.json. A parquet input small enough for the async docs
+    write is used, so that writer runs too."""
+    spark.catalog.clearCache()
+    src = str(tmp_path / "src.parquet")
+    pdf = synth_webtext_pandas(n_docs=120, seed=11)
+    spark.createDataFrame(pdf).write.parquet(src)
+    cfg = EngineConfig(
+        stopwords=frozenset({"the"}),
+        block_size=16,
+        num_term_buckets=8,
+        salt_df_threshold=30,
+        num_salts=4,
+        checkpoint_group_min_bytes=0,  # > 1 write group at this scale
+    )
+    kwargs = {}
+    if where == "tokenize":
+        monkeypatch.setattr(BM25IndexBuilder, "_tokenized_exploded", _fail)
+    elif where == "stats":
+        monkeypatch.setattr(BM25IndexBuilder, "_write_term_stats", _fail)
+    else:
+        kwargs["_fail_after_groups"] = 1
+    path = str(tmp_path / "i")
+    with pytest.raises(RuntimeError, match="injected|aborting blocks build"):
+        BM25IndexBuilder(spark, cfg).build(
+            spark.read.parquet(src), path, input_desc="f", **kwargs
+        )
+    run_released()
+    assert not os.path.exists(os.path.join(path, "meta.json"))

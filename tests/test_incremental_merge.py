@@ -9,8 +9,11 @@ over b1 + (b2 minus texts present in b1) — which is what this suite asserts
 (ids and scores exact).
 """
 
+import os
+
 import pandas as pd
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from similarities_spark.config import EngineConfig
 from similarities_spark.index.build import BM25IndexBuilder
@@ -229,3 +232,106 @@ def test_merge_stats_collect_bounded_past_cap(spark, tmp_path, monkeypatch):
     )
     assert stats(merged) == stats(ref)
     assert merged.meta["average_idf"] == ref.meta["average_idf"]
+
+
+def _fail(*_args, **_kwargs):
+    raise RuntimeError("injected failure")
+
+
+def _live_files(index_dir):
+    """{path: bytes} of every file of the live index (staging excluded)."""
+    out = {}
+    for dirpath, dirnames, files in os.walk(index_dir):
+        dirnames[:] = [d for d in dirnames if d != "_staging"]
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, index_dir)] = f.read()
+    return out
+
+
+def test_failed_merge_releases_caches_and_keeps_live_index(
+    spark, tmp_path, monkeypatch, run_released
+):
+    """A merge that fails in its encode or in its stats pass releases every
+    cache it persisted and leaves the live index byte-identical."""
+    from similarities_spark.index import build as _build
+
+    pdf = synth_webtext_pandas(n_docs=120, seed=41)
+    builder = BM25IndexBuilder(spark, CFG)
+    d = str(tmp_path / "live")
+    builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b1")
+    before = _live_files(d)
+    for target, name in [
+        (_build, "_encode_salted"),
+        (BM25IndexBuilder, "_write_term_stats"),
+    ]:
+        spark.catalog.clearCache()
+        with monkeypatch.context() as m:
+            m.setattr(target, name, _fail)
+            with pytest.raises(RuntimeError, match="injected"):
+                builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
+        run_released()
+        assert _live_files(d) == before
+
+
+def test_failed_compact_releases_and_next_compact_sweeps_its_layout(
+    spark, tmp_path, monkeypatch, run_released
+):
+    """A compact that fails after writing its new layout (before the swap
+    marker commits it) leaves the live index serving the same hits; the
+    next compact deletes the orphaned blocks.next-* dir."""
+    pdf = synth_webtext_pandas(n_docs=120, seed=43)
+    builder = BM25IndexBuilder(spark, CFG)
+    d = str(tmp_path / "c")
+    builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b1")
+    merged = builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
+    before = _hits(merged)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if "blocks.next-" in path:
+            raise RuntimeError("injected failure after the compact write")
+
+    spark.catalog.clearCache()
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected"):
+            builder.compact(d)
+    run_released()
+    orphans = lambda: [n for n in os.listdir(d) if n.startswith("blocks.")]
+    assert [n for n in orphans() if n.startswith("blocks.next-")]
+
+    compacted = builder.compact(d)
+    assert orphans() == []
+    assert _hits(compacted) == before
+
+
+def test_stage_walls_of_build_merge_and_compact(spark, tmp_path):
+    """build() records its five stage walls; every merge and compaction
+    record carries its own; the caller's Spark job description is
+    restored after each call."""
+    sc = spark.sparkContext
+    pdf = synth_webtext_pandas(n_docs=120, seed=47)
+    builder = BM25IndexBuilder(spark, CFG)
+    d = str(tmp_path / "w")
+    sc.setJobDescription("caller")
+    try:
+        idx = builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b")
+        assert set(idx.meta["stage_wall_s"]) == {
+            "docs", "salt_detect", "encode", "blocks_write", "stats"
+        }
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        merged = builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
+        assert set(merged.meta["increments"][-1]["stage_wall_s"]) == {
+            "docs", "encode", "stats"
+        }
+        compacted = builder.compact(d)
+        assert set(compacted.meta["increments"][-1]["stage_wall_s"]) == {
+            "salt_detect", "encode"
+        }
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
