@@ -5,6 +5,7 @@ paths and greps for the properties that matter at 100 TB:
 - broadcast join of query terms into the index scan (no index shuffle)
 - a search that fits one scorer task returns a LocalTableScan (scored
   in-process, no Exchange)
+- dense doc-id numbering shuffles only in its range sort
 - PushedFilters / ReadSchema pruning on parquet scans
 - WholeStageCodegen coverage of the relational stages
 
@@ -131,6 +132,19 @@ def main():
         ("BM25 in-process query path (search -> hits)", grab_plan(drv_hits))
     )
 
+    # 8) doc-id numbering of a build/merge: the range sort is the only
+    # shuffle (the in-partition index comes from monotonically_increasing_id
+    # in the cached sort projection, not a window over the partition id)
+    from similarities_spark.index.build import BuildRun, _dense_doc_ids
+    from similarities_spark.sources.synth import synth_webtext_pandas
+
+    pages = spark.createDataFrame(synth_webtext_pandas(n_docs=50, seed=1)).select(
+        "url", "warc_ts", "text"
+    )
+    with BuildRun(spark, "audit") as run:
+        ids = _dense_doc_ids(run, pages, 4)[0]
+        sections.append(("doc-id numbering (range sort + offsets)", grab_plan(ids)))
+
     checks = []
     qp = sections[0][1]
     checks.append(("query path broadcasts query terms (no index shuffle)",
@@ -191,6 +205,13 @@ def main():
         ("in-process search plan is a LocalTableScan with no Exchange",
          drv_path == "driver" and "LocalTableScan" in dp
          and "Exchange" not in dp)
+    )
+
+    ip = sections[8][1].split("== Physical Plan ==")[-1]
+    checks.append(
+        ("doc-id numbering adds no exchange beyond the range sort",
+         ip.count("Exchange rangepartitioning") == 1
+         and "Exchange hashpartitioning" not in ip and "Window" not in ip)
     )
 
     os.makedirs("BENCH", exist_ok=True)

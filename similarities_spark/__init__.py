@@ -8,7 +8,7 @@ surrounding literal-similarity operator family) as an idiomatic Spark engine:
 - DataFrame/Catalyst for all relational work (dedup, stats, joins, top-k).
 - Arrow-vectorized pandas UDFs only for tokenization and posting-block
   codec/WAND scoring (the two genuinely non-relational kernels).
-- Term-partitioned, block-compressed (delta+varint) posting lists with
+- Term-partitioned, block-compressed (bit-packed frame-of-reference) posting lists with
   per-block max-score metadata and doc-range salting for head-term skew.
 - Resumable index builds via per-partition checkpoint manifests with lineage.
 

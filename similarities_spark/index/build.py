@@ -16,10 +16,11 @@ the tokenizer UDF and the Arrow block encoder):
     -> head-term salting: broadcast tiny heavy-term list (per-term token
        counts, a vocab-sized partial-agg shuffle); salt = fixed global
        doc-id range -> per-term segments stay sorted runs, no merge stage
-    -> groupBy(term, salt).applyInPandas block encoder    [THE build shuffle]
-       (np.unique counts doc_id duplicates = tf — the per-doc TF aggregate
-       costs no exchange of its own; delta+varint blocks + per-block
-       max/min/sum tf + dl extrema for block-max bounds)
+    -> repartition(term, salt) + mapInArrow block encoder  [THE build shuffle]
+       (sorted doc_id duplicates are run-length counted = tf — the per-doc
+       TF aggregate costs no exchange of its own; bit-packed
+       frame-of-reference blocks, encoded a whole Arrow batch at a time, +
+       per-block max/min/sum tf + dl extrema for block-max bounds)
     -> term_stats: df = sum(n_postings), tokens = sum(tf_sum) from the
        blocks table, each term's first occurrence (doc_id, position) from
        the salt-list pass; exact math.log idf, average idf summed in
@@ -60,7 +61,8 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -81,8 +83,15 @@ from similarities_spark.sources.readers import extract_text
 from similarities_spark.tokenize import choose_corpus_tokenizer
 
 # bump whenever the block payload layout or block-table schema changes —
-# it participates in the resume lineage key
-FORMAT_VERSION = 4  # v4: + term_stats first-occurrence key (first_doc, first_pos)
+# it participates in the resume lineage key, and an engine or merge refuses
+# an index written in another version
+FORMAT_VERSION = 5  # v5: frame-of-reference bit-packed block payloads
+
+# the parquet codec of every index table (docs, term_stats, blocks), used by
+# every write site: build, its resumable bucket-group writer, the merge's
+# staged increment and compact. zstd stores the doc text in ~2/3 of
+# snappy's bytes.
+INDEX_PARQUET_CODEC = "zstd"
 
 # Block metadata is deliberately STATS-FREE: no idf/df/avgdl-derived values.
 # tf/dl extrema give valid (slightly loose) contribution bounds at query
@@ -163,6 +172,7 @@ class BuildRun:
     def __init__(self, spark: SparkSession, entry: str):
         self.spark, self.entry = spark, entry
         self.stage_wall_s = {}
+        self.write_wall_s = {}  # each async write's own wall, by its name
         self._held, self._writes, self._errors = [], [], []
         self._stage, self._since = None, 0.0
         self._caller_desc = spark.sparkContext.getLocalProperty(
@@ -213,11 +223,14 @@ class BuildRun:
         sc, job = self.spark.sparkContext, f"{self.entry}: {desc}"
 
         def _run():
+            t0 = time.time()
             try:
                 sc.setJobDescription(job)
                 fn()
             except BaseException as e:  # re-raised by join_writes
                 self._errors.append(e)
+            finally:
+                self.write_wall_s[desc] = round(time.time() - t0, 2)
 
         t = threading.Thread(target=_run, daemon=True, name=desc)
         t.start()
@@ -356,6 +369,13 @@ class BM25Index:
         _finish_blocks_swap(index_dir)
         with open(os.path.join(index_dir, "meta.json"), "r", encoding="utf-8") as f:
             self.meta = json.load(f)
+        version = self.meta.get("format_version", 3)
+        if version != FORMAT_VERSION:
+            raise ValueError(
+                f"{index_dir}: index format v{version}, but this engine reads "
+                f"v{FORMAT_VERSION} (block payload layout); rebuild the index "
+                "with build()"
+            )
 
     @property
     def n_docs(self) -> int:
@@ -423,11 +443,13 @@ def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
 
     Scalable dense-rank, pure JVM (no zipWithIndex: that would pickle every
     row through Python): range-shuffle + in-partition sort, count rows per
-    partition (tiny collect), then doc_id = partition offset + local
-    row_number. The within-partition window is a no-op sort (ordering
-    already satisfied) and partitionBy(_pid) matches the distribution, so
-    no extra shuffle. The sorted input is cached so the counts pass doesn't
-    recompute the range exchange.
+    partition (tiny collect), then doc_id = partition offset + the row's
+    index within its partition. That index comes from
+    monotonically_increasing_id() (partition id << 33 + row index) in the
+    same projection as the partition id, so the range exchange is the only
+    one: a row_number() window over the partition id would plan a second
+    hash exchange and sort of every row, text included. The sorted input
+    is cached so the counts pass doesn't recompute the range exchange.
 
     Returns (ids, sort_cache, n_rows, input_fp): the sorted input cache is
     held on ``run``, to be released once the ids have materialized.
@@ -436,6 +458,11 @@ def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
         pages.repartitionByRange(sort_partitions, "warc_ts", "url")
         .sortWithinPartitions("warc_ts", "url")
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn(
+            "_row",
+            F.monotonically_increasing_id()
+            - F.shiftleft(F.col("_pid").cast("long"), 33),
+        )
     )
     # the per-partition counts pass doubles as the input-fingerprint pass:
     # bit_xor is associative/commutative, so the xor of per-partition xors
@@ -461,23 +488,18 @@ def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
         acc += n
     # tiny (pid, offset) table joined broadcast — NOT an F.create_map plan
     # literal, which at 10^5+ input partitions would bloat every plan that
-    # references doc_id. The broadcast join is narrow on the streamed side,
-    # so the window below still runs without an extra shuffle. literal_df:
-    # a JVM LocalRelation, so the broadcast build launches no Python tasks.
+    # references doc_id. The broadcast join is narrow on the streamed side.
+    # literal_df: a JVM LocalRelation, so the broadcast build launches no
+    # Python tasks.
     spark = pages.sparkSession
     offsets_df = literal_df(spark, offsets, "_pid int, _offset long")
-    w = Window.partitionBy("_pid").orderBy("warc_ts", "url")
     out = (
         ordered.join(F.broadcast(offsets_df), "_pid", "left")
         .withColumn(
             "doc_id",
-            (
-                F.row_number().over(w).cast("long")
-                - 1
-                + F.coalesce(F.col("_offset"), F.lit(0).cast("long"))
-            ),
+            F.col("_row") + F.coalesce(F.col("_offset"), F.lit(0).cast("long")),
         )
-        .drop("_pid", "_offset")
+        .drop("_pid", "_offset", "_row")
     )
     return out, ordered, acc, fp
 
@@ -545,50 +567,59 @@ def _doc_tf_entries(tokenized: DataFrame) -> DataFrame:
     )
 
 
-def _encode_segment_rows(term, salt, doc_ids, tfs, dls, block_size, out_rows):
-    """Encode ONE (term, salt) segment — doc_ids sorted ascending, tf/dl
-    aligned — into block rows appended to ``out_rows``. Payloads and block
-    metadata are bit-identical to the original per-group pandas encoder."""
-    starts = np.arange(0, len(doc_ids), block_size, dtype=np.int64)
-    tf_max = np.maximum.reduceat(tfs, starts)
-    tf_min = np.minimum.reduceat(tfs, starts)
-    tf_sum = np.add.reduceat(tfs, starts)
-    dl_max = np.maximum.reduceat(dls, starts)
-    dl_min = np.minimum.reduceat(dls, starts)
-    blocks = codec.encode_blocks_batch(doc_ids, tfs, dls, block_size)
-    for bi, (payload, lo, hi) in enumerate(blocks):
-        out_rows.append(
-            (
-                term,
-                salt,
-                bi,
-                int(doc_ids[lo]),
-                int(doc_ids[hi - 1]),
-                hi - lo,
-                int(tf_max[bi]),
-                int(tf_min[bi]),
-                int(tf_sum[bi]),
-                int(dl_max[bi]),
-                int(dl_min[bi]),
-                payload,
-            )
-        )
+def _encode_segment_batch(terms: pa.Array, salts, ids, dls, tfs, block_size):
+    """Blocks of the complete (term, salt) segments of one batch of rows
+    sorted by (term, salt, doc_id), as one Arrow record batch in
+    _BLOCK_SCHEMA: one vectorized codec pass over every segment, payloads
+    as one binary column built from offsets and a data buffer — no Python
+    object per block. ``tfs`` None (fused mode): duplicates of a doc id in a
+    segment ARE its term frequency and are run-length counted here."""
+    n = len(ids)
+    change = np.empty(n, dtype=bool)
+    change[0] = True
+    change[1:] = salts[1:] != salts[:-1]
+    change[1:] |= pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+    rows = np.arange(n)
+    if tfs is None:
+        first = change.copy()
+        first[1:] |= ids[1:] != ids[:-1]
+        rows = np.flatnonzero(first)
+        tfs = np.diff(np.append(rows, n))
+        ids, dls, change = ids[rows], dls[rows], change[rows]
+    enc = codec.encode_segments(
+        ids, tfs, dls, np.flatnonzero(change), block_size
+    )
+    lo, hi = enc.starts[:-1], enc.starts[1:]
+    return pa.RecordBatch.from_arrays(
+        [
+            terms.take(pa.array(rows[lo])).cast(pa.string()),
+            pa.array(salts[rows[lo]], pa.int32()),
+            pa.array(enc.block_id, pa.int32()),
+            pa.array(ids[lo]),
+            pa.array(ids[hi - 1]),
+            pa.array(hi - lo, pa.int32()),
+            pa.array(np.maximum.reduceat(tfs, lo)),
+            pa.array(np.minimum.reduceat(tfs, lo)),
+            pa.array(np.add.reduceat(tfs, lo)),
+            pa.array(np.maximum.reduceat(dls, lo)),
+            pa.array(np.minimum.reduceat(dls, lo)),
+            pa.Array.from_buffers(
+                pa.binary(), lo.size,
+                [None, pa.py_buffer(enc.offsets.astype(np.int32)), pa.py_buffer(enc.data)],
+            ),
+        ],
+        names=[f.name for f in _BLOCK_SCHEMA.fields],
+    )
 
 
 def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
     """(term, salt)-partitioned block encoding as a STREAMING partition
     kernel: repartition on (term, salt) + JVM sort by (term, salt, doc_id),
-    then one mapInPandas pass that cuts segments at key-change boundaries.
-
-    This replaces groupBy(term, salt).applyInPandas, which paid a pandas
-    DataFrame construction + Python call per GROUP — at a web-scale vocab
-    that is millions of per-group round-trips, and it dominated the encode
-    stage wall (guide §4.2: hand whole batches to vectorized code, don't
-    loop per key). The exchange count is unchanged (the repartition IS the
-    one build shuffle); the doc_id sort moves into the JVM sorter
-    (spillable) instead of a per-group numpy argsort; memory held by the
-    kernel is one Arrow batch plus one partial segment, the same bound the
-    grouped iterator had. Output rows are bit-identical (parity-tested).
+    then one mapInArrow pass that cuts segments at key-change boundaries
+    and encodes all complete segments of each Arrow batch at once
+    (_encode_segment_batch). The repartition IS the one build shuffle; the
+    doc_id sort runs in the JVM sorter (spillable); memory held by the
+    kernel is one Arrow batch plus one partial segment.
 
     Input rows: (term, salt, doc_id, doc_len[, tf]). Without ``tf`` (fused
     mode) duplicates of a doc_id ARE the term frequency and are
@@ -597,89 +628,42 @@ def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
     has_tf = "tf" in salted.columns
     cols = ["term", "salt", "doc_id", "doc_len"] + (["tf"] if has_tf else [])
     block_size = cfg.block_size
-    col_names = [f.name for f in _BLOCK_SCHEMA.fields]
 
     def kernel(batches):
-        pend = None  # trailing (possibly incomplete) segment's raw arrays
+        pend = None  # the trailing (possibly incomplete) segment's rows
+        for rb in batches:
+            if rb.num_rows:
+                if pend is not None:
+                    rb = pa.Table.from_batches([pend, rb]).combine_chunks().to_batches()[0]
+                terms = rb.column(0)
+                salts = rb.column(1).to_numpy()
+                # the last segment may continue into the next batch: hold
+                # it back (one scan from the end over its key)
+                last = rb.num_rows - 1
+                same = pc.and_(
+                    pc.equal(terms, terms[last]), pc.equal(rb.column(1), salts[last])
+                ).to_numpy(zero_copy_only=False)
+                cut = int(np.flatnonzero(~same)[-1]) + 1 if not same.all() else 0
+                pend = rb.slice(cut)
+                if cut:
+                    yield _encode_rows(rb.slice(0, cut))
+        if pend is not None and pend.num_rows:
+            yield _encode_rows(pend)
 
-        def flush(terms, salts, ids, dls, tfs, upto):
-            """Encode all complete segments in [0, upto)."""
-            rows = []
-            # segment starts: positions where (term, salt) changes
-            if upto == 0:
-                return rows
-            change = np.empty(upto, dtype=bool)
-            change[0] = True
-            np.not_equal(terms[1:upto], terms[: upto - 1], out=change[1:])
-            np.logical_or(
-                change[1:], salts[1:upto] != salts[: upto - 1], out=change[1:]
-            )
-            starts = np.flatnonzero(change)
-            bounds = np.append(starts, upto)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                seg_ids = ids[s:e]
-                seg_dls = dls[s:e]
-                if has_tf:
-                    seg_tfs = tfs[s:e]
-                else:
-                    # run-length count duplicates of sorted doc ids
-                    first = np.empty(e - s, dtype=bool)
-                    first[0] = True
-                    np.not_equal(seg_ids[1:], seg_ids[:-1], out=first[1:])
-                    fidx = np.flatnonzero(first)
-                    seg_tfs = np.diff(np.append(fidx, e - s)).astype(np.int64)
-                    seg_ids = seg_ids[fidx]
-                    seg_dls = seg_dls[fidx]
-                _encode_segment_rows(
-                    terms[s], int(salts[s]), seg_ids, seg_tfs, seg_dls,
-                    block_size, rows,
-                )
-            return rows
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            terms = pdf["term"].to_numpy()
-            salts = pdf["salt"].to_numpy(dtype=np.int64)
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-            tfs = pdf["tf"].to_numpy(dtype=np.int64) if has_tf else None
-            if pend is not None:
-                terms = np.concatenate([pend[0], terms])
-                salts = np.concatenate([pend[1], salts])
-                ids = np.concatenate([pend[2], ids])
-                dls = np.concatenate([pend[3], dls])
-                if has_tf:
-                    tfs = np.concatenate([pend[4], tfs])
-            # the last segment may continue into the next batch: hold it back
-            n = len(terms)
-            last_start = n - 1
-            while last_start > 0 and (
-                terms[last_start - 1] == terms[n - 1]
-                and salts[last_start - 1] == salts[n - 1]
-            ):
-                last_start -= 1
-            rows = flush(terms, salts, ids, dls, tfs, last_start)
-            pend = (
-                terms[last_start:],
-                salts[last_start:],
-                ids[last_start:],
-                dls[last_start:],
-                tfs[last_start:] if has_tf else None,
-            )
-            if rows:
-                yield pd.DataFrame(rows, columns=col_names)
-        if pend is not None and len(pend[0]):
-            terms, salts, ids, dls, tfs = pend
-            rows = flush(terms, salts, ids, dls, tfs, len(terms))
-            if rows:
-                yield pd.DataFrame(rows, columns=col_names)
+    def _encode_rows(rb):
+        ids, dls, tfs = (
+            rb.column(i).to_numpy().astype(np.int64) if i < rb.num_columns else None
+            for i in (2, 3, 4)
+        )
+        return _encode_segment_batch(
+            rb.column(0), rb.column(1).to_numpy(), ids, dls, tfs, block_size
+        )
 
     return (
         salted.select(*cols)
         .repartition("term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
-        .mapInPandas(kernel, _BLOCK_SCHEMA)
+        .mapInArrow(kernel, _BLOCK_SCHEMA)
     )
 
 
@@ -1031,6 +1015,9 @@ class BM25IndexBuilder:
                 "n_dups_dropped": docs_meta["n_input_rows"] - n_docs,
                 "build_wall_s": time.time() - t0,
                 "stage_wall_s": run.stage_wall_s,
+                # the async writes overlap the stages above, so their time
+                # shows in the stage that joins them; this is their own
+                "write_wall_s": run.write_wall_s,
                 # the PHYSICAL plan this build actually ran (postings_mode
                 # may be 'auto'; this names its size-resolution so bench
                 # artifacts attribute walls to the right plan)
@@ -1100,14 +1087,10 @@ class BM25IndexBuilder:
         t0 = time.time()
         with BuildRun(self.spark, "merge") as run:
             run.mark("docs")
-            idx = BM25Index(self.spark, index_dir)  # rolls forward any pending inc
-            if idx.meta.get("format_version", 3) < FORMAT_VERSION:
-                raise ValueError(
-                    f"{index_dir}: term_stats carry no first-occurrence key "
-                    "(index format older than v4), so a merge cannot sum idf "
-                    "in the reference's order; rebuild the index with build() "
-                    "before merging into it"
-                )
+            # rolls forward any pending inc; refuses an index of another
+            # format version (older term_stats carry no first-occurrence key
+            # and older payloads another layout)
+            idx = BM25Index(self.spark, index_dir)
             old_n = idx.n_docs
             old_docs = idx.docs()
 
@@ -1142,7 +1125,7 @@ class BM25IndexBuilder:
                 (F.col("doc_id") + F.lit(old_n)).alias("doc_id"), "url", "text"
             ).localCheckpoint(eager=True)
             run.release(sort_cache)
-            new_docs.write.mode("overwrite").parquet(os.path.join(inc_dir, "docs"))
+            new_docs.write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite").parquet(os.path.join(inc_dir, "docs"))
 
             # ---- encode the batch's NEW segments into staging first
             # (fused: one shuffle, the encoder aggregates tf). Salts beyond
@@ -1167,7 +1150,7 @@ class BM25IndexBuilder:
             heavy = firsts.filter(
                 F.col("hits") >= cfg.salt_df_threshold
             ).select("term", F.lit(True).alias("_heavy"))
-            _encode_salted(rows, heavy, per_salt, cfg).write.mode(
+            _encode_salted(rows, heavy, per_salt, cfg).write.option("compression", INDEX_PARQUET_CODEC).mode(
                 "overwrite"
             ).partitionBy("bucket").parquet(os.path.join(inc_dir, "blocks"))
             run.release(tokenized)
@@ -1287,25 +1270,21 @@ class BM25IndexBuilder:
 
             # blocks -> postings rows, Arrow-batched; column-pruned scan
             def decode_kernel(batches):
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    ids, tfs, dls = codec.decode_blocks_batch(
-                        [bytes(p) for p in pdf["payload"]],
-                        pdf["n_postings"].to_numpy(dtype=np.int64),
+                for rb in batches:
+                    counts = rb.column(1).to_numpy().astype(np.int64)
+                    ids, tfs, dls = codec.decode_blocks_batch(rb.column(2), counts)
+                    terms = rb.column(0).take(
+                        pa.array(np.repeat(np.arange(rb.num_rows), counts))
                     )
-                    terms = np.repeat(
-                        pdf["term"].to_numpy(),
-                        pdf["n_postings"].to_numpy(dtype=np.int64),
-                    )
-                    yield pd.DataFrame(
-                        {"term": terms, "doc_id": ids, "doc_len": dls, "tf": tfs}
+                    yield pa.RecordBatch.from_arrays(
+                        [terms, pa.array(ids), pa.array(dls), pa.array(tfs)],
+                        names=["term", "doc_id", "doc_len", "tf"],
                     )
 
             postings = (
                 idx.blocks()
                 .select("term", "n_postings", "payload")
-                .mapInPandas(
+                .mapInArrow(
                     decode_kernel, "term string, doc_id long, doc_len long, tf long"
                 )
             )
@@ -1321,7 +1300,7 @@ class BM25IndexBuilder:
             next_name = f"blocks.next-{swap_id}"
             (
                 _encode_salted(postings, heavy, per_salt, cfg)
-                .write.mode("overwrite")
+                .write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(os.path.join(index_dir, next_name))
             )
@@ -1452,7 +1431,7 @@ class BM25IndexBuilder:
             # reads the docs files (the cache serves tokenize).
             run.write_async(
                 "docs-write",
-                lambda: narrow.write.mode("overwrite").parquet(docs_path),
+                lambda: narrow.write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite").parquet(docs_path),
             )
             docs = run.persist(narrow.repartition(par))
             n_docs = n_rows
@@ -1461,7 +1440,7 @@ class BM25IndexBuilder:
             docs = run.persist(narrow.observe(obs, F.count(F.lit(1)).alias("n")))
             # the write populates the cache AND the row-count observation —
             # no separate count job over the corpus
-            docs.write.mode("overwrite").parquet(docs_path)
+            docs.write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite").parquet(docs_path)
             n_docs = int(obs.get["n"])
             run.release(sort_cache)
             sort_cache = None
@@ -1580,7 +1559,7 @@ class BM25IndexBuilder:
         )
         (
             sink.sortWithinPartitions("term")
-            .write.mode("overwrite")
+            .write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite")
             .parquet(stats_path)
         )
         run.release(raw)
@@ -1679,7 +1658,7 @@ class BM25IndexBuilder:
                 (
                     part.repartition(max(1, len(grp)), "bucket")
                     .sortWithinPartitions("term", "salt", "block_id")
-                    .write.mode("append")
+                    .write.option("compression", INDEX_PARQUET_CODEC).mode("append")
                     .partitionBy("bucket")
                     .parquet(blocks_path)
                 )

@@ -1,189 +1,289 @@
-"""Posting-block codec: docID-delta + varint compression, numpy-vectorized.
+"""Posting-block codec: frame-of-reference bit packing, numpy-vectorized.
 
-A posting block packs up to ``block_size`` postings of one (term, salt)
-segment, sorted by doc_id, into a single binary payload:
+A posting block packs the ``n`` postings (up to ``block_size``) of one
+(term, salt) segment, sorted by strictly increasing doc_id, into one
+self-describing payload:
 
-    header : varint(len(docid_stream)) varint(len(tf_stream))
-    streams: varint(delta doc_ids, first absolute) | varint(tf) | varint(dl)
+    header : varint(first doc id) varint(tf_min) varint(dl_min)
+             varint(wd | wl << 6 | wt << 12)               only when n > 1
+    body   : (n-1) doc gaps - 1, at wd bits each
+             n x (tf - tf_min), at wt bits each
+             n x (dl - dl_min), at wl bits each
 
-tf and dl are stored (not precomputed float contributions) so the payload
-stays ~3-6 bytes/posting at 10^12-doc scale; the exact float64 BM25
-contribution is recomputed at decode time from (tf, dl, idf, avgdl) with the
-reference's expression shape (see ``contribs``), which keeps scores
-bit-identical to the oracle.
+Header varints are LEB128. The body is bit-packed LSB first (value bit ``i``
+at body bit ``p + i``; bit ``p`` is bit ``p % 8`` of byte ``p // 8``) and
+zero-padded to a whole byte; each width is the bit length of the block's
+largest value in that stream, so a stream of equal values (every tf 1,
+consecutive doc ids) costs no body bits. A singleton block is its header
+alone. The payload does not carry ``n``: decoders take it from the block
+metadata (``n_postings``).
 
-Everything here is branch-light numpy over whole blocks — no per-posting
-Python in the hot path. The per-value loops below iterate over the MAX VARINT
-BYTE LENGTH (<=10), not over postings.
+tf and dl are stored (not precomputed float contributions), so the exact
+float64 BM25 contribution is recomputed at decode time from (tf, dl, idf,
+avgdl) with the reference's expression shape (see ``contribs``), which keeps
+scores bit-identical to the oracle. Measured on the benchmark's seed-1
+indexes (``perfbench``): 1.94 B/posting on ``serve`` (5k Zipf docs), 2.54
+on ``ingest`` (3k docs, 30k-term vocabulary, stopwords removed).
+
+Encode and decode work on whole batches of blocks with array operations:
+no Python runs per block or per posting. ``encode_segments`` cuts many
+segments into blocks and returns every payload as one data buffer plus
+offsets (an Arrow ``BinaryArray`` layout); ``decode_blocks_batch`` parses
+every header of a batch at once and unpacks the bodies with one unaligned
+64-bit gather per stream value.
 """
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import NamedTuple, Tuple
 
 import numpy as np
+import pyarrow as pa
 
-_SEVEN = np.uint64(7)
-_MASK = np.uint64(0x7F)
-
-
-def varint_encode_with_lengths(values: np.ndarray):
-    """LEB128-encode a uint64 array -> (bytes, per-value byte length array).
-    Vectorized over values; loops only over max varint width (<=10)."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    nb = np.ones(v.shape, dtype=np.int64)
-    rest = v >> _SEVEN
-    while rest.any():
-        nb += rest > 0
-        rest >>= _SEVEN
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    pos = np.zeros(v.shape, dtype=np.int64)
-    np.cumsum(nb[:-1], out=pos[1:])
-    work = v.copy()
-    for i in range(int(nb.max())):
-        mask = nb > i
-        byte = (work & _MASK).astype(np.uint8)
-        cont = np.where(nb > i + 1, np.uint8(0x80), np.uint8(0))
-        out[pos[mask] + i] = byte[mask] | cont[mask]
-        work >>= _SEVEN
-    return out.tobytes(), nb
+# bit length of x = number of these <= x (exact for all non-negative int64)
+_POW2 = np.left_shift(1, np.arange(63, dtype=np.int64))
+# LEB128 length of x = 1 + number of these <= x
+_POW7 = np.left_shift(1, 7 * np.arange(1, 9, dtype=np.int64))
+_K = np.arange(10, dtype=np.int64)
+_SHIFT7 = 7 * _K
+_WEIGHT7 = np.left_shift(1, _SHIFT7[:9])
+# widths word: wd | wl << 6 | wt << 12; rows of the stream arrays are
+# (doc gaps, tf, dl), so these shift it to (wd, wt, wl)
+_W_SHIFT = np.array([[0], [12], [6]], dtype=np.int64)
+# the gap stream holds n - 1 values, tf and dl n each
+_GAP_ROW = np.array([[1], [0], [0]], dtype=np.int64)
+_FIELD_NO = np.arange(1, 5, dtype=np.int64)
+_MASKS = np.left_shift(1, np.arange(64, dtype=np.int64)) - 1
+_MASKS[63] = np.iinfo(np.int64).max
+# zero bytes after the last payload: the decoder reads 8 (+1) bytes at any
+# value's byte offset, and the 4th header field of a trailing singleton
+# block (read, then ignored) and its byte window must lie inside the buffer
+_PAD = 24
+_PAD_BYTES = bytes(_PAD)
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array (vectorized over values)."""
-    return varint_encode_with_lengths(values)[0]
+class EncodedBlocks(NamedTuple):
+    """Blocks of a batch of segments: block ``i`` holds postings
+    ``starts[i]:starts[i + 1]`` of the input and is block ``block_id[i]`` of
+    its segment; its payload is ``data[offsets[i]:offsets[i + 1]]``."""
+
+    starts: np.ndarray  # int64, n_blocks + 1
+    block_id: np.ndarray  # int64
+    offsets: np.ndarray  # int64, n_blocks + 1
+    data: np.ndarray  # uint8
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode a full LEB128 stream back to uint64 (vectorized)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(ends.shape, dtype=np.uint64)
-    for i in range(int(lengths.max())):
-        mask = lengths > i
-        vals[mask] |= (b[starts[mask] + i] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(
-            7 * i
+def _encode(ids: np.ndarray, tfs, dls, lo: np.ndarray):
+    """(offsets, data) of the blocks starting at postings ``lo`` (each runs
+    to the next start, the last to the end)."""
+    n_total, n_blocks = ids.size, lo.size
+    n = np.empty(n_blocks, dtype=np.int64)
+    np.subtract(lo[1:], lo[:-1], out=n[:-1])
+    n[-1] = n_total - lo[-1]
+
+    # the three streams: doc gaps - 1 (0 at each block start, whose id is a
+    # header base), tf, dl; each stored minus its block's base
+    x = np.empty((3, n_total), dtype=np.int64)
+    np.subtract(ids[1:], ids[:-1], out=x[0, 1:])
+    x[0] -= 1
+    x[0, lo] = 0
+    x[1] = tfs
+    x[2] = dls
+    base = np.minimum.reduceat(x, lo, axis=1)
+    if base.min() < 0 or ids[0] < 0:
+        raise ValueError(
+            "posting blocks need non-negative values and strictly increasing "
+            "doc ids within a segment"
         )
-    return vals
+    base[0] = 0
+    w = np.searchsorted(_POW2, np.maximum.reduceat(x, lo, axis=1) - base, side="right")
+
+    # header: four varint fields per block, the 4th absent if n == 1
+    fields = np.empty((n_blocks, 4), dtype=np.int64)
+    fields[:, 0] = ids[lo]
+    fields[:, 1:3] = base[1:].T
+    fields[:, 3] = w[0] | w[2] << 6 | w[1] << 12
+    flen = np.searchsorted(_POW7, fields, side="right") + 1
+    flen[:, 3] *= n > 1
+    fend = np.cumsum(flen, axis=1)
+    sizes = w * (n - _GAP_ROW)  # body bits of each stream
+    ends = np.cumsum(sizes, axis=0)
+    offsets = np.zeros(n_blocks + 1, dtype=np.int64)
+    np.cumsum(fend[:, 3] + (ends[2] + 7 >> 3), out=offsets[1:])
+
+    # body: each value's bit position (bi: its block); the gap stream's
+    # block-start placeholder is 0 with width 0
+    body0 = 8 * (offsets[:-1] + fend[:, 3])
+    origin = body0 + ends - sizes
+    origin[0] -= w[0]
+    bi = np.repeat(np.arange(n_blocks), n)
+    width = np.take(w, bi, axis=1)
+    width[0, lo] = 0
+    bitpos = np.take(origin, bi, axis=1) + (np.arange(n_total) - lo[bi]) * width
+    bitpos[0, lo] = body0
+    x -= np.take(base, bi, axis=1)
+    # a value shifted to its bit offset spans at most 9 bytes: the low 8
+    # little-endian bytes of x << s, then x >> (64 - s). Fields never
+    # overlap, so summing the bytes that land on one output byte ORs them
+    shift = bitpos & 7
+    shifted = np.empty((3, n_total, 2), dtype="<i8")
+    shifted[..., 0] = x << shift
+    shifted[..., 1] = x >> 64 - shift
+    dest = (bitpos >> 3)[..., None] + _K[:9]
+    nbytes = int(offsets[-1])
+    data = np.bincount(
+        dest.ravel(), weights=shifted.view(np.uint8)[..., :9].ravel(),
+        minlength=nbytes + 9,
+    )[:nbytes].astype(np.uint8)
+
+    # header bytes: 7 value bits each, the high bit set on all but the last
+    # byte of a field
+    k = _K[: int(flen.max())]
+    win = fields[:, :, None] >> _SHIFT7[: k.size] & 0x7F | (k < flen[:, :, None] - 1) << 7
+    keep = k < flen[:, :, None]
+    data[((offsets[:-1, None] + fend - flen)[:, :, None] + k)[keep]] = win[keep]
+    return offsets, data
 
 
-def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
-    """doc_ids must be sorted ascending; streams are length-prefixed."""
-    deltas = np.empty_like(doc_ids, dtype=np.uint64)
-    d = np.asarray(doc_ids, dtype=np.uint64)
-    deltas[0] = d[0]
-    np.subtract(d[1:], d[:-1], out=deltas[1:])
-    s_doc = varint_encode(deltas)
-    s_tf = varint_encode(np.asarray(tfs, dtype=np.uint64))
-    s_dl = varint_encode(np.asarray(dls, dtype=np.uint64))
-    header = varint_encode(np.array([len(s_doc), len(s_tf)], dtype=np.uint64))
-    return header + s_doc + s_tf + s_dl
+def encode_segments(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    seg_starts: np.ndarray,
+    block_size: int,
+) -> EncodedBlocks:
+    """Encode every segment of a batch in one vectorized pass.
 
-
-def decode_block(payload: bytes) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """-> (doc_ids int64 sorted, tf int64, dl int64)."""
-    b = memoryview(payload)
-    # header = exactly two varints; find their end by scanning stop bits
-    arr = np.frombuffer(b, dtype=np.uint8)
-    stops = np.flatnonzero((arr & 0x80) == 0)
-    header_end = int(stops[1]) + 1
-    len_doc, len_tf = (int(x) for x in varint_decode(bytes(b[:header_end])))
-    o1 = header_end
-    o2 = o1 + len_doc
-    o3 = o2 + len_tf
-    deltas = varint_decode(bytes(b[o1:o2]))
-    doc_ids = np.cumsum(deltas.astype(np.int64))
-    tfs = varint_decode(bytes(b[o2:o3])).astype(np.int64)
-    dls = varint_decode(bytes(b[o3:])).astype(np.int64)
-    return doc_ids, tfs, dls
+    The postings of segment ``k`` are ``seg_starts[k]:seg_starts[k + 1]``
+    (the last one runs to the end); within a segment doc ids are strictly
+    increasing. Each segment is cut into blocks of ``block_size`` postings
+    from its start, and every block gets the payload layout of the module
+    docstring. Doc ids, tf and dl must be non-negative."""
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    seg = np.asarray(seg_starts, dtype=np.int64)
+    seg_len = np.empty_like(seg)
+    np.subtract(seg[1:], seg[:-1], out=seg_len[:-1])
+    seg_len[-1:] = ids.size - seg[-1:]
+    nblk = -(-seg_len // block_size)
+    block_id = np.arange(int(nblk.sum()), dtype=np.int64) - np.repeat(
+        np.cumsum(nblk) - nblk, nblk
+    )
+    lo = np.repeat(seg, nblk) + block_id * block_size
+    starts = np.append(lo, ids.size)
+    if lo.size == 0:
+        return EncodedBlocks(starts, block_id, np.zeros(1, np.int64), np.zeros(0, np.uint8))
+    return EncodedBlocks(starts, block_id, *_encode(ids, tfs, dls, lo))
 
 
 def encode_blocks_batch(
     doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, block_size: int
 ):
-    """Encode a whole (term, salt) SEGMENT into block payloads with three
-    vectorized varint passes (not four per block): per-block delta chains
-    (first value absolute), then byte-sliced per block.
+    """Encode ONE (term, salt) segment into blocks of ``block_size``
+    postings. A doc id that does not exceed its predecessor (several
+    segments passed as one) starts a new run, cut into blocks like a
+    segment of its own.
 
-    -> list of (payload bytes, start_index, end_index) per block.
-    """
-    n = doc_ids.size
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    d = np.asarray(doc_ids, dtype=np.uint64)
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = d[0]
-    np.subtract(d[1:], d[:-1], out=deltas[1:])
-    deltas[starts] = d[starts]  # delta chain restarts per block
-    s_doc, nb_doc = varint_encode_with_lengths(deltas)
-    s_tf, nb_tf = varint_encode_with_lengths(np.asarray(tfs, dtype=np.uint64))
-    s_dl, nb_dl = varint_encode_with_lengths(np.asarray(dls, dtype=np.uint64))
-    cum_doc = np.concatenate([[0], np.cumsum(nb_doc)])
-    cum_tf = np.concatenate([[0], np.cumsum(nb_tf)])
-    cum_dl = np.concatenate([[0], np.cumsum(nb_dl)])
-    out = []
-    for lo in starts:
-        hi = min(lo + block_size, n)
-        bd = s_doc[cum_doc[lo] : cum_doc[hi]]
-        bt = s_tf[cum_tf[lo] : cum_tf[hi]]
-        bl = s_dl[cum_dl[lo] : cum_dl[hi]]
-        header = varint_encode(np.array([len(bd), len(bt)], dtype=np.uint64))
-        out.append((header + bd + bt + bl, int(lo), int(hi)))
-    return out
+    -> list of (payload bytes, start_index, end_index) per block."""
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    runs = np.flatnonzero(ids[1:] <= ids[:-1]) + 1
+    enc = encode_segments(ids, tfs, dls, np.append(0, runs), block_size)
+    buf, o, s = enc.data.tobytes(), enc.offsets.tolist(), enc.starts.tolist()
+    return [(buf[o[i] : o[i + 1]], s[i], s[i + 1]) for i in range(len(o) - 1)]
+
+
+def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
+    """One block of all the given postings (doc ids strictly increasing)."""
+    return encode_blocks_batch(doc_ids, tfs, dls, max(1, len(doc_ids)))[0][0]
+
+
+def _buffers(payloads):
+    """(zero-padded uint8 data, int64 start offset of each payload) of a
+    list of payload bytes or an Arrow binary array."""
+    if not isinstance(payloads, pa.Array):
+        lens = np.fromiter(map(len, payloads), np.int64, len(payloads))
+        data = np.frombuffer(b"".join([*payloads, _PAD_BYTES]), np.uint8)
+        return data, np.cumsum(lens) - lens
+    large = pa.types.is_large_binary(payloads.type)
+    _, offs, body = payloads.buffers()
+    offs = np.frombuffer(
+        offs, dtype=np.int64 if large else np.int32,
+        count=len(payloads) + 1, offset=payloads.offset * (8 if large else 4),
+    ).astype(np.int64)
+    data = np.zeros(int(offs[-1] - offs[0]) + _PAD, np.uint8)
+    if body is not None:
+        data[: data.size - _PAD] = np.frombuffer(body, np.uint8)[offs[0] : offs[-1]]
+    return data, offs[:-1] - offs[0]
 
 
 def decode_blocks_batch(payloads, n_postings) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode MANY blocks at once: three varint_decode calls total instead
-    of four per block. The per-call fixed cost (frombuffer/flatnonzero) is
-    the query-path hot spot when head terms span thousands of blocks.
+    """Decode MANY blocks at once.
 
-    Per-block delta chains restart at an absolute doc id, so the global
-    cumsum is corrected per block: ids[i] = C[i] - C[block_start - 1].
+    ``payloads``: a list of payload bytes or an Arrow binary array;
+    ``n_postings``: the posting count of each block (block metadata).
+    -> (doc_ids, tfs, dls) as int64, concatenated in payload order.
 
-    ``n_postings``: posting count per payload (from block metadata).
-    -> (doc_ids, tfs, dls) concatenated in payload order.
-    """
-    doc_parts, tf_parts, dl_parts = [], [], []
-    for payload in payloads:
-        b = payload
-        # header: two varints (stream lengths); stop bytes have high bit 0
-        i = 0
-        len_doc = shift = 0
-        while True:
-            byte = b[i]
-            len_doc |= (byte & 0x7F) << shift
-            i += 1
-            if not byte & 0x80:
-                break
-            shift += 7
-        len_tf = shift = 0
-        while True:
-            byte = b[i]
-            len_tf |= (byte & 0x7F) << shift
-            i += 1
-            if not byte & 0x80:
-                break
-            shift += 7
-        doc_parts.append(b[i : i + len_doc])
-        tf_parts.append(b[i + len_doc : i + len_doc + len_tf])
-        dl_parts.append(b[i + len_doc + len_tf :])
-    deltas = varint_decode(b"".join(doc_parts)).astype(np.int64)
-    tfs = varint_decode(b"".join(tf_parts)).astype(np.int64)
-    dls = varint_decode(b"".join(dl_parts)).astype(np.int64)
-    counts = np.asarray(n_postings, dtype=np.int64)
-    C = np.cumsum(deltas)
-    starts = np.zeros(counts.shape, dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    base = np.where(starts > 0, C[starts - 1], 0)
-    doc_ids = C - np.repeat(base, counts)
-    return doc_ids, tfs, dls
+    Header fields end at bytes whose high bit is clear: with a running count
+    of those bytes, one ``searchsorted`` finds the ends of all four fields
+    of every block (a singleton block's 4th is read past its end, then
+    ignored). Body values are read with one gather of unaligned 64-bit
+    little-endian words, shifted and masked to their widths."""
+    data, starts = _buffers(payloads)
+    n = np.asarray(n_postings, dtype=np.int64)
+    pend = np.cumsum(n)
+    n_total = int(pend[-1]) if pend.size else 0
+    if n_total == 0:
+        e = np.zeros(0, np.int64)
+        return e, e, e
+    pstart = pend - n
+
+    # header fields: ends[b, f] is the byte completing field f of block b
+    stops = np.zeros(data.size + 1, np.int64)
+    np.cumsum(data < 0x80, out=stops[1:])
+    ends = np.searchsorted(stops, stops[starts][:, None] + _FIELD_NO) - 1
+    fstart = np.empty_like(ends)
+    fstart[:, 0] = starts
+    fstart[:, 1:] = ends[:, :3] + 1
+    flen = ends - fstart + 1
+    k = _K[: int(flen.max())]
+    win = data[fstart[:, :, None] + k] & 0x7F
+    fields = (win * (k < flen[:, :, None])) @ _WEIGHT7[: k.size]
+    multi = n > 1
+    w = fields[:, 3] * multi >> _W_SHIFT & 63
+
+    # body: bit origin of each block's three streams, then per posting (bi:
+    # its block) the stream values' bit positions and widths; the gap
+    # stream's block-start placeholder has width 0 (the first block's may
+    # point before the buffer: it reads a wrapped-around word, masked away)
+    sizes = w * (n - _GAP_ROW)
+    origin = 8 * (np.where(multi, ends[:, 3], ends[:, 2]) + 1) + (
+        np.cumsum(sizes, axis=0) - sizes
+    )
+    origin[0] -= w[0]
+    bi = np.repeat(np.arange(n.size), n)
+    width = np.take(w, bi, axis=1)
+    width[0, pstart] = 0
+    bitpos = np.take(origin, bi, axis=1) + (np.arange(n_total) - pstart[bi]) * width
+    words = np.ndarray((data.size - 7,), dtype="<i8", buffer=data, strides=(1,))
+    shift = bitpos & 7
+    vals = np.take(words, bitpos >> 3) >> shift
+    if w.max() > 56:  # a value may reach into a 9th byte
+        wide = width + shift > 64
+        keep = 64 - shift[wide]  # bits the word supplied (the rest is sign)
+        extra = data[(bitpos[wide] >> 3) + 8].astype(np.int64)
+        vals[wide] = vals[wide] & _MASKS[keep] | extra << keep
+    vals &= np.take(_MASKS, width)
+    base = np.empty((3, n.size), dtype=np.int64)
+    base[0] = 1  # doc gap = stored value + 1
+    base[1:] = fields[:, 1:3].T
+    vals += np.take(base, bi, axis=1)
+    c = np.cumsum(vals[0])
+    doc_ids = c + (fields[:, 0] - c[pstart])[bi]
+    return doc_ids, vals[1], vals[2]
+
+
+def decode_block(payload: bytes, n_postings: int) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """-> (doc_ids int64 sorted, tf int64, dl int64) of one block."""
+    return decode_blocks_batch([payload], [n_postings])
 
 
 def contribs(

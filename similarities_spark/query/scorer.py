@@ -188,7 +188,7 @@ def score_query(
                 return np.empty(0, np.int64), np.empty(0, np.float64)
             payloads = [p for p, k_ in zip(payloads, keep) if k_]
             counts = counts[keep]
-        # batched decode: 3 varint passes for ALL blocks of the term
+        # batched decode: one vectorized unpack for ALL blocks of the term
         ids_, tfs_, dls_ = codec.decode_blocks_batch(payloads, counts)
         if doc_range is not None:
             rmask = (ids_ >= doc_range[0]) & (ids_ < doc_range[1])

@@ -4,6 +4,7 @@ behind."""
 
 import json
 import os
+import re
 
 import pytest
 
@@ -91,3 +92,87 @@ def test_failed_build_joins_writes_and_releases_caches(
         )
     run_released()
     assert not os.path.exists(os.path.join(path, "meta.json"))
+
+
+def test_dense_doc_ids_match_row_number_with_one_exchange(spark):
+    """_dense_doc_ids numbers a multi-partition input exactly like a global
+    row_number() over (warc_ts, url), and its plan shuffles once: the
+    range exchange of the sort, no hash exchange for a window."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from similarities_spark.index.build import BuildRun, _dense_doc_ids
+
+    pdf = synth_webtext_pandas(n_docs=300, seed=21)
+    pages = spark.createDataFrame(pdf).select("url", "warc_ts", "text").repartition(5)
+    with BuildRun(spark, "test") as run:
+        ids, _cache, n_rows, _fp = _dense_doc_ids(run, pages, 4)
+        got = sorted((r["url"], r["warc_ts"], r["doc_id"]) for r in ids.collect())
+        plan = ids._jdf.queryExecution().executedPlan().toString()
+    ref = pages.withColumn(
+        "doc_id", F.row_number().over(Window.orderBy("warc_ts", "url")) - 1
+    )
+    want = sorted((r["url"], r["warc_ts"], r["doc_id"]) for r in ref.collect())
+    assert n_rows == len(pdf)
+    assert got == want
+    # AQE prints each plan as initial and final: compare the shuffle
+    # exchanges with their expression and plan ids stripped
+    shuffles = {
+        re.sub(r"#\d+L?|plan_id=\d+", "", line).strip(" +-:")
+        for line in plan.splitlines()
+        if "Exchange " in line and "BroadcastExchange" not in line
+    }
+    assert len(shuffles) == 1
+    assert shuffles.pop().startswith("Exchange rangepartitioning")
+
+
+def test_open_refuses_index_of_another_format_version(spark, tmp_path):
+    """An index whose meta.json names another format version (its payloads
+    in another layout) is refused on open, with a rebuild hint."""
+    path = str(tmp_path / "v")
+    BM25IndexBuilder(spark, EngineConfig(num_term_buckets=4)).build(
+        spark.createDataFrame(synth_webtext_pandas(n_docs=40, seed=6)),
+        path,
+        input_desc="v",
+    )
+    meta_path = os.path.join(path, "meta.json")
+    with open(meta_path, "r", encoding="utf-8") as f:
+        meta = json.load(f)
+    meta["format_version"] = 4
+    with open(meta_path, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        BM25Index(spark, path)
+
+
+def test_index_tables_are_zstd_after_build_merge_compact(spark, tmp_path):
+    """Every parquet file of docs/, term_stats/ and blocks/ is zstd after a
+    build, a merge and a compact (a write site that missed the codec would
+    leave snappy files behind), and build records its async writes' own
+    walls."""
+    import pyarrow.parquet as pq
+
+    pdf = synth_webtext_pandas(n_docs=120, seed=8)
+    builder = BM25IndexBuilder(spark, EngineConfig(num_term_buckets=4))
+    d = str(tmp_path / "z")
+    idx = builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="z")
+    # (the docs write runs async only for inputs read from files)
+    assert "blocks-write" in idx.meta["write_wall_s"]
+    assert set(idx.meta["write_wall_s"]) <= {"docs-write", "blocks-write"}
+    builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
+    builder.compact(d)
+    seen = set()
+    for table in ("docs", "term_stats", "blocks"):
+        for root, _dirs, files in os.walk(os.path.join(d, table)):
+            for name in files:
+                if not name.endswith(".parquet"):
+                    continue
+                md = pq.ParquetFile(os.path.join(root, name)).metadata
+                codecs = {
+                    md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                }
+                assert codecs <= {"ZSTD"}, (table, name, codecs)
+                seen.add(table)
+    assert seen == {"docs", "term_stats", "blocks"}

@@ -85,7 +85,7 @@ def test_whitespace_and_empty_queries(spark, tmp_path):
 
 
 def test_very_long_doc_multiple_blocks(spark, tmp_path):
-    # one doc repeating one term 10_000x -> tf varint >1 byte, many blocks
+    # one doc repeating one term 10_000x -> a 14-bit tf field, many blocks
     big = " ".join(["jumbo"] * 10_000) + " rare"
     texts = [big] + [f"filler w{i} jumbo" for i in range(40)]
     cfg = EngineConfig(stopwords=frozenset(), block_size=8, num_term_buckets=4, num_salts=2)

@@ -30,7 +30,7 @@ def _decoded_postings(index):
 
     out = set()
     for r in index.blocks().collect():
-        ids, tfs, dls = codec.decode_block(bytes(r["payload"]))
+        ids, tfs, dls = codec.decode_block(bytes(r["payload"]), r["n_postings"])
         for d, t, l in zip(ids, tfs, dls):
             out.add((r["term"], int(d), int(t), int(l)))
     return out
