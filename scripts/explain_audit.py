@@ -5,6 +5,7 @@ paths and greps for the properties that matter at 100 TB:
 - broadcast join of query terms into the index scan (no index shuffle)
 - a search that fits one scorer task returns a LocalTableScan (scored
   in-process, no Exchange)
+- the search_join_df plan caches nothing and, unsharded, has no Window
 - dense doc-id numbering shuffles only in its range sort
 - PushedFilters / ReadSchema pruning on parquet scans
 - WholeStageCodegen coverage of the relational stages
@@ -63,7 +64,7 @@ def main():
     idx = E._get_index(spark, sf_dir)
     engine = BM25QueryEngine(idx)
 
-    # 1) distributed query path: blocks join + grouped scoring. A
+    # 1) Spark-tail query path: blocks join + grouped top-k scoring. A
     # three-term query fits one scorer task, so search() would score it
     # in-process; the engine's gate is patched to plan the distributed
     # tail that batches above cfg.fan_out_threshold run
@@ -121,6 +122,7 @@ def main():
         [(0, "dup key scan")], "query_id long, text string"
     )
     jp_hits = engine.search_join_df(qdf, topn=10)
+    jp_fan_out = engine.last_fan_out
     sections.append(
         ("distributed join query path (search_join_df)", grab_plan(jp_hits))
     )
@@ -199,6 +201,13 @@ def main():
     checks.append(
         ("join query path joins the term_stats scan (no driver staging)",
          "term_stats" in jp and "Join" in jp)
+    )
+    # padding and ranking happen inside the scorer groups: nothing is
+    # cached, and without fan-out no window re-ranks the hits
+    checks.append(
+        ("join query path caches nothing and, unsharded, has no Window",
+         jp_fan_out is None and "InMemoryRelation" not in jp
+         and "InMemoryTableScan" not in jp and "Window" not in jp)
     )
     dp = sections[7][1]
     checks.append(

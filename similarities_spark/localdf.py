@@ -1,12 +1,13 @@
 """Driver-side literal row sets as JVM LocalRelations.
 
-Shared by the query engine (token/stats/id tables per batch) and the
+Shared by the query engine (query marker and stats tables per batch) and the
 index builder (partition offsets, heavy-term salt list).
 """
 
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import SparkSession
 
@@ -30,28 +31,47 @@ def literal_df(spark: SparkSession, rows, schema_ddl: str):
     Strings ride as ``unbase64`` literals (foldable — ResolveInlineTables
     evaluates them during analysis), so arbitrary content needs no SQL
     escaping. Ints/floats use exact literals (repr(float) round-trips IEEE
-    754 bit-for-bit through the SQL parser). Falls back to createDataFrame
+    754 bit-for-bit through the SQL parser). ``array<...>`` and
+    ``map<...>`` columns (Python lists and dicts) become ``array(...)`` and
+    ``map(...)`` of those literals. Falls back to createDataFrame
     for very large row sets, where parse time would dominate.
     """
     import base64
 
     fields = []  # (name, type) from the DDL, e.g. "query_id long, x string"
-    for part in schema_ddl.split(","):
-        name, typ = part.strip().split()
-        fields.append((name, typ.lower()))
+    for part in re.split(r",(?![^<]*>)", schema_ddl):  # commas outside <...>
+        name, typ = part.strip().split(None, 1)
+        fields.append((name, typ.replace(" ", "").lower()))
     if len(rows) > _MAX_VALUES_ROWS:
         return spark.createDataFrame(rows, schema_ddl)
     if not rows:
         return spark.createDataFrame([], schema_ddl)
 
-    sql_type = {
+    base_types = {
         "long": "BIGINT", "bigint": "BIGINT", "int": "INT",
         "double": "DOUBLE", "string": "STRING", "boolean": "BOOLEAN",
     }
 
+    def sql_type(typ):
+        if typ.startswith("array<"):
+            return f"ARRAY<{sql_type(typ[6:-1])}>"
+        if typ.startswith("map<"):
+            key, val = typ[4:-1].split(",", 1)
+            return f"MAP<{sql_type(key)},{sql_type(val)}>"
+        return base_types[typ]
+
     def cell(v, typ):
         if v is None:
-            return f"CAST(NULL AS {sql_type[typ]})"
+            return f"CAST(NULL AS {sql_type(typ)})"
+        if typ.startswith("array<"):
+            items = ",".join(cell(x, typ[6:-1]) for x in v)
+            return f"CAST(array({items}) AS {sql_type(typ)})"
+        if typ.startswith("map<"):
+            key, val = typ[4:-1].split(",", 1)
+            items = ",".join(
+                f"{cell(k, key)},{cell(x, val)}" for k, x in v.items()
+            )
+            return f"CAST(map({items}) AS {sql_type(typ)})"
         if typ == "string":
             b = base64.b64encode(v.encode("utf-8")).decode("ascii")
             return f"CAST(unbase64('{b}') AS STRING)"

@@ -28,10 +28,15 @@ scores vs the reference's dense scan, reference rank_bm25.py:100-114):
    query tokens IN ORDER (duplicates per occurrence), accumulating float64
    contribs — reproducing the reference's summation order exactly, so
    returned scores are bit-identical, not merely rank-identical.
-4. When fewer than k docs match (or the k-th score is <= 0), zero-score
-   corpus docs are rankable in the reference; the scorer then emits ALL
-   candidates and flags the query for the engine's padding stage. Pruning
-   cannot have fired in this case (pruning requires theta_safe > S >= 0).
+4. When fewer than k docs match (or the k-th score is <= the score of a
+   doc matching no term), unmatched corpus docs are rankable in the
+   reference; ``score_query`` then returns ALL candidates and flags the
+   query, and ``top_k`` pads it with the lowest unmatched doc ids of its
+   doc range at that pad score. Pruning cannot have fired in this case
+   (pruning requires theta_safe > S >= 0).
+
+``top_k`` is the entry point of every search surface: the driver tail calls
+it per query, the Spark tail per (query, doc range) group.
 """
 
 from __future__ import annotations
@@ -286,3 +291,40 @@ def score_query(
         return cand_ids[order_idx], scores[order_idx], n_matched, True, pad_score
     top = order_idx[:k]
     return cand_ids[top], scores[top], n_matched, False, pad_score
+
+
+def top_k(
+    tokens: List[str],
+    term_blocks: pd.DataFrame,
+    k: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    prune: bool = True,
+    variant: str = "okapi",
+    delta: float = 0.0,
+    n_docs: int = 0,
+    doc_range: "Tuple[int, int]" = None,
+    token_dfs: "Dict[str, int]" = None,
+) -> Tuple[np.ndarray, np.ndarray]:
+    """-> (doc_ids, exact scores) of the top k docs of ``doc_range``
+    (default: the whole corpus), by score desc, doc_id asc.
+
+    Arguments as for ``score_query``. A query it flags is padded here with
+    the lowest doc ids of the range it did not match, at its pad score (the
+    reference ranks every doc; doc ids are dense 0..n_docs-1): the first
+    k + n_matched ids of the range hold at least k unmatched ones."""
+    ids, scores, n_matched, needs_pad, pad_score = score_query(
+        tokens, term_blocks, k, avgdl, k1, b, prune=prune, variant=variant,
+        delta=delta, n_docs=n_docs, doc_range=doc_range, token_dfs=token_dfs,
+    )
+    if not needs_pad:
+        return ids, scores
+    lo, hi = doc_range if doc_range is not None else (0, n_docs)
+    pool = np.arange(lo, min(hi, n_docs, lo + k + n_matched), dtype=np.int64)
+    pool = pool[~np.isin(pool, ids)]
+    ids = np.concatenate([ids, pool])
+    scores = np.concatenate([scores, np.full(pool.size, pad_score)])
+    # lexsort's last key is primary: score desc, then doc_id asc
+    top = np.lexsort((ids, -scores))[:k]
+    return ids[top], scores[top]

@@ -46,8 +46,6 @@ AUDIT = {
            "fan_out_threshold candidate postings"),
     ("query/engine.py", "BM25QueryEngine.search_join_df", "collect"): (
         1, "one aggregate row (max and sum of per-query candidate postings)"),
-    ("query/engine.py", "BM25QueryEngine._pad_and_rank", "collect"): (
-        1, "one aggregate row (padded-query count, max matched)"),
 }
 
 

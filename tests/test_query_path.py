@@ -71,18 +71,52 @@ def both(spark_tail):
     return run_both
 
 
+# Spark-tail surfaces the driver tail's hits are compared against: run(engine,
+# queries DataFrame) and the config changes the surface runs under (a small
+# fan_out_threshold makes the batch shard automatically)
+SMALL_FAN = {"fan_out_threshold": 20, "fan_out_max": 8}
+SURFACES = {
+    "search": (lambda e, qdf: e.search(QUERIES, topn=10), {}),
+    "search_fan": (lambda e, qdf: e.search(QUERIES, topn=10), SMALL_FAN),
+    "search_df_fan4": (
+        lambda e, qdf: e.search_df(qdf, topn=10, fan_out=4), {}),
+    "join": (lambda e, qdf: e.search_join_df(qdf, topn=10), {}),
+    "join_fan": (lambda e, qdf: e.search_join_df(qdf, topn=10), SMALL_FAN),
+}
+
+
 @pytest.mark.parametrize(
-    "variant,score_mode",
-    [("okapi", "wand"), ("bm25l", "wand"), ("bm25plus", "wand"),
-     ("okapi", "exact")],
+    "variant,score_mode,surface",
+    [
+        pytest.param(
+            v, m, s, id=f"{v}-{m}" if s == "search" else f"{v}-{m}-{s}"
+        )
+        for v, m in [("okapi", "wand"), ("bm25l", "wand"),
+                     ("bm25plus", "wand"), ("okapi", "exact")]
+        for s in SURFACES
+    ],
 )
 def test_driver_tail_matches_spark_tail(
-    spark, index, both, variant, score_mode
+    spark, index, spark_tail, variant, score_mode, surface
 ):
     cfg = dataclasses.replace(
         index.config(), variant=variant, score_mode=score_mode
     )
-    d, s = both(index, lambda e: e.search(QUERIES, topn=10), cfg)
+    drv = BM25QueryEngine(index, cfg=cfg)
+    d = _rows(drv.search(QUERIES, topn=10))
+    assert drv.last_search["path"] == "driver"
+
+    run, changes = SURFACES[surface]
+    qdf = spark.createDataFrame(
+        list(enumerate(QUERIES)), "query_id long, text string"
+    )
+    spk = spark_tail(
+        BM25QueryEngine(index, cfg=dataclasses.replace(cfg, **changes))
+    )
+    s = _rows(run(spk, qdf))
+    assert spk.last_search["path"] == "spark"
+    if surface.endswith("fan"):
+        assert spk.last_fan_out and spk.last_fan_out > 1
     assert d == s
     # every query, padded or not, holds exactly k hits
     assert len(d) == 10 * len(QUERIES)
@@ -230,18 +264,38 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_search_job_counts(spark, index, monkeypatch):
+def test_search_job_counts(spark, tmp_path, monkeypatch, spark_tail):
     """Once the stats snapshot is loaded, a search that fits one scorer
     task runs exactly one Spark job (the pruned blocks read); collecting
-    its hits runs none."""
+    its hits runs none. The Spark tail scores and pads in one grouped
+    stage: three jobs for a search (two when no term is in the index),
+    eight for search_join_df, whose fan-out sizing adds its own."""
+    pdf = synth_webtext_pandas(n_docs=150, seed=11, dup_fraction=0.05)
+    index = BM25IndexBuilder(spark, CFG).build(
+        spark.createDataFrame(pdf), str(tmp_path / "jobs"), input_desc="jobs"
+    )
     eng = BM25QueryEngine(index)
     eng.search(["data"], topn=10).collect()  # loads the stats snapshot
 
-    def one(e, q):
-        return lambda: e.search([q], topn=10).collect()
+    def one(e, *queries):
+        return lambda: e.search(list(queries), topn=10).collect()
 
     assert _jobs(spark, "qpath-1q", one(eng, "data web w0005")) == 1
     assert _jobs(spark, "qpath-oov", one(eng, "zzzunknown qqq")) == 0
+
+    spk = spark_tail(BM25QueryEngine(index))
+    spk.search(["data"], topn=10).collect()
+    assert _jobs(spark, "qpath-spark", one(spk, "data web w0005")) == 3
+    assert _jobs(spark, "qpath-spark-oov", one(spk, "zzzunknown qqq")) == 2
+    both = ["data web w0005", "zzzunknown qqq"]  # one query pads
+    assert _jobs(spark, "qpath-spark-pad", one(spk, *both)) == 3
+    qdf = spark.createDataFrame(
+        list(enumerate(both)), "query_id long, text string"
+    )
+    qdf.collect()
+    assert _jobs(
+        spark, "qpath-join", lambda: eng.search_join_df(qdf, topn=10).collect()
+    ) == 8
 
     # past the stats snapshot cap: one stats lookup plus the blocks read
     monkeypatch.setattr(_build, "_DRIVER_STATS_MAX_VOCAB", 10)

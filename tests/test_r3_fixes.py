@@ -1,5 +1,5 @@
 """Round-3 hardening: star connected-components parity, shingle-cap bounds,
-resume lineage covering full config + input content, query-cache release,
+resume lineage covering full config + input content, cache-free search,
 streaming null-text passthrough."""
 
 import random
@@ -224,26 +224,31 @@ def test_config_index_key_stability():
 # ---------- query cache release ----------
 
 
-def test_search_does_not_accumulate_cached_rdds(spark, tmp_path):
+def test_search_does_not_accumulate_cached_rdds(spark, tmp_path, spark_tail):
+    """A search persists nothing: no surface or tail, padding branch
+    included, adds a persistent RDD, so a long-lived engine issuing
+    thousands of batches holds no block-manager entries."""
     df = spark.createDataFrame(synth_webtext_pandas(n_docs=80, seed=3))
     cfg = EngineConfig(num_term_buckets=4)
     idx = _build(spark, df, tmp_path / "i", cfg)
-    engine = BM25QueryEngine(idx)
+    engines = [BM25QueryEngine(idx), spark_tail(BM25QueryEngine(idx))]
     jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
 
-    counts = []
     for i in range(12):
         # second query has no indexed terms -> exercises the PADDING branch
-        # (which caches a second DF, pad_q) on every iteration
-        engine.search(
+        engines[i % 2].search(
             [f"data web w{i % 7:04d}", "zzzunknownterm qqq"], topn=5
         ).collect()
-        counts.append(jsc.getPersistentRDDs().size())
-    # steady state: each search releases the previous search's cache, so the
-    # persistent-RDD count must not grow monotonically across searches
-    assert counts[-1] <= counts[1]
-    engine.close()
-    assert jsc.getPersistentRDDs().size() <= counts[0]
+        assert jsc.getPersistentRDDs().size() == before, i
+    assert [e.last_search["path"] for e in engines] == ["driver", "spark"]
+    qdf = spark.createDataFrame(
+        [(0, "data web w0003"), (1, "zzzunknownterm")],
+        "query_id long, text string",
+    )
+    engines[0].search_df(qdf, topn=5, fan_out=2).collect()
+    engines[0].search_join_df(qdf, topn=5).collect()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 # ---------- lexicon similarity: golden fixture ----------

@@ -21,21 +21,27 @@ from similarities_spark.localdf import literal_df
 
 
 def test_literal_df_roundtrip_exotic_values(spark):
+    # token lists and token -> df maps: the query engine's marker columns
     rows = [
-        (1, "plain", 0.5),
-        (2, "qu'ote \\back\\slash", math.pi),
-        (3, "new\nline\ttab", 1e-300),
-        (4, "中文 τοκεν emoji\U0001f600", -0.0),
-        (5, None, None),
-        (6, "", float("1.7976931348623157e308")),
+        (1, "plain", 0.5, ["data", "web"], {"data": 3, "web": 1}),
+        (2, "qu'ote \\back\\slash", math.pi, [], {}),  # empty token list
+        (3, "new\nline\ttab", 1e-300, ["of", "of", "x", "of"], {"of": 2**40}),
+        (4, "中文 τοκεν emoji\U0001f600", -0.0, ["中文", "τοκεν", "中文"],
+         {"中文": 7, "τοκεν": 0}),
+        (5, None, None, None, None),  # null list, null map
+        (6, "", float("1.7976931348623157e308"), ["", "a'b"], {"": -1}),
     ]
-    df = literal_df(spark, rows, "id long, s string, x double")
+    df = literal_df(
+        spark, rows,
+        "id long, s string, x double, toks array<string>, "
+        "dfs map<string,bigint>",
+    )
     got = sorted(
-        (r["id"], r["s"], r["x"]) for r in df.collect()
+        (r["id"], r["s"], r["x"], r["toks"], r["dfs"]) for r in df.collect()
     )
     assert got == sorted(rows)
     # doubles must round-trip BIT-exactly (repr -> SQL parse -> double)
-    for (_, _, want), (_, _, have) in zip(sorted(rows), got):
+    for (_, _, want, _, _), (_, _, have, _, _) in zip(sorted(rows), got):
         if want is not None:
             assert have == want and math.copysign(1, have) == math.copysign(1, want)
     # it must be a JVM LocalRelation (no Python eval at scan time)

@@ -13,7 +13,7 @@ import pytest
 
 from similarities_spark.index import codec
 from similarities_spark.oracle import BM25Oracle
-from similarities_spark.query.scorer import score_query
+from similarities_spark.query.scorer import score_query, top_k
 
 
 def build_blocks_pdf(corpus_tokens, oracle: BM25Oracle, block_size=8, num_salts=3,
@@ -58,6 +58,24 @@ def build_blocks_pdf(corpus_tokens, oracle: BM25Oracle, block_size=8, num_salts=
                     )
                 )
     return pd.DataFrame(rows)
+
+
+def assert_top_k(got, tokens, qblocks, k, oracle, n_docs, **kw):
+    """scorer.top_k pads and ranks like the dense reference ``got``: over
+    the whole corpus, and merged over doc ranges as the engine's fan-out
+    groups are."""
+    args = (tokens, qblocks, k, oracle.avgdl, oracle.k1, oracle.b)
+    ids, scores = top_k(*args, n_docs=n_docs, **kw)
+    assert list(zip(ids, scores)) == got, f"query={tokens}"
+    for per in (7, 30):
+        hits = [
+            (d, sc)
+            for lo in range(0, n_docs, per)
+            for d, sc in zip(*top_k(*args, n_docs=n_docs,
+                                    doc_range=(lo, lo + per), **kw))
+        ]
+        hits.sort(key=lambda x: (-x[1], x[0]))
+        assert hits[:k] == got, f"query={tokens} per={per}"
 
 
 def random_corpus(rng, n_docs, vocab, mean_len=12):
@@ -107,6 +125,7 @@ def test_pruned_scorer_matches_oracle(seed, k):
         assert [d for d, _ in got] == [d for d, _ in expect], f"query={tokens}"
         for (gd, gs), (ed, es) in zip(got, expect):
             assert gs == es, f"score mismatch doc {gd}: {gs!r} != {es!r}"
+        assert_top_k(got, tokens, qblocks, k, oracle, len(corpus))
 
 
 def test_scorer_zero_match_query():
@@ -117,6 +136,19 @@ def test_scorer_zero_match_query():
         ["zzz"], blocks[blocks["term"] == "zzz"], 5, oracle.avgdl, 1.5, 0.75
     )
     assert n == 0 and pad and ids.size == 0
+
+
+def test_top_k_pads_past_matched_docs_below_the_pad_score():
+    """Matched docs scoring below the pad score (an epsilon-floored negative
+    idf) can hold the lowest doc ids: padding must reach past them."""
+    corpus = [["a", "x"]] * 3 + [["x", "y"]] * 2
+    oracle = BM25Oracle(corpus)
+    blocks = build_blocks_pdf(corpus, oracle)
+    expect = [(d, s) for d, s in oracle.most_similar(["a"], topn=3)]
+    assert [d for d, _ in expect][:2] == [3, 4]
+    assert_top_k(
+        expect, ["a"], blocks[blocks["term"] == "a"], 3, oracle, len(corpus)
+    )
 
 
 @pytest.mark.parametrize("variant", ["bm25l", "bm25plus"])
@@ -153,3 +185,8 @@ def test_variant_scorer_matches_oracle(variant, seed):
         assert [d for d, _ in got] == [d for d, _ in expect], f"{variant} q={tokens}"
         for (gd, gs), (ed, es) in zip(got, expect):
             assert gs == es, f"{variant} doc {gd}: {gs!r} != {es!r}"
+        assert_top_k(
+            got, tokens, qblocks, k, oracle, len(corpus), variant=variant,
+            delta=oracle.delta,
+            token_dfs={t: okapi.df[t] for t in set(tokens) if t in okapi.df},
+        )
