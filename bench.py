@@ -14,15 +14,11 @@ local[SPARK_GRAFT_CPUS]):
 `value` sums exactly these phases — comparable round over round.
 
 Informational keys (NOT in the total):
-  index_build_stages / resolved_postings_mode : the headline build's
-              per-stage walls and the physical plan `auto` resolved to —
-              a build regression is attributable to a named stage.
+  index_build_stages : the headline build's per-stage walls — a build
+              regression is attributable to a named stage.
   calib     : {pre, post} single-thread memcpy/cpu probes (scripts/calib.py)
               — the same-window noise control. A suite regression with a
               collapsed memcpy probe is the multi-tenant box, not the engine.
-  ab        : same-process build-plan A/B on identical input: fused (raw
-              token rows) vs fused_tf (map-side per-doc TF) — the two plans
-              `auto` resolves between.
   docs_per_sec, queries_per_sec, n_docs.
   quiet_gate  : present when --require-quiet GBPS was given — the bench
               probed memcpy bandwidth and slept until a window cleared the
@@ -113,7 +109,6 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dataclasses import replace
 
     from similarities_spark.config import EngineConfig
     from similarities_spark.functions import ann, dedup, textops
@@ -186,33 +181,6 @@ def main():
         lambda: textops.add_text_features(docs).select(F.sum("n_tokens")).collect(),
     )
 
-    # --- informational: same-process build-plan A/B ---
-    # (fresh dirs, warmed JVM, identical input — plan deltas measured
-    # inside ONE window so they are attributable): fused = raw token rows
-    # into the encoder, fused_tf = map-side per-doc TF entries. The plan
-    # `index_build` above actually ran is recorded in the JSON as
-    # `resolved_postings_mode` (auto size-resolves per batch).
-    ab = {}
-    f_dir = tempfile.mkdtemp(prefix="bench_ab_f_")
-    ft_dir = tempfile.mkdtemp(prefix="bench_ab_ft_")
-    clock(
-        "fused_s",
-        lambda: BM25IndexBuilder(
-            spark, replace(cfg, postings_mode="fused")
-        ).build(webtext, f_dir, input_desc=sf_dir),
-        into=ab,
-    )
-    clock(
-        "fused_tf_s",
-        lambda: BM25IndexBuilder(
-            spark, replace(cfg, postings_mode="fused_tf")
-        ).build(webtext, ft_dir, input_desc=sf_dir),
-        into=ab,
-    )
-    ab["fused_tf_speedup"] = round(ab["fused_s"] / ab["fused_tf_s"], 3)
-    shutil.rmtree(f_dir, ignore_errors=True)
-    shutil.rmtree(ft_dir, ignore_errors=True)
-
     calib_post = probe()
 
     total = round(sum(timings.values()), 3)
@@ -226,13 +194,10 @@ def main():
         "n_docs": n_docs,
         "docs_per_sec": round(n_docs / timings["index_build"], 1),
         "queries_per_sec": round(200 / timings["bm25_batch"], 1),
-        # per-stage walls of the headline build + the physical plan it ran
-        # (VERDICT r4 'Next round' #1a / 'wrong' #1,#3): the regressed
-        # stage is named in-artifact, not reconstructed after the fact
+        # per-stage walls of the headline build: the regressed stage is
+        # named in-artifact, not reconstructed after the fact
         "index_build_stages": index.meta.get("stage_wall_s"),
-        "resolved_postings_mode": index.meta.get("resolved_postings_mode"),
         "calib": {"pre": calib_pre, "post": calib_post},
-        "ab": ab,
         "minhash_xxh64_s": xxh["minhash_xxh64_s"],
     }
     if quiet_gate is not None:

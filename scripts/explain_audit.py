@@ -7,6 +7,8 @@ paths and greps for the properties that matter at 100 TB:
   in-process, no Exchange)
 - the search_join_df plan caches nothing and, unsharded, has no Window
 - dense doc-id numbering shuffles only in its range sort
+- the build's term_stats input is the held per-term cache: no blocks
+  scan, no exchange of its own
 - PushedFilters / ReadSchema pruning on parquet scans
 - WholeStageCodegen coverage of the relational stages
 
@@ -86,16 +88,19 @@ def main():
     cos = E.q_cosine_topk(spark, sf_dir)
     sections.append(("cosine top-k (broadcast queries x scan)", grab_plan(cos)))
 
-    # 5) ENGINE build path (fused): the whole tokenize->explode->salt->encode
+    # 5) ENGINE build path: the whole tokenize->TF entries->salt->encode
     # pipeline must contain exactly ONE all-to-all Exchange (the groupBy
     # (term, salt) into the block encoder; the broadcast of the heavy-term
     # list is a BroadcastExchange, not a shuffle)
-    from similarities_spark.index.build import BM25IndexBuilder, _encode_salted
+    from similarities_spark.index.build import (
+        _STATS_KEY,
+        BM25IndexBuilder,
+        _encode_salted,
+        _term_firsts,
+    )
 
     builder = BM25IndexBuilder(spark, idx.config())
-    # audit the SCALE-path plan explicitly: 'auto' resolves by batch size
-    # at build time, but the 100-TB shape is always fused_tf
-    tok_df, exploded = builder._tokenized_exploded(idx.docs(), mode="fused_tf")
+    tok_df, exploded = builder._tokenized_exploded(idx.docs())
     # literal heavy list: in production this is a vocab-sized partial-agg
     # side plan feeding the SAME BroadcastExchange — substituting a literal
     # isolates the postings-row path so the check below counts only the
@@ -104,10 +109,16 @@ def main():
     per_salt = builder.cfg.salt_bounds(idx.n_docs)
     enc = _encode_salted(exploded, heavy, per_salt, builder.cfg)
     engine_build_plan = grab_plan(enc)
-    tok_df.unpersist()
     sections.append(
-        ("ENGINE fused build (tokenize->explode->salt->encode)", engine_build_plan)
+        ("ENGINE build (tokenize->TF entries->salt->encode)", engine_build_plan)
     )
+
+    # 5a) the build's term_stats input: the per-term pass over the token
+    # cache, held as a cache of its own, as _write_term_stats selects it
+    firsts = _term_firsts(tok_df).persist()
+    stats_in_plan = grab_plan(firsts.select("term", "df", *_STATS_KEY))
+    firsts.unpersist()
+    tok_df.unpersist()
 
     # 5b) term_stats lookup: the per-batch stats read must push its term
     # IN-list into the parquet scan (the table is written range-partitioned
@@ -146,6 +157,7 @@ def main():
     with BuildRun(spark, "audit") as run:
         ids = _dense_doc_ids(run, pages, 4)[0]
         sections.append(("doc-id numbering (range sort + offsets)", grab_plan(ids)))
+    sections.append(("build term_stats input (per-term cache)", stats_in_plan))
 
     checks = []
     qp = sections[0][1]
@@ -174,10 +186,10 @@ def main():
         "Exchange rangepartitioning"
     )
     checks.append(
-        ("ENGINE fused build has exactly ONE all-to-all exchange "
+        ("ENGINE build has exactly ONE all-to-all exchange "
          f"(found {n_shuffles})", n_shuffles == 1)
     )
-    checks.append(("ENGINE fused build has no pre-encode hash aggregate",
+    checks.append(("ENGINE build has no pre-encode hash aggregate",
                    "HashAggregate" not in fmt and "SortAggregate" not in fmt))
     # map-side TF: the run-length pass must be staged (ONE array_sort
     # in the formatted plan — CollapseProject re-inlining it would
@@ -185,8 +197,18 @@ def main():
     fmt_full = parts[1] if len(parts) > 2 else ep
     n_sorts = fmt_full.count("array_sort")
     checks.append(
-        ("fused_tf map-side TF staged (exactly one array_sort, "
+        ("map-side TF staged (exactly one array_sort, "
          f"found {n_sorts})", n_sorts == 1)
+    )
+    # above the cached per-term relation the stats input is a bare scan of
+    # it (the cached plan below holds the vocab aggregate's own exchange),
+    # and nothing in it reads the blocks table
+    own = stats_in_plan.split("== Physical Plan ==")[-1].split("InMemoryRelation")[0]
+    checks.append(
+        ("build stats input reads the per-term cache: no blocks scan, "
+         "no Exchange",
+         "InMemoryTableScan" in own and "Exchange" not in own
+         and os.path.join(idx.index_dir, "blocks") not in stats_in_plan)
     )
     sp = sections[5][1]
     checks.append(

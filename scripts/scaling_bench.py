@@ -43,12 +43,7 @@ def gen_corpus(n_docs: int, path: str):
     spark.stop()
 
 
-def run(
-    cpus: int,
-    corpus: str,
-    index_dir: str,
-    postings_mode: str = "fused_tf",
-):
+def run(cpus: int, corpus: str, index_dir: str):
     from pyspark.sql import SparkSession, functions as F
 
     from similarities_spark.config import EngineConfig
@@ -74,7 +69,6 @@ def run(
         num_term_buckets=64,
         salt_df_threshold=20_000,
         num_salts=16,
-        postings_mode=postings_mode,
     )
     t0 = time.time()
     index = BM25IndexBuilder(spark, cfg).build(webtext, index_dir, input_desc=corpus)
@@ -114,8 +108,6 @@ def main():
     p.add_argument("--corpus", default=CORPUS_DEFAULT)
     p.add_argument("--cpus", type=int, default=32)
     p.add_argument("--index-dir", default=None)
-    p.add_argument("--postings-mode", default="fused_tf",
-                   choices=["auto", "fused_tf", "fused"])
     args = p.parse_args()
     if args.gen:
         gen_corpus(args.n_docs, args.corpus)
@@ -124,8 +116,7 @@ def main():
     import shutil
 
     shutil.rmtree(index_dir, ignore_errors=True)
-    out = run(args.cpus, args.corpus, index_dir, args.postings_mode)
-    out["postings_mode"] = args.postings_mode
+    out = run(args.cpus, args.corpus, index_dir)
     print(json.dumps(out))
 
 

@@ -63,31 +63,13 @@ class EngineConfig:
         return DELTAS[self.variant] if self.delta is None else self.delta
 
     # --- postings construction ---
-    # 'auto' (default): resolve per batch by size — 'fused_tf' when the
-    # batch reaches auto_tf_docs documents, 'fused' below it. 'fused_tf':
-    # per-doc TF pre-aggregated MAP-SIDE by a pure JVM run-length pass over
-    # each doc's sorted token array (_doc_tf_entries) — still ONE
-    # all-to-all exchange, but it moves one row per distinct (doc, term)
-    # instead of one per token occurrence (~25-45% less shuffle volume on
-    # natural text; trades scalable CPU for scarce bandwidth — the winner
-    # at scale: 1.5x at 60k docs, 1.2x at 200k, same-JVM A/Bs in
-    # BENCH/ab_fused_tf*.jsonl). 'fused': raw exploded tokens shuffle
-    # straight into the block encoder, which counts doc_id duplicates as tf
-    # (np.unique) — wins below the crossover, where the per-doc sort CPU
-    # outweighs the tiny shuffle it saves. Both plans produce bit-identical
-    # indexes (parity-tested).
-    postings_mode: str = "auto"
-    # 'auto' crossover, in input-batch documents. Measured on this box
-    # (fused_tf breaks even at 20k x ~60-token docs, wins 1.5x by 60k); a
-    # real cluster's network shuffle is more expensive than this box's
-    # in-memory one, so the threshold is conservative for production.
-    auto_tf_docs: int = 50_000
-
-    def resolved_postings_mode(self, n_docs: int) -> str:
-        """Physical build plan for a batch of ``n_docs`` documents."""
-        if self.postings_mode != "auto":
-            return self.postings_mode
-        return "fused_tf" if n_docs >= self.auto_tf_docs else "fused"
+    # There is one build plan: per-doc TF is computed map-side by a pure
+    # JVM run-length pass over each doc's sorted token array
+    # (_doc_tf_entries), and the build's one all-to-all exchange moves one
+    # (term, doc, tf) row per distinct (doc, term) into the block encoder.
+    # The field stays only so configs that name the plan keep working (the
+    # benchmark sets it); any other value raises.
+    postings_mode: str = "fused_tf"
 
     # --- checkpointing ---
     checkpoint_dir: Optional[str] = None  # manifests + resumability; None = off
@@ -125,11 +107,9 @@ class EngineConfig:
                 "num_term_buckets": self.num_term_buckets,
                 "salt_df_threshold": self.salt_df_threshold,
                 "num_salts": self.num_salts,
-                # auto/fused/fused_tf build bit-identical indexes
-                # (parity-tested), so the mode is layout-neutral; the
-                # constant entry keeps digests, and with them the resume
-                # manifests of existing indexes, unchanged (auto_tf_docs
-                # is likewise excluded)
+                # retired build-plan choice (every plan built bit-identical
+                # indexes); the constant keeps existing digests, and with
+                # them the resume manifests of existing indexes, unchanged
                 "postings_mode": "fused",
                 # retired field (the salt list is always exact now); the
                 # constant keeps existing digests unchanged

@@ -11,22 +11,23 @@ the tokenizer UDF and the Arrow block encoder):
        within-batch duplicate texts are kept and inflate N/df/avgdl exactly
        like the reference — literal_similarity.py:389-401. Cross-batch dedup
        happens in merge_new_docs.)
-    -> tokenize (JVM regexp default / Arrow pandas UDF for jieba)
-    -> explode(tokens): raw (doc_id, doc_len, term) rows, duplicates KEPT
-    -> head-term salting: broadcast tiny heavy-term list (per-term token
-       counts, a vocab-sized partial-agg shuffle); salt = fixed global
-       doc-id range -> per-term segments stay sorted runs, no merge stage
+    -> tokenize (JVM regexp default / Arrow pandas UDF for jieba) into a
+       token cache
+    -> per-term pass over the cache: df (documents containing the term)
+       and first occurrence (doc_id, position)            [vocab-sized agg]
+    -> per-doc TF entries (term, doc_id, doc_len, tf): a JVM run-length
+       pass over each doc's sorted token array, no exchange of its own
+    -> head-term salting: broadcast tiny heavy-term list (df >= threshold,
+       from the per-term pass); salt = fixed global doc-id range ->
+       per-term segments stay sorted runs, no merge stage
     -> repartition(term, salt) + mapInArrow block encoder  [THE build shuffle]
-       (sorted doc_id duplicates are run-length counted = tf — the per-doc
-       TF aggregate costs no exchange of its own; bit-packed
-       frame-of-reference blocks, encoded a whole Arrow batch at a time, +
-       per-block max/min/sum tf + dl extrema for block-max bounds)
-    -> term_stats: df = sum(n_postings), tokens = sum(tf_sum) from the
-       blocks table, each term's first occurrence (doc_id, position) from
-       the salt-list pass; exact math.log idf, average idf summed in
-       first-occurrence order (the reference's vocabulary insertion
-       order) + epsilon floor (rank_bm25.py:88-98 semantics)
-                                                          [vocab-sized agg]
+       (bit-packed frame-of-reference blocks, encoded a whole Arrow batch
+       at a time, + per-block max/min/sum tf + dl extrema for block-max
+       bounds); total_tokens = sum(tf_sum) from the per-bucket metrics
+    -> term_stats from the per-term pass alone: exact math.log idf,
+       average idf summed in first-occurrence order (the reference's
+       vocabulary insertion order) + epsilon floor (rank_bm25.py:88-98
+       semantics)
     -> write parquet partitioned by bucket = xxhash64(term) % B,
        per-bucket checkpoint manifests (lineage + metrics) -> resumable
 
@@ -132,13 +133,13 @@ _STATS_ROWS_PER_PARTITION = 4_000_000
 # idf is written distributed, so 10^9-term vocabs never collect.
 _DRIVER_STATS_MAX_VOCAB = 20_000
 
-_POSTINGS_MODES = frozenset({"auto", "fused", "fused_tf"})
-
-# config keys that meta.json of older indexes may still carry but
-# EngineConfig no longer has (the retired kernel-rate fan-out threshold
-# and sampled salt-list detection)
+# config keys that meta.json of older indexes may still carry but a build
+# no longer records (the retired kernel-rate fan-out threshold, sampled
+# salt-list detection and the build-plan choice, which v5 indexes may
+# record as "auto" or "fused")
 _RETIRED_CONFIG_KEYS = (
-    "fan_out_target_task_s", "fan_out_min_task_s", "salt_sample_fraction"
+    "fan_out_target_task_s", "fan_out_min_task_s", "salt_sample_fraction",
+    "postings_mode",
 )
 
 # explicit read schemas everywhere: an all-stopword corpus produces empty
@@ -505,8 +506,9 @@ def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
 
 
 def _doc_tf_entries(tokenized: DataFrame) -> DataFrame:
-    """(doc_id, doc_len, term, tf) — per-doc term frequencies computed
-    entirely JVM-side BEFORE the build shuffle (postings_mode='fused_tf').
+    """(term, doc_id, doc_len, tf) — per-doc term frequencies computed
+    entirely JVM-side BEFORE the build shuffle, which then moves one row
+    per distinct (doc, term) instead of one per token occurrence.
 
     Run-length encoding over the doc's sorted token array via higher-order
     functions: sort once, find run starts (positions whose token differs
@@ -521,8 +523,7 @@ def _doc_tf_entries(tokenized: DataFrame) -> DataFrame:
     plan). The index list is sequence(0,L) minus its head: sequence(1,L)
     counts DOWN for the empty doc and would index into an empty array.
     zip_with pads the shorter side with nulls, so the empty-doc entries
-    array is guarded to stay empty (empty docs contribute no postings,
-    same as explode on an empty array in 'fused' mode)."""
+    array is guarded to stay empty (empty docs contribute no postings)."""
     s = F.col("_s")
     starts = F.col("_starts")
     idx = F.slice(F.sequence(F.lit(0), F.size(s)), F.lit(2), F.size(s))
@@ -572,28 +573,20 @@ def _encode_segment_batch(terms: pa.Array, salts, ids, dls, tfs, block_size):
     sorted by (term, salt, doc_id), as one Arrow record batch in
     _BLOCK_SCHEMA: one vectorized codec pass over every segment, payloads
     as one binary column built from offsets and a data buffer — no Python
-    object per block. ``tfs`` None (fused mode): duplicates of a doc id in a
-    segment ARE its term frequency and are run-length counted here."""
+    object per block. Each row is one posting: a distinct (term, doc)."""
     n = len(ids)
     change = np.empty(n, dtype=bool)
     change[0] = True
     change[1:] = salts[1:] != salts[:-1]
     change[1:] |= pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
-    rows = np.arange(n)
-    if tfs is None:
-        first = change.copy()
-        first[1:] |= ids[1:] != ids[:-1]
-        rows = np.flatnonzero(first)
-        tfs = np.diff(np.append(rows, n))
-        ids, dls, change = ids[rows], dls[rows], change[rows]
     enc = codec.encode_segments(
         ids, tfs, dls, np.flatnonzero(change), block_size
     )
     lo, hi = enc.starts[:-1], enc.starts[1:]
     return pa.RecordBatch.from_arrays(
         [
-            terms.take(pa.array(rows[lo])).cast(pa.string()),
-            pa.array(salts[rows[lo]], pa.int32()),
+            terms.take(pa.array(lo)).cast(pa.string()),
+            pa.array(salts[lo], pa.int32()),
             pa.array(enc.block_id, pa.int32()),
             pa.array(ids[lo]),
             pa.array(ids[hi - 1]),
@@ -621,12 +614,9 @@ def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
     doc_id sort runs in the JVM sorter (spillable); memory held by the
     kernel is one Arrow batch plus one partial segment.
 
-    Input rows: (term, salt, doc_id, doc_len[, tf]). Without ``tf`` (fused
-    mode) duplicates of a doc_id ARE the term frequency and are
-    run-length-counted on the sorted ids; with it (fused_tf / compact)
-    rows are one per distinct (term, doc)."""
-    has_tf = "tf" in salted.columns
-    cols = ["term", "salt", "doc_id", "doc_len"] + (["tf"] if has_tf else [])
+    Input rows: (term, salt, doc_id, doc_len, tf), one per distinct
+    (term, doc) — from build and merge (_doc_tf_entries) and compact
+    (decoded blocks) alike."""
     block_size = cfg.block_size
 
     def kernel(batches):
@@ -651,16 +641,13 @@ def _encode_blocks_df(salted: DataFrame, cfg: EngineConfig) -> DataFrame:
             yield _encode_rows(pend)
 
     def _encode_rows(rb):
-        ids, dls, tfs = (
-            rb.column(i).to_numpy().astype(np.int64) if i < rb.num_columns else None
-            for i in (2, 3, 4)
-        )
+        ids, dls, tfs = (rb.column(i).to_numpy().astype(np.int64) for i in (2, 3, 4))
         return _encode_segment_batch(
             rb.column(0), rb.column(1).to_numpy(), ids, dls, tfs, block_size
         )
 
     return (
-        salted.select(*cols)
+        salted.select("term", "salt", "doc_id", "doc_len", "tf")
         .repartition("term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
         .mapInArrow(kernel, _BLOCK_SCHEMA)
@@ -737,13 +724,19 @@ def _idf_raw(n_docs: int, df: int) -> float:
     return math.log(n_docs - df + 0.5) - math.log(df + 0.5)
 
 
+def _idf_raws(n_docs: int, dfs) -> np.ndarray:
+    """_idf_raw of every df in ``dfs``, in order."""
+    return np.array([_idf_raw(n_docs, int(d)) for d in dfs], np.float64)
+
+
 @F.pandas_udf(DoubleType())
-def _idf_raw_udf(df_col: pd.Series, n_col: pd.Series) -> pd.Series:
-    """_idf_raw per term on the executors. Per-TERM work: vocab-sized."""
-    return pd.Series(
-        [_idf_raw(int(n), int(d)) for n, d in zip(n_col, df_col)],
-        dtype="float64",
-    )
+def _floored_idf_udf(
+    df_col: pd.Series, n_col: pd.Series, eps_col: pd.Series
+) -> pd.Series:
+    """Each term's stored idf on the executors: _idf_raw of (n, df), the
+    epsilon floor ``eps`` where it is negative. Per-TERM work."""
+    raws = _idf_raws(int(n_col.iloc[0]) if len(n_col) else 0, df_col)
+    return pd.Series(np.where(raws < 0, eps_col.to_numpy(), raws))
 
 
 def _ordered_sum(total: float, values: np.ndarray) -> float:
@@ -754,31 +747,29 @@ def _ordered_sum(total: float, values: np.ndarray) -> float:
 
 
 def _ordered_sum_kernel(batches):
-    """mapInArrow over ONE partition sorted by the first-occurrence key:
-    the raw-idf sum carried across Arrow batches in that order, plus the
-    vocab, posting and token counts, as a single row."""
-    idf_sum, vocab, postings, tokens = 0.0, 0, 0, 0
+    """mapInArrow over ONE partition of (df, n_docs) rows sorted by the
+    first-occurrence key: each term's raw idf, computed from its df, summed
+    across Arrow batches in that order, plus the vocab and posting counts,
+    as a single row."""
+    idf_sum, vocab, postings = 0.0, 0, 0
     for b in batches:
-        idf_sum = _ordered_sum(idf_sum, b.column("idf_raw").to_numpy())
-        vocab += b.num_rows
-        postings += int(b.column("df").to_numpy().sum())
-        tokens += int(b.column("tokens").to_numpy().sum())
+        if b.num_rows:
+            dfs = b.column("df").to_numpy()
+            n_docs = b.column("n_docs")[0].as_py()
+            idf_sum = _ordered_sum(idf_sum, _idf_raws(n_docs, dfs))
+            vocab += b.num_rows
+            postings += int(dfs.sum())
     yield pa.RecordBatch.from_pydict(
-        {
-            "idf_sum": [idf_sum],
-            "vocab_size": [vocab],
-            "n_postings": [postings],
-            "total_tokens": [tokens],
-        }
+        {"idf_sum": [idf_sum], "vocab_size": [vocab], "n_postings": [postings]}
     )
 
 
 def _term_firsts(tokenized: DataFrame) -> DataFrame:
-    """(term, hits, first_doc, first_pos) of a tokenized batch: ``hits``
-    is the term's document frequency and (first_doc, first_pos)
-    its first occurrence — the key the reference's vocabulary is inserted
-    in (oracle.py: documents in id order, each document's distinct terms
-    in first-occurrence order).
+    """(term, df, first_doc, first_pos) of a tokenized batch: ``df`` is
+    the term's document frequency and (first_doc, first_pos) its first
+    occurrence — the key the reference's vocabulary is inserted in
+    (oracle.py: documents in id order, each document's distinct terms in
+    first-occurrence order). It is the batch's whole term_stats input.
 
     array_distinct dedups within each row BEFORE the explode and keeps
     first-occurrence order, so count(1) per term counts documents, pos
@@ -794,35 +785,19 @@ def _term_firsts(tokenized: DataFrame) -> DataFrame:
         )
         .groupBy("term")
         .agg(
-            F.count(F.lit(1)).alias("hits"),
+            F.count(F.lit(1)).alias("df"),
             F.min("doc_id").alias("first_doc"),
             F.min_by("pos", "doc_id").alias("first_pos"),
         )
     )
 
 
-def _batch_terms(blocks: DataFrame, firsts: DataFrame) -> DataFrame:
-    """(term, df, tokens, first_doc, first_pos) of one batch: df = Σ
-    n_postings (each posting is one distinct doc) and tokens = Σ tf_sum
-    from its blocks — exact, identical to aggregating the postings — and
-    the first-occurrence key from ``_term_firsts``. The blocks groupBy
-    shuffles only vocab-sized partials (~n_postings/block_size rows)."""
-    return (
-        blocks.groupBy("term")
-        .agg(
-            F.sum("n_postings").cast("long").alias("df"),
-            F.sum("tf_sum").cast("long").alias("tokens"),
-        )
-        .join(firsts.select("term", *_STATS_KEY), "term")
-    )
-
-
 class BM25IndexBuilder:
     def __init__(self, spark: SparkSession, cfg: EngineConfig = EngineConfig()):
-        if cfg.postings_mode not in _POSTINGS_MODES:
+        if cfg.postings_mode != "fused_tf":
             raise ValueError(
-                f"postings_mode must be one of {sorted(_POSTINGS_MODES)}, "
-                f"got {cfg.postings_mode!r}"
+                "postings_mode: the one build plan is 'fused_tf', got "
+                f"{cfg.postings_mode!r}"
             )
         self.spark = spark
         self.cfg = cfg
@@ -937,16 +912,12 @@ class BM25IndexBuilder:
                     stats_meta = None
             done = completed_buckets(ckpt, lineage_key) if resume else []
 
-            # ONE all-to-all exchange for the whole build: token rows (raw,
-            # or per-doc TF entries under fused_tf) shuffle straight into
-            # the block encoder (which counts doc_id duplicates as tf — see
-            # _encode_blocks_df); term_stats then derive from the tiny
-            # blocks table (df = sum(n_postings), tokens = sum(tf_sum)) and
-            # the per-term first occurrences of the salt-list pass. The
-            # token cache serves both that pass and the encode pass.
-            tokenized, exploded = self._tokenized_exploded(
-                docs, cfg.resolved_postings_mode(n_docs)
-            )
+            # ONE all-to-all exchange for the whole build: per-doc TF
+            # entries shuffle straight into the block encoder. The token
+            # cache serves the per-term pass (df and first occurrence: the
+            # salt list and, alone, the term_stats input) and the encode
+            # pass.
+            tokenized, rows = self._tokenized_exploded(docs)
             run.persist(tokenized)
             firsts = run.persist(_term_firsts(tokenized))
             # the salt list is TINY (terms above threshold) — collect it and
@@ -954,7 +925,7 @@ class BM25IndexBuilder:
             # broadcast of the lazy plan would recompute it), and so the
             # stage wall attributes it separately
             heavy = self._collect_heavy(
-                firsts.filter(F.col("hits") >= cfg.salt_df_threshold).select(
+                firsts.filter(F.col("df") >= cfg.salt_df_threshold).select(
                     "term", F.lit(True).alias("_heavy")
                 )
             )
@@ -965,27 +936,18 @@ class BM25IndexBuilder:
             run.join_writes()
             with open(docs_manifest, "w", encoding="utf-8") as f:
                 json.dump(docs_meta, f, sort_keys=True)
-            blocks, vocab = self._build_blocks(
-                run, exploded, heavy, blocks_path, ckpt, lineage_key,
+            vocab, total_tokens = self._build_blocks(
+                run, rows, heavy, blocks_path, ckpt, lineage_key,
                 n_docs=n_docs, done_buckets=set(done),
                 fail_after_groups=_fail_after_groups,
             )
             run.release(docs, sort_cache, tokenized)
             run.mark("stats")
             if stats_meta is None:
-                # stats derive from the STILL-CACHED blocks table when the
-                # stage just ran (no re-read of the parquet it wrote); a
-                # fully-resumed stage falls back to the on-disk table
-                # (explicit schema: a corpus whose docs all tokenize to
-                # empty writes no block files, where inference would fail)
-                if blocks is None:
-                    blocks = self.spark.read.schema(
-                        _BLOCKS_READ_SCHEMA
-                    ).parquet(blocks_path)
                 stats_meta = self._write_term_stats(
-                    run, _batch_terms(blocks, firsts), n_docs, stats_path,
-                    min_vocab=vocab,
+                    firsts, n_docs, stats_path, min_vocab=vocab
                 )
+                stats_meta["total_tokens"] = total_tokens
                 stats_meta["lineage_key"] = lineage_key
             # the bucket-group writes overlapped the stats pass: all land
             # (or raise) before a manifest or meta.json records this build
@@ -1018,10 +980,8 @@ class BM25IndexBuilder:
                 # the async writes overlap the stages above, so their time
                 # shows in the stage that joins them; this is their own
                 "write_wall_s": run.write_wall_s,
-                # the PHYSICAL plan this build actually ran (postings_mode
-                # may be 'auto'; this names its size-resolution so bench
-                # artifacts attribute walls to the right plan)
-                "resolved_postings_mode": cfg.resolved_postings_mode(n_docs),
+                # the one build plan; kept because the benchmark reads it
+                "resolved_postings_mode": "fused_tf",
                 "salt_per_range": cfg.salt_bounds(n_docs),
                 "increments": [],
                 "config": {
@@ -1036,7 +996,6 @@ class BM25IndexBuilder:
                     "salt_df_threshold": cfg.salt_df_threshold,
                     "num_salts": cfg.num_salts,
                     "score_mode": cfg.score_mode,
-                    "postings_mode": cfg.postings_mode,
                     "fan_out_threshold": cfg.fan_out_threshold,
                     "fan_out_max": cfg.fan_out_max,
                     "variant": cfg.variant,
@@ -1127,67 +1086,55 @@ class BM25IndexBuilder:
             run.release(sort_cache)
             new_docs.write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite").parquet(os.path.join(inc_dir, "docs"))
 
-            # ---- encode the batch's NEW segments into staging first
-            # (fused: one shuffle, the encoder aggregates tf). Salts beyond
-            # the old ranges: new doc ids all exceed old_n, so sorted-run
-            # and no-collision properties hold. Salting uses per-BATCH term
-            # counts (physical layout only — a term heavy in the old corpus
-            # but light in this batch just gets an unsalted small segment).
+            # ---- encode the batch's NEW segments into staging first (one
+            # shuffle of per-doc TF entries). Salts beyond the old ranges:
+            # new doc ids all exceed old_n, so sorted-run and no-collision
+            # properties hold. Salting uses per-BATCH df (physical layout
+            # only — a term heavy in the old corpus but light in this batch
+            # just gets an unsalted small segment).
             run.mark("encode")
             per_salt = idx.meta.get("salt_per_range") or cfg.salt_bounds(old_n)
-            # resolved on the NEW batch's size: incremental batches are
-            # usually far below the fused_tf crossover even when the
-            # accumulated corpus is far above it
-            tokenized, rows = self._tokenized_exploded(
-                new_docs, cfg.resolved_postings_mode(m_new)
-            )
+            tokenized, rows = self._tokenized_exploded(new_docs)
             run.persist(tokenized)
-            # per-batch df (salt_df_threshold means df) and first
-            # occurrences; new doc ids already start at old_n, so a new
-            # term's key sorts after every old term's, as in the
-            # reference's insertion order
+            # per-batch df and first occurrences; new doc ids already start
+            # at old_n, so a new term's key sorts after every old term's,
+            # as in the reference's insertion order
             firsts = run.persist(_term_firsts(tokenized))
             heavy = firsts.filter(
-                F.col("hits") >= cfg.salt_df_threshold
+                F.col("df") >= cfg.salt_df_threshold
             ).select("term", F.lit(True).alias("_heavy"))
-            _encode_salted(rows, heavy, per_salt, cfg).write.option("compression", INDEX_PARQUET_CODEC).mode(
+            # the batch's token total is observed on the write itself
+            tokens = Observation(f"tokens-{uuid.uuid4().hex[:8]}")
+            _encode_salted(rows, heavy, per_salt, cfg).observe(
+                tokens, F.sum("tf_sum").alias("n")
+            ).write.option("compression", INDEX_PARQUET_CODEC).mode(
                 "overwrite"
             ).partitionBy("bucket").parquet(os.path.join(inc_dir, "blocks"))
             run.release(tokenized)
 
-            # ---- stats refresh: old term_stats ∪ the batch's terms (a
-            # column-pruned read of the tiny staged blocks table). A term
-            # present before keeps its stored first-occurrence key; a new
-            # term takes the batch's. Summed in that key order, the merged
-            # average_idf is bit-identical to a full rebuild's.
+            # ---- stats refresh: old term_stats ∪ the batch's terms. A
+            # term present before keeps its stored first-occurrence key; a
+            # new term takes the batch's. Summed in that key order, the
+            # merged average_idf is bit-identical to a full rebuild's.
             run.mark("stats")
-            new = _batch_terms(
-                # explicit schema: a batch whose docs all tokenize to empty
-                # writes no block files, and schema inference would fail
-                self.spark.read.schema(_BLOCKS_READ_SCHEMA).parquet(
-                    os.path.join(inc_dir, "blocks")
-                ),
-                firsts,
-            )
             old = self.spark.read.schema(_STATS_WRITE_DDL).parquet(
                 os.path.join(index_dir, "term_stats")
             )
-            combined = old.join(new, "term", "full_outer").select(
+            combined = old.join(firsts, "term", "full_outer").select(
                 "term",
                 (
                     F.coalesce(old["df"], F.lit(0))
-                    + F.coalesce(new["df"], F.lit(0))
+                    + F.coalesce(firsts["df"], F.lit(0))
                 ).alias("df"),
-                F.coalesce(new["tokens"], F.lit(0)).alias("tokens"),
-                *(F.coalesce(old[k], new[k]).alias(k) for k in _STATS_KEY),
+                *(F.coalesce(old[k], firsts[k]).alias(k) for k in _STATS_KEY),
             )
             n_total = old_n + m_new
             stats_meta = self._write_term_stats(
-                run, combined, n_total, os.path.join(inc_dir, "term_stats"),
+                combined, n_total, os.path.join(inc_dir, "term_stats"),
                 min_vocab=int(idx.meta.get("vocab_size") or 0),
             )
             run.mark(None)
-            new_tokens = stats_meta["total_tokens"]
+            new_tokens = int(tokens.get["n"] or 0)
 
             # ---- stage next meta, write the commit record, roll forward ----
             meta = dict(idx.meta)
@@ -1332,9 +1279,9 @@ class BM25IndexBuilder:
 
     # ---------- stages ----------
 
-    def _tokenized_exploded(self, docs: DataFrame, mode: str):
-        """(tokenized, rows): the persisted token cache and the input rows
-        for the one build shuffle.
+    def _tokenized_exploded(self, docs: DataFrame):
+        """(tokenized, rows): the persisted token cache and the per-doc TF
+        entries (_doc_tf_entries) for the one build shuffle.
 
         SINGLE tokenization pass (tokenization dominates build cost at
         webtext scale — never run it twice; deterministic retokenize from
@@ -1347,39 +1294,22 @@ class BM25IndexBuilder:
         expression would be inlined into every consumer and run twice+ —
         measured 2x the whole stage cost at 1M docs.
 
-        mode='fused': raw (doc_id, doc_len, term) token rows — duplicates
-        kept (they ARE the term frequency; the block encoder counts them
-        after the shuffle). Pure whole-stage-codegen projection.
-
-        mode='fused_tf': per-doc TF is pre-aggregated MAP-SIDE with zero
-        extra exchange — all of a doc's tokens live in one row before the
-        explode, so (term, tf) pairs come from a pure JVM run-length pass
-        over the doc's sorted token array (_doc_tf_entries). The shuffle
-        then moves one row per distinct (doc, term) instead of one per
-        token occurrence: on natural text (Zipf head terms repeat within
-        documents) that cuts the build's all-to-all volume ~25-45%, which
-        is exactly the scarce resource at cluster scale (and on this
-        bandwidth-capped box). Costs CPU (per-doc array_sort) — the
-        resource that DOES scale with cores — so it pays only above the
-        auto_tf_docs crossover. The encoder's pre-aggregated branch
-        consumes the tf column, so blocks are bit-identical to 'fused'
-        (parity-tested).
-
-        ``mode`` is the RESOLVED mode ('fused' | 'fused_tf'):
-        cfg.resolved_postings_mode(n) for a batch of n documents."""
+        Per-doc TF is pre-aggregated MAP-SIDE with zero extra exchange —
+        all of a doc's tokens live in one row before the explode, so
+        (term, tf) pairs come from a pure JVM run-length pass over the
+        doc's sorted token array. The shuffle then moves one row per
+        distinct (doc, term) instead of one per token occurrence: on
+        natural text (Zipf head terms repeat within documents) that cuts
+        the build's all-to-all volume ~25-45%, the scarce resource at
+        cluster scale, for per-doc sort CPU, the resource that scales
+        with cores (1.5x faster at 60k docs, 1.2x at 200k than shuffling
+        raw tokens; BENCH/ab_fused_tf_sizes_r4.jsonl)."""
         cfg = self.cfg
         _, tok_fn = choose_corpus_tokenizer(cfg.stopwords, cfg.tokenizer)
         tokenized = docs.select(
             "doc_id", tok_fn(F.col("text")).alias("toks")
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        if mode == "fused_tf":
-            return tokenized, _doc_tf_entries(tokenized)
-        exploded = tokenized.select(
-            "doc_id",
-            F.size("toks").alias("doc_len"),
-            F.explode("toks").alias("term"),
-        )
-        return tokenized, exploded
+        return tokenized, _doc_tf_entries(tokenized)
 
     def _collect_heavy(self, heavy: DataFrame) -> DataFrame:
         """Materialize the salt list on the driver (thousands of rows even at
@@ -1456,7 +1386,6 @@ class BM25IndexBuilder:
 
     def _write_term_stats(
         self,
-        run: BuildRun,
         terms: DataFrame,
         n_docs: int,
         stats_path: str,
@@ -1466,56 +1395,48 @@ class BM25IndexBuilder:
         average_idf over the full vocab, epsilon floor (rank_bm25.py:88-98)
         and the term_stats write.
 
-        ``terms`` has one (term, df, tokens, first_doc, first_pos) row per
-        term. The raw idf is summed sequentially (_ordered_sum) in
-        (first_doc, first_pos) order — the order the reference inserts
-        terms into its vocabulary and sums them in — so average_idf, and
-        every floored idf, is bit-identical to the reference's and the
-        same for a merge and a full rebuild. (A pairwise np.sum, math.fsum
-        or a partitioned Spark sum would each round differently.)
+        ``terms`` has one (term, df, first_doc, first_pos) row per term.
+        The raw idf is summed sequentially (_ordered_sum) in (first_doc,
+        first_pos) order — the order the reference inserts terms into its
+        vocabulary and sums them in — so average_idf, and every floored
+        idf, is bit-identical to the reference's and the same for a merge
+        and a full rebuild. (A pairwise np.sum, math.fsum or a partitioned
+        Spark sum would each round differently.)
 
         Up to _DRIVER_STATS_MAX_VOCAB terms, one Arrow collect bounded at
         cap + 1 rows brings them to the driver, which sorts, sums and
         writes one sorted file. Past the cap (known from the collect, or from
         ``min_vocab``, a lower bound on the vocab the caller already has)
-        the idf is computed distributed and persisted, one task streams it
-        in key order through _ordered_sum_kernel (a single result row: the
+        one task streams the dfs in key order through _ordered_sum_kernel,
+        which computes and sums the raw idf (a single result row: the
         driver holds no vocab-sized state), and the floored idf is written
-        distributed (the idf intermediate is held on ``run``). Returns the
-        meta: vocab_size, average_idf, epsilon_floor, n_postings and
-        total_tokens (Σ tokens)."""
+        distributed by one pandas UDF. Returns the meta: vocab_size,
+        average_idf, epsilon_floor and n_postings."""
         cap = _DRIVER_STATS_MAX_VOCAB
-        terms = terms.select("term", "df", "tokens", *_STATS_KEY)
+        terms = terms.select("term", "df", *_STATS_KEY)
         tbl = None
         if min_vocab <= cap:
             tbl = terms.limit(cap + 1).toArrow()
             if tbl.num_rows > cap:
                 tbl = None  # past the cap: sum distributed
-        raw = None
+        n_col = F.lit(n_docs).cast("long").alias("n_docs")
         if tbl is not None:
             tbl = tbl.sort_by([(k, "ascending") for k in _STATS_KEY])
-            dfs = tbl.column("df").to_pylist()
-            raws = np.array([_idf_raw(n_docs, d) for d in dfs], np.float64)
+            dfs = tbl.column("df").to_numpy()
+            raws = _idf_raws(n_docs, dfs)
             g = {
                 "idf_sum": _ordered_sum(0.0, raws),
                 "vocab_size": tbl.num_rows,
-                "n_postings": sum(dfs),
-                "total_tokens": sum(tbl.column("tokens").to_pylist()),
+                "n_postings": int(dfs.sum()),
             }
         else:
-            raw = run.persist(
-                terms.withColumn(
-                    "idf_raw",
-                    _idf_raw_udf(F.col("df"), F.lit(n_docs).cast("long")),
-                )
-            )
             g = (
-                raw.repartition(1)
+                terms.select("df", n_col, *_STATS_KEY)
+                .repartition(1)
                 .sortWithinPartitions(*_STATS_KEY)
                 .mapInArrow(
                     _ordered_sum_kernel,
-                    "idf_sum double, vocab_size long, n_postings long, "
-                    "total_tokens long",
+                    "idf_sum double, vocab_size long, n_postings long",
                 )
                 .collect()[0]
                 .asDict()
@@ -1523,7 +1444,7 @@ class BM25IndexBuilder:
         vocab_size = g["vocab_size"]
         average_idf = g["idf_sum"] / vocab_size if vocab_size else 0.0
         eps = self.cfg.epsilon * average_idf
-        if raw is None:
+        if tbl is not None:
             # an Arrow-backed frame: a VALUES literal of this many rows
             # would cost seconds of SQL parsing
             stats = self.spark.createDataFrame(
@@ -1537,12 +1458,10 @@ class BM25IndexBuilder:
                 )
             )
         else:
-            stats = raw.select(
+            stats = terms.select(
                 "term",
                 "df",
-                F.when(F.col("idf_raw") < 0, F.lit(eps))
-                .otherwise(F.col("idf_raw"))
-                .alias("idf"),
+                _floored_idf_udf("df", n_col, F.lit(eps)).alias("idf"),
                 *_STATS_KEY,
             )
         # range-partitioned + sorted by term: the query path's
@@ -1562,13 +1481,11 @@ class BM25IndexBuilder:
             .write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite")
             .parquet(stats_path)
         )
-        run.release(raw)
         return {
             "vocab_size": vocab_size,
             "average_idf": average_idf,
             "epsilon_floor": eps,
             "n_postings": int(g["n_postings"]),
-            "total_tokens": int(g["total_tokens"]),
         }
 
     def _build_blocks(
@@ -1583,17 +1500,14 @@ class BM25IndexBuilder:
         done_buckets: set,
         fail_after_groups: Optional[int] = None,
     ):
-        """``postings`` is either per-doc TF entries (term, doc_id, doc_len,
-        tf) (fused_tf) or raw exploded token rows without tf (fused — the
-        encoder counts duplicates). ``heavy`` is the tiny salt list
-        (term, _heavy) — always broadcast.
+        """``postings`` are per-doc TF entries (term, doc_id, doc_len, tf);
+        ``heavy`` is the tiny salt list (term, _heavy) — always broadcast.
 
-        Returns (blocks, vocab): the blocks cache held on ``run``, so the
-        caller derives term_stats from it instead of re-reading the freshly
-        written parquet, and the exact vocab size. The bucket-group writes
-        run async on ``run``, overlapped with the caller's stats pass; the
-        caller joins them before a manifest or meta.json records the build.
-        (None, 0) when the stage fully resumed."""
+        Returns (vocab, total_tokens): the exact vocab size (0 when the
+        stage fully resumed) and token count (sum of tf_sum). The blocks
+        cache is held on ``run``: its bucket-group writes run async,
+        overlapped with the caller's stats pass; the caller joins them
+        before a manifest or meta.json records the build."""
         cfg = self.cfg
         all_buckets = list(range(cfg.num_term_buckets))
         todo = [b for b in all_buckets if b not in done_buckets]
@@ -1604,8 +1518,12 @@ class BM25IndexBuilder:
                 shutil.rmtree(part_dir)
         if not todo:
             # fully-resumed blocks stage: every bucket manifest matches this
-            # lineage — never trigger the encode job (metrics included)
-            return None, 0
+            # lineage — never trigger the encode job (metrics included);
+            # the token count is one column-pruned sum over the files
+            on_disk = self.spark.read.schema(_BLOCKS_READ_SCHEMA).parquet(
+                blocks_path
+            )
+            return 0, int(on_disk.agg(F.sum("tf_sum")).collect()[0][0] or 0)
         blocks = run.persist(
             _encode_salted(postings, heavy, cfg.salt_bounds(n_docs), cfg)
         )
@@ -1620,12 +1538,14 @@ class BM25IndexBuilder:
                 F.sum("n_postings").alias("n_postings"),
                 F.count(F.lit(1)).alias("n_blocks"),
                 F.sum(F.length("payload")).alias("payload_bytes"),
+                F.sum("tf_sum").alias("n_tokens"),
             )
             .collect()
         }
         # exact global vocab (buckets partition terms by hash): a vocab
         # past the driver stats cap then skips the bounded collect
         vocab = sum(int(m["n_terms"] or 0) for m in metrics.values())
+        total_tokens = sum(int(m["n_tokens"] or 0) for m in metrics.values())
         # tokenize+shuffle+encode+cache materialized above
         run.mark("blocks_write")
 
@@ -1680,7 +1600,8 @@ class BM25IndexBuilder:
                     )
 
         # the group writes run CONCURRENTLY with the caller's stats pass
-        # (guide §2.6) — both only read the blocks cache, and each bucket
-        # manifest is still written strictly after its group's files land
+        # (guide §2.6) — they read the blocks cache, the stats pass reads
+        # the per-term cache, and each bucket manifest is still written
+        # strictly after its group's files land
         run.write_async("blocks-write", _write_groups)
-        return blocks, vocab
+        return vocab, total_tokens

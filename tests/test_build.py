@@ -1,33 +1,41 @@
-"""Index builder configuration surface (accepted postings modes, indexes
-written with since-retired config keys) and what a failed build leaves
-behind."""
+"""Index builder configuration surface (the one accepted postings mode,
+indexes written with since-retired config keys), the postings a build and
+a merge write, and what a failed build leaves behind."""
 
 import json
 import os
 import re
+from collections import Counter, defaultdict
 
 import pytest
 
 from similarities_spark.config import EngineConfig
+from similarities_spark.index import codec
 from similarities_spark.index.build import BM25Index, BM25IndexBuilder
 from similarities_spark.query.engine import BM25QueryEngine
 from similarities_spark.sources.synth import synth_webtext_pandas
+from similarities_spark.tokenize import tokenize_text
 
-RETIRED_KEYS = {"fan_out_target_task_s": None, "fan_out_min_task_s": 0.03}
+RETIRED_KEYS = {
+    "fan_out_target_task_s": None,
+    "fan_out_min_task_s": 0.03,
+    "postings_mode": "auto",
+}
 
 
-@pytest.mark.parametrize("mode", ["groupby", "bogus"])
+@pytest.mark.parametrize("mode", ["groupby", "bogus", "fused", "auto"])
 def test_unknown_postings_mode_raises(spark, mode):
-    """Only auto/fused/fused_tf exist; any other mode fails at construction,
-    before a build could run one plan while meta.json names another."""
+    """fused_tf is the one build plan; any other mode, the retired fused and
+    auto included, fails at construction."""
     with pytest.raises(ValueError, match="postings_mode"):
         BM25IndexBuilder(spark, EngineConfig(postings_mode=mode))
 
 
 def test_index_with_retired_config_keys_opens_and_searches(spark, tmp_path):
     """meta.json of an index written before the kernel-rate fan-out
-    threshold was retired carries two config keys EngineConfig no longer
-    has: the index still opens, and serves the same hits."""
+    threshold and the build-plan choice were retired carries config keys a
+    build no longer records: the index still opens, serves the same hits,
+    and compacts."""
     path = str(tmp_path / "i")
     idx = BM25IndexBuilder(spark, EngineConfig(num_term_buckets=4)).build(
         spark.createDataFrame(synth_webtext_pandas(n_docs=60, seed=5)),
@@ -50,7 +58,12 @@ def test_index_with_retired_config_keys_opens_and_searches(spark, tmp_path):
 
     old = BM25Index(spark, path)
     assert old.config() == idx.config()
+    # the config digest in the resume lineage predates the retirements:
+    # stage and bucket manifests of existing indexes stay valid
+    assert old.config().index_key() == "3d066a40791b33ae"
     assert key(BM25QueryEngine(old).search(queries, topn=7)) == want
+    compacted = BM25IndexBuilder(spark, EngineConfig()).compact(path)
+    assert key(BM25QueryEngine(compacted).search(queries, topn=7)) == want
 
 
 def _fail(*_args, **_kwargs):
@@ -148,8 +161,8 @@ def test_open_refuses_index_of_another_format_version(spark, tmp_path):
 def test_index_tables_are_zstd_after_build_merge_compact(spark, tmp_path):
     """Every parquet file of docs/, term_stats/ and blocks/ is zstd after a
     build, a merge and a compact (a write site that missed the codec would
-    leave snappy files behind), and build records its async writes' own
-    walls."""
+    leave snappy files behind), and build records its stage walls, its
+    async writes' own walls and the plan it ran."""
     import pyarrow.parquet as pq
 
     pdf = synth_webtext_pandas(n_docs=120, seed=8)
@@ -159,6 +172,8 @@ def test_index_tables_are_zstd_after_build_merge_compact(spark, tmp_path):
     # (the docs write runs async only for inputs read from files)
     assert "blocks-write" in idx.meta["write_wall_s"]
     assert set(idx.meta["write_wall_s"]) <= {"docs-write", "blocks-write"}
+    assert "docs" in idx.meta["stage_wall_s"]
+    assert idx.meta["resolved_postings_mode"] == "fused_tf"
     builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
     builder.compact(d)
     seen = set()
@@ -176,3 +191,64 @@ def test_index_tables_are_zstd_after_build_merge_compact(spark, tmp_path):
                 assert codecs <= {"ZSTD"}, (table, name, codecs)
                 seen.add(table)
     assert seen == {"docs", "term_stats", "blocks"}
+
+
+def _decoded_postings(idx):
+    """term -> sorted (doc_id, tf, doc_len) over every block of ``idx``,
+    each block's metadata checked against its decoded postings."""
+    out = defaultdict(list)
+    for r in idx.blocks().collect():
+        ids, tfs, dls = codec.decode_block(bytes(r["payload"]), r["n_postings"])
+        assert (r["min_doc"], r["max_doc"]) == (ids[0], ids[-1])
+        assert (r["tf_max"], r["tf_min"], r["tf_sum"]) == (
+            tfs.max(), tfs.min(), tfs.sum()
+        )
+        assert (r["dl_max"], r["dl_min"]) == (dls.max(), dls.min())
+        out[r["term"]] += zip(ids.tolist(), tfs.tolist(), dls.tolist())
+    return {t: sorted(p) for t, p in out.items()}
+
+
+def _reference_postings(texts, stopwords):
+    """term -> (doc_id, tf, doc_len) of the reference's tokenization, doc
+    ids in list order."""
+    out = defaultdict(list)
+    for doc_id, text in enumerate(texts):
+        toks = tokenize_text(text, mode="corpus", stopwords=stopwords)
+        for term, tf in Counter(toks).items():
+            out[term].append((doc_id, tf, len(toks)))
+    return dict(out)
+
+
+def test_build_and_merge_blocks_decode_to_reference_postings(spark, tmp_path):
+    """Every posting a salted build writes, and every posting a merge
+    appends to it, decodes to the term frequency and document length the
+    reference's tokenization counts: duplicates of a term in a document
+    are one posting, and a document that tokenizes to nothing has none."""
+    pdf = (
+        synth_webtext_pandas(n_docs=120, seed=33)
+        .sort_values(["warc_ts", "url"])
+        .reset_index(drop=True)
+    )
+    base, extra = pdf.iloc[:80], pdf.iloc[80:]
+    cfg = EngineConfig(
+        stopwords=frozenset({"the"}),
+        block_size=16,
+        num_term_buckets=4,
+        salt_df_threshold=30,
+        num_salts=4,
+    )
+    builder = BM25IndexBuilder(spark, cfg)
+    d = str(tmp_path / "i")
+    idx = builder.build(spark.createDataFrame(base), d, input_desc="t")
+    assert idx.blocks().filter("salt > 0").count() > 0  # salting engaged
+    assert _decoded_postings(idx) == _reference_postings(
+        base["text"], cfg.stopwords
+    )
+
+    merged = builder.merge_new_docs(spark.createDataFrame(extra), d)
+    # the merge drops batch texts already in the corpus
+    kept = extra[~extra["text"].isin(set(base["text"]))]
+    assert len(kept) < len(extra)
+    texts = list(base["text"]) + list(kept["text"])
+    assert merged.n_docs == len(texts)
+    assert _decoded_postings(merged) == _reference_postings(texts, cfg.stopwords)

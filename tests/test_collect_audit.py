@@ -35,7 +35,8 @@ AUDIT = {
         1, "one aggregate row past the cap (the key-ordered idf sum of a "
            "single task)"),
     ("index/build.py", "BM25IndexBuilder._build_blocks", "collect"): (
-        1, "one metrics row per term bucket (num_term_buckets)"),
+        2, "one metrics row per term bucket (num_term_buckets); one "
+           "aggregate row (the token total of a fully resumed stage)"),
     ("query/engine.py", "BM25QueryEngine._lookup_stats", "collect"): (
         2, "whole term_stats only when meta vocab_size <= "
            "_DRIVER_STATS_MAX_VOCAB; else one row per distinct query term"),

@@ -112,9 +112,9 @@ def test_term_stats_match_oracle(built):
 
 
 def test_salting_applied_to_head_terms(built):
-    # fused build salts by per-term TOKEN count (>= df, so a superset of the
-    # df-threshold terms — salting is physical layout only); every term
-    # split across >1 salt range must be above the threshold in token count
+    # a build salts the terms whose df reaches the threshold (salting is
+    # physical layout only); every term split across >1 salt range must
+    # have at least that many tokens, since a term's token count is >= df
     index, oracle, _ = built
     import pyspark.sql.functions as F
 

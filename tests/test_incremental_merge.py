@@ -191,7 +191,7 @@ def test_merge_stats_collect_bounded_past_cap(spark, tmp_path, monkeypatch):
 
     def to_arrow(self):
         tbl = real_to_arrow(self)
-        if self.columns == ["term", "df", "tokens", "first_doc", "first_pos"]:
+        if self.columns == ["term", "df", "first_doc", "first_pos"]:
             stats_rows.append(tbl.num_rows)
         return tbl
 

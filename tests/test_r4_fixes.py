@@ -158,7 +158,7 @@ def test_minhash_xxhash64_rejects_unknown_fn(spark):
         dedup.minhash_wide(df, hash_fn="sha1")
 
 
-# ---------- map-side per-doc TF (postings_mode='fused_tf') ----------
+# ---------- map-side per-doc TF (_doc_tf_entries) ----------
 
 
 def test_doc_tf_entries_semantics(spark):
@@ -204,53 +204,9 @@ def test_doc_tf_entries_plan_sorts_once(spark):
     assert plan.count("array_sort") == 1
 
 
-def test_postings_mode_parity_bit_identical(spark, tmp_path):
-    """fused / fused_tf must produce BIT-IDENTICAL indexes:
-    same blocks (payload bytes included), same term_stats, same meta."""
-    from similarities_spark.config import EngineConfig
-    from similarities_spark.index.build import BM25IndexBuilder
-    from similarities_spark.sources.synth import synth_webtext_pandas
-
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=120, seed=33))
-    # low salt threshold so salting engages and both paths slice heavy
-    # terms into the same per-range segments
-    mk = lambda mode: EngineConfig(
-        num_term_buckets=4,
-        salt_df_threshold=30,
-        num_salts=4,
-        postings_mode=mode,
-    )
-    out = {}
-    for mode in ("fused", "fused_tf"):
-        idx = BM25IndexBuilder(spark, mk(mode)).build(
-            df, str(tmp_path / mode), input_desc="t"
-        )
-        blocks = sorted(
-            (
-                r["bucket"], r["term"], r["salt"], r["block_id"],
-                r["min_doc"], r["max_doc"], r["n_postings"],
-                r["tf_max"], r["tf_min"], r["dl_max"], r["dl_min"],
-                bytes(r["payload"]),
-            )
-            for r in idx.blocks().collect()
-        )
-        stats = sorted(
-            (r["term"], r["df"], r["idf"])
-            for r in idx.term_stats().collect()
-        )
-        out[mode] = (
-            blocks,
-            stats,
-            idx.n_docs,
-            idx.meta["total_tokens"],
-            idx.meta["avgdl"],
-        )
-    assert out["fused_tf"] == out["fused"]
-
-
 def test_fused_tf_incremental_merge_parity(spark, tmp_path):
-    """merge_new_docs under fused_tf must equal a fused full rebuild of
-    the concatenated corpus at the query surface."""
+    """merge_new_docs must equal a full rebuild of the concatenated corpus
+    at the query surface."""
     from similarities_spark.config import EngineConfig
     from similarities_spark.index.build import BM25IndexBuilder
     from similarities_spark.query.engine import BM25QueryEngine
@@ -264,7 +220,7 @@ def test_fused_tf_incremental_merge_parity(spark, tmp_path):
         .reset_index(drop=True)
     )
     base, extra = pdf.iloc[:80], pdf.iloc[80:]
-    cfg = EngineConfig(num_term_buckets=4, postings_mode="fused_tf")
+    cfg = EngineConfig(num_term_buckets=4)
     b = BM25IndexBuilder(spark, cfg)
     b.build(
         spark.createDataFrame(base), str(tmp_path / "inc"), input_desc="t"
@@ -279,9 +235,9 @@ def test_fused_tf_incremental_merge_parity(spark, tmp_path):
     extra_kept = extra[~extra["text"].isin(set(base["text"]))]
     full_pdf = pd.concat([base, extra_kept], ignore_index=True)
     assert len(full_pdf) >= 115  # split actually exercises a real merge
-    idx_full = BM25IndexBuilder(
-        spark, EngineConfig(num_term_buckets=4, postings_mode="fused")
-    ).build(spark.createDataFrame(full_pdf), str(tmp_path / "full"), input_desc="t")
+    idx_full = b.build(
+        spark.createDataFrame(full_pdf), str(tmp_path / "full"), input_desc="t"
+    )
 
     qdf = spark.createDataFrame(
         [(0, "data web w0003"), (1, "the of and")], "query_id long, text string"
@@ -293,51 +249,3 @@ def test_fused_tf_incremental_merge_parity(spark, tmp_path):
     got = key(BM25QueryEngine(idx).search_df(qdf, topn=8).collect())
     want = key(BM25QueryEngine(idx_full).search_df(qdf, topn=8).collect())
     assert got == want
-
-
-def test_auto_postings_mode_resolution():
-    """'auto' picks fused below the crossover, fused_tf at/above it;
-    explicit modes pass through untouched."""
-    from similarities_spark.config import EngineConfig
-
-    cfg = EngineConfig()
-    assert cfg.postings_mode == "auto"
-    assert cfg.resolved_postings_mode(cfg.auto_tf_docs - 1) == "fused"
-    assert cfg.resolved_postings_mode(cfg.auto_tf_docs) == "fused_tf"
-    import dataclasses
-
-    for m in ("fused", "fused_tf"):
-        c = dataclasses.replace(cfg, postings_mode=m)
-        assert c.resolved_postings_mode(1) == m
-        assert c.resolved_postings_mode(10**9) == m
-    # the mode family never splits the resume lineage
-    keys = {
-        dataclasses.replace(cfg, postings_mode=m).index_key()
-        for m in ("auto", "fused", "fused_tf")
-    }
-    assert len(keys) == 1
-
-
-def test_auto_mode_small_batch_uses_fused_plan(spark, tmp_path):
-    """Below the crossover an 'auto' build must run the raw-explode plan
-    (no array_sort run-length pass) — and still produce a queryable
-    index identical to an explicit fused build."""
-    from similarities_spark.config import EngineConfig
-    from similarities_spark.index.build import BM25IndexBuilder
-    from similarities_spark.sources.synth import synth_webtext_pandas
-
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=60, seed=9))
-    cfg = EngineConfig(num_term_buckets=4)
-    b = BM25IndexBuilder(spark, cfg)
-    tok, rows = b._tokenized_exploded(
-        df.selectExpr("monotonically_increasing_id() as doc_id", "text"),
-        mode=cfg.resolved_postings_mode(60),
-    )
-    tok.unpersist()
-    assert "tf" not in rows.columns  # raw explode, not run-length entries
-    tok, rows_big = b._tokenized_exploded(
-        df.selectExpr("monotonically_increasing_id() as doc_id", "text"),
-        mode=cfg.resolved_postings_mode(10**6),
-    )
-    tok.unpersist()
-    assert "tf" in rows_big.columns

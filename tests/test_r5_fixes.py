@@ -1,5 +1,5 @@
-"""Round-5 fixes: auto fan-out does not invert at demo scale, resolved
-postings mode in meta.json, mandatory LSH dim."""
+"""Round-5 fixes: auto fan-out does not invert at demo scale, mandatory
+LSH dim."""
 
 import dataclasses
 
@@ -72,28 +72,6 @@ def test_fan_out_engages_above_floored_threshold(spark, tmp_path):
         map(tuple, eng_off.search_df(qdf, topn=10, fan_out=0).collect())
     )
     assert rows == off
-
-
-# ---------- resolved postings mode is named in meta.json ----------
-
-
-def test_meta_records_resolved_postings_mode(spark, tmp_path):
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=30, seed=2))
-    # auto at 30 docs resolves to fused (below auto_tf_docs)
-    idx = _build(spark, df, tmp_path / "a", EngineConfig(num_term_buckets=4))
-    assert idx.meta["resolved_postings_mode"] == "fused"
-    assert idx.meta["config"]["postings_mode"] == "auto"
-    # forcing the threshold under the batch size flips the resolution
-    idx2 = _build(
-        spark,
-        df,
-        tmp_path / "b",
-        EngineConfig(num_term_buckets=4, auto_tf_docs=10),
-    )
-    assert idx2.meta["resolved_postings_mode"] == "fused_tf"
-    # stage walls persist alongside it (bench surfaces both)
-    assert isinstance(idx.meta["stage_wall_s"], dict)
-    assert "docs" in idx.meta["stage_wall_s"]
 
 
 # ---------- LSH dim is mandatory ----------

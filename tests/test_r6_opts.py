@@ -65,16 +65,14 @@ def test_encoder_segments_spanning_arrow_batches(spark):
     from similarities_spark.index.build import _encode_blocks_df
 
     cfg = EngineConfig(block_size=16)
-    rows = []
-    # two fat segments + small ones; fused mode (no tf column):
-    # duplicates of (term, doc) are run-length counted
-    for t, n in (("aaa", 150), ("bbb", 90), ("c", 3)):
-        for d in range(n):
-            rows.append((t, 0, d, 10 + (d % 5)))
-            if d % 3 == 0:
-                rows.append((t, 0, d, 10 + (d % 5)))  # tf=2 rows
+    # two fat segments + small ones, one (term, doc, tf) row per posting
+    rows = [
+        (t, 0, d, 10 + (d % 5), 2 if d % 3 == 0 else 1)
+        for t, n in (("aaa", 150), ("bbb", 90), ("c", 3))
+        for d in range(n)
+    ]
     src = spark.createDataFrame(
-        rows, "term string, salt int, doc_id long, doc_len long"
+        rows, "term string, salt int, doc_id long, doc_len long, tf long"
     )
 
     def blocks_set(batch_rows):

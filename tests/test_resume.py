@@ -75,6 +75,30 @@ def test_resume_after_partial_blocks_stage(spark, tmp_path):
     ) == sorted([(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in h2])
 
 
+def test_resume_after_blocks_stage_recomputes_stats(spark, tmp_path):
+    """A build that wrote every bucket group but died before its stats
+    manifest: the resume runs no encode, and the stats it recomputes (the
+    token total read from the blocks on disk) equal a clean build's."""
+    df = spark.createDataFrame(synth_webtext_pandas(n_docs=120, seed=11))
+    builder = BM25IndexBuilder(spark, CFG)
+    clean = builder.build(df, str(tmp_path / "clean"), input_desc="r")
+
+    d = str(tmp_path / "crashed")
+    builder.build(df, d, input_desc="r")
+    ckpt = os.path.join(d, "manifests")
+    os.remove(os.path.join(ckpt, "stage-term_stats.json"))
+    os.remove(os.path.join(d, "meta.json"))
+    resumed = builder.build(df, d, input_desc="r", resume=True)
+
+    assert "blocks_write" not in resumed.meta["stage_wall_s"]  # no encode
+    for key in ("n_docs", "total_tokens", "avgdl", "vocab_size",
+                "average_idf", "n_postings"):
+        assert resumed.meta[key] == clean.meta[key], key
+    stats = lambda i: sorted(tuple(r) for r in i.term_stats().collect())
+    assert stats(resumed) == stats(clean)
+    assert _decoded_postings(resumed) == _decoded_postings(clean)
+
+
 def test_resume_rejects_stale_lineage(tmp_path):
     from similarities_spark.plans.manifest import write_manifest
 
