@@ -3,6 +3,8 @@ paths and greps for the properties that matter at 100 TB:
 
 - blocks scan partition-pruned / filtered to query-term buckets
 - broadcast join of query terms into the index scan (no index shuffle)
+- the Spark tail's query markers and query stats are LocalTableScans:
+  no pickled-row RDD or Python scan below the scorer
 - a search that fits one scorer task returns a LocalTableScan (scored
   in-process, no Exchange)
 - the search_join_df plan caches nothing and, unsharded, has no Window
@@ -98,6 +100,7 @@ def main():
         _encode_salted,
         _term_firsts,
     )
+    from similarities_spark.localdf import literal_df
 
     builder = BM25IndexBuilder(spark, idx.config())
     tok_df, exploded = builder._tokenized_exploded(idx.docs())
@@ -105,7 +108,7 @@ def main():
     # side plan feeding the SAME BroadcastExchange — substituting a literal
     # isolates the postings-row path so the check below counts only the
     # exchanges the posting rows themselves travel through
-    heavy = spark.createDataFrame([("the", True)], "term string, _heavy boolean")
+    heavy = literal_df(spark, [("the", True)], "term string, _heavy boolean")
     per_salt = builder.cfg.salt_bounds(idx.n_docs)
     enc = _encode_salted(exploded, heavy, per_salt, builder.cfg)
     engine_build_plan = grab_plan(enc)
@@ -163,6 +166,18 @@ def main():
     qp = sections[0][1]
     checks.append(("query path broadcasts query terms (no index shuffle)",
                    "BroadcastHashJoin" in qp or "BroadcastExchange" in qp))
+    # the driver row sets of the Spark tail (query markers, broadcast query
+    # stats) cross into the JVM as Arrow LocalRelations: no RDD of pickled
+    # rows and no Python evaluation below the scorer
+    below = stable_plan(qp, idx.index_dir).split("== Physical Plan ==")[-1]
+    below = below.split("FlatMapGroupsInPandas", 1)[-1]
+    checks.append(
+        ("query path markers and query stats are LocalTableScans "
+         "(no ExistingRDD or Python scan below the scorer)",
+         "LocalTableScan [query_id, tokens, token_dfs" in below
+         and "LocalTableScan [query_id, term, df, idf]" in below
+         and "ExistingRDD" not in below and "Python" not in below)
+    )
     bp = sections[1][1]
     checks.append(("term filter pushed to blocks parquet scan",
                    "PushedFilters: [IsNotNull(term), EqualTo(term,dup)]" in bp

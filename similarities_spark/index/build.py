@@ -490,8 +490,8 @@ def _dense_doc_ids(run: BuildRun, pages: DataFrame, sort_partitions: int):
     # tiny (pid, offset) table joined broadcast — NOT an F.create_map plan
     # literal, which at 10^5+ input partitions would bloat every plan that
     # references doc_id. The broadcast join is narrow on the streamed side.
-    # literal_df: a JVM LocalRelation, so the broadcast build launches no
-    # Python tasks.
+    # literal_df: the offsets cross into the JVM as Arrow and plan as a
+    # LocalRelation, so the broadcast build launches no Python tasks.
     spark = pages.sparkSession
     offsets_df = literal_df(spark, offsets, "_pid int, _offset long")
     out = (
@@ -1312,13 +1312,12 @@ class BM25IndexBuilder:
         return tokenized, _doc_tf_entries(tokenized)
 
     def _collect_heavy(self, heavy: DataFrame) -> DataFrame:
-        """Materialize the salt list on the driver (thousands of rows even at
-        webtext scale — df >= threshold bounds its size at total_tokens /
-        threshold) and return it as a literal DF (JVM LocalRelation — the
-        broadcast build launches no Python tasks and never re-runs the
-        detection plan)."""
-        rows = [(r["term"], True) for r in heavy.collect()]
-        return literal_df(self.spark, rows, "term string, _heavy boolean")
+        """Materialize the salt list (term, _heavy) on the driver as Arrow
+        (thousands of rows even at webtext scale — df >= threshold bounds
+        its size at total_tokens / threshold) and hand it back to Spark as
+        a LocalRelation: the broadcast build launches no Python tasks and
+        never re-runs the detection plan."""
+        return self.spark.createDataFrame(heavy.toArrow())
 
     def _build_docs(
         self, run: BuildRun, webtext: DataFrame, docs_path: str, input_desc: str
@@ -1445,8 +1444,8 @@ class BM25IndexBuilder:
         average_idf = g["idf_sum"] / vocab_size if vocab_size else 0.0
         eps = self.cfg.epsilon * average_idf
         if tbl is not None:
-            # an Arrow-backed frame: a VALUES literal of this many rows
-            # would cost seconds of SQL parsing
+            # the stats table crosses back into the JVM as Arrow, the same
+            # boundary as every driver row set (localdf.literal_df)
             stats = self.spark.createDataFrame(
                 pa.table(
                     {

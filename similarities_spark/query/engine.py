@@ -53,6 +53,7 @@ from typing import Dict, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,6 +87,16 @@ _BLOCK_COLS = (
 _DRIVER_POSTINGS_PER_S = 1.0e6
 _TASK_POSTINGS_PER_S = 0.4e6
 _SPARK_TAIL_EXTRA_S = 1.2
+
+
+def _stats_dict(tbl: pa.Table) -> Dict[str, tuple]:
+    """term -> (df, idf) from a ``term_stats`` read collected as Arrow."""
+    return dict(
+        zip(
+            tbl.column("term").to_pylist(),
+            zip(tbl.column("df").to_pylist(), tbl.column("idf").to_pylist()),
+        )
+    )
 
 
 class BM25QueryEngine:
@@ -124,19 +135,15 @@ class BM25QueryEngine:
         vocab = int(self.index.meta.get("vocab_size") or (cap + 1))
         if vocab <= cap:
             if self._stats_snapshot is None:
-                self._stats_snapshot = {
-                    r["term"]: (int(r["df"]), float(r["idf"]))
-                    for r in self._stats_df.collect()
-                }
+                self._stats_snapshot = _stats_dict(self._stats_df.toArrow())
             return {
                 t: self._stats_snapshot[t]
                 for t in terms
                 if t in self._stats_snapshot
             }
-        return {
-            r["term"]: (int(r["df"]), float(r["idf"]))
-            for r in self._stats_df.filter(F.col("term").isin(terms)).collect()
-        }
+        return _stats_dict(
+            self._stats_df.filter(F.col("term").isin(terms)).toArrow()
+        )
 
     def search(
         self,
@@ -214,10 +221,11 @@ class BM25QueryEngine:
         pairs. Looks up the batch's df/idf, sums its candidate volume and
         picks the tail: in-process scoring when no ``fan_out`` is forced
         and the whole batch fits one scorer task, else the Spark tail. On
-        the Spark tail everything query-sized is a JVM LocalRelation
-        (_literal_df): the query markers and the broadcast df/idf stats
-        side, so the only Python stage in the physical plan is the scorer
-        kernel itself."""
+        the Spark tail everything query-sized crosses into the JVM as Arrow
+        and plans as a LocalRelation (_literal_df): the query markers and
+        the broadcast df/idf stats side, so the only Python stage in the
+        physical plan is the scorer kernel itself. The driver tail's hits
+        take the same boundary."""
         cfg = self.cfg
         tokens_by_q: Dict[int, list] = {}
         for q, toks in tok_lists:
@@ -247,10 +255,18 @@ class BM25QueryEngine:
         if fan_out is None:
             fan_out = self._auto_fan_out(max(per_q, default=0))
         self._record_search("spark", candidates, fan_out)
+        # a marker carries only the query's in-index tokens (in order, with
+        # duplicates): the kernel skips the others in every sum, and only
+        # index terms, read back from UTF-8 parquet, are sure to cross the
+        # Arrow boundary (a query may hold a lone surrogate)
         markers = _literal_df(
             self.spark,
             [
-                (q, tokens_by_q[q], token_dfs_by_q.get(q))
+                (
+                    q,
+                    [t for t in tokens_by_q[q] if t in stat_map],
+                    token_dfs_by_q.get(q),
+                )
                 for q in sorted(tokens_by_q)
             ],
             _MARKER_DDL,

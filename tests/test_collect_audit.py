@@ -26,7 +26,7 @@ AUDIT = {
         1, "one aggregate row (count, xor)"),
     ("index/build.py", "_dense_doc_ids", "collect"): (
         1, "one row per sort partition (at most defaultParallelism)"),
-    ("index/build.py", "BM25IndexBuilder._collect_heavy", "collect"): (
+    ("index/build.py", "BM25IndexBuilder._collect_heavy", "toArrow"): (
         1, "salt list: terms with df >= salt_df_threshold, at most "
            "total_tokens / salt_df_threshold"),
     ("index/build.py", "BM25IndexBuilder._write_term_stats", "toArrow"): (
@@ -37,7 +37,7 @@ AUDIT = {
     ("index/build.py", "BM25IndexBuilder._build_blocks", "collect"): (
         2, "one metrics row per term bucket (num_term_buckets); one "
            "aggregate row (the token total of a fully resumed stage)"),
-    ("query/engine.py", "BM25QueryEngine._lookup_stats", "collect"): (
+    ("query/engine.py", "BM25QueryEngine._lookup_stats", "toArrow"): (
         2, "whole term_stats only when meta vocab_size <= "
            "_DRIVER_STATS_MAX_VOCAB; else one row per distinct query term"),
     ("query/engine.py", "BM25QueryEngine.search_df", "collect"): (

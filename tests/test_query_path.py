@@ -177,6 +177,32 @@ def test_driver_tail_matches_spark_tail_on_large_batch(
     assert len(d) == 10 * len(queries)
 
 
+def test_lone_surrogate_query_same_hits_on_every_tail(
+    spark, tmp_path, spark_tail
+):
+    """A query string holding a lone surrogate tokenizes to a token no
+    UTF-8 index can hold. Every tail ranks it as out-of-vocabulary: the
+    Spark tail's markers carry only in-index tokens across the Arrow
+    boundary, which cannot encode a lone surrogate."""
+    pdf = synth_webtext_pandas(n_docs=60, seed=5)
+    idx = BM25IndexBuilder(spark, CFG).build(
+        spark.createDataFrame(pdf), str(tmp_path / "sur"), input_desc="sur"
+    )
+    queries = ["web data \ud800x", "the of \udcff and"]
+    drv = BM25QueryEngine(idx)
+    d = _rows(drv.search(queries, topn=10))
+    assert drv.last_search["path"] == "driver"
+    spk = spark_tail(BM25QueryEngine(idx))
+    s = _rows(spk.search(queries, topn=10))
+    assert spk.last_search["path"] == "spark"
+    qdf = spark.createDataFrame(
+        list(enumerate(queries)), "query_id long, text string"
+    )
+    fan = _rows(BM25QueryEngine(idx).search_df(qdf, topn=10, fan_out=2))
+    assert d == s == fan
+    assert len(d) == 10 * len(queries)
+
+
 def test_threshold_boundary_switches_tail(spark, index):
     """At the threshold the batch runs in-process; one posting above it the
     distributed tail runs (without fan-out: each query alone still fits)

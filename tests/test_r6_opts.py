@@ -1,7 +1,9 @@
 """Focused tests for round-6 optimization internals.
 
-- literal_df: LocalRelation round-trip fidelity (exotic strings, NULLs,
-  bit-exact doubles) and the large-row-set fallback.
+- literal_df: the one Arrow boundary for driver row sets. Exotic strings,
+  NULLs, lists, maps and bit-exact doubles (non-finite ones included)
+  round-trip into a LocalRelation of the declared schema, at any row count
+  (20,001 rows collect with no Spark job).
 - _encode_blocks_df: the streaming partition kernel must cut segments
   identically when a (term, salt) group spans multiple Arrow batches.
 - spread_small_input: no-op for well-partitioned inputs.
@@ -16,8 +18,14 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from similarities_spark.localdf import literal_df
+
+
+def _local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().getClass().getName()
+    return "LocalRelation" in plan
 
 
 def test_literal_df_roundtrip_exotic_values(spark):
@@ -30,31 +38,48 @@ def test_literal_df_roundtrip_exotic_values(spark):
          {"中文": 7, "τοκεν": 0}),
         (5, None, None, None, None),  # null list, null map
         (6, "", float("1.7976931348623157e308"), ["", "a'b"], {"": -1}),
+        (7, "subnormal", 5e-324, ["z"], {"z": 1}),
+        (8, "inf", float("inf"), [], {}),
+        (9, "-inf", float("-inf"), [], {}),
     ]
-    df = literal_df(
-        spark, rows,
+    nan_row = (10, "nan", float("nan"), ["n"], {"n": 2})
+    ddl = (
         "id long, s string, x double, toks array<string>, "
-        "dfs map<string,bigint>",
+        "dfs map<string,bigint>"
     )
+    df = literal_df(spark, rows + [nan_row], ddl)
+    assert df.schema == _parse_datatype_string(ddl)
     got = sorted(
         (r["id"], r["s"], r["x"], r["toks"], r["dfs"]) for r in df.collect()
     )
+    # nan != nan: compare its row apart
+    (nid, ns, nx, ntoks, ndfs), got = got[-1], got[:-1]
+    assert (nid, ns, ntoks, ndfs) == (10, "nan", ["n"], {"n": 2})
+    assert math.isnan(nx)
     assert got == sorted(rows)
-    # doubles must round-trip BIT-exactly (repr -> SQL parse -> double)
+    # doubles must round-trip BIT-exactly, the sign of zero included
     for (_, _, want, _, _), (_, _, have, _, _) in zip(sorted(rows), got):
         if want is not None:
             assert have == want and math.copysign(1, have) == math.copysign(1, want)
     # it must be a JVM LocalRelation (no Python eval at scan time)
-    plan = df._jdf.queryExecution().optimizedPlan().getClass().getName()
-    assert "LocalRelation" in plan
+    assert _local_relation(df)
 
 
 def test_literal_df_large_fallback(spark):
-    from similarities_spark.localdf import _MAX_VALUES_ROWS
-
-    rows = [(i, f"t{i}") for i in range(_MAX_VALUES_ROWS + 1)]
+    """A large row set (20,001 rows) takes the same path as a small one:
+    it is a LocalRelation, and collecting it runs no Spark job."""
+    rows = [(i, f"t{i}") for i in range(20_001)]
     df = literal_df(spark, rows, "id long, s string")
-    assert df.count() == len(rows)
+    assert _local_relation(df)
+    sc = spark.sparkContext
+    sc.setJobGroup("literal-df-large", "literal-df-large")
+    try:
+        got = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("literal-df-large") == []
+    assert [(r["id"], r["s"]) for r in got] == rows
 
 
 def test_encoder_segments_spanning_arrow_batches(spark):
