@@ -361,7 +361,10 @@ class BM25Index:
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
-        self.index_dir = index_dir
+        # absolute: a relative dir would resolve against the Python process's
+        # working dir for open()/os.* and the driver's pyarrow reads, but
+        # against the JVM's for Spark reads
+        self.index_dir = os.path.abspath(index_dir)
         # roll forward any increment that committed (COMMIT.json written)
         # but crashed before finishing its renames — opening an index always
         # observes a consistent state; likewise any mid-swap compaction

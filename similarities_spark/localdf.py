@@ -18,18 +18,27 @@ hold one, since they were read back from UTF-8 parquet.
 
 from __future__ import annotations
 
+import functools
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 
+@functools.lru_cache(maxsize=64)
+def _arrow_schema(schema_ddl: str) -> pa.Schema:
+    """The Arrow schema of a DDL string, parsed by Spark's own parser (JVM
+    round trips) and mapped to Arrow types by PySpark's own mapping; once
+    per DDL string, as callers pass a handful of constant ones."""
+    return to_arrow_schema(_parse_datatype_string(schema_ddl))
+
+
 def literal_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     """``rows`` (tuples in ``schema_ddl`` column order, e.g.
     ``"query_id long, tokens array<string>"``) -> a LocalRelation
-    DataFrame of exactly that schema. The DDL is parsed by Spark's own
-    parser and mapped to Arrow types by PySpark's own mapping."""
-    schema = to_arrow_schema(_parse_datatype_string(schema_ddl))
+    DataFrame of exactly that schema."""
+    schema = _arrow_schema(schema_ddl)
     columns = list(zip(*rows)) or [()] * len(schema)
     return spark.createDataFrame(
         pa.table(

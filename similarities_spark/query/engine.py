@@ -8,9 +8,10 @@ scores), through one of two tails.
 
   queries -> tokenized in driver Python (query mode: NO stopword filter,
              duplicates kept, reference literal_similarity.py:434)
-    -> per-term df/idf from term_stats (driver snapshot for vocabs up to
-       the 20k stats cap, else one term-IN-pruned stats scan); terms absent
-       from the index carry no blocks and drop out here
+    -> per-term df/idf from term_stats, read with pyarrow.dataset (driver
+       snapshot for vocabs up to the 20k stats cap, else one term-IN
+       filtered read); terms absent from the index carry no blocks and drop
+       out here
     -> candidate volume: sum of df over each query's in-index terms, summed
        over the batch — known before any block is read
     -> GATE: no explicit ``fan_out``, batch volume <= cfg.fan_out_threshold
@@ -18,11 +19,12 @@ scores), through one of two tails.
        driver is predicted to finish before the Spark tail would with the
        cluster's parallelism (_score_in_process)?
 
-  driver tail (gate passed) — ONE Spark job (plus the stats scan past the
-  cap):
-    blocks scan: bucket IN (term buckets) -> parquet PARTITION pruning,
-                 term IN (terms) -> row-group min/max pruning
-    -> collected as Arrow (bounded: at most the threshold's postings)
+  driver tail (gate passed) — ZERO Spark jobs, the stats lookup past the
+  cap included:
+    blocks read with pyarrow.dataset in the driver: bucket IN (term
+                 buckets) -> hive PARTITION pruning, term IN (terms) ->
+                 row filter over the pruned files
+    -> an Arrow table (bounded: at most the threshold's postings)
     -> scorer.top_k per query, in driver Python
     -> hits as a LocalRelation (no Exchange)
 
@@ -43,19 +45,24 @@ only index partitions/row-groups holding query terms are ever READ; the big
 index never moves, and nothing is cached. Zero-score padding (reference
 literal_similarity.py:437-440) ranks unmatched low doc ids after the
 matches; results are bit-identical across tails and fan-outs. Each search
-records which tail ran in ``engine.last_search``.
+records which tail ran, and the wall of each of its stages, in
+``engine.last_search``.
 """
 
 from __future__ import annotations
 
 import functools
+import os
+import time
 from typing import Dict, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from similarities_spark.index import build as _build
 from similarities_spark.index.build import BM25Index
@@ -83,20 +90,46 @@ _BLOCK_COLS = (
 # driver tail before any posting is scored (its jobs and shuffles; measured
 # while that tail still ran a separate pad/rank stage). Measured
 # crossovers: about 3.5M postings on 4 cores (the model below predicts
-# 3.2M), none up to 5.7M on 2 cores (the model predicts none).
+# 3.2M), none up to 5.7M on 2 cores (the model predicts none). The driver
+# rate was measured while the driver tail still read its blocks with a
+# Spark job; it now reads them with pyarrow.dataset, so the driver tail is
+# somewhat faster than this model assumes.
 _DRIVER_POSTINGS_PER_S = 1.0e6
 _TASK_POSTINGS_PER_S = 0.4e6
 _SPARK_TAIL_EXTRA_S = 1.2
 
 
 def _stats_dict(tbl: pa.Table) -> Dict[str, tuple]:
-    """term -> (df, idf) from a ``term_stats`` read collected as Arrow."""
+    """term -> (df, idf) from a ``term_stats`` read as Arrow."""
     return dict(
         zip(
             tbl.column("term").to_pylist(),
             zip(tbl.column("df").to_pylist(), tbl.column("idf").to_pylist()),
         )
     )
+
+
+def _encodes_utf8(term: str) -> bool:
+    try:
+        term.encode("utf-8")
+    except UnicodeEncodeError:
+        return False
+    return True
+
+
+class _Walls:
+    """Per-stage walls of one search call. Each ``mark(stage)`` closes the
+    stage that ran since the previous mark, so the walls are contiguous and
+    sum to the time from the first clock to the last mark."""
+
+    def __init__(self):
+        self.stage_s: Dict[str, float] = {}
+        self._t = time.perf_counter()
+
+    def mark(self, stage: str) -> None:
+        now = time.perf_counter()
+        self.stage_s[stage] = now - self._t
+        self._t = now
 
 
 class BM25QueryEngine:
@@ -110,39 +143,60 @@ class BM25QueryEngine:
         self.last_fan_out: Optional[int] = None
         # per-search record (every search surface, see _record_search):
         # path ("driver" | "spark"), candidate_postings (the batch volume
-        # the gate compared), blocks_read (driver path only) and fan_out
+        # the gate compared), blocks_read (driver path only), fan_out and
+        # stage_s (the wall of each stage of the call)
         self.last_search: Optional[dict] = None
-        # DataFrame HANDLES (not data) to the index tables, created once:
-        # spark.read.parquet lists files eagerly on the driver, so a fresh
-        # blocks()/term_stats() per batch re-paid the listing every search.
-        # The engine binds to the index state at construction — consistent
-        # with BM25Index.meta, which is read once at open.
+        # HANDLES (not data) to the index tables, created once: the Spark
+        # tail's DataFrames (spark.read.parquet lists files eagerly on the
+        # driver) and the driver tail's pyarrow datasets (discovered once
+        # here), so no search re-pays a listing. Both pin the files present
+        # at construction — consistent with BM25Index.meta, which is read
+        # once at open. The index dir is a local path (BM25Index opens its
+        # meta.json with open()), read here with the Spark read schemas.
         self._blocks_df = index.blocks()
         self._stats_df = index.term_stats()
+        self._blocks_ds = ds.dataset(
+            os.path.join(index.index_dir, "blocks"),
+            schema=to_arrow_schema(_build._BLOCKS_READ_SCHEMA),
+            format="parquet",
+            partitioning=ds.partitioning(
+                pa.schema([("bucket", pa.int32())]), flavor="hive"
+            ),
+        )
+        self._stats_ds = ds.dataset(
+            os.path.join(index.index_dir, "term_stats"),
+            schema=to_arrow_schema(_build._STATS_READ_SCHEMA),
+            format="parquet",
+        )
         # vocab-capped driver snapshot of term_stats, loaded lazily at the
         # first search: the per-batch df/idf lookup then costs a dict probe
-        # instead of a Spark job. Gated on the EXACT vocab size from meta
-        # (the builder's driver stats-tail cap) — a web-scale
-        # vocab never loads; values come from the same parquet bytes, so
-        # scores are unchanged.
+        # instead of a read. Gated on the EXACT vocab size from meta (the
+        # builder's driver stats-tail cap) — a web-scale vocab never loads;
+        # values come from the same parquet bytes, so scores are unchanged.
         self._stats_snapshot: Optional[dict] = None
 
     def _lookup_stats(self, terms) -> Dict[str, tuple]:
-        """df/idf for the given terms: from the vocab-capped driver
-        snapshot when the whole stats table is tiny (one load per engine,
-        then zero Spark jobs per batch), else a term-IN-pruned scan."""
+        """df/idf for the given terms, read in the driver with pyarrow (no
+        Spark job): from the vocab-capped driver snapshot when the whole
+        stats table is tiny (one read per engine, then a dict probe per
+        batch), else a term-IN filtered read of the batch's terms."""
         cap = _build._DRIVER_STATS_MAX_VOCAB
         vocab = int(self.index.meta.get("vocab_size") or (cap + 1))
         if vocab <= cap:
             if self._stats_snapshot is None:
-                self._stats_snapshot = _stats_dict(self._stats_df.toArrow())
+                self._stats_snapshot = _stats_dict(
+                    self._stats_ds.to_table(columns=["term", "df", "idf"])
+                )
             return {
                 t: self._stats_snapshot[t]
                 for t in terms
                 if t in self._stats_snapshot
             }
+        # a term UTF-8 cannot encode (a lone surrogate) is in no index, and
+        # no Arrow filter can hold it
+        terms = [t for t in terms if _encodes_utf8(t)]
         return _stats_dict(
-            self._stats_df.filter(F.col("term").isin(terms)).toArrow()
+            self._stats_ds.to_table(filter=ds.field("term").isin(terms))
         )
 
     def search(
@@ -158,6 +212,7 @@ class BM25QueryEngine:
         Queries are already driver-side values here, so they tokenize in
         driver Python directly (same tokenize_text the query UDF wraps) —
         no round-trip through a queries DataFrame just to collect it back."""
+        walls = _Walls()
         if isinstance(queries, str):
             queries = [queries]
         if isinstance(queries, (list, tuple)):
@@ -166,8 +221,10 @@ class BM25QueryEngine:
             (int(q), tokenize_text(text, mode="query"))
             for q, text in queries.items()
         ]
+        walls.mark("tokenize")
         return self._search_tokens(
-            tok_lists, topn=topn, include_text=include_text, fan_out=None
+            tok_lists, topn=topn, include_text=include_text, fan_out=None,
+            walls=walls,
         )
 
     def search_df(
@@ -198,7 +255,9 @@ class BM25QueryEngine:
         DataFrame action on queries; they are driver-adjacent by contract)
         and tokenized in driver Python with the very function the query
         UDF wraps (tokenize_text, mode='query' — bit-identical tokens) —
-        no Python-UDF tokenize job + explode + distinct shuffle per batch."""
+        no Python-UDF tokenize job + explode + distinct shuffle per batch.
+        Its ``tokenize`` stage wall includes that collect."""
+        walls = _Walls()
         qrows = queries_df.select(
             F.col("query_id").cast("long").alias("query_id"), "text"
         ).collect()
@@ -206,8 +265,10 @@ class BM25QueryEngine:
             (int(r["query_id"]), tokenize_text(r["text"], mode="query"))
             for r in qrows
         ]
+        walls.mark("tokenize")
         return self._search_tokens(
-            tok_lists, topn=topn, include_text=include_text, fan_out=fan_out
+            tok_lists, topn=topn, include_text=include_text, fan_out=fan_out,
+            walls=walls,
         )
 
     def _search_tokens(
@@ -216,6 +277,7 @@ class BM25QueryEngine:
         topn: int,
         include_text: bool,
         fan_out: Optional[int],
+        walls: _Walls,
     ) -> DataFrame:
         """Driver-adjacent scoring over pre-tokenized (query_id, tokens)
         pairs. Looks up the batch's df/idf, sums its candidate volume and
@@ -225,7 +287,10 @@ class BM25QueryEngine:
         and plans as a LocalRelation (_literal_df): the query markers and
         the broadcast df/idf stats side, so the only Python stage in the
         physical plan is the scorer kernel itself. The driver tail's hits
-        take the same boundary."""
+        take the same boundary. ``walls`` (its ``tokenize`` stage already
+        closed) records the stats stage (lookup, candidate volume and the
+        gate), then the driver tail's blocks, score and hits stages or the
+        Spark tail's plan build."""
         cfg = self.cfg
         tokens_by_q: Dict[int, list] = {}
         for q, toks in tok_lists:
@@ -246,15 +311,18 @@ class BM25QueryEngine:
         per_q = [sum(d.values()) for d in dfs_by_q.values()]
         candidates = sum(per_q)
         if fan_out is None and self._score_in_process(candidates):
+            walls.mark("stats")
             hits, blocks_read = self._search_in_process(
-                tokens_by_q, token_dfs_by_q, stat_map, topn
+                tokens_by_q, token_dfs_by_q, stat_map, topn, walls
             )
-            self._record_search("driver", candidates, None, blocks_read)
+            self._record_search(
+                "driver", candidates, None, walls.stage_s, blocks_read
+            )
             return self._with_text(hits, include_text)
 
         if fan_out is None:
             fan_out = self._auto_fan_out(max(per_q, default=0))
-        self._record_search("spark", candidates, fan_out)
+        walls.mark("stats")
         # a marker carries only the query's in-index tokens (in order, with
         # duplicates): the kernel skips the others in every sum, and only
         # index terms, read back from UTF-8 parquet, are sure to cross the
@@ -284,17 +352,21 @@ class BM25QueryEngine:
             self._pruned_blocks(sorted(stat_map)), "term", "inner"
         )
         hits = self._spark_tail(markers, qblocks, int(topn), fan_out)
+        walls.mark("plan")
+        self._record_search("spark", candidates, fan_out, walls.stage_s)
         return self._with_text(hits, include_text)
 
     def _record_search(
-        self, path: str, candidates, fan_out, blocks_read=None
+        self, path: str, candidates, fan_out, stage_s, blocks_read=None
     ) -> None:
         """Observability (and test hook): the tail that ran, the candidate
-        volume, the block rows read in-process and the fan-out used."""
+        volume, the block rows read in-process, the fan-out used and the
+        wall of each stage of the call (seconds)."""
         self.last_fan_out = fan_out
         self.last_search = {
             "path": path, "candidate_postings": candidates,
             "blocks_read": blocks_read, "fan_out": fan_out,
+            "stage_s": stage_s,
         }
 
     def _auto_fan_out(self, max_cand: int) -> Optional[int]:
@@ -331,15 +403,29 @@ class BM25QueryEngine:
         (fuzz-gated parity, tests/test_r3_fixes.py), with no Spark job."""
         blocks = self._blocks_df
         if terms:
-            buckets = sorted(
-                {term_bucket(t, self.cfg.num_term_buckets) for t in terms}
-            )
-            blocks = blocks.filter(F.col("bucket").isin(buckets)).filter(
-                F.col("term").isin(terms)
-            )
+            blocks = blocks.filter(
+                F.col("bucket").isin(self._buckets(terms))
+            ).filter(F.col("term").isin(terms))
         else:
             blocks = blocks.filter(F.lit(False))
         return blocks.select(*_BLOCK_COLS)
+
+    def _read_blocks(self, terms) -> pa.Table:
+        """The driver tail's blocks read for ``terms``, with pyarrow.dataset
+        and no Spark job: bucket IN the terms' buckets prunes hive
+        partitions, term IN the terms filters rows. It returns the same
+        block rows as ``_pruned_blocks``, maybe in another order, which the
+        kernel's stable (term, salt, block_id) sort and once-per-doc
+        rescore make irrelevant to every score."""
+        return self._blocks_ds.to_table(
+            columns=list(_BLOCK_COLS),
+            filter=ds.field("bucket").isin(self._buckets(terms))
+            & ds.field("term").isin(terms),
+        )
+
+    def _buckets(self, terms) -> list:
+        """The blocks partitions (``bucket=`` values) holding ``terms``."""
+        return sorted({term_bucket(t, self.cfg.num_term_buckets) for t in terms})
 
     def _kernel(self, k: int):
         """``scorer.top_k`` bound to the index and the query config: the
@@ -358,21 +444,24 @@ class BM25QueryEngine:
         token_dfs_by_q: Dict[int, dict],
         stat_map: Dict[str, tuple],
         topn: int,
+        walls: _Walls,
     ):
-        """Driver tail over the batch's in-index terms (``stat_map``): ONE
-        pruned blocks read collected as Arrow (bounded by the gate: at most
-        ``cfg.fan_out_threshold`` postings), then the kernel per query in
-        driver Python. Returns (hits as a LocalRelation — collecting them
-        runs no Spark job, block rows read)."""
+        """Driver tail over the batch's in-index terms (``stat_map``), with
+        no Spark job: ONE pruned blocks read (``_read_blocks``; bounded by
+        the gate: at most ``cfg.fan_out_threshold`` postings), then the
+        kernel per query in driver Python. Returns (hits as a LocalRelation
+        — collecting them runs no Spark job, block rows read); ``walls``
+        gets the blocks, score and hits stages."""
         kernel = self._kernel(int(topn))
         terms = sorted(stat_map)
         if terms:
-            pdf = self._pruned_blocks(terms).toArrow().to_pandas()
+            pdf = self._read_blocks(terms).to_pandas()
         else:  # nothing in the index to read: every query pads from 0.0
             pdf = pd.DataFrame({"term": pd.Series([], dtype=object)})
         pdf["df"] = np.array([stat_map[t][0] for t in pdf["term"]], np.int64)
         pdf["idf"] = np.array([stat_map[t][1] for t in pdf["term"]], np.float64)
         rows_of = pdf.groupby("term", sort=False).indices
+        walls.mark("blocks")
 
         hits = []
         for q in sorted(tokens_by_q):
@@ -386,7 +475,10 @@ class BM25QueryEngine:
                 (q, r + 1, int(d), float(s))
                 for r, (d, s) in enumerate(zip(ids, scores))
             )
-        return _literal_df(self.spark, hits, _HITS_DDL), len(pdf)
+        walls.mark("score")
+        hits_df = _literal_df(self.spark, hits, _HITS_DDL)
+        walls.mark("hits")
+        return hits_df, len(pdf)
 
     def _with_text(self, hits: DataFrame, include_text: bool) -> DataFrame:
         """Optionally join each hit's corpus text as ``corpus_doc``."""
@@ -422,7 +514,9 @@ class BM25QueryEngine:
         - auto fan-out sizing needs one SCALAR agg job (max per-query
           candidate volume), not per-query driver rows.
         Both feed the same Spark tail as ``search_df``; results are
-        identical to it (parity-tested)."""
+        identical to it (parity-tested). Its stage walls are ``stats`` (the
+        stats join and the sizing job) and ``plan``."""
+        walls = _Walls()
         cfg = self.cfg
         tok_udf = make_tokenizer_udf("query")
         markers = queries_df.select(
@@ -466,8 +560,10 @@ class BM25QueryEngine:
             )
             candidates = int(row["s"] or 0)
             fan_out = self._auto_fan_out(int(row["m"] or 0))
-        self._record_search("spark", candidates, fan_out)
+        walls.mark("stats")
         hits = self._spark_tail(markers, qblocks, int(topn), fan_out)
+        walls.mark("plan")
+        self._record_search("spark", candidates, fan_out, walls.stage_s)
         return self._with_text(hits, include_text)
 
     def _spark_tail(

@@ -2,8 +2,9 @@
 makes it safe.
 
 Driver memory must stay bounded at any corpus size: a collect/toPandas/
-toArrow/toLocalIterator whose row count grows with the corpus or the vocab
-would fail at scale long after the tests pass. Each call site is keyed by
+toArrow/toLocalIterator, or a pyarrow ``to_table``/``read_table`` read of an
+index table into the driver, whose row count grows with the corpus or the
+vocab would fail at scale long after the tests pass. Each call site is keyed by
 (module, enclosing function, method) with its count; a new or moved site
 fails this test until it is listed with its bound, and a listed site that
 no longer exists fails it too, so the list stays the audit.
@@ -18,7 +19,10 @@ PKG = os.path.join(
     "similarities_spark",
 )
 
-ACTIONS = {"collect", "toPandas", "toArrow", "toLocalIterator"}
+ACTIONS = {
+    "collect", "toPandas", "toArrow", "toLocalIterator",
+    "to_table", "read_table",
+}
 
 # (module, function, method) -> (count, bound)
 AUDIT = {
@@ -37,14 +41,15 @@ AUDIT = {
     ("index/build.py", "BM25IndexBuilder._build_blocks", "collect"): (
         2, "one metrics row per term bucket (num_term_buckets); one "
            "aggregate row (the token total of a fully resumed stage)"),
-    ("query/engine.py", "BM25QueryEngine._lookup_stats", "toArrow"): (
+    ("query/engine.py", "BM25QueryEngine._lookup_stats", "to_table"): (
         2, "whole term_stats only when meta vocab_size <= "
            "_DRIVER_STATS_MAX_VOCAB; else one row per distinct query term"),
     ("query/engine.py", "BM25QueryEngine.search_df", "collect"): (
         1, "the caller's query rows (driver-adjacent by contract)"),
-    ("query/engine.py", "BM25QueryEngine._search_in_process", "toArrow"): (
-        1, "pruned blocks of a batch the in-process gate admitted: at most "
-           "fan_out_threshold candidate postings"),
+    ("query/engine.py", "BM25QueryEngine._read_blocks", "to_table"): (
+        1, "pruned blocks of a batch the in-process gate admitted (its one "
+           "caller is _search_in_process): at most fan_out_threshold "
+           "candidate postings"),
     ("query/engine.py", "BM25QueryEngine.search_join_df", "collect"): (
         1, "one aggregate row (max and sum of per-query candidate postings)"),
 }

@@ -10,6 +10,8 @@ elsewhere keep covering it through small thresholds.
 """
 
 import dataclasses
+import time
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -152,6 +154,60 @@ def test_driver_tail_on_merged_index(spark, tmp_path, both):
     assert d == s
 
 
+def test_driver_blocks_read_equals_spark_read_on_merged_index(
+    spark, tmp_path, monkeypatch, both
+):
+    """On an index of several segments per (term, salt), where block_id
+    restarts at 0 in each, the driver tail's pyarrow blocks read returns
+    the same rows, payload bytes included, as the Spark tail's pruned scan,
+    and both tails rank alike. An index opened through a relative path
+    searches the same."""
+    builder = BM25IndexBuilder(spark, CFG)
+    path = str(tmp_path / "m")
+    builder.build(
+        spark.createDataFrame(synth_webtext_pandas(n_docs=90, seed=21)),
+        path, input_desc="base",
+    )
+    for seed in (22, 23):
+        builder.merge_new_docs(
+            spark.createDataFrame(synth_webtext_pandas(n_docs=60, seed=seed)),
+            path,
+        )
+    idx = BM25Index(spark, path)
+    eng = BM25QueryEngine(idx)
+    vocab = sorted(r["term"] for r in idx.term_stats().collect())
+    terms = vocab[::7] + ["data", "in", "of", "web"]
+
+    def rows(tbl):
+        return Counter(tuple(r.values()) for r in tbl.to_pylist())
+
+    got = rows(eng._read_blocks(terms))
+    assert got == rows(eng._pruned_blocks(terms).toArrow())
+    keys = Counter(r[:3] for r in got.elements())
+    assert max(keys.values()) >= 3  # base + two merges share (term, salt, 0)
+    assert {r[0] for r in got} == set(terms)
+
+    d, s = both(idx, lambda e: e.search(QUERIES, topn=10))
+    assert d == s
+
+    monkeypatch.chdir(tmp_path)
+    rel = BM25QueryEngine(BM25Index(spark, "m"))
+    assert _rows(rel.search(QUERIES, topn=10)) == d
+    assert rel.last_search["path"] == "driver"
+
+
+def test_lone_surrogate_query_past_stats_cap(spark, index, monkeypatch):
+    """Past the stats snapshot cap the stats lookup filters the index by the
+    batch's terms; a lone-surrogate token, which no UTF-8 index holds,
+    drops out of that filter and ranks as out-of-vocabulary."""
+    queries = ["web data \ud800x", "\udcff"]
+    want = _rows(BM25QueryEngine(index).search(queries, topn=10))
+    monkeypatch.setattr(_build, "_DRIVER_STATS_MAX_VOCAB", 10)
+    eng = BM25QueryEngine(index)
+    assert _rows(eng.search(queries, topn=10)) == want
+    assert eng._stats_snapshot is None
+
+
 def test_driver_tail_matches_spark_tail_on_large_batch(
     spark, tmp_path, both
 ):
@@ -229,16 +285,29 @@ def test_threshold_boundary_switches_tail(spark, index):
     assert hits_above == hits_at
 
 
+DRIVER_STAGES = {"tokenize", "stats", "blocks", "score", "hits"}
+
+
+def _record(eng, stages):
+    """``eng.last_search`` without its stage walls, after checking that
+    they name ``stages``."""
+    rec = dict(eng.last_search)
+    stage_s = rec.pop("stage_s")
+    assert set(stage_s) == stages
+    assert all(w >= 0 for w in stage_s.values())
+    return rec
+
+
 def test_last_search_record(spark, index):
     eng = BM25QueryEngine(index)
     eng.search(["data web w0005"], topn=5).collect()
-    rec = eng.last_search
+    rec = _record(eng, DRIVER_STAGES)
     assert rec["path"] == "driver" and rec["fan_out"] is None
     assert rec["candidate_postings"] > 0 and rec["blocks_read"] > 0
     assert eng.last_fan_out is None
 
     eng.search(["zzzunknown"], topn=5).collect()
-    assert eng.last_search == {
+    assert _record(eng, DRIVER_STAGES) == {
         "path": "driver", "candidate_postings": 0, "blocks_read": 0,
         "fan_out": None,
     }
@@ -247,16 +316,31 @@ def test_last_search_record(spark, index):
         [(0, "data web w0005")], "query_id long, text string"
     )
     eng.search_df(qdf, topn=5, fan_out=2).collect()
-    assert eng.last_search["path"] == "spark"
-    assert eng.last_search["fan_out"] == 2 == eng.last_fan_out
-    assert eng.last_search["blocks_read"] is None
-    assert eng.last_search["candidate_postings"] == rec["candidate_postings"]
+    spark_rec = _record(eng, {"tokenize", "stats", "plan"})
+    assert spark_rec["path"] == "spark"
+    assert spark_rec["fan_out"] == 2 == eng.last_fan_out
+    assert spark_rec["blocks_read"] is None
+    assert spark_rec["candidate_postings"] == rec["candidate_postings"]
 
     eng.search_join_df(qdf, topn=5).collect()
-    assert eng.last_search == {
+    assert _record(eng, {"stats", "plan"}) == {
         "path": "spark", "candidate_postings": rec["candidate_postings"],
         "blocks_read": None, "fan_out": None,
     }
+
+
+def test_driver_tail_stage_walls_sum_to_the_call(spark, index):
+    """The driver tail's stage walls are contiguous: they add up to the
+    wall of the search() call but for a few ms of argument handling and
+    bookkeeping."""
+    eng = BM25QueryEngine(index)
+    for queries in (["data"], ["data web w0005", "of of in"], ["zzzunknown"]):
+        t0 = time.perf_counter()
+        eng.search(queries, topn=10)
+        wall = time.perf_counter() - t0
+        _record(eng, DRIVER_STAGES)
+        gap = wall - sum(eng.last_search["stage_s"].values())
+        assert 0 <= gap < 0.005, (queries, wall, eng.last_search)
 
 
 def test_gate_follows_cluster_parallelism(spark, index, monkeypatch):
@@ -291,22 +375,24 @@ def _jobs(spark, group, fn):
 
 
 def test_search_job_counts(spark, tmp_path, monkeypatch, spark_tail):
-    """Once the stats snapshot is loaded, a search that fits one scorer
-    task runs exactly one Spark job (the pruned blocks read); collecting
-    its hits runs none. The Spark tail scores and pads in one grouped
-    stage: three jobs for a search (two when no term is in the index),
-    eight for search_join_df, whose fan-out sizing adds its own."""
+    """A search that fits one scorer task runs no Spark job: its stats
+    lookup (the engine's first search loads the stats snapshot) and its
+    blocks read are pyarrow reads in the driver, and collecting its hits
+    runs none. The Spark tail scores and pads in one grouped stage: three
+    jobs for a search (two when no term is in the index), eight for
+    search_join_df, whose fan-out sizing adds its own."""
     pdf = synth_webtext_pandas(n_docs=150, seed=11, dup_fraction=0.05)
     index = BM25IndexBuilder(spark, CFG).build(
         spark.createDataFrame(pdf), str(tmp_path / "jobs"), input_desc="jobs"
     )
     eng = BM25QueryEngine(index)
-    eng.search(["data"], topn=10).collect()  # loads the stats snapshot
 
     def one(e, *queries):
         return lambda: e.search(list(queries), topn=10).collect()
 
-    assert _jobs(spark, "qpath-1q", one(eng, "data web w0005")) == 1
+    assert _jobs(spark, "qpath-first", one(eng, "data")) == 0
+    assert eng._stats_snapshot is not None
+    assert _jobs(spark, "qpath-1q", one(eng, "data web w0005")) == 0
     assert _jobs(spark, "qpath-oov", one(eng, "zzzunknown qqq")) == 0
 
     spk = spark_tail(BM25QueryEngine(index))
@@ -323,9 +409,11 @@ def test_search_job_counts(spark, tmp_path, monkeypatch, spark_tail):
         spark, "qpath-join", lambda: eng.search_join_df(qdf, topn=10).collect()
     ) == 8
 
-    # past the stats snapshot cap: one stats lookup plus the blocks read
+    # past the stats snapshot cap: the per-batch stats lookup is a pyarrow
+    # read too
     monkeypatch.setattr(_build, "_DRIVER_STATS_MAX_VOCAB", 10)
     big = BM25QueryEngine(index)
-    big.search(["data"], topn=10).collect()
-    assert _jobs(spark, "qpath-cap", one(big, "data web w0005")) == 2
+    assert _jobs(spark, "qpath-cap-first", one(big, "data")) == 0
+    assert _jobs(spark, "qpath-cap", one(big, "data web w0005")) == 0
+    assert big.last_search["path"] == "driver"
     assert big._stats_snapshot is None
