@@ -10,7 +10,7 @@ Usage:
 --merge   : incremental add_corpus — append --input/--synth docs to an
             EXISTING index (work ∝ batch; atomic staged commit).
 --compact : after build/merge, rebuild optimal segment layout (offline
-            Lucene-merge analog; crash-safe swap). Can also run alone
+            Lucene-merge analog; staged commit like --merge). Can also run alone
             with neither --input nor --synth.
 """
 

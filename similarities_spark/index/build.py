@@ -31,6 +31,11 @@ the tokenizer UDF and the Arrow block encoder):
     -> write parquet partitioned by bucket = xxhash64(term) % B,
        per-bucket checkpoint manifests (lineage + metrics) -> resumable
 
+merge_new_docs() and compact() share one commit path: outputs and next
+meta staged under _staging/<inc>/, an atomic COMMIT.json record, then
+idempotent renames that the next open re-applies after a crash
+(_commit_increment). Every JSON commit file goes through write_json.
+
 Stage state is passed explicitly: build(), merge_new_docs() and compact()
 each hold one BuildRun for the whole call — the caches it persisted, its
 async writes, its stage walls and the Spark job description of the running
@@ -50,6 +55,7 @@ Scale notes (the 1000-executor story):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 import os
@@ -79,7 +85,7 @@ from pyspark.storagelevel import StorageLevel
 from similarities_spark.config import EngineConfig
 from similarities_spark.index import codec
 from similarities_spark.localdf import literal_df
-from similarities_spark.plans.manifest import completed_buckets, write_manifest
+from similarities_spark.plans.manifest import completed_buckets, write_json, write_manifest
 from similarities_spark.sources.readers import extract_text
 from similarities_spark.tokenize import choose_corpus_tokenizer
 
@@ -268,8 +274,8 @@ def _input_fingerprint(webtext: DataFrame) -> dict:
 
 def _pending_increments(index_dir: str):
     """Fully-staged increments (COMMIT.json present) awaiting roll-forward,
-    oldest first. Staging dirs WITHOUT a commit record are aborted merges —
-    their data never reached the live index and is safe to discard."""
+    oldest first. Staging dirs WITHOUT a commit record are aborted merges
+    or compactions — their data never reached the live index."""
     root = _staging_root(index_dir)
     if not os.path.isdir(root):
         return []
@@ -278,6 +284,19 @@ def _pending_increments(index_dir: str):
         for name in sorted(os.listdir(root))
         if os.path.exists(os.path.join(root, name, "COMMIT.json"))
     ]
+
+
+def _new_staging(index_dir: str, n_docs: int) -> str:
+    """A fresh staging dir for a merge or compaction of an opened index of
+    ``n_docs`` docs (the open rolled committed ones forward), after
+    discarding aborted ones. n_docs is zero-padded: _pending_increments
+    sorts names, and "inc100-…" must not sort before "inc80-…"."""
+    root = _staging_root(index_dir)
+    for name in os.listdir(root) if os.path.isdir(root) else []:
+        aborted = os.path.join(root, name)
+        if not os.path.exists(os.path.join(aborted, "COMMIT.json")):
+            shutil.rmtree(aborted, ignore_errors=True)
+    return os.path.join(root, f"inc{n_docs:015d}-{uuid.uuid4().hex[:8]}")
 
 
 def _move_parquet_files(src_dir: str, dst_dir: str, prefix: str) -> None:
@@ -295,65 +314,75 @@ def _move_parquet_files(src_dir: str, dst_dir: str, prefix: str) -> None:
             os.replace(os.path.join(src_dir, name), dst)
 
 
+def _swap_dir(staged: str, live: str, inc_id: str) -> None:
+    """Replace the live dir ``live`` whole by ``staged``. Idempotent: the
+    replaced dir is parked at ``<live>.old-<inc_id>`` and removed last,
+    whether or not this call did the renames, so re-applying after a crash
+    at any point converges and leaks no copy."""
+    old = f"{live}.old-{inc_id}"
+    if os.path.isdir(staged):
+        if os.path.isdir(live):
+            os.rename(live, old)
+        os.rename(staged, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _apply_increment(index_dir: str, inc_dir: str) -> None:
     """Roll a fully-staged increment forward into the live index.
 
-    Every step is an idempotent rename (re-apply after a crash at ANY point
-    resumes where it left off); meta.json is the last write, so an index
-    whose meta reflects the increment has all its data live. This is the
-    commit half of the write-ahead design: merge_new_docs stages everything
-    under _staging/<inc>/ and writes COMMIT.json only once the staged data is
-    complete, so roll-forward never needs the source batch again."""
+    Every step is idempotent (re-apply after a crash at ANY point resumes
+    where it left off); meta.json is the last write, so an index whose
+    meta reflects the increment has all its data live. A merge's staged
+    docs and blocks files are moved in beside the live ones; a compaction
+    (its record carries ``replace_blocks``) swaps the live blocks dir whole.
+    term_stats is always swapped whole. This is the commit half of the
+    write-ahead design (_commit_increment), and the one place a merge or a
+    compaction deletes live index files."""
     inc_id = os.path.basename(inc_dir)
+    with open(os.path.join(inc_dir, "COMMIT.json"), "r", encoding="utf-8") as f:
+        record = json.load(f)
     _move_parquet_files(
         os.path.join(inc_dir, "docs"), os.path.join(index_dir, "docs"), inc_id
     )
     staged_blocks = os.path.join(inc_dir, "blocks")
-    if os.path.isdir(staged_blocks):
+    live_blocks = os.path.join(index_dir, "blocks")
+    if record.get("replace_blocks"):
+        _swap_dir(staged_blocks, live_blocks, inc_id)
+    elif os.path.isdir(staged_blocks):
         for part in os.listdir(staged_blocks):
             if part.startswith("bucket="):
                 _move_parquet_files(
                     os.path.join(staged_blocks, part),
-                    os.path.join(index_dir, "blocks", part),
+                    os.path.join(live_blocks, part),
                     inc_id,
                 )
-    staged_stats = os.path.join(inc_dir, "term_stats")
-    live_stats = os.path.join(index_dir, "term_stats")
-    if os.path.isdir(staged_stats):
-        old = f"{live_stats}.old-{inc_id}"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(live_stats):
-            os.rename(live_stats, old)
-        os.rename(staged_stats, live_stats)
-        shutil.rmtree(old, ignore_errors=True)
+    _swap_dir(os.path.join(inc_dir, "term_stats"),
+              os.path.join(index_dir, "term_stats"), inc_id)
     meta_next = os.path.join(inc_dir, "meta_next.json")
     if os.path.exists(meta_next):
-        tmp = os.path.join(index_dir, "meta.json.tmp")
-        shutil.copyfile(meta_next, tmp)
-        os.replace(tmp, os.path.join(index_dir, "meta.json"))
+        os.replace(meta_next, os.path.join(index_dir, "meta.json"))
     os.remove(os.path.join(inc_dir, "COMMIT.json"))
     shutil.rmtree(inc_dir, ignore_errors=True)
 
 
-def _finish_blocks_swap(index_dir: str) -> None:
-    """Complete (or roll forward after a crash) an atomic blocks-dir swap
-    recorded in blocks.swap.json — see BM25IndexBuilder.compact. Idempotent:
-    every step re-checks state, so re-running after a crash at ANY point
-    converges to the post-swap layout."""
-    marker = os.path.join(index_dir, "blocks.swap.json")
-    if not os.path.exists(marker):
-        return
-    with open(marker, "r", encoding="utf-8") as f:
-        swap = json.load(f)
-    live = os.path.join(index_dir, "blocks")
-    nxt = os.path.join(index_dir, swap["next"])
-    old = os.path.join(index_dir, swap["old"])
-    if os.path.isdir(nxt):
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(nxt, live)
-    os.remove(marker)
-    shutil.rmtree(old, ignore_errors=True)
+def _commit_increment(
+    index_dir: str, inc_dir: str, meta: dict, record: dict,
+    _fail_before_commit: bool = False, _fail_after_commit_record: bool = False,
+) -> None:
+    """Commit the increment staged under ``inc_dir`` — the one commit path
+    of merge_new_docs and compact. Stages ``meta`` as meta_next.json, then
+    writes the COMMIT.json ``record``: once it lands, the increment WILL be
+    applied (here, or by the next BM25Index open after a crash). The two
+    flags are test hooks simulating a crash on either side of the
+    record."""
+    write_json(os.path.join(inc_dir, "meta_next.json"), meta, indent=1)
+    if _fail_before_commit:
+        raise RuntimeError("test hook: crash before commit record")
+    record = {"inc_id": os.path.basename(inc_dir), **record}
+    write_json(os.path.join(inc_dir, "COMMIT.json"), record)
+    if _fail_after_commit_record:
+        raise RuntimeError("test hook: crash after commit record")
+    _apply_increment(index_dir, inc_dir)
 
 
 class BM25Index:
@@ -365,12 +394,11 @@ class BM25Index:
         # working dir for open()/os.* and the driver's pyarrow reads, but
         # against the JVM's for Spark reads
         self.index_dir = os.path.abspath(index_dir)
-        # roll forward any increment that committed (COMMIT.json written)
-        # but crashed before finishing its renames — opening an index always
-        # observes a consistent state; likewise any mid-swap compaction
+        # roll forward any merge or compaction that committed (COMMIT.json
+        # written) but crashed before finishing its renames — opening an
+        # index always observes a consistent state
         for inc in _pending_increments(index_dir):
             _apply_increment(index_dir, inc)
-        _finish_blocks_swap(index_dir)
         with open(os.path.join(index_dir, "meta.json"), "r", encoding="utf-8") as f:
             self.meta = json.load(f)
         version = self.meta.get("format_version", 3)
@@ -937,8 +965,7 @@ class BM25IndexBuilder:
             # detection; a manifest must never describe files not yet on
             # disk (a resumed docs stage rewrites its manifest unchanged)
             run.join_writes()
-            with open(docs_manifest, "w", encoding="utf-8") as f:
-                json.dump(docs_meta, f, sort_keys=True)
+            write_json(docs_manifest, docs_meta)
             vocab, total_tokens = self._build_blocks(
                 run, rows, heavy, blocks_path, ckpt, lineage_key,
                 n_docs=n_docs, done_buckets=set(done),
@@ -955,8 +982,7 @@ class BM25IndexBuilder:
             # the bucket-group writes overlapped the stats pass: all land
             # (or raise) before a manifest or meta.json records this build
             run.join_writes()
-            with open(stats_manifest, "w", encoding="utf-8") as f:
-                json.dump(stats_meta, f, sort_keys=True)
+            write_json(stats_manifest, stats_meta)
             run.mark(None)
 
             total_tokens = stats_meta["total_tokens"]
@@ -987,31 +1013,17 @@ class BM25IndexBuilder:
                 "resolved_postings_mode": "fused_tf",
                 "salt_per_range": cfg.salt_bounds(n_docs),
                 "increments": [],
+                # every field BM25Index.config() reads back
                 "config": {
-                    "k1": cfg.k1,
-                    "b": cfg.b,
-                    "epsilon": cfg.epsilon,
+                    **{
+                        f.name: getattr(cfg, f.name)
+                        for f in dataclasses.fields(cfg)
+                        if f.name not in _RETIRED_CONFIG_KEYS
+                    },
                     "stopwords": sorted(cfg.stopwords),
-                    "lowercase_stopword_match": cfg.lowercase_stopword_match,
-                    "tokenizer": cfg.tokenizer,
-                    "block_size": cfg.block_size,
-                    "num_term_buckets": cfg.num_term_buckets,
-                    "salt_df_threshold": cfg.salt_df_threshold,
-                    "num_salts": cfg.num_salts,
-                    "score_mode": cfg.score_mode,
-                    "fan_out_threshold": cfg.fan_out_threshold,
-                    "fan_out_max": cfg.fan_out_max,
-                    "variant": cfg.variant,
-                    "delta": cfg.delta,
-                    "checkpoint_dir": cfg.checkpoint_dir,
-                    "checkpoint_groups": cfg.checkpoint_groups,
-                    "checkpoint_group_min_bytes": cfg.checkpoint_group_min_bytes,
                 },
             }
-            with open(
-                os.path.join(index_dir, "meta.json"), "w", encoding="utf-8"
-            ) as f:
-                json.dump(meta, f, indent=1, sort_keys=True)
+            write_json(os.path.join(index_dir, "meta.json"), meta, indent=1)
         return BM25Index(self.spark, index_dir)
 
     def merge_new_docs(
@@ -1037,10 +1049,11 @@ class BM25IndexBuilder:
 
         ATOMICITY: all outputs (new docs rows, new block segments, refreshed
         term_stats, next meta.json) are staged under _staging/<inc>/ and the
-        live index is only touched AFTER a COMMIT.json record is written.
-        A crash before the record leaves the live index byte-identical (a
-        retried merge redoes the batch from scratch); a crash after it is
-        rolled forward by the next open (BM25Index.__init__) via idempotent
+        live index is only touched AFTER a COMMIT.json record is written
+        (_commit_increment, the commit path compact() shares). A crash
+        before the record leaves the live index byte-identical (a retried
+        merge redoes the batch from scratch); a crash after it is rolled
+        forward by the next open (BM25Index.__init__) via idempotent
         renames. The live index is never part-merged. ``_fail_before_commit``
         / ``_fail_after_commit_record`` are test hooks simulating those two
         crash windows.
@@ -1055,19 +1068,8 @@ class BM25IndexBuilder:
             idx = BM25Index(self.spark, index_dir)
             old_n = idx.n_docs
             old_docs = idx.docs()
-
-            # discard aborted stagings (no commit record: their data never
-            # reached the live index); this merge stages under inc_dir
-            staging = _staging_root(index_dir)
-            for name in os.listdir(staging) if os.path.isdir(staging) else []:
-                aborted = os.path.join(staging, name)
-                if not os.path.exists(os.path.join(aborted, "COMMIT.json")):
-                    shutil.rmtree(aborted, ignore_errors=True)
-            # zero-padded old_n: _pending_increments sorts staging dir names
-            # lexicographically for oldest-first roll-forward, and "inc100-…"
-            # must not sort before "inc80-…" if several increments ever pend
-            inc_id = f"inc{old_n:015d}-{uuid.uuid4().hex[:8]}"
-            inc_dir = os.path.join(staging, inc_id)
+            inc_dir = _new_staging(index_dir, old_n)
+            inc_id = os.path.basename(inc_dir)
 
             pages = extract_text(new_webtext).select("url", "warc_ts", "text")
             # left_anti never multiplies rows, even for duplicated old texts
@@ -1139,7 +1141,7 @@ class BM25IndexBuilder:
             run.mark(None)
             new_tokens = int(tokens.get["n"] or 0)
 
-            # ---- stage next meta, write the commit record, roll forward ----
+            # ---- stage next meta, commit, roll forward ----
             meta = dict(idx.meta)
             meta["n_docs"] = n_total
             meta["total_tokens"] = meta["total_tokens"] + new_tokens
@@ -1156,25 +1158,12 @@ class BM25IndexBuilder:
                     "stage_wall_s": run.stage_wall_s,
                 }
             )
-            with open(
-                os.path.join(inc_dir, "meta_next.json"), "w", encoding="utf-8"
-            ) as f:
-                json.dump(meta, f, indent=1, sort_keys=True)
-            if _fail_before_commit:
-                raise RuntimeError("test hook: crash before commit record")
-            # atomic commit record: once this rename lands, the increment WILL
-            # be applied (here, or by the next BM25Index open if we crash)
-            commit_tmp = os.path.join(inc_dir, "COMMIT.json.tmp")
-            with open(commit_tmp, "w", encoding="utf-8") as f:
-                json.dump(
-                    {"inc_id": inc_id, "added_docs": int(m_new), "n_docs": n_total},
-                    f,
-                    sort_keys=True,
-                )
-            os.replace(commit_tmp, os.path.join(inc_dir, "COMMIT.json"))
-            if _fail_after_commit_record:
-                raise RuntimeError("test hook: crash after commit record")
-            _apply_increment(index_dir, inc_dir)
+            _commit_increment(
+                index_dir, inc_dir, meta,
+                {"added_docs": int(m_new), "n_docs": n_total},
+                _fail_before_commit=_fail_before_commit,
+                _fail_after_commit_record=_fail_after_commit_record,
+            )
         return BM25Index(self.spark, index_dir)
 
     def compact(self, index_dir: str) -> BM25Index:
@@ -1194,11 +1183,11 @@ class BM25IndexBuilder:
         the block payloads themselves (one pruned blocks scan + the
         standard single-exchange encode).
 
-        The swap is crash-safe: the new layout is written beside the live
-        one, a blocks.swap.json marker is committed, and the two renames
-        roll forward on the next open if interrupted (_finish_blocks_swap).
-        term_stats/meta are unchanged by construction (same postings, same
-        df/idf/N) except salt_per_range and a compaction record.
+        The new layout and next meta are staged and committed together as
+        in merge_new_docs; the record's ``replace_blocks`` makes the
+        roll-forward swap the live blocks dir whole. term_stats/meta are
+        unchanged by construction (same postings, same df/idf/N) except
+        salt_per_range and a compaction record.
 
         Layout comes from the INDEX's stored config, not the builder's: the
         query engine prunes partitions with meta's num_term_buckets and
@@ -1211,12 +1200,7 @@ class BM25IndexBuilder:
             idx = BM25Index(self.spark, index_dir)  # rolls forward pending work
             cfg = idx.config()
             n_docs = idx.n_docs
-            # the open completed any swap blocks.swap.json recorded, so a
-            # blocks.next-*/blocks.old-* dir left now is an orphan of a failed
-            # compact or of a swap's unfinished cleanup: never live
-            for name in os.listdir(index_dir):
-                if name.startswith(("blocks.next-", "blocks.old-")):
-                    shutil.rmtree(os.path.join(index_dir, name))
+            inc_dir = _new_staging(index_dir, n_docs)
 
             # blocks -> postings rows, Arrow-batched; column-pruned scan
             def decode_kernel(batches):
@@ -1246,38 +1230,30 @@ class BM25IndexBuilder:
             )
             run.mark("encode")
             per_salt = cfg.salt_bounds(n_docs)
-            swap_id = uuid.uuid4().hex[:8]
-            next_name = f"blocks.next-{swap_id}"
             (
                 _encode_salted(postings, heavy, per_salt, cfg)
                 .write.option("compression", INDEX_PARQUET_CODEC).mode("overwrite")
                 .partitionBy("bucket")
-                .parquet(os.path.join(index_dir, next_name))
+                .parquet(os.path.join(inc_dir, "blocks"))
             )
-            marker_tmp = os.path.join(index_dir, "blocks.swap.json.tmp")
-            with open(marker_tmp, "w", encoding="utf-8") as f:
-                json.dump({"next": next_name, "old": f"blocks.old-{swap_id}"}, f)
-            os.replace(marker_tmp, os.path.join(index_dir, "blocks.swap.json"))
-            _finish_blocks_swap(index_dir)
             run.mark(None)
 
-            # meta: record the compaction (resume stays distrustful of stage
-            # manifests exactly as after any increment) + the new salt ranges.
-            # A crash before this write leaves a compacted index with a stale
-            # salt_per_range — layout metadata only, scores unaffected.
+            # next meta: the new salt ranges + a compaction record (resume
+            # stays distrustful of stage manifests exactly as after any
+            # increment); it commits with the blocks
             meta = dict(idx.meta)
             meta["salt_per_range"] = per_salt
             meta.setdefault("increments", []).append(
                 {
-                    "compaction": swap_id,
+                    "compaction": os.path.basename(inc_dir),
                     "wall_s": round(time.time() - t0, 2),
                     "stage_wall_s": run.stage_wall_s,
                 }
             )
-            tmp = os.path.join(index_dir, "meta.json.tmp")
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(meta, f, indent=1, sort_keys=True)
-            os.replace(tmp, os.path.join(index_dir, "meta.json"))
+            _commit_increment(
+                index_dir, inc_dir, meta,
+                {"n_docs": n_docs, "replace_blocks": True},
+            )
         return BM25Index(self.spark, index_dir)
 
     # ---------- stages ----------

@@ -5,7 +5,8 @@ The reference rebuilds its whole in-memory index on every add_corpus
 is our replacement. A manifest is the COMMIT MARKER for one index bucket
 (term-hash partition): data files for a bucket are only trusted if its
 manifest exists, so a killed build leaves untrusted partials that resume
-deletes and rebuilds. Manifests are written atomically (tmp file + rename).
+deletes and rebuilds. Manifests, like every JSON commit file of an index,
+are written atomically (write_json: tmp file + rename).
 
 Each manifest carries:
 - lineage: input path, docs-stage fingerprint (N, total_tokens), engine config
@@ -16,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Dict, List, Optional
 
 
@@ -24,13 +24,19 @@ def manifest_path(checkpoint_dir: str, bucket: int) -> str:
     return os.path.join(checkpoint_dir, f"bucket-{bucket:05d}.manifest.json")
 
 
+def write_json(path: str, payload: Dict, indent: Optional[int] = None) -> None:
+    """Write ``payload`` as JSON to ``path`` atomically: readers see the old
+    file or the whole new one, never a truncated one."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(payload, f, indent=indent, sort_keys=True)
+    os.replace(tmp, path)  # atomic on POSIX
+
+
 def write_manifest(checkpoint_dir: str, bucket: int, payload: Dict) -> str:
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = manifest_path(checkpoint_dir, bucket)
-    fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".tmp")
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        json.dump(payload, f, sort_keys=True)
-    os.replace(tmp, path)  # atomic on POSIX
+    write_json(path, payload)
     return path
 
 

@@ -2,6 +2,7 @@
 indexes written with since-retired config keys), the postings a build and
 a merge write, and what a failed build leaves behind."""
 
+import dataclasses
 import json
 import os
 import re
@@ -105,6 +106,72 @@ def test_failed_build_joins_writes_and_releases_caches(
         )
     run_released()
     assert not os.path.exists(os.path.join(path, "meta.json"))
+
+
+def _index_rows(idx):
+    """(meta scalars, sorted blocks rows with payloads, sorted stats rows)."""
+    scalars = ("n_docs", "total_tokens", "avgdl", "vocab_size", "average_idf",
+               "n_postings", "lineage_key", "salt_per_range")
+    return (
+        {k: idx.meta[k] for k in scalars},
+        sorted(tuple(r) for r in idx.blocks().collect()),
+        sorted(tuple(r) for r in idx.term_stats().collect()),
+    )
+
+
+def test_resume_after_failed_meta_write(spark, tmp_path, monkeypatch):
+    """A build whose final meta.json write fails part-way leaves no
+    truncated meta.json behind: build(resume=True) completes and the index
+    equals a clean build's."""
+    pdf = synth_webtext_pandas(n_docs=60, seed=12)
+    cfg = EngineConfig(num_term_buckets=4, stopwords=frozenset({"the"}))
+    builder = BM25IndexBuilder(spark, cfg)
+    real_dump = json.dump
+
+    def dump(obj, fp, *args, **kwargs):
+        name = os.path.basename(str(getattr(fp, "name", "")))
+        if name.startswith("meta.json"):
+            fp.write(json.dumps(obj)[:40])
+            raise OSError("injected failure inside the meta.json write")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    path = str(tmp_path / "i")
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", dump)
+        with pytest.raises(OSError, match="injected"):
+            builder.build(spark.createDataFrame(pdf), path, input_desc="m")
+    resumed = builder.build(
+        spark.createDataFrame(pdf), path, resume=True, input_desc="m"
+    )
+    clean = builder.build(
+        spark.createDataFrame(pdf), str(tmp_path / "c"), input_desc="m"
+    )
+    assert _index_rows(resumed) == _index_rows(clean)
+
+
+def test_config_round_trips_through_meta(spark, tmp_path):
+    """Every EngineConfig field a build records comes back from
+    BM25Index.config(): a config with each field off its default (but
+    postings_mode, whose one accepted value is the default) round-trips."""
+    cfg = EngineConfig(
+        k1=1.2, b=0.6, epsilon=0.3, stopwords=frozenset({"the", "of"}),
+        lowercase_stopword_match=False, tokenizer="jvm", block_size=32,
+        num_term_buckets=3, salt_df_threshold=20, num_salts=2,
+        score_mode="exact", fan_out_threshold=1000, fan_out_max=7,
+        variant="bm25plus", delta=0.7,
+        checkpoint_dir=str(tmp_path / "ckpt"), checkpoint_groups=2,
+        checkpoint_group_min_bytes=0,
+    )
+    default = EngineConfig()
+    same = [f.name for f in dataclasses.fields(cfg)
+            if getattr(cfg, f.name) == getattr(default, f.name)]
+    assert same == ["postings_mode"]
+    path = str(tmp_path / "i")
+    BM25IndexBuilder(spark, cfg).build(
+        spark.createDataFrame(synth_webtext_pandas(n_docs=30, seed=14)),
+        path, input_desc="c",
+    )
+    assert BM25Index(spark, path).config() == cfg
 
 
 def test_dense_doc_ids_match_row_number_with_one_exchange(spark):

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
 from similarities_spark.config import EngineConfig
-from similarities_spark.index.build import BM25IndexBuilder
+from similarities_spark.index.build import BM25Index, BM25IndexBuilder
 from similarities_spark.query.engine import BM25QueryEngine
 from similarities_spark.sources.synth import synth_webtext_pandas
 
@@ -278,21 +278,23 @@ def test_failed_merge_releases_caches_and_keeps_live_index(
 def test_failed_compact_releases_and_next_compact_sweeps_its_layout(
     spark, tmp_path, monkeypatch, run_released
 ):
-    """A compact that fails after writing its new layout (before the swap
-    marker commits it) leaves the live index serving the same hits; the
-    next compact deletes the orphaned blocks.next-* dir."""
+    """A compact that fails after writing its staged layout (before its
+    commit record) releases its caches and leaves the live index
+    byte-identical and serving the same hits; the next compact discards
+    the aborted staging."""
     pdf = synth_webtext_pandas(n_docs=120, seed=43)
     builder = BM25IndexBuilder(spark, CFG)
     d = str(tmp_path / "c")
     builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b1")
     merged = builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
-    before = _hits(merged)
+    before, live = _hits(merged), _live_files(d)
+    staging = os.path.join(d, "_staging")
 
     real_parquet = DataFrameWriter.parquet
 
     def parquet(self, path, *args, **kwargs):
         real_parquet(self, path, *args, **kwargs)
-        if "blocks.next-" in path:
+        if path.startswith(staging) and path.endswith("blocks"):
             raise RuntimeError("injected failure after the compact write")
 
     spark.catalog.clearCache()
@@ -301,12 +303,72 @@ def test_failed_compact_releases_and_next_compact_sweeps_its_layout(
         with pytest.raises(RuntimeError, match="injected"):
             builder.compact(d)
     run_released()
-    orphans = lambda: [n for n in os.listdir(d) if n.startswith("blocks.")]
-    assert [n for n in orphans() if n.startswith("blocks.next-")]
+    (aborted,) = os.listdir(staging)
+    assert os.path.isdir(os.path.join(staging, aborted, "blocks"))
+    assert _live_files(d) == live
+    assert _hits(BM25Index(spark, d)) == before
 
     compacted = builder.compact(d)
-    assert orphans() == []
+    assert os.listdir(staging) == []
     assert _hits(compacted) == before
+
+
+def test_compact_meta_write_failure_rolls_forward_on_open(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction whose meta.json replace fails has committed: the next
+    open finishes it, so the new salt ranges and the compaction record are
+    live with the compacted blocks, and the hits are unchanged."""
+    pdf = synth_webtext_pandas(n_docs=120, seed=53)
+    builder = BM25IndexBuilder(spark, CFG)
+    d = str(tmp_path / "m")
+    builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b1")
+    merged = builder.merge_new_docs(spark.createDataFrame(pdf.iloc[80:]), d)
+    before = _hits(merged)
+    salts = CFG.salt_bounds(merged.n_docs)
+    assert merged.meta["salt_per_range"] != salts
+
+    real_replace = os.replace
+
+    def replace(src, dst, *args, **kwargs):
+        if os.path.basename(dst) == "meta.json":
+            raise OSError("injected meta.json replace failure")
+        return real_replace(src, dst, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", replace)
+        with pytest.raises(OSError, match="injected"):
+            builder.compact(d)
+
+    reopened = BM25Index(spark, d)
+    assert reopened.meta["salt_per_range"] == salts
+    assert "compaction" in reopened.meta["increments"][-1]
+    assert _hits(reopened) == before
+
+
+def test_term_stats_swap_crash_leaks_no_old_dir(spark, tmp_path):
+    """A roll-forward that crashed after renaming the staged term_stats
+    live, before removing the replaced one, leaves no term_stats.old-* copy
+    once the next open re-applies it."""
+    pdf = synth_webtext_pandas(n_docs=120, seed=59)
+    builder = BM25IndexBuilder(spark, CFG)
+    d = str(tmp_path / "s")
+    builder.build(spark.createDataFrame(pdf.iloc[:80]), d, input_desc="b1")
+    with pytest.raises(RuntimeError, match="after commit record"):
+        builder.merge_new_docs(
+            spark.createDataFrame(pdf.iloc[80:]), d,
+            _fail_after_commit_record=True,
+        )
+    staging = os.path.join(d, "_staging")
+    (inc_id,) = os.listdir(staging)
+    live = os.path.join(d, "term_stats")
+    os.rename(live, f"{live}.old-{inc_id}")
+    os.rename(os.path.join(staging, inc_id, "term_stats"), live)
+
+    recovered = BM25Index(spark, d)
+    assert not [n for n in os.listdir(d) if ".old-" in n]
+    assert os.listdir(staging) == []
+    assert recovered.meta["increments"][-1]["inc_id"] == inc_id
 
 
 def test_stage_walls_of_build_merge_and_compact(spark, tmp_path):

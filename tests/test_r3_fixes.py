@@ -438,32 +438,53 @@ def test_compact_uses_index_config_not_builder_config(spark, tmp_path):
     assert key(hits_after) == key(hits_before)
 
 
-def test_compact_swap_rolls_forward_after_crash(spark, tmp_path):
-    import os as _os
+def test_compact_swap_rolls_forward_after_crash(spark, tmp_path, monkeypatch):
+    """A compaction killed after its commit record (its new layout and
+    next meta staged, nothing live renamed) is rolled forward by the next
+    open: one segment per (term, salt), the new salt ranges and the
+    compaction record, the same hits, and no staging left."""
+    import functools
     import json as _json
+    import os as _os
 
+    from similarities_spark.index import build as _build
     from similarities_spark.index.build import BM25Index, BM25IndexBuilder
 
-    cfg = EngineConfig(num_term_buckets=4)
+    cfg = EngineConfig(num_term_buckets=4, block_size=16, num_salts=4)
     builder = BM25IndexBuilder(spark, cfg)
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=50, seed=44))
+    pdf = synth_webtext_pandas(n_docs=70, seed=44)
     idx_dir = str(tmp_path / "i")
-    idx = builder.build(df, idx_dir, input_desc="b")
-    before = idx.blocks().count()
+    builder.build(spark.createDataFrame(pdf.iloc[:50]), idx_dir, input_desc="b")
+    merged = builder.merge_new_docs(spark.createDataFrame(pdf.iloc[50:]), idx_dir)
+    hits_before = BM25QueryEngine(merged).search(["data web"], topn=5).collect()
+    heads = merged.blocks().filter(F.col("block_id") == 0)
+    assert heads.count() > heads.select("term", "salt").distinct().count()
 
-    # simulate a crash mid-swap: new layout staged + marker committed, but
-    # the live dir rename never happened (here: live renamed away to stand
-    # in for "next", which exercises the same roll-forward arm)
-    _os.rename(
-        _os.path.join(idx_dir, "blocks"),
-        _os.path.join(idx_dir, "blocks.next-test"),
+    crash = functools.partial(
+        _build._commit_increment, _fail_after_commit_record=True
     )
-    with open(_os.path.join(idx_dir, "blocks.swap.json"), "w") as f:
-        _json.dump({"next": "blocks.next-test", "old": "blocks.old-test"}, f)
+    with monkeypatch.context() as m:
+        m.setattr(_build, "_commit_increment", crash)
+        with pytest.raises(RuntimeError, match="after commit record"):
+            builder.compact(idx_dir)
+    staging = _os.path.join(idx_dir, "_staging")
+    (pending,) = _os.listdir(staging)
+    assert _os.path.exists(_os.path.join(staging, pending, "COMMIT.json"))
+    with open(_os.path.join(idx_dir, "meta.json"), "r", encoding="utf-8") as f:
+        assert _json.load(f) == merged.meta  # nothing live changed yet
 
-    reopened = BM25Index(spark, idx_dir)  # open must roll the swap forward
-    assert not _os.path.exists(_os.path.join(idx_dir, "blocks.swap.json"))
-    assert reopened.blocks().count() == before
+    reopened = BM25Index(spark, idx_dir)  # open must roll the compaction forward
+    assert _os.listdir(staging) == []
+    assert reopened.meta["increments"][-1]["compaction"] == pending
+    assert reopened.meta["salt_per_range"] == cfg.salt_bounds(reopened.n_docs)
+    heads = reopened.blocks().filter(F.col("block_id") == 0)
+    assert heads.count() == heads.select("term", "salt").distinct().count()
+    assert not [n for n in _os.listdir(idx_dir) if ".old-" in n]
+    hits_after = BM25QueryEngine(reopened).search(["data web"], topn=5).collect()
+    key = lambda rows: sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows
+    )
+    assert key(hits_after) == key(hits_before)
 
 
 # ---------- LSH recall at realistic embedding dimensionality ----------
