@@ -1069,7 +1069,6 @@ class BM25IndexBuilder:
             old_n = idx.n_docs
             old_docs = idx.docs()
             inc_dir = _new_staging(index_dir, old_n)
-            inc_id = os.path.basename(inc_dir)
 
             pages = extract_text(new_webtext).select("url", "warc_ts", "text")
             # left_anti never multiplies rows, even for duplicated old texts
@@ -1151,7 +1150,7 @@ class BM25IndexBuilder:
             meta["n_postings"] = stats_meta["n_postings"]
             meta.setdefault("increments", []).append(
                 {
-                    "inc_id": inc_id,
+                    "inc_id": os.path.basename(inc_dir),
                     "added_docs": int(m_new),
                     "added_tokens": new_tokens,
                     "wall_s": round(time.time() - t0, 2),
